@@ -90,8 +90,8 @@ object Bench {
     "q06_join_5way_bucketed" -> ((s, d) => {
       import org.apache.spark.sql.functions._
       // JOIN-FIRST on the bucketed layout (round-13 Probe q06b_joinfirst
-      // vs q06b_full at sf100: 12.57 s vs 15.37 s; the per-order pre-agg
-      // shape is q06b_full in Probe.scala). Both bucketed scans are
+      // vs q06b_full at sf100: 12.57 s vs 15.37 s; q06b_full was the
+      // per-order pre-agg shape). Both bucketed scans are
       // co-partitioned on orderkey, so the fact hop needs no exchange
       // either way; what the pre-agg bought (4x fewer join probes) cost
       // a 150M-group hash aggregate that is SLOWER than the extra

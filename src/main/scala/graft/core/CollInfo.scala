@@ -54,7 +54,7 @@ object CollInfo {
   }
 
   private def defaultFetch(url: String): String =
-    Http.get(url, timeoutSeconds = 30).bodyString
+    Http.send("GET", url).bodyString
 
   private val mapper = new ObjectMapper()
 

@@ -1,5 +1,6 @@
 package graft.core
 
+import java.net.http.HttpRequest
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import scala.jdk.CollectionConverters._
 import scala.collection.immutable.ListMap
@@ -129,8 +130,8 @@ object D1Client {
       val arr = bodyNode.putArray("params")
       params.foreach(arr.add)
     }
-    val resp = Http.postJson(config.queryUrl, mapper.writeValueAsString(bodyNode),
-      authHeaders(config), timeoutSeconds = 30)
+    val resp = Http.send("POST", config.queryUrl, Http.JsonContent ++ authHeaders(config),
+      Some(HttpRequest.BodyPublishers.ofString(mapper.writeValueAsString(bodyNode))))
     parseQueryResponse(resp.bodyString)
   }
 
@@ -145,8 +146,8 @@ object D1Client {
     statements.foreach { s =>
       val o = mapper.createObjectNode(); o.put("sql", s); arr.add(o)
     }
-    val resp = Http.postJson(config.queryUrl, mapper.writeValueAsString(arr),
-      authHeaders(config), timeoutSeconds = 30)
+    val resp = Http.send("POST", config.queryUrl, Http.JsonContent ++ authHeaders(config),
+      Some(HttpRequest.BodyPublishers.ofString(mapper.writeValueAsString(arr))))
     val root = mapper.readTree(resp.bodyString)
     val success = Option(root.get("success")).exists(_.asBoolean(false))
     val err = firstError(root)
@@ -161,7 +162,7 @@ object D1Client {
   }
 
   def listDatabases(config: Config): Seq[DatabaseInfo] = {
-    val resp = Http.get(config.listDatabasesUrl, authHeaders(config), timeoutSeconds = 30)
+    val resp = Http.send("GET", config.listDatabasesUrl, authHeaders(config))
     val root = mapper.readTree(resp.bodyString)
     val resultNode = root.get("result")
     if (resultNode == null || !resultNode.isArray) return Nil

@@ -40,92 +40,33 @@ object Http {
       .replace("<", "%3C").replace(">", "%3E").replace("`", "%60")
       .replace("\\", "%5C")
 
-  /** Single GET, optional Range header and bearer token. */
-  def get(
-      url: String,
-      headers: Map[String, String] = Map.empty,
-      timeoutSeconds: Int = 30): Response = {
-    val b = HttpRequest.newBuilder(URI.create(encodeUrl(url)))
-      .timeout(Duration.ofSeconds(timeoutSeconds.toLong))
-      .GET()
-    headers.foreach { case (k, v) => b.header(k, v) }
-    val resp = client.send(b.build(), HttpResponse.BodyHandlers.ofByteArray())
-    Response(resp.statusCode(), resp.body())
-  }
-
-  /** Single PUT with a raw body (S3-style object PUT / CopyObject when
-    * paired with an `x-amz-copy-source` header). Used by the r2
-    * filesystem's optional write surface only.
+  /** The one request path. Every call encodes the URL, applies the
+    * timeout and headers, and reads the whole body as bytes. A request
+    * without a body goes out through `GET()`/`DELETE()`, which send no
+    * `Content-Length` (`method(m, noBody())` would add `Content-Length: 0`).
+    * Callers set their own timeout: 30 s fits a query or metadata call,
+    * 60 s an object PUT/DELETE or a CDX page.
     */
-  def put(
+  def send(
+      method: String,
       url: String,
-      body: Array[Byte],
       headers: Map[String, String] = Map.empty,
-      timeoutSeconds: Int = 60): Response = {
+      body: Option[HttpRequest.BodyPublisher] = None,
+      timeoutSeconds: Long = 30): Response = {
     val b = HttpRequest.newBuilder(URI.create(encodeUrl(url)))
-      .timeout(Duration.ofSeconds(timeoutSeconds.toLong))
-      .PUT(HttpRequest.BodyPublishers.ofByteArray(body))
+      .timeout(Duration.ofSeconds(timeoutSeconds))
+    (method, body) match {
+      case ("GET", None) => b.GET()
+      case ("DELETE", None) => b.DELETE()
+      case (m, p) => b.method(m, p.getOrElse(HttpRequest.BodyPublishers.noBody()))
+    }
     headers.foreach { case (k, v) => b.header(k, v) }
     val resp = client.send(b.build(), HttpResponse.BodyHandlers.ofByteArray())
     Response(resp.statusCode(), resp.body())
   }
 
-  /** Single PUT streaming a local file as the body — the large-object
-    * path of the r2 write surface: the writer spools to local disk and
-    * publishes without ever holding the object on the heap (a
-    * whole-object byte-array PUT caps files at ~2 GB and holds every
-    * in-flight part file in memory — s3a solves the same problem with a
-    * disk spool / multipart).
-    *
-    * The timeout SCALES WITH THE FILE: a fixed cap would fail exactly
-    * the multi-GB uploads the disk spool exists for (5 GB over a
-    * 15 MB/s uplink is ~340 s — past the old fixed 300 s). The default
-    * allows 1 MiB/s — floor-of-modest-uplink, not a liveness bound —
-    * floored at `timeoutSeconds` for small files; callers with a real
-    * throughput model can still pass an explicit budget.
-    */
-  def putFile(
-      url: String,
-      file: java.nio.file.Path,
-      headers: Map[String, String] = Map.empty,
-      timeoutSeconds: Int = 300): Response = {
-    val sized = math.max(timeoutSeconds.toLong,
-      try java.nio.file.Files.size(file) >> 20 catch { case _: java.io.IOException => 0L })
-    val b = HttpRequest.newBuilder(URI.create(encodeUrl(url)))
-      .timeout(Duration.ofSeconds(sized))
-      .PUT(HttpRequest.BodyPublishers.ofFile(file))
-    headers.foreach { case (k, v) => b.header(k, v) }
-    val resp = client.send(b.build(), HttpResponse.BodyHandlers.ofByteArray())
-    Response(resp.statusCode(), resp.body())
-  }
-
-  /** Single DELETE (S3-style object delete). */
-  def delete(
-      url: String,
-      headers: Map[String, String] = Map.empty,
-      timeoutSeconds: Int = 60): Response = {
-    val b = HttpRequest.newBuilder(URI.create(encodeUrl(url)))
-      .timeout(Duration.ofSeconds(timeoutSeconds.toLong))
-      .DELETE()
-    headers.foreach { case (k, v) => b.header(k, v) }
-    val resp = client.send(b.build(), HttpResponse.BodyHandlers.ofByteArray())
-    Response(resp.statusCode(), resp.body())
-  }
-
-  /** Single POST with a JSON body. */
-  def postJson(
-      url: String,
-      json: String,
-      headers: Map[String, String] = Map.empty,
-      timeoutSeconds: Int = 30): Response = {
-    val b = HttpRequest.newBuilder(URI.create(url))
-      .timeout(Duration.ofSeconds(timeoutSeconds.toLong))
-      .header("Content-Type", "application/json")
-      .POST(HttpRequest.BodyPublishers.ofString(json))
-    headers.foreach { case (k, v) => b.header(k, v) }
-    val resp = client.send(b.build(), HttpResponse.BodyHandlers.ofByteArray())
-    Response(resp.statusCode(), resp.body())
-  }
+  /** `Content-Type` header for a JSON request body. */
+  val JsonContent: Map[String, String] = Map("Content-Type" -> "application/json")
 
   private def isRetryable(msg: String): Boolean =
     msg.contains("503") || msg.contains("504") ||
@@ -162,7 +103,7 @@ object Http {
           if (rangeStart >= 0 && rangeLen > 0)
             Map("Range" -> s"bytes=$rangeStart-${rangeStart + rangeLen - 1}")
           else Map.empty[String, String]
-        val resp = get(url, hdrs, timeoutSeconds = 60)
+        val resp = send("GET", url, hdrs, timeoutSeconds = 60)
         if (resp.status == 503 || resp.status == 504) {
           lastError = s"HTTP ${resp.status}"
           // retryable — fall through to next attempt

@@ -304,8 +304,8 @@ object Dedup {
     }
   })
 
-  /** Profiling accessors (graft.tools.MinhashProfile) — expose the
-    * internal kernels without widening the operator API.
+  /** Kernel accessors for the parity specs — expose the internal kernels
+    * without widening the operator API.
     */
   private[graft] def signatureForProfile(numPerm: Int, k: Int) = textSignatureUdf(numPerm, k)
   private[graft] def shingleHashesForProfile(k: Int) = shingleHashes64Udf(k)

@@ -70,7 +70,7 @@ object ParagraphDedup {
     * break exchange reuse between the agg and join-back branches —
     * without reuse the corpus explodes and shuffles TWICE).
     */
-  private[graft] def unitKeys(df: DataFrame, idCol: String, textCol: String,
+  private def unitKeys(df: DataFrame, idCol: String, textCol: String,
                        unitize: Column => Column): DataFrame =
     // the explicit isNotNull matches the predicate the rewrite join
     // infers for its drop side: without it the inference lands on the
@@ -90,7 +90,7 @@ object ParagraphDedup {
     * re-unitized in place, never shuffled; the drop side is
     * dup-proportional (AQE broadcasts it when small).
     */
-  private[graft] def rewriteWithDrops(df: DataFrame, idCol: String, textCol: String,
+  private def rewriteWithDrops(df: DataFrame, idCol: String, textCol: String,
                                unitize: Column => Column, joinSep: String,
                                drops: DataFrame): DataFrame = {
     // materialize the units array ONCE, in a projection ABOVE the join:

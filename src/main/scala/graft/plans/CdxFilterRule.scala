@@ -7,7 +7,7 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.core.Codecs
-import graft.sources.cdx.{CommonCrawlTable, WaybackTable}
+import graft.sources.cdx.{CdxDialect, CommonCrawl, Wayback}
 
 /** Pushes the LIKE/regex predicate shapes that DSv2 v1-Filters cannot
   * express into the CDX scan options — completing the reference's
@@ -42,15 +42,8 @@ object CdxFilterRule extends Rule[LogicalPlan] {
   private val waybackRegexCols = Set("urlkey", "mimetype", "statuscode")
   private val ccRegexCols = Set("mimetype", "statuscode")
 
-  private sealed trait Kind
-  private case object WaybackKind extends Kind
-  private case object CcKind extends Kind
-
-  private def kindOf(rel: DataSourceV2Relation): Option[Kind] = rel.table match {
-    case _: WaybackTable => Some(WaybackKind)
-    case _: CommonCrawlTable => Some(CcKind)
-    case _ => None
-  }
+  private def dialectOf(rel: DataSourceV2Relation): Option[CdxDialect] =
+    Seq(Wayback, CommonCrawl).find(_.reads(rel.table))
 
   private def attrName(e: Expression): Option[String] = e match {
     case a: Attribute => Some(a.name)
@@ -90,6 +83,12 @@ object CdxFilterRule extends Rule[LogicalPlan] {
     inner.contains("%")
   }
 
+  /** Common Crawl url regexes are anchored at both ends. */
+  private def anchored(rx: String): String = {
+    val t = if (rx.startsWith("^")) rx else "^" + rx
+    if (t.endsWith("$")) t else t + "$"
+  }
+
   /** Translate one conjunct → (urlOption, extraFilter). Returns None when
     * not translatable (predicate stays in the plan).
     *
@@ -99,76 +98,64 @@ object CdxFilterRule extends Rule[LogicalPlan] {
     * predicate was deleted from the plan. Such conjuncts are refused here
     * (None) and stay in the plan as ordinary residual filters.
     */
-  private def translate(kind: Kind, e: Expression): Option[(Option[String], Option[String])] = {
+  private def translate(dialect: CdxDialect, e: Expression): Option[(Option[String], Option[String])] = {
     def some(url: Option[String] = None, f: Option[String] = None): Option[(Option[String], Option[String])] =
       if (f.exists(_.contains(";"))) None else Some((url, f))
-    (kind, e) match {
+    (dialect, e) match {
       // ---- positive LIKE ------------------------------------------------
-      case (WaybackKind, Like(a, p, _)) if attrName(a).contains("url") =>
+      case (Wayback, Like(a, p, _)) if attrName(a).contains("url") =>
         litString(p).filter(isComplexLike).flatMap(s => some(url = Some(s.replace('%', '*'))))
-      case (WaybackKind, Like(a, p, _)) if attrName(a).exists(waybackRegexCols) =>
+      case (Wayback, Like(a, p, _)) if attrName(a).exists(waybackRegexCols) =>
         litString(p).filter(isComplexLike).flatMap(s =>
           some(f = Some(s"${attrName(a).get}:${Codecs.likeToRegex(s)}")))
-      case (CcKind, Like(a, p, _)) if attrName(a).contains("url") =>
+      case (CommonCrawl, Like(a, p, _)) if attrName(a).contains("url") =>
         litString(p).filter(isComplexLike)
           .flatMap(s => some(url = Some(Codecs.convertSqlWildcardsToCdx(s))))
-      case (CcKind, Like(a, p, _)) if attrName(a).contains("mimetype") =>
+      case (CommonCrawl, Like(a, p, _)) if attrName(a).contains("mimetype") =>
         litString(p).filter(isComplexLike)
           .flatMap(s => some(f = Some(s"~mime:${Codecs.sqlRegexToRegex(s)}")))
 
       // ---- NOT LIKE -----------------------------------------------------
-      case (WaybackKind, Not(Like(a, p, _))) if attrName(a).contains("url") =>
+      case (Wayback, Not(Like(a, p, _))) if attrName(a).contains("url") =>
         litString(p).filter(isComplexLike).flatMap(s => some(f = Some(s"!original:${Codecs.likeToRegex(s)}")))
-      case (WaybackKind, Not(Like(a, p, _))) if attrName(a).exists(waybackRegexCols) =>
+      case (Wayback, Not(Like(a, p, _))) if attrName(a).exists(waybackRegexCols) =>
         litString(p).filter(isComplexLike).flatMap(s =>
           some(f = Some(s"!${attrName(a).get}:${Codecs.likeToRegex(s)}")))
-      case (CcKind, Not(Like(a, p, _))) if attrName(a).contains("url") =>
+      case (CommonCrawl, Not(Like(a, p, _))) if attrName(a).contains("url") =>
         litString(p).filter(isComplexLike).flatMap(s => some(f = Some(s"!~url:${Codecs.sqlRegexToRegex(s)}")))
-      case (CcKind, Not(Like(a, p, _))) if attrName(a).exists(ccRegexCols) =>
+      case (CommonCrawl, Not(Like(a, p, _))) if attrName(a).exists(ccRegexCols) =>
         litString(p).filter(isComplexLike).flatMap(s => some(f = Some(
           s"!~${graft.core.CdxUrls.ccColumnToField(attrName(a).get)}:${Codecs.sqlRegexToRegex(s)}")))
 
       // ---- [NOT] RLIKE --------------------------------------------------
-      case (WaybackKind, RLike(a, p)) if attrName(a).exists(waybackRegexCols) =>
+      case (Wayback, RLike(a, p)) if attrName(a).exists(waybackRegexCols) =>
         litString(p).flatMap(s => some(f = Some(s"${attrName(a).get}:$s")))
-      case (WaybackKind, Not(RLike(a, p))) if attrName(a).contains("urlkey") =>
+      case (Wayback, Not(RLike(a, p))) if attrName(a).contains("urlkey") =>
         litString(p).flatMap(s => some(f = Some(s"!urlkey:$s")))
-      case (CcKind, RLike(a, p)) if attrName(a).contains("url") =>
-        litString(p).flatMap { s =>
-          val anchored = (if (s.startsWith("^")) s else "^" + s) match {
-            case t if t.endsWith("$") => t
-            case t => t + "$"
-          }
-          some(f = Some(s"~url:$anchored"))
-        }
-      case (CcKind, RLike(a, p)) if attrName(a).exists(ccRegexCols) =>
+      case (CommonCrawl, RLike(a, p)) if attrName(a).contains("url") =>
+        litString(p).flatMap(s => some(f = Some(s"~url:${anchored(s)}")))
+      case (CommonCrawl, RLike(a, p)) if attrName(a).exists(ccRegexCols) =>
         litString(p).flatMap(s => some(f = Some(
           s"~${graft.core.CdxUrls.ccColumnToField(attrName(a).get)}:$s")))
-      case (CcKind, Not(RLike(a, p))) if attrName(a).contains("url") =>
-        litString(p).flatMap { s =>
-          val anchored = (if (s.startsWith("^")) s else "^" + s) match {
-            case t if t.endsWith("$") => t
-            case t => t + "$"
-          }
-          some(f = Some(s"!~url:$anchored"))
-        }
+      case (CommonCrawl, Not(RLike(a, p))) if attrName(a).contains("url") =>
+        litString(p).flatMap(s => some(f = Some(s"!~url:${anchored(s)}")))
 
       // ---- LIKE/RLIKE through Cast (IntegerType statuscode) -------------
-      case (WaybackKind, Like(a, p, _)) if castedName(a).exists(waybackRegexCols) =>
+      case (Wayback, Like(a, p, _)) if castedName(a).exists(waybackRegexCols) =>
         litString(p).flatMap(s =>
           some(f = Some(s"${castedName(a).get}:${Codecs.likeToRegex(s)}")))
-      case (WaybackKind, Not(Like(a, p, _))) if castedName(a).exists(waybackRegexCols) =>
+      case (Wayback, Not(Like(a, p, _))) if castedName(a).exists(waybackRegexCols) =>
         litString(p).flatMap(s =>
           some(f = Some(s"!${castedName(a).get}:${Codecs.likeToRegex(s)}")))
-      case (WaybackKind, RLike(a, p)) if castedName(a).exists(waybackRegexCols) =>
+      case (Wayback, RLike(a, p)) if castedName(a).exists(waybackRegexCols) =>
         litString(p).flatMap(s => some(f = Some(s"${castedName(a).get}:$s")))
-      case (CcKind, Like(a, p, _)) if castedName(a).exists(ccRegexCols) =>
+      case (CommonCrawl, Like(a, p, _)) if castedName(a).exists(ccRegexCols) =>
         litString(p).flatMap(s => some(f = Some(
           s"~${graft.core.CdxUrls.ccColumnToField(castedName(a).get)}:${Codecs.sqlRegexToRegex(s)}")))
-      case (CcKind, Not(Like(a, p, _))) if castedName(a).exists(ccRegexCols) =>
+      case (CommonCrawl, Not(Like(a, p, _))) if castedName(a).exists(ccRegexCols) =>
         litString(p).flatMap(s => some(f = Some(
           s"!~${graft.core.CdxUrls.ccColumnToField(castedName(a).get)}:${Codecs.sqlRegexToRegex(s)}")))
-      case (CcKind, RLike(a, p)) if castedName(a).exists(ccRegexCols) =>
+      case (CommonCrawl, RLike(a, p)) if castedName(a).exists(ccRegexCols) =>
         litString(p).flatMap(s => some(f = Some(
           s"~${graft.core.CdxUrls.ccColumnToField(castedName(a).get)}:$s")))
 
@@ -196,9 +183,9 @@ object CdxFilterRule extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformDown {
     case f @ Filter(cond, child) if f.resolved && findRelation(child).isDefined =>
       val rel = findRelation(child).get
-      kindOf(rel) match {
+      dialectOf(rel) match {
         case None => f
-        case Some(kind) =>
+        case Some(dialect) =>
           val conjuncts = splitConjuncts(cond)
           // at most ONE url-pattern conjunct may be consumed (the scan has
           // a single url= slot); further url conjuncts stay in the plan.
@@ -212,7 +199,7 @@ object CdxFilterRule extends Rule[LogicalPlan] {
           val consumed = scala.collection.mutable.ArrayBuffer.empty[(Expression, (Option[String], Option[String]))]
           val kept = scala.collection.mutable.ArrayBuffer.empty[Expression]
           conjuncts.foreach { c =>
-            translate(kind, c) match {
+            translate(dialect, c) match {
               case Some((Some(_), _)) if urlTaken => kept += c
               case Some(t) => if (t._1.isDefined) urlTaken = true; consumed += ((c, t))
               case None => kept += c

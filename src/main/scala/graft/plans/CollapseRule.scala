@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.sources.cdx.WaybackTable
+import graft.sources.cdx.Wayback
 
 /** DISTINCT-ON → CDX `collapse=` pushdown, re-derived for Catalyst.
   *
@@ -54,7 +54,7 @@ object CollapseRule extends Rule[LogicalPlan] {
       : Option[(DataSourceV2Relation, List[Project])] = plan match {
     case p: Project => findWayback(p.child, projections :+ p)
     case f: Filter => findWayback(f.child, projections)
-    case r: DataSourceV2Relation if r.table.isInstanceOf[WaybackTable] =>
+    case r: DataSourceV2Relation if Wayback.reads(r.table) =>
       Some((r, projections))
     case _ => None
   }

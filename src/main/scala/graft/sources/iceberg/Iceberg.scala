@@ -32,7 +32,7 @@ object Iceberg {
   private[iceberg] def getJson(uri: String, token: String, path: String): JsonNode = {
     val headers = if (token.isEmpty) Map.empty[String, String]
     else Map("Authorization" -> s"Bearer $token")
-    val r = Http.get(s"$uri$path", headers)
+    val r = Http.send("GET", s"$uri$path", headers)
     if (r.status / 100 != 2)
       throw new RuntimeException(
         s"Iceberg REST catalog: GET $path -> HTTP ${r.status}: ${r.bodyString.take(200)}")

@@ -1,5 +1,6 @@
 package graft.sources.r2
 
+import java.net.http.HttpRequest
 import java.util
 
 import com.fasterxml.jackson.databind.ObjectMapper
@@ -44,8 +45,10 @@ object R2 {
   def query(config: Config, sql: String): String = {
     val body = mapper.createObjectNode()
     body.put("query", sql)
-    val resp = Http.postJson(config.queryUrl, mapper.writeValueAsString(body),
-      Map("Authorization" -> s"Bearer ${config.apiToken}"), timeoutSeconds = 60)
+    val resp = Http.send("POST", config.queryUrl,
+      Http.JsonContent + ("Authorization" -> s"Bearer ${config.apiToken}"),
+      Some(HttpRequest.BodyPublishers.ofString(mapper.writeValueAsString(body))),
+      timeoutSeconds = 60)
     if (resp.status < 200 || resp.status >= 300)
       throw new java.io.IOException(
         s"HTTP request failed with status ${resp.status}: ${resp.bodyString}")

@@ -1,6 +1,7 @@
 package graft.sources.r2
 
 import java.net.{URI, URLEncoder}
+import java.net.http.HttpRequest
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs._
 import org.apache.hadoop.fs.permission.FsPermission
@@ -80,7 +81,7 @@ class R2FileSystem extends FileSystem {
     val delim = if (delimited) "&delimiter=%2F" else ""
     val tok = token.map(t => s"&continuation-token=${URLEncoder.encode(t, "UTF-8")}")
       .getOrElse("")
-    val resp = Http.get(
+    val resp = Http.send("GET",
       s"$endpoint/$bucket?list-type=2&prefix=$enc&max-keys=$maxKeys$delim$tok", auth)
     if (resp.status >= 400)
       throw new java.io.IOException(s"R2 list failed: HTTP ${resp.status}")
@@ -197,19 +198,21 @@ class R2FileSystem extends FileSystem {
       "to the S3-API write mapping for index-lifecycle use)")
 
   private def putObject(key: String, body: Array[Byte]): Unit = {
-    val resp = Http.put(s"$endpoint/$bucket/$key", body, auth)
+    val resp = Http.send("PUT", s"$endpoint/$bucket/$key", auth,
+      Some(HttpRequest.BodyPublishers.ofByteArray(body)), timeoutSeconds = 60)
     if (resp.status >= 400)
       throw new java.io.IOException(s"R2 PUT $key failed: HTTP ${resp.status}")
   }
   private def copyObject(src: String, dst: String): Unit = {
-    val resp = Http.put(s"$endpoint/$bucket/$dst", Array.emptyByteArray,
-      auth + ("x-amz-copy-source" -> s"/$bucket/$src"))
+    val resp = Http.send("PUT", s"$endpoint/$bucket/$dst",
+      auth + ("x-amz-copy-source" -> s"/$bucket/$src"),
+      Some(HttpRequest.BodyPublishers.ofByteArray(Array.emptyByteArray)), timeoutSeconds = 60)
     if (resp.status >= 400)
       throw new java.io.IOException(
         s"R2 CopyObject $src -> $dst failed: HTTP ${resp.status}")
   }
   private def deleteObject(key: String): Unit = {
-    val resp = Http.delete(s"$endpoint/$bucket/$key", auth)
+    val resp = Http.send("DELETE", s"$endpoint/$bucket/$key", auth, timeoutSeconds = 60)
     if (resp.status >= 400 && resp.status != 404)
       throw new java.io.IOException(s"R2 DELETE $key failed: HTTP ${resp.status}")
   }
@@ -244,7 +247,11 @@ class R2FileSystem extends FileSystem {
         closed = true
         fileOut.close()
         try {
-          val resp = Http.putFile(s"$endpoint/$bucket/$key", spool, auth)
+          // the PUT's budget scales with the file (1 MiB/s, at least 300 s):
+          // a fixed cap fails exactly the multi-GB uploads the spool is for
+          val budget = math.max(300L, java.nio.file.Files.size(spool) >> 20)
+          val resp = Http.send("PUT", s"$endpoint/$bucket/$key", auth,
+            Some(HttpRequest.BodyPublishers.ofFile(spool)), budget)
           if (resp.status >= 400)
             throw new java.io.IOException(
               s"R2 PUT $key failed: HTTP ${resp.status}")
@@ -344,7 +351,7 @@ private[r2] class R2InputStream(url: String, length: Long,
 
   private def fill(at: Long, want: Int): Unit = {
     val end = math.min(length, at + math.max(want, chunk)) - 1
-    val resp = Http.get(url, auth + ("Range" -> s"bytes=$at-$end"))
+    val resp = Http.send("GET", url, auth + ("Range" -> s"bytes=$at-$end"))
     if (resp.status != 206 && resp.status != 200)
       throw new java.io.IOException(s"R2 ranged GET failed: HTTP ${resp.status}")
     buf = resp.body

@@ -2,7 +2,8 @@ package graft.sources
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{FilterExec, GlobalLimitExec, TakeOrderedAndProjectExec}
 import org.apache.spark.sql.functions._
 
 import graft.fixtures.Fixtures
@@ -152,6 +153,23 @@ class ConnectorSpec extends AnyFunSuite with BeforeAndAfterAll {
       .exists(_.contains("url=*.example.com/*")))
   }
 
+  test("commoncrawl body structs follow nested column pruning") {
+    // selecting part of a struct prunes it to those fields: the scan must
+    // emit them in the pruned order, not the full struct's
+    val rows = spark.read.format("commoncrawl")
+      .option("index_endpoint", stub.base)
+      .option("data_endpoint", stub.base)
+      .option("crawl", "CC-MAIN-2024-46")
+      .option("url_like", "%.example.com/%")
+      .load()
+      .select(col("response.error").as("err"), col("response.http_version").as("hv"),
+        element_at(col("warc.headers"), "WARC-Type").as("wt"))
+      .collect()
+    assert(rows.length == 2)
+    assert(rows.forall(r => r.isNullAt(0) && r.getString(1) == "1.1" && r.getString(2) == "response"),
+      rows.mkString(";"))
+  }
+
   test("commoncrawl filter pushdown: status/mime/crawl_id IN fan-out") {
     stub.requests.clear()
     val df = spark.read.format("commoncrawl")
@@ -248,6 +266,296 @@ class ConnectorSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(df.count() == 0)
     val reqs = stub.requests.toArray.map(_.toString).filter(_.contains("-index?"))
     assert(reqs.forall(r => r.contains("&from=202410") && r.contains("&to=202411")))
+  }
+
+  // ---- CDX pushdown matrix ---------------------------------------------
+  // One row per consume arm of the wayback and commoncrawl scans: the debug
+  // `cdx_url` the scan reports and whether the predicate stays a residual
+  // Filter above the scan. Every read points at the stub, so a case whose
+  // residual predicate pulls a column into the scan fetches real fixture
+  // rows (the predicates are chosen so that some rows survive).
+
+  private case class Pin(name: String, src: String, q: DataFrame => DataFrame,
+                         url: String, residual: Boolean,
+                         opts: Map[String, String] = Map.empty)
+
+  private def debugRead(src: String, opts: Map[String, String]): DataFrame = {
+    val endpoints =
+      if (src == "wayback") Map("cdx_endpoint" -> s"${stub.base}/cdx/search/cdx",
+        "page_endpoint" -> s"${stub.base}/web")
+      else Map("index_endpoint" -> stub.base, "data_endpoint" -> stub.base,
+        "crawl" -> "CC-MAIN-2024-46")
+    spark.read.format(src).option("debug", "true").options(endpoints ++ opts).load()
+  }
+
+  private def hasResidualFilter(df: DataFrame): Boolean =
+    df.queryExecution.sparkPlan.collect { case f: FilterExec => f }.nonEmpty
+
+  /** The cdx_url values of a scan that projects nothing but cdx_url. */
+  private def cdxUrls(df: DataFrame): Seq[String] = rowUrls(df.select(col("cdx_url")))
+
+  /** The cdx_url values of every row, with the columns `df` projects. */
+  private def rowUrls(df: DataFrame): Seq[String] =
+    df.collect().map(_.getAs[String]("cdx_url").stripPrefix(stub.base)).distinct.toSeq
+
+  private val wbEq = col("url") === "example.com"
+  private val ccEq = col("url") === "example.com/%"
+  private def limit5(q: DataFrame => DataFrame): DataFrame => DataFrame = df => q(df).limit(5)
+  private val WB = "/cdx/search/cdx?url="
+  private val CC = "/CC-MAIN-2024-46-index?url="
+
+  private val pushdownMatrix: Seq[Pin] = Seq(
+    // ---- wayback: url slot -----------------------------------------------
+    Pin("wb url =", "wayback", limit5(_.filter(wbEq)),
+      WB + "example.com&output=csv&limit=5", residual = false),
+    Pin("wb url prefix", "wayback", limit5(_.filter(col("url").startsWith("example.com/"))),
+      WB + "example.com/*&output=csv&limit=5", residual = false),
+    Pin("wb url suffix", "wayback", limit5(_.filter(col("url").endsWith(".example.com"))),
+      WB + "*.example.com&output=csv&limit=5", residual = false),
+    Pin("wb url contains has no arm", "wayback",
+      limit5(_.filter(wbEq && col("url").contains("example"))),
+      WB + "example.com&output=csv&fl=original&limit=100", residual = true),
+    Pin("wb url NOT contains", "wayback", limit5(_.filter(wbEq && !col("url").contains("a.b"))),
+      WB + "example.com&output=csv&limit=5&filter=!original:.*a\\.b.*", residual = false),
+    Pin("wb url NOT prefix", "wayback",
+      limit5(_.filter(wbEq && !col("url").startsWith("example.com/x"))),
+      WB + "example.com&output=csv&limit=5&filter=!original:^example%5C.com/x.*",
+      residual = false),
+    Pin("wb url_like option", "wayback", limit5(identity),
+      WB + "example.com/*_&output=csv&limit=5", residual = false,
+      Map("url_like" -> "example.com/%_")),
+    Pin("wb url option + match_type/from/to/collapse/extra_filters seed", "wayback",
+      limit5(identity),
+      WB + "example.com&output=csv&matchType=prefix&from=2019&to=2020&limit=5" +
+        "&filter=a:b&filter=!c:d&collapse=digest",
+      residual = false,
+      Map("url" -> "example.com", "match_type" -> "prefix", "from" -> "2019",
+        "to" -> "2020", "collapse" -> "digest", "extra_filters" -> "a:b;!c:d")),
+    Pin("wb pushed_url freezes the url slot", "wayback",
+      limit5(_.filter(col("url").startsWith("https://example.com"))),
+      WB + "example.com/*/about&output=csv&fl=original&limit=100", residual = true,
+      Map("pushed_url" -> "example.com/*/about")),
+    // ---- wayback: regex-able columns -------------------------------------
+    Pin("wb urlkey prefix", "wayback", limit5(_.filter(wbEq && col("urlkey").startsWith("com,example)/"))),
+      WB + "example.com&output=csv&limit=5&filter=urlkey:^com,example)/.*", residual = false),
+    Pin("wb urlkey suffix", "wayback", limit5(_.filter(wbEq && col("urlkey").endsWith("/about"))),
+      WB + "example.com&output=csv&limit=5&filter=urlkey:.*/about$", residual = false),
+    Pin("wb urlkey contains", "wayback", limit5(_.filter(wbEq && col("urlkey").contains("ex.am"))),
+      WB + "example.com&output=csv&limit=5&filter=urlkey:.*ex%5C.am.*", residual = false),
+    Pin("wb mimetype prefix", "wayback", limit5(_.filter(wbEq && col("mimetype").startsWith("text/"))),
+      WB + "example.com&output=csv&limit=5&filter=mimetype:^text/.*", residual = false),
+    Pin("wb urlkey NOT contains", "wayback", limit5(_.filter(wbEq && !col("urlkey").contains("a.b"))),
+      WB + "example.com&output=csv&limit=5&filter=!urlkey:.*a\\.b.*", residual = false),
+    Pin("wb urlkey NOT prefix", "wayback", limit5(_.filter(wbEq && !col("urlkey").startsWith("org,"))),
+      WB + "example.com&output=csv&limit=5&filter=!urlkey:^org,.*", residual = false),
+    Pin("wb urlkey NOT suffix", "wayback", limit5(_.filter(wbEq && !col("urlkey").endsWith("x"))),
+      WB + "example.com&output=csv&limit=5&filter=!urlkey:.*x$", residual = false),
+    Pin("wb mimetype NOT contains has no arm", "wayback",
+      limit5(_.filter(wbEq && !col("mimetype").contains("xml"))),
+      WB + "example.com&output=csv&fl=mimetype&limit=100", residual = true),
+    Pin("wb statuscode =", "wayback", limit5(_.filter(wbEq && col("statuscode") === 200)),
+      WB + "example.com&output=csv&limit=5&filter=statuscode:200", residual = false),
+    Pin("wb statuscode !=", "wayback", limit5(_.filter(wbEq && col("statuscode") =!= 404)),
+      WB + "example.com&output=csv&limit=5&filter=!statuscode:404", residual = false),
+    Pin("wb mimetype =", "wayback", limit5(_.filter(wbEq && col("mimetype") === "text/html")),
+      WB + "example.com&output=csv&limit=5&filter=mimetype:text/html", residual = false),
+    Pin("wb mimetype !=", "wayback", limit5(_.filter(wbEq && col("mimetype") =!= "text/html")),
+      WB + "example.com&output=csv&limit=5&filter=!mimetype:text/html", residual = false),
+    Pin("wb statuscode IN", "wayback", limit5(_.filter(wbEq && col("statuscode").isin(200, 301))),
+      WB + "example.com&output=csv&limit=5&filter=statuscode:(200|301)", residual = false),
+    Pin("wb mimetype IN escapes", "wayback",
+      limit5(_.filter(wbEq && col("mimetype").isin("text/html", "a.b"))),
+      WB + "example.com&output=csv&limit=5&filter=mimetype:(text/html|a%5C.b)", residual = false),
+    Pin("wb urlkey IN", "wayback", limit5(_.filter(wbEq && col("urlkey").isin("k1", "k2"))),
+      WB + "example.com&output=csv&limit=5&filter=urlkey:(k1|k2)", residual = false),
+    // ---- wayback: time ----------------------------------------------------
+    Pin("wb timestamp >= and < are trusted", "wayback",
+      limit5(_.filter(wbEq && col("timestamp") >= "2020-01-01 00:00:00" &&
+        col("timestamp") < "2024-01-01 00:00:00")),
+      WB + "example.com&output=csv&from=20200101&to=20240101&limit=5",
+      residual = false),
+    Pin("wb timestamp > and <=", "wayback",
+      limit5(_.filter(wbEq && col("timestamp") > "2020-01-01 00:00:00" &&
+        col("timestamp") <= "2024-01-01 00:00:00")),
+      WB + "example.com&output=csv&from=20200101&to=20240101&limit=5",
+      residual = false),
+    Pin("wb year > and <", "wayback",
+      limit5(_.filter(wbEq && col("year") > 2019 && col("year") < 2024)),
+      WB + "example.com&output=csv&from=2020&to=2023&limit=5", residual = false),
+    Pin("wb year >= and <=", "wayback",
+      limit5(_.filter(wbEq && col("year") >= 2020 && col("year") <= 2023)),
+      WB + "example.com&output=csv&from=2020&to=2023&limit=5", residual = false),
+    Pin("wb year =", "wayback", limit5(_.filter(wbEq && col("year") === 2021)),
+      WB + "example.com&output=csv&from=2021&to=2021&limit=5", residual = false),
+    Pin("wb year IS NOT NULL alone stays residual", "wayback",
+      limit5(_.filter(wbEq && col("year").isNotNull)),
+      WB + "example.com&output=csv&fl=timestamp&limit=100", residual = true),
+    Pin("wb month IS NOT NULL alone stays residual", "wayback",
+      limit5(_.filter(wbEq && col("month").isNotNull)),
+      WB + "example.com&output=csv&fl=timestamp&limit=100", residual = true),
+    Pin("wb month IS NOT NULL rides a from/to", "wayback",
+      limit5(_.filter(wbEq && col("month").isNotNull && col("year") >= 2020)),
+      WB + "example.com&output=csv&from=2020&limit=5", residual = false),
+    // ---- wayback: no arm / bookkeeping ------------------------------------
+    Pin("wb digest = has no arm", "wayback", limit5(_.filter(wbEq && col("digest") === "ABCDEF123")),
+      WB + "example.com&output=csv&fl=digest&limit=100", residual = true),
+    Pin("wb length > has no arm", "wayback", limit5(_.filter(wbEq && col("length") > 1000L)),
+      WB + "example.com&output=csv&fl=length&limit=100", residual = true),
+    Pin("wb digest IS NOT NULL consumed", "wayback", limit5(_.filter(wbEq && col("digest").isNotNull)),
+      WB + "example.com&output=csv&limit=5", residual = false),
+    Pin("wb response IS NOT NULL stays residual", "wayback",
+      limit5(_.filter(wbEq && col("response").isNotNull)),
+      WB + "example.com&output=csv&fl=timestamp,original&limit=100", residual = true),
+    Pin("wb OR has no arm", "wayback",
+      limit5(_.filter(wbEq && (col("statuscode") === 200 || col("mimetype") === "text/html"))),
+      WB + "example.com&output=csv&fl=mimetype,statuscode&limit=100", residual = true),
+    // ---- common crawl: url slot -------------------------------------------
+    Pin("cc url = converts wildcards", "commoncrawl", limit5(_.filter(col("url") === "example.com/%_x")),
+      CC + "example.com/*?x&output=json&fl=url&limit=5", residual = false),
+    Pin("cc url prefix", "commoncrawl", limit5(_.filter(col("url").startsWith("example.com/"))),
+      CC + "example.com/*&output=json&fl=url&limit=5", residual = false),
+    Pin("cc url suffix", "commoncrawl", limit5(_.filter(col("url").endsWith(".example.com/"))),
+      CC + "*.example.com/&output=json&fl=url&limit=5", residual = false),
+    Pin("cc url contains", "commoncrawl", limit5(_.filter(col("url").contains("example"))),
+      CC + "*example*&output=json&fl=url&limit=5", residual = false),
+    Pin("cc url NOT prefix", "commoncrawl",
+      limit5(_.filter(ccEq && !col("url").startsWith("example.com/a.b"))),
+      CC + "example.com/*&output=json&fl=url&limit=5&filter=!~url:^example%5C.com/a%5C.b.*$",
+      residual = false),
+    Pin("cc url NOT contains", "commoncrawl", limit5(_.filter(ccEq && !col("url").contains("adm_in"))),
+      CC + "example.com/*&output=json&fl=url&limit=5&filter=!~url:^.*adm.in.*$",
+      residual = false),
+    Pin("cc url_like option converts wildcards", "commoncrawl", limit5(identity),
+      CC + "example.com/*?&output=json&fl=url&limit=5", residual = false,
+      Map("url_like" -> "example.com/%_")),
+    Pin("cc extra_filters seed", "commoncrawl", limit5(_.filter(ccEq)),
+      CC + "example.com/*&output=json&fl=url&limit=5&filter=a:b&filter=!c:d",
+      residual = false, Map("extra_filters" -> "a:b;!c:d")),
+    Pin("cc pushed_url freezes the url slot", "commoncrawl",
+      limit5(_.filter(col("url").startsWith("https://example.com"))),
+      CC + "example.com/*/about&output=json&fl=url&limit=100", residual = true,
+      Map("pushed_url" -> "example.com/*/about")),
+    Pin("cc crawl_id =", "commoncrawl", limit5(_.filter(ccEq && col("crawl_id") === "CC-MAIN-2023-50")),
+      "/CC-MAIN-2023-50-index?url=example.com/*&output=json&fl=url&limit=5", residual = false),
+    // ---- common crawl: status / mime --------------------------------------
+    Pin("cc statuscode =", "commoncrawl", limit5(_.filter(ccEq && col("statuscode") === 200)),
+      CC + "example.com/*&output=json&fl=url&limit=5&filter==status:200", residual = false),
+    Pin("cc statuscode !=", "commoncrawl", limit5(_.filter(ccEq && col("statuscode") =!= 404)),
+      CC + "example.com/*&output=json&fl=url&limit=5&filter=!status:404", residual = false),
+    Pin("cc mimetype =", "commoncrawl", limit5(_.filter(ccEq && col("mimetype") === "text/html")),
+      CC + "example.com/*&output=json&fl=url&limit=5&filter==mime:text/html", residual = false),
+    Pin("cc mimetype !=", "commoncrawl", limit5(_.filter(ccEq && col("mimetype") =!= "text/html")),
+      CC + "example.com/*&output=json&fl=url&limit=5&filter=!mime:text/html", residual = false),
+    Pin("cc statuscode IN", "commoncrawl", limit5(_.filter(ccEq && col("statuscode").isin(200, 301))),
+      CC + "example.com/*&output=json&fl=url&limit=5&filter=~status:(200|301)", residual = false),
+    Pin("cc mimetype IN does not escape", "commoncrawl",
+      limit5(_.filter(ccEq && col("mimetype").isin("text/html", "a.b"))),
+      CC + "example.com/*&output=json&fl=url&limit=5&filter=~mime:(text/html|a.b)",
+      residual = false),
+    Pin("cc mimetype prefix", "commoncrawl", limit5(_.filter(ccEq && col("mimetype").startsWith("text/"))),
+      CC + "example.com/*&output=json&fl=url&limit=5&filter=~mime:^text/.*", residual = false),
+    Pin("cc mimetype suffix", "commoncrawl", limit5(_.filter(ccEq && col("mimetype").endsWith("+xml"))),
+      CC + "example.com/*&output=json&fl=url&limit=5&filter=~mime:.*%5C+xml$", residual = false),
+    Pin("cc mimetype contains", "commoncrawl", limit5(_.filter(ccEq && col("mimetype").contains("htm"))),
+      CC + "example.com/*&output=json&fl=url&limit=5&filter=~mime:.*htm.*", residual = false),
+    // ---- common crawl: time is pushed AND kept ----------------------------
+    Pin("cc timestamp >= and < stay residual", "commoncrawl",
+      limit5(_.filter(ccEq && col("timestamp") >= "2024-01-01 00:00:00" &&
+        col("timestamp") < "2024-02-01 00:00:00")),
+      CC + "example.com/*&output=json&fl=timestamp&limit=100&from=20240101&to=20240201",
+      residual = true),
+    Pin("cc timestamp > and <= stay residual", "commoncrawl",
+      limit5(_.filter(ccEq && col("timestamp") > "2024-01-01 00:00:00" &&
+        col("timestamp") <= "2024-02-01 00:00:00")),
+      CC + "example.com/*&output=json&fl=timestamp&limit=100&from=20240101&to=20240201",
+      residual = true),
+    // ---- common crawl: no arm / bookkeeping -------------------------------
+    Pin("cc digest = has no arm", "commoncrawl", limit5(_.filter(ccEq && col("digest") === "SHA1AAA")),
+      CC + "example.com/*&output=json&fl=digest&limit=100", residual = true),
+    Pin("cc digest IS NOT NULL consumed", "commoncrawl", limit5(_.filter(ccEq && col("digest").isNotNull)),
+      CC + "example.com/*&output=json&fl=url&limit=5", residual = false),
+    Pin("cc response IS NOT NULL stays residual", "commoncrawl",
+      limit5(_.filter(ccEq && col("response").isNotNull)),
+      CC + "example.com/*&output=json&fl=filename,offset,length&limit=100", residual = true),
+    Pin("cc warc IS NOT NULL stays residual", "commoncrawl",
+      limit5(_.filter(ccEq && col("warc").isNotNull)),
+      CC + "example.com/*&output=json&fl=filename,offset,length&limit=100", residual = true),
+    Pin("cc OR has no arm", "commoncrawl",
+      limit5(_.filter(ccEq && (col("statuscode") === 200 || col("mimetype") === "text/html"))),
+      CC + "example.com/*&output=json&fl=mime,status&limit=100", residual = true)
+  )
+
+  pushdownMatrix.foreach { p =>
+    test(s"pushdown matrix: ${p.name}") {
+      val df = p.q(debugRead(p.src, p.opts))
+      assert(hasResidualFilter(df) == p.residual, df.queryExecution.sparkPlan.treeString)
+      assert(cdxUrls(df) == Seq(p.url))
+    }
+  }
+
+  test("pushdown matrix: wayback TopN on timestamp DESC -> fastLatest, sort kept") {
+    val df = debugRead("wayback", Map.empty).filter(wbEq)
+      .orderBy(col("timestamp").desc).limit(10)
+    assert(cdxUrls(df) == Seq(WB + "example.com&output=csv&fl=timestamp&fastLatest=true&limit=-10"))
+    assert(df.queryExecution.sparkPlan.collect { case s: TakeOrderedAndProjectExec => s }.nonEmpty)
+  }
+
+  test("pushdown matrix: wayback TopN on another column pushes the limit, sort kept") {
+    val df = debugRead("wayback", Map.empty).filter(wbEq).orderBy(col("url")).limit(4)
+    assert(cdxUrls(df) == Seq(WB + "example.com&output=csv&fl=original&limit=4"))
+    assert(df.queryExecution.sparkPlan.collect { case s: TakeOrderedAndProjectExec => s }.nonEmpty)
+  }
+
+  test("pushdown matrix: wayback OFFSET + LIMIT") {
+    val df = debugRead("wayback", Map.empty).filter(wbEq).offset(50).limit(10)
+    assert(cdxUrls(df) == Seq(WB + "example.com&output=csv&limit=10&offset=50"))
+    assert(df.queryExecution.sparkPlan.collect { case l: GlobalLimitExec => l }.isEmpty)
+  }
+
+  test("partition plan: wayback offset chunks sum exactly to the limit") {
+    val df = debugRead("wayback", Map("partitions" -> "3")).filter(wbEq)
+      .limit(10).select(col("url"), col("cdx_url"))
+    assert(scanPartitions(df) == 3)
+    assert(rowUrls(df).sorted == Seq(
+      WB + "example.com&output=csv&fl=original&limit=2&offset=8",
+      WB + "example.com&output=csv&fl=original&limit=4",
+      WB + "example.com&output=csv&fl=original&limit=4&offset=4"))
+    // the LIMIT node was deleted: the stub ignores limit=, so all rows come back
+    assert(df.collect().length == 9)
+    // a limit smaller than the partition count drops the empty chunks
+    val small = debugRead("wayback", Map("partitions" -> "3")).filter(wbEq)
+      .offset(5).limit(2).select(col("url"), col("cdx_url"))
+    assert(scanPartitions(small) == 2)
+    assert(rowUrls(small).sorted == Seq(
+      WB + "example.com&output=csv&fl=original&limit=1&offset=5",
+      WB + "example.com&output=csv&fl=original&limit=1&offset=6"))
+    // a cdx_url-only debug scan never shards
+    assert(scanPartitions(debugRead("wayback", Map("partitions" -> "3"))
+      .filter(wbEq).limit(10).select(col("cdx_url"))) == 1)
+  }
+
+  test("partition plan: commoncrawl crawl_id IN divides a pushed limit, rounding up") {
+    val ids = Seq("CC-MAIN-2024-46", "CC-MAIN-2024-42", "CC-MAIN-2024-38")
+    val df = debugRead("commoncrawl", Map.empty)
+      .filter(ccEq && col("crawl_id").isin(ids: _*)).limit(10)
+    assert(scanPartitions(df) == 3)
+    assert(cdxUrls(df).sorted == ids.sorted.map(c =>
+      s"/$c-index?url=example.com/*&output=json&fl=url&limit=4"))
+    // without a pushed LIMIT every crawl keeps the full max_results
+    val unlimited = debugRead("commoncrawl", Map("max_results" -> "7"))
+      .filter(ccEq && col("crawl_id").isin(ids.take(2): _*))
+    assert(cdxUrls(unlimited).sorted == ids.take(2).sorted.map(c =>
+      s"/$c-index?url=example.com/*&output=json&fl=url&limit=7"))
+  }
+
+  test("partition plan: commoncrawl page shards report the unpaged cdx_url") {
+    val df = debugRead("commoncrawl", Map("partitions" -> "3"))
+      .filter(ccEq).limit(5).select(col("url"), col("cdx_url"))
+    assert(scanPartitions(df) == 3)
+    assert(rowUrls(df) == Seq(CC + "example.com/*&output=json&fl=url&limit=5"))
+    // a cdx_url-only debug scan skips the page probe and never shards
+    assert(scanPartitions(debugRead("commoncrawl", Map("partitions" -> "3"))
+      .filter(ccEq).limit(5).select(col("cdx_url"))) == 1)
   }
 
   // ---- d1 -------------------------------------------------------------
