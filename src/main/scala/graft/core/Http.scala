@@ -68,16 +68,22 @@ object Http {
   /** `Content-Type` header for a JSON request body. */
   val JsonContent: Map[String, String] = Map("Content-Type" -> "application/json")
 
+  // "timed out": the JDK client's timeout messages ("request timed
+  // out", "HTTP connect timed out") never say "timeout"
   private def isRetryable(msg: String): Boolean =
     msg.contains("503") || msg.contains("504") ||
       msg.contains("Service Unavailable") || msg.contains("Gateway Timeout") ||
-      msg.contains("connection") || msg.contains("timeout")
+      msg.contains("connection") || msg.contains("timeout") ||
+      msg.contains("timed out")
 
   /** Ranged fetch with the reference's retry policy: 5 attempts, backoff
     * 100/200/400/800/1600 ms, wall-clock budget in seconds measured from
-    * `startNanos`, retry only on 503/504/connection/timeout. Errors are
-    * in-band (`FetchResult.error`), never thrown — a failed body fetch must
-    * not fail the whole scan.
+    * `startNanos`, retry only on 503/504/connection/timeout. Each attempt
+    * may take what is left of the budget (rounded up to whole seconds),
+    * at most 60 s, so a stalled server ends the fetch with the
+    * `Timeout after …` error at the budget, not up to 60 s past it.
+    * Errors are in-band (`FetchResult.error`), never thrown — a failed
+    * body fetch must not fail the whole scan.
     */
   def fetchWithRetry(
       url: String,
@@ -103,7 +109,9 @@ object Http {
           if (rangeStart >= 0 && rangeLen > 0)
             Map("Range" -> s"bytes=$rangeStart-${rangeStart + rangeLen - 1}")
           else Map.empty[String, String]
-        val resp = send("GET", url, hdrs, timeoutSeconds = 60)
+        val leftMs = timeoutSeconds * 1000L - (System.nanoTime() - startNanos) / 1000000L
+        val resp = send("GET", url, hdrs,
+          timeoutSeconds = math.min(60L, math.max(1L, (leftMs + 999L) / 1000L)))
         if (resp.status == 503 || resp.status == 504) {
           lastError = s"HTTP ${resp.status}"
           // retryable — fall through to next attempt

@@ -587,7 +587,7 @@ object Dedup {
       }
       // footer-only count of what was actually written — the doc tally a
       // reuse guard can check without re-reading data pages
-      val nDocs = spark.read.parquet(hashesPath.toString).count()
+      val nDocs = IndexLifecycle.readDir(spark, hashesPath.toString).count()
       writeIndexMeta(spark, root.toString, numPerm, bands, shingleK, nDocs,
         bandBuckets, hb = bandBuckets)
     }
@@ -638,15 +638,15 @@ object Dedup {
     * callers that may retry MUST pass a stable id.
     *
     * The refreshed meta tally is INCREMENTAL — committed `n_docs` from
-    * meta plus this batch's row count, one job over the BATCH — so the
-    * append never scans the index's own data (spec-pinned by bytes-read
-    * assertion): at a 10⁹-doc lake even a single-column recount would
-    * have been the append's dominant term. A crash between the marker
-    * rename and the meta rewrite leaves `n_docs` stale by one batch;
-    * queries are unaffected (visibility is the markers', not the
-    * tally's), [[lshIndexDocCount]] still answers exactly, and the next
-    * [[lshCompact]] — whose rewrite scans everything anyway — recounts
-    * and repairs it.
+    * meta plus this batch's row count, observed on the hashes write (no
+    * job of its own) — so the append never scans the index's own data
+    * (spec-pinned by bytes-read assertion): at a 10⁹-doc lake even a
+    * single-column recount would have been the append's dominant
+    * term. A crash between the marker rename and the meta rewrite
+    * leaves `n_docs` stale by one batch; queries are unaffected
+    * (visibility is the markers', not the tally's), [[lshIndexDocCount]]
+    * still answers exactly, and the next [[lshCompact]] — whose rewrite
+    * scans everything anyway — recounts and repairs it.
     *
     * Pre-round-16 indexes (no `append_attempt` column) take the legacy
     * in-place append, which has neither guarantee; passing `appendId`
@@ -671,7 +671,7 @@ object Dedup {
       // concurrent rebuild's stale predecessors, silently signing the
       // batch with the wrong family
       recoverIndexDirs(fs, root)
-      val meta = spark.read.parquet(new HPath(root, "meta").toString).head()
+      val meta = readIndexMeta(spark, root)
       val numPerm = meta.getAs[Int]("num_perm")
       val bands = meta.getAs[Int]("bands")
       val shingleK = meta.getAs[Int]("shingle_k")
@@ -679,7 +679,7 @@ object Dedup {
       val hb = hashBucketsOf(meta)
       val bandsPath = new HPath(root, "bands")
       val hashesPath = new HPath(root, "hashes")
-      val legacy = !spark.read.parquet(bandsPath.toString)
+      val legacy = !IndexLifecycle.readDir(spark, bandsPath.toString)
         .columns.contains(AttemptCol)
       if (legacy) {
         require(appendId.isEmpty, "idempotent appendId requires the " +
@@ -696,11 +696,11 @@ object Dedup {
         } else {
           newBands.write.mode("append").parquet(bandsPath.toString)
         }
-        base.select(col("id").as("ref_id"),
-            shingleHashes64Udf(shingleK)(col("__text")).as("sh"))
-          .write.mode("append").parquet(hashesPath.toString)
+        val nNew = IndexLifecycle.countedWrite(base.select(col("id").as("ref_id"),
+            shingleHashes64Udf(shingleK)(col("__text")).as("sh")))(
+          _.write.mode("append").parquet(hashesPath.toString))
         writeIndexMeta(spark, root.toString, numPerm, bands, shingleK,
-          meta.getAs[Long]("n_docs") + accepted.count(), nb, hb)
+          meta.getAs[Long]("n_docs") + nNew, nb, hb)
       } else {
       val attempt = java.util.UUID.randomUUID().toString
       val base = prepTexts(accepted, textCol, idCol)
@@ -723,12 +723,16 @@ object Dedup {
       val newHashes = base.select(col("id").as("ref_id"),
           shingleHashes64Udf(shingleK)(col("__text")).as("sh"))
         .withColumn(AttemptCol, lit(attempt))
-      if (hb > 0) {
-        val t = registerHashesTable(spark, path, hb)
-        newHashes.repartition(hb, col("ref_id"))
-          .write.mode("append").insertInto(t)
-      } else {
-        newHashes.write.mode("append").parquet(hashesPath.toString)
+      // the batch's row count, observed on this write: one hashes row
+      // per accepted doc, so it is the meta tally's increment
+      val nNew = IndexLifecycle.countedWrite(newHashes) { h =>
+        if (hb > 0) {
+          val t = registerHashesTable(spark, path, hb)
+          h.repartition(hb, col("ref_id"))
+            .write.mode("append").insertInto(t)
+        } else {
+          h.write.mode("append").parquet(hashesPath.toString)
+        }
       }
       // an index with a fingerprint sidecar ([[lshWriteFingerprints]])
       // extends it with the batch's fps UNDER THE SAME MARKER — the
@@ -748,11 +752,10 @@ object Dedup {
       // COMMIT: atomic marker publish (data first, marker last) — see
       // [[IndexLifecycle.commitMarker]]
       IndexLifecycle.commitMarker(fs, root, id, attempt)
-      // incremental tally: committed n_docs + this batch, counted on the
-      // BATCH (one hashes row per input row, so the counts agree by
-      // construction) — never a scan of the index's own data
+      // incremental tally: committed n_docs + this batch's observed
+      // count — never a scan of the index's own data
       writeIndexMeta(spark, root.toString, numPerm, bands, shingleK,
-        meta.getAs[Long]("n_docs") + accepted.count(), nb, hb)
+        meta.getAs[Long]("n_docs") + nNew, nb, hb)
       }
     }
   }
@@ -790,6 +793,8 @@ object Dedup {
   private val AttemptCol = IndexLifecycle.AttemptCol
   private def indexFs(spark: SparkSession, path: String): (FileSystem, HPath) =
     IndexLifecycle.fsFor(spark, path)
+  private def readIndexMeta(spark: SparkSession, root: HPath): org.apache.spark.sql.Row =
+    IndexLifecycle.readMeta(spark, new HPath(root, "meta").toString)
   /** Index-open repair: restore either data dir from a compact that
     * crashed inside its swap window (see [[IndexLifecycle.recoverSwap]]).
     */
@@ -828,7 +833,7 @@ object Dedup {
                            path: String): Unit = {
     val spark = ref.sparkSession
     val (fs, root) = indexFs(spark, path)
-    val meta = spark.read.parquet(new HPath(root, "meta").toString).head()
+    val meta = readIndexMeta(spark, root)
     val hb = hashBucketsOf(meta)
     val fpsPath = new HPath(root, "fps")
     val data = ref.select(xxhash64(col(textCol)).as("fp"))
@@ -861,11 +866,11 @@ object Dedup {
     require(fs.exists(fpsPath),
       s"index at $path has no fingerprint sidecar — run " +
         "lshWriteFingerprints(lake, textCol, path) once after the build")
-    val meta = spark.read.parquet(new HPath(root, "meta").toString).head()
+    val meta = readIndexMeta(spark, root)
     val hb = hashBucketsOf(meta)
     visibleIndexRows(
       if (hb > 0) spark.table(registerIndexTable(spark, path, "fps", hb, Seq("fp")))
-      else spark.read.parquet(fpsPath.toString),
+      else IndexLifecycle.readDir(spark, fpsPath.toString),
       committedAttempts(fs, root, excludeAppendIds))
   }
 
@@ -913,8 +918,7 @@ object Dedup {
     */
   def lshIndexCommittedDocs(spark: SparkSession, path: String): Long = {
     val (_, root) = indexFs(spark, path)
-    spark.read.parquet(new HPath(root, "meta").toString)
-      .head().getAs[Long]("n_docs")
+    readIndexMeta(spark, root).getAs[Long]("n_docs")
   }
 
   /** Committed (visible) document count of a persisted index — counts
@@ -926,7 +930,7 @@ object Dedup {
   def lshIndexDocCount(spark: SparkSession, path: String): Long = {
     val (fs, root) = indexFs(spark, path)
     recoverIndexDirs(fs, root)
-    visibleIndexRows(spark.read.parquet(new HPath(root, "hashes").toString),
+    visibleIndexRows(IndexLifecycle.readDir(spark, new HPath(root, "hashes").toString),
       committedAttempts(fs, root)).count()
   }
 
@@ -964,7 +968,7 @@ object Dedup {
     IndexLifecycle.withWriterLock(fs, root, "lshCompact",
         IndexLifecycle.lockTtlMs(spark)) {
       recoverIndexDirs(fs, root)
-      val meta = spark.read.parquet(new HPath(root, "meta").toString).head()
+      val meta = readIndexMeta(spark, root)
       val numPerm = meta.getAs[Int]("num_perm")
       val bands = meta.getAs[Int]("bands")
       val shingleK = meta.getAs[Int]("shingle_k")
@@ -983,7 +987,7 @@ object Dedup {
       val committed = committedAttempts(fs, root, keepAppendIds)
       val keptAttempts = IndexLifecycle.committedAttemptsOf(fs, root, keepAppendIds)
       def visible(sub: String): DataFrame = {
-        val raw = spark.read.parquet(new HPath(root, sub).toString)
+        val raw = IndexLifecycle.readDir(spark, new HPath(root, sub).toString)
         val base = visibleIndexRows(raw, committed)
           .withColumn(AttemptCol, lit(null).cast("string"))
         if (keptAttempts.isEmpty || !raw.columns.contains(AttemptCol)) base
@@ -1049,7 +1053,7 @@ object Dedup {
         spark.sql(s"DROP TABLE IF EXISTS ${hashesTableName(spark, path)}")
         spark.sql(s"DROP TABLE IF EXISTS ${indexTableName(spark, path, "fps")}"): Unit
       }
-      val nDocs = spark.read.parquet(hashesLive.toString).count()
+      val nDocs = IndexLifecycle.readDir(spark, hashesLive.toString).count()
       writeIndexMeta(spark, root.toString, numPerm, bands, shingleK, nDocs,
         nb, hb)
     }
@@ -1150,7 +1154,7 @@ object Dedup {
     // stores, and serializing it JVM-wide would make every concurrent
     // reader queue behind every other's listing; the lock only needs to
     // cover the check-then-create on the shared catalog
-    val onDisk = spark.read.parquet(loc.toString).schema
+    val onDisk = IndexLifecycle.readDir(spark, loc.toString).schema
     registerLock.synchronized {
       def sig(s: org.apache.spark.sql.types.StructType) =
         s.fields.map(f => (f.name, f.dataType)).toSeq
@@ -1212,7 +1216,7 @@ object Dedup {
     val spark = df.sparkSession
     val (fs, root) = indexFs(spark, indexPath)
     recoverIndexDirs(fs, root)
-    val meta = spark.read.parquet(new HPath(root, "meta").toString).head()
+    val meta = readIndexMeta(spark, root)
     val numPerm = meta.getAs[Int]("num_perm")
     val bands = meta.getAs[Int]("bands")
     val shingleK = meta.getAs[Int]("shingle_k")
@@ -1229,7 +1233,7 @@ object Dedup {
     // HashPartitioning on (band, bucket) already satisfies the join)
     val refBands = visibleIndexRows(
       if (nb > 0) spark.table(registerBandsTable(spark, indexPath, nb))
-      else spark.read.parquet(new HPath(root, "bands").toString), committed)
+      else IndexLifecycle.readDir(spark, new HPath(root, "bands").toString), committed)
     // one cheap count job over the batch (no UDFs) — bands per doc is
     // exactly `bands` for signed docs, so docs × bands bounds the band
     // rows without evaluating the signature
@@ -1250,7 +1254,7 @@ object Dedup {
     val hbuckets = hashBucketsOf(meta)
     val hb = visibleIndexRows(
         if (hbuckets > 0) spark.table(registerHashesTable(spark, indexPath, hbuckets))
-        else spark.read.parquet(new HPath(root, "hashes").toString), committed)
+        else IndexLifecycle.readDir(spark, new HPath(root, "hashes").toString), committed)
       .select(col("ref_id"), col("sh").as("__sh_b"))
     candidates.join(ha, "id").join(hb, "ref_id")
       .select(col("id"), col("ref_id"),

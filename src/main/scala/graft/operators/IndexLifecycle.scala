@@ -1,8 +1,15 @@
 package graft.operators
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
+import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
+import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructType}
 
 /** Shared commit-marker machinery for PERSISTED index layouts —
   * [[Dedup]]'s LSH index and [[SimilaritySearch]]'s IVF index run the
@@ -27,8 +34,25 @@ import org.apache.spark.sql.functions._
   * work on any supported store (`file:`, `hdfs:`, `s3a:`, the repo's
   * `r2:`), and every guarantee is paid in O(appends) driver-side
   * metadata — never data-proportional work (see SCALE.md round 16).
+  *
+  * Bookkeeping reads run on the driver, not as Spark jobs: the one-row
+  * `meta` goes through [[readMeta]] and the LSH index's and unit
+  * store's data dirs through [[readDir]], each one parquet footer read.
+  * A plain `spark.read.parquet(dir)` launches a schema-inference job
+  * per call, and `head()` a second; an ingest loop paid both several
+  * times per micro-batch.
+  *
+  * The ingest loops hold their batch frames (the accepted docs, the
+  * unit-occurrence table) as SNAPSHOTS
+  * ([[org.apache.spark.sql.GraftColumnShim.snapshot]]), not `persist()`:
+  * the batch frames READ the index dirs that the batch's own appends
+  * then WRITE, and each file write makes Spark's CacheManager drop
+  * every cached plan over the written path. A persisted batch frame was
+  * therefore recomputed — its whole dedup plan, broadcasts included —
+  * by every action after the first append. A snapshot is invisible to
+  * the CacheManager, so the batch is computed once.
   */
-private[operators] object IndexLifecycle {
+private[graft] object IndexLifecycle {
 
   /** Data rows carry the attempt id that wrote them; null = base. */
   val AttemptCol = "append_attempt"
@@ -38,6 +62,85 @@ private[operators] object IndexLifecycle {
     val p = new HPath(path)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     (fs, fs.makeQualified(p))
+  }
+
+  /** Data files of a parquet dir in the order Spark's non-merging schema
+    * inference considers them: sorted by path, hidden (`_`/`.`) names
+    * skipped. Empty when the dir is missing or holds no such file.
+    */
+  private def dataFiles(fs: FileSystem, dir: HPath): Seq[HPath] =
+    if (!fs.exists(dir)) Nil
+    else fs.listStatus(dir).toSeq
+      .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
+        !s.getPath.getName.startsWith("."))
+      .map(_.getPath).sortBy(_.toString)
+
+  /** The Spark schema in a parquet file's footer — the row metadata
+    * Spark writes, else the converted parquet schema (what schema
+    * inference reads).
+    */
+  private def footerSchema(spark: SparkSession, file: HPath): StructType = {
+    val fm = scala.util.Using.resource(ParquetFileReader.open(
+        HadoopInputFile.fromPath(file, spark.sessionState.newHadoopConf())))(
+      _.getFooter.getFileMetaData)
+    Option(fm.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
+      .map(DataType.fromJson(_).asInstanceOf[StructType])
+      .getOrElse(new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+        .convert(fm.getSchema))
+  }
+
+  /** `spark.read.parquet(dir)` without the schema-inference job: the
+    * schema comes from the first data file's footer, read on the driver
+    * — the one footer Spark's own (non-merging) inference reads; the
+    * reader makes it nullable, as inference does. A dir with no data
+    * file at its top level falls back to plain inference, so errors and
+    * partitioned layouts behave as before.
+    */
+  def readDir(spark: SparkSession, dir: String): DataFrame = {
+    val (fs, qualified) = fsFor(spark, dir)
+    dataFiles(fs, qualified).headOption match {
+      case Some(f) => spark.read.schema(footerSchema(spark, f)).parquet(dir)
+      case None => spark.read.parquet(dir)
+    }
+  }
+
+  /** The one row of an index's `meta` dir, read on the driver: no Spark
+    * job. Same values and (nullable) schema as
+    * `spark.read.parquet(dir).head()`, so layout checks on
+    * `row.schema.fieldNames` keep working. Meta columns are INT or
+    * BIGINT; any other type is rejected.
+    */
+  def readMeta(spark: SparkSession, dir: String): Row = {
+    val (fs, qualified) = fsFor(spark, dir)
+    val files = dataFiles(fs, qualified)
+    require(files.nonEmpty, s"no index meta at $dir")
+    val schema = StructType(footerSchema(spark, files.head)
+      .fields.map(_.copy(nullable = true)))
+    def firstRow(f: HPath): Option[Group] =
+      scala.util.Using.resource(ParquetReader.builder(new GroupReadSupport(), f)
+        .withConf(spark.sessionState.newHadoopConf()).build())(r => Option(r.read()))
+    val g = files.iterator.flatMap(firstRow).nextOption().getOrElse(
+      throw new IllegalStateException(s"index meta at $dir holds no row"))
+    val values = schema.fields.map { fd =>
+      if (g.getFieldRepetitionCount(fd.name) == 0) null
+      else fd.dataType match {
+        case IntegerType => g.getInteger(fd.name, 0)
+        case LongType => g.getLong(fd.name, 0)
+        case t => throw new IllegalArgumentException(
+          s"index meta at $dir: unsupported column ${fd.name} of type $t")
+      }
+    }
+    new GenericRowWithSchema(values, schema)
+  }
+
+  /** Run `write` over `df` and return the number of rows it wrote,
+    * counted by an observation on the write itself — no second job over
+    * the batch (the appends' incremental meta tallies use it).
+    */
+  def countedWrite(df: DataFrame)(write: DataFrame => Unit): Long = {
+    val rows = org.apache.spark.sql.Observation()
+    write(df.observe(rows, count(lit(1)).as("n")))
+    rows.get("n").asInstanceOf[Long]
   }
 
   def markerPath(root: HPath, id: String): HPath =

@@ -186,8 +186,13 @@ object ParagraphDedup {
     * `(id, pos)`-first occurrence); `novelKeys` is the distinct key set
     * the batch introduces (`h` column — exactly what
     * [[UnitStore.append]] expects). The intermediate occurrence table is
-    * batch-proportional and persisted so the two outputs don't scan the
-    * store twice; call `release()` after BOTH have been consumed.
+    * batch-proportional and held as a batch snapshot
+    * ([[org.apache.spark.sql.GraftColumnShim.snapshot]]) so the two
+    * outputs don't compute it twice. A `persist()` would not do: the
+    * table reads the store's `keys` dir, and a write there — the store
+    * append that consumes `novelKeys` — makes Spark drop every cached
+    * plan over that dir, so each later read recomputed it. Call
+    * `release()` after BOTH outputs have been consumed.
     * `excludeAppendIds` passes through to [[UnitStore.read]] — a
     * replayed micro-batch excluding its own appendId recomputes
     * identical outputs even after its append committed.
@@ -216,7 +221,9 @@ object ParagraphDedup {
     val marked0 = keyed
       .join(firsts.hint("SHUFFLE_HASH"), Seq("__h"))
       .join(store, Seq("__h"), "left")
-    val marked = if (cache) marked0.persist() else marked0
+    val (marked, release) =
+      if (cache) org.apache.spark.sql.GraftColumnShim.snapshot(marked0)
+      else (marked0, () => ())
     // array_distinct: a store that violates the SET contract (an append
     // replayed without its marker, keys re-appended by a buggy caller)
     // multiplies occurrence rows through the left join — membership
@@ -234,7 +241,7 @@ object ParagraphDedup {
       .select(col("__h").as("h"))
     StoreAccept(
       rewriteWithDrops(df, idCol, textCol, unitize, joinSep, drops),
-      novel, () => { if (cache) marked.unpersist(); () })
+      novel, release)
   }
 
   /** Keep-first rewrite of a batch AGAINST a seen-unit store

@@ -34,6 +34,9 @@ object UnitStore {
   private def keyBucketsOf(meta: org.apache.spark.sql.Row): Int =
     meta.getAs[Int]("key_buckets")
 
+  private def readMeta(spark: SparkSession, root: HPath): org.apache.spark.sql.Row =
+    IndexLifecycle.readMeta(spark, new HPath(root, "meta").toString)
+
   private def writeMeta(spark: SparkSession, root: HPath, nKeys: Long,
                         buckets: Int): Unit = {
     import spark.implicits._
@@ -77,7 +80,7 @@ object UnitStore {
         spark.sql(
           s"DROP TABLE IF EXISTS ${Dedup.indexTableName(spark, path, "keys")}"): Unit
       }
-      val n = spark.read.parquet(keysPath.toString).count()
+      val n = IndexLifecycle.readDir(spark, keysPath.toString).count()
       writeMeta(spark, root, n, buckets)
     }
   }
@@ -95,12 +98,12 @@ object UnitStore {
     IndexLifecycle.recoverSwap(fs, keysPath)
     require(fs.exists(keysPath),
       s"no unit store at $path — build one with UnitStore.build")
-    val meta = spark.read.parquet(new HPath(root, "meta").toString).head()
+    val meta = readMeta(spark, root)
     val kb = keyBucketsOf(meta)
     val df =
       if (kb > 0)
         spark.table(Dedup.registerIndexTable(spark, path, "keys", kb, Seq("h")))
-      else spark.read.parquet(keysPath.toString)
+      else IndexLifecycle.readDir(spark, keysPath.toString)
     IndexLifecycle.visibleRows(df,
       IndexLifecycle.committedAttempts(fs, root, excludeAppendIds))
   }
@@ -112,7 +115,7 @@ object UnitStore {
     * invisible, and a retry of a committed `appendId` is a no-op — so
     * `foreachBatch` drivers key the id on the micro-batch id. The meta
     * tally is incremental (committed `n_keys` + this batch's distinct
-    * count — one job over the BATCH, nothing over the store's data);
+    * count, observed on the keys write — nothing over the store's data);
     * [[compact]] recounts exactly.
     */
   def append(keys: DataFrame, keyCol: String, path: String,
@@ -130,20 +133,20 @@ object UnitStore {
       // under the lease: swap recovery renames dirs and must never race
       // a live compact's two-rename window
       IndexLifecycle.recoverSwap(fs, keysPath)
-      val meta = spark.read.parquet(new HPath(root, "meta").toString).head()
+      val meta = readMeta(spark, root)
       val kb = keyBucketsOf(meta)
       val attempt = java.util.UUID.randomUUID().toString
-      val data = data0.withColumn(AttemptCol, lit(attempt)).persist()
-      try {
+      val nNew = IndexLifecycle.countedWrite(
+          data0.withColumn(AttemptCol, lit(attempt))) { data =>
         if (kb > 0) {
           data.repartition(kb, col("h")).write.mode("append")
             .insertInto(Dedup.registerIndexTable(spark, path, "keys", kb, Seq("h")))
         } else {
           data.write.mode("append").parquet(keysPath.toString)
         }
-        IndexLifecycle.commitMarker(fs, root, id, attempt)
-        writeMeta(spark, root, meta.getAs[Long]("n_keys") + data.count(), kb)
-      } finally data.unpersist()
+      }
+      IndexLifecycle.commitMarker(fs, root, id, attempt)
+      writeMeta(spark, root, meta.getAs[Long]("n_keys") + nNew, kb)
     }
   }
 
@@ -153,8 +156,7 @@ object UnitStore {
     */
   def committedKeys(spark: SparkSession, path: String): Long = {
     val (_, root) = IndexLifecycle.fsFor(spark, path)
-    spark.read.parquet(new HPath(root, "meta").toString)
-      .head().getAs[Long]("n_keys")
+    readMeta(spark, root).getAs[Long]("n_keys")
   }
 
   /** Exact committed DISTINCT key count — one narrow scan of the store;
@@ -186,11 +188,11 @@ object UnitStore {
         IndexLifecycle.lockTtlMs(spark)) {
       val keysLive = new HPath(root, "keys")
       IndexLifecycle.recoverSwap(fs, keysLive)
-      val meta = spark.read.parquet(new HPath(root, "meta").toString).head()
+      val meta = readMeta(spark, root)
       val kb = keyBucketsOf(meta)
       val committed = IndexLifecycle.committedAttempts(fs, root, keepAppendIds)
       val keptAttempts = IndexLifecycle.committedAttemptsOf(fs, root, keepAppendIds)
-      val raw = spark.read.parquet(keysLive.toString)
+      val raw = IndexLifecycle.readDir(spark, keysLive.toString)
       val foldedBase = IndexLifecycle.visibleRows(raw, committed)
         .distinct()
         .withColumn(AttemptCol, lit(null).cast("string"))
@@ -212,7 +214,7 @@ object UnitStore {
         spark.sql(
           s"DROP TABLE IF EXISTS ${Dedup.indexTableName(spark, path, "keys")}"): Unit
       }
-      val n = spark.read.parquet(keysLive.toString).count()
+      val n = IndexLifecycle.readDir(spark, keysLive.toString).count()
       writeMeta(spark, root, n, kb)
     }
   }

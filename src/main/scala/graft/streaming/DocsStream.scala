@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftColumnShim, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
@@ -114,14 +114,15 @@ object DocsStream {
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
                        batchId: Long) =>
         // accepted is read twice by the append (band rows + verify
-        // hashes) — persist the micro-batch-sized frame so the index
-        // join runs once per batch
-        val accepted = graft.operators.Dedup
-          .dedupAgainstIndex(batch.toDF(), indexPath, "text", "doc_id")
-          .persist()
-        graft.operators.Dedup.lshAppend(accepted, "text", "doc_id", indexPath,
+        // hashes): snapshot the micro-batch-sized frame so the index join
+        // runs once per batch (a persist() would be dropped by the
+        // append's own first write into the index dirs it reads)
+        val (accepted, release) = GraftColumnShim.snapshot(
+          graft.operators.Dedup
+            .dedupAgainstIndex(batch.toDF(), indexPath, "text", "doc_id"))
+        try graft.operators.Dedup.lshAppend(accepted, "text", "doc_id", indexPath,
           appendId = Some(s"$queryName-b$batchId"))
-        accepted.unpersist()
+        finally release()
         compactEvery.foreach { n =>
           if ((batchId + 1) % n == 0)
             graft.operators.Dedup.lshCompact(spark, indexPath)
@@ -194,13 +195,12 @@ object DocsStream {
         // exact stages (within-batch keeper + sidecar anti join) then the
         // LSH stage on the survivors; accepted docs + their fps append
         // under one marker
-        val accepted = graft.operators.Dedup
-          .dedupAgainstIndexFingerprinted(batch.toDF(), indexPath,
-            "text", "doc_id", fpCol)
-          .persist()
-        graft.operators.Dedup.lshAppend(accepted, "text", "doc_id", indexPath,
+        val (accepted, release) = GraftColumnShim.snapshot(
+          graft.operators.Dedup.dedupAgainstIndexFingerprinted(batch.toDF(),
+            indexPath, "text", "doc_id", fpCol))
+        try graft.operators.Dedup.lshAppend(accepted, "text", "doc_id", indexPath,
           appendId = Some(s"$queryName-b$batchId"))
-        accepted.unpersist()
+        finally release()
         compactEvery.foreach { n =>
           if ((batchId + 1) % n == 0)
             graft.operators.Dedup.lshCompact(spark, indexPath)
@@ -389,10 +389,11 @@ object DocsStream {
               keepAppendIds = Seq(appendId))
           }
         }
-        val accepted = graft.operators.Dedup
-          .dedupAgainstIndexFingerprinted(batch.toDF(), indexPath,
-            textCol, idCol, fpCol, excludeAppendIds = Seq(appendId))
-          .persist()
+        // one snapshot serves the append, the rewrite and (shards loop)
+        // the curation join — see runIndexDedupLoopAsStream
+        val (accepted, release) = GraftColumnShim.snapshot(
+          graft.operators.Dedup.dedupAgainstIndexFingerprinted(batch.toDF(),
+            indexPath, textCol, idCol, fpCol, excludeAppendIds = Seq(appendId)))
         try {
           graft.operators.Dedup.lshAppend(accepted, textCol, idCol,
             indexPath, appendId = Some(appendId))
@@ -405,7 +406,7 @@ object DocsStream {
             graft.operators.UnitStore.append(a.novelKeys, "h", storePath,
               appendId = Some(appendId))
           } finally a.release()
-        } finally accepted.unpersist()
+        } finally release()
         ()
       }
     val q = checkpointLocation
@@ -505,10 +506,11 @@ object DocsStream {
               keepAppendIds = Seq(appendId))
           }
         }
-        val accepted = graft.operators.Dedup
-          .dedupAgainstIndexFingerprinted(batch.toDF(), indexPath,
-            textCol, idCol, fpCol, excludeAppendIds = Seq(appendId))
-          .persist()
+        // one snapshot serves the append, the rewrite and (shards loop)
+        // the curation join — see runIndexDedupLoopAsStream
+        val (accepted, release) = GraftColumnShim.snapshot(
+          graft.operators.Dedup.dedupAgainstIndexFingerprinted(batch.toDF(),
+            indexPath, textCol, idCol, fpCol, excludeAppendIds = Seq(appendId)))
         try {
           graft.operators.Dedup.lshAppend(accepted, textCol, idCol,
             indexPath, appendId = Some(appendId))
@@ -524,8 +526,9 @@ object DocsStream {
             // read the rewrite BACK off the batch's just-landed files
             // (already materialized — re-consuming a.cleaned would run
             // the rewrite join twice); attributes join back from the
-            // persisted accepted frame
-            val curInput = spark.read.parquet(s"$outDir/batch_id=$batchId")
+            // accepted snapshot
+            val curInput = graft.operators.IndexLifecycle.readDir(spark,
+              s"$outDir/batch_id=$batchId")
               .join(accepted.select(col(idCol), col(langCol), col(sourceCol)),
                 idCol)
             val curated = graft.operators.Curate.curate(
@@ -535,7 +538,7 @@ object DocsStream {
               s"$shardsDir/batch_id=$batchId", langCol,
               Seq("bin", idCol, "replica")): Unit
           } finally a.release()
-        } finally accepted.unpersist()
+        } finally release()
         ()
       }
     val q = checkpointLocation

@@ -12,7 +12,8 @@ import graft.fixtures.Stub
 /** The remote-boundary contract of `Http.fetchWithRetry`: which statuses
   * retry, how many attempts, the in-band error strings, the wall-clock
   * budget and the Range header. Total backoff across the suite is 1.8 s
-  * (100+200 ms, then 100+200+400+800 ms).
+  * (100+200 ms, then 100+200+400+800 ms); the stalled route adds its
+  * 2 s budget.
   */
 class HttpSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -27,6 +28,9 @@ class HttpSpec extends AnyFunSuite with BeforeAndAfterAll {
     val script = scripts(path)
     val status = script(math.min(n, script.length - 1))
     (status, s"body $status".getBytes(UTF_8))
+  }.route("/stall/") { _ =>
+    Thread.sleep(4000)
+    (200, "late".getBytes(UTF_8))
   }
 
   override def afterAll(): Unit = stub.stop()
@@ -66,6 +70,15 @@ class HttpSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(r.error.startsWith("Timeout after "), r.error)
     assert(r.error.endsWith("s (limit: 1s)"), r.error)
     assert(requests("/s/late").isEmpty)
+  }
+
+  test("a stalled server ends the fetch at the budget, not 60 s past it") {
+    val t0 = System.nanoTime()
+    val r = Http.fetchWithRetry(stub.base + "/stall/x", startNanos = t0, timeoutSeconds = 2)
+    val tookMs = (System.nanoTime() - t0) / 1000000L
+    assert(r.error == "Timeout after 2s (limit: 2s)", r.error)
+    assert(tookMs >= 2000L && tookMs < 3000L, s"took $tookMs ms")
+    assert(requests("/stall/x").length == 1)
   }
 
   test("a ranged fetch sends the Range header") {

@@ -1,0 +1,177 @@
+package graft.operators
+
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.ListenerBusShim
+import org.apache.spark.scheduler._
+import org.apache.spark.sql.{GraftColumnShim, SparkSession}
+import org.apache.spark.sql.functions._
+
+/** What one ingest micro-batch costs in Spark jobs: batch snapshots that
+  * the batch's own index appends cannot invalidate, index meta and dirs
+  * read on the driver, and the shard loop's job count per micro-batch
+  * pinned exactly, so a cache-invalidation regression fails here rather
+  * than only slowing the benchmark.
+  */
+class IngestJobsSpec extends AnyFunSuite {
+  lazy val spark: SparkSession = graft.TestSpark.spark
+  import spark.implicits._
+
+  /** Jobs (with their local properties), stages and shuffle-read bytes
+    * of the work `body` runs; the listener bus is drained before reading.
+    */
+  private final class JobLog extends SparkListener {
+    val jobs = new ConcurrentLinkedQueue[java.util.Properties]()
+    val stages = new java.util.concurrent.atomic.AtomicInteger
+    val shuffleRead = new java.util.concurrent.atomic.AtomicLong
+    override def onJobStart(j: SparkListenerJobStart): Unit =
+      jobs.add(j.properties): Unit
+    override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit =
+      stages.incrementAndGet(): Unit
+    override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+      if (t.taskMetrics != null)
+        shuffleRead.addAndGet(t.taskMetrics.shuffleReadMetrics.totalBytesRead): Unit
+    def descriptions: Seq[String] = jobs.asScala.toSeq.map(p =>
+      Option(p).flatMap(q => Option(q.getProperty("spark.job.description"))).getOrElse(""))
+  }
+
+  private def logging[T](body: => T): (T, JobLog) = {
+    val sc = spark.sparkContext
+    ListenerBusShim.drain(sc)
+    val log = new JobLog
+    sc.addSparkListener(log)
+    try {
+      val out = body
+      ListenerBusShim.drain(sc)
+      (out, log)
+    } finally sc.removeSparkListener(log)
+  }
+
+  private def tmpDir(p: String): String =
+    java.nio.file.Files.createTempDirectory(p).toString
+  private def words(prefix: String, n: Int): String =
+    (1 to n).map(i => s"$prefix$i").mkString(" ")
+  private def lake = Seq(
+    (0L, words("lake", 25)),
+    (1L, "the quick brown fox jumps over the lazy dog near the river bank today"))
+    .toDF("doc_id", "text")
+
+  test("an accepted-batch snapshot survives its own index append: one action after lshAppend runs one job, no broadcast, no shuffle or index re-read") {
+    val idx = tmpDir("snap_idx")
+    Dedup.lshBuild(lake, "text", "doc_id", idx)
+    Dedup.lshWriteFingerprints(lake, "text", idx)
+    val batch = Seq(
+      (10L, words("novel", 24)),
+      (11L, "the quick brown fox jumps over the lazy dog near the river bank yesterday"),
+      (12L, words("lake", 25)),
+      (13L, words("other", 30)))
+      .toDF("doc_id", "text").withColumn("fp", xxhash64(col("text")))
+    val (accepted, release) = GraftColumnShim.snapshot(
+      Dedup.dedupAgainstIndexFingerprinted(batch, idx, "text", "doc_id", "fp"))
+    val snapRdd = accepted.queryExecution.analyzed.collectFirst {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
+    }.get
+    try {
+      // the append writes bands, hashes and fps — the dirs the accepted
+      // plan reads; a persist()ed frame would be dropped by those writes
+      Dedup.lshAppend(accepted, "text", "doc_id", idx, appendId = Some("b0"))
+      val info = spark.sparkContext.getRDDStorageInfo.find(_.id == snapRdd.id)
+      assert(info.exists(i => i.numPartitions > 0 && i.numCachedPartitions == i.numPartitions),
+        s"snapshot blocks not all cached after the append: $info")
+      val (ids, log) = logging(accepted.select("doc_id").collect().map(_.getLong(0)).toSet)
+      assert(ids == Set(10L, 13L), ids.toString)
+      assert(log.jobs.size == 1, log.descriptions.toString)
+      assert(!log.descriptions.exists(_.contains("broadcast")), log.descriptions.toString)
+      assert(log.stages.get == 1, s"${log.stages.get} stages")
+      assert(log.shuffleRead.get == 0L, s"${log.shuffleRead.get} shuffle bytes read")
+      assert(Dedup.lshIndexCommittedDocs(spark, idx) == 4L) // observed tally: 2 + 2
+    } finally release()
+    assert(!spark.sparkContext.getRDDStorageInfo.exists(_.id == snapRdd.id),
+      "release() left snapshot blocks cached")
+  }
+
+  test("readMeta/readDir equal spark.read.parquet head()/schema on a fresh, appended and compacted index and unit store — and run no Spark job") {
+    def same(dir: String, subs: Seq[String]): Unit = {
+      val viaSpark = spark.read.parquet(s"$dir/meta").head()
+      val (mine, log) = logging((IndexLifecycle.readMeta(spark, s"$dir/meta"),
+        subs.map(s => IndexLifecycle.readDir(spark, s"$dir/$s").schema)))
+      assert(log.jobs.isEmpty, log.descriptions.toString)
+      assert(mine._1 == viaSpark, s"${mine._1} vs $viaSpark")
+      assert(mine._1.schema == viaSpark.schema)
+      subs.zip(mine._2).foreach { case (s, schema) =>
+        val d = s"$dir/$s"
+        assert(schema == spark.read.parquet(d).schema, d)
+        assert(IndexLifecycle.readDir(spark, d).collect().toSet ==
+          spark.read.parquet(d).collect().toSet, d)
+      }
+    }
+    val idx = tmpDir("meta_idx")
+    Dedup.lshBuild(lake, "text", "doc_id", idx)
+    Dedup.lshWriteFingerprints(lake, "text", idx)
+    val lshDirs = Seq("bands", "hashes", "fps")
+    same(idx, lshDirs)
+    Dedup.lshAppend(Seq((20L, words("fresh", 22))).toDF("doc_id", "text"),
+      "text", "doc_id", idx, appendId = Some("a1"))
+    same(idx, lshDirs)
+    Dedup.lshCompact(spark, idx)
+    same(idx, lshDirs)
+
+    val store = tmpDir("meta_store")
+    UnitStore.build(Seq(1L, 2L, 3L).toDF("k"), "k", store, buckets = 2)
+    same(store, Seq("keys"))
+    UnitStore.append(Seq(4L, 5L, 5L).toDF("k"), "k", store, appendId = Some("a1"))
+    same(store, Seq("keys"))
+    assert(UnitStore.committedKeys(spark, store) == 5L) // observed tally: 3 + 2
+    UnitStore.compact(spark, store)
+    same(store, Seq("keys"))
+  }
+
+  test("an empty append completes and leaves the observed tally unchanged") {
+    val idx = tmpDir("empty_idx")
+    Dedup.lshBuild(lake, "text", "doc_id", idx)
+    Dedup.lshWriteFingerprints(lake, "text", idx)
+    Dedup.lshAppend(Seq.empty[(Long, String)].toDF("doc_id", "text"),
+      "text", "doc_id", idx, appendId = Some("e0"))
+    assert(Dedup.lshIndexCommittedDocs(spark, idx) == 2L)
+    val store = tmpDir("empty_store")
+    UnitStore.build(Seq(1L, 2L).toDF("k"), "k", store)
+    UnitStore.append(Seq.empty[Long].toDF("k"), "k", store, appendId = Some("e0"))
+    assert(UnitStore.committedKeys(spark, store) == 2L)
+  }
+
+  test("the shard loop runs a pinned number of Spark jobs per micro-batch") {
+    val lakeText = words("lake", 25)
+    val lakeDf = Seq((0L, lakeText)).toDF("doc_id", "text")
+    val idx = tmpDir("jobs_idx")
+    Dedup.lshBuild(lakeDf, "text", "doc_id", idx)
+    Dedup.lshWriteFingerprints(lakeDf, "text", idx)
+    val store = tmpDir("jobs_store")
+    ParagraphDedup.unitStoreBuild(lakeDf, "doc_id", "text",
+      ParagraphDedup.unitsBySeparator(_, "\\n"), store)
+    val in = tmpDir("jobs_in")
+    def stamp(rows: Seq[(Long, String, String)]): Unit =
+      rows.toDF("doc_id", "text", "source")
+        .withColumn("lang", lit("en"))
+        .withColumn("fp", xxhash64(col("text")))
+        .coalesce(1).write.mode("append").parquet(in)
+    val docA = words("novel", 24)
+    stamp(Seq((10L, docA, "src0"), (14L, words("second", 26) + "\nshared line", "src1")))
+    stamp(Seq((11L, docA + " extra", "src1"), (12L, "short doc", "src1"),
+      (13L, lakeText, "src1"), (15L, words("third", 23) + "\nshared line", "src0")))
+    val (_, log) = logging(graft.streaming.DocsStream.runIngestPipelineToShardsAsStream(
+      spark, in, idx, store, tmpDir("jobs_out"), tmpDir("jobs_sh"), "jobs_mem",
+      ParagraphDedup.unitsBySeparator(_, "\\n"), "\n",
+      benchmark = Seq((999L, words("bench", 25))).toDF("doc_id", "text"),
+      minWords = 20, minUniqRatio = 0.25, sampleNumerator = 256,
+      weights = Map("src0" -> 2.0), packBudget = 10000L,
+      maxFilesPerTrigger = Some(1)).collect())
+    val perBatch = log.jobs.asScala.toSeq
+      .flatMap(p => Option(p).flatMap(q => Option(q.getProperty("streaming.sql.batchId"))))
+      .groupBy(identity).map { case (b, js) => b.toLong -> js.size }
+    // measured on this fixture; a frame re-computed after an index write
+    // (the dedup plan's broadcast and shuffle jobs again) raises it
+    assert(perBatch == Map(0L -> 39, 1L -> 42), perBatch.toString)
+  }
+}

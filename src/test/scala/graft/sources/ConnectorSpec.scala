@@ -602,40 +602,46 @@ class ConnectorSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(df.count() == 2)
   }
 
+  // the secret registry is JVM-global: every secret a test registers is
+  // dropped again, or a later suite's default-name lookup would find it
   test("d1 catalog: list + load + query through catalog") {
     Secrets.register(Secrets.Secret("cat_test", "d1", "acct", "tok"))
-    spark.conf.set("spark.sql.catalog.mydb", "graft.sources.d1.D1Catalog")
-    spark.conf.set("spark.sql.catalog.mydb.secret", "cat_test")
-    spark.conf.set("spark.sql.catalog.mydb.database_id", "11111111-2222-3333-4444-555555555555")
-    spark.conf.set("spark.sql.catalog.mydb.api_base", s"${stub.base}/client/v4")
-    val tables = spark.sql("SHOW TABLES IN mydb.main").collect().map(_.getString(1)).toSet
-    assert(tables == Set("users", "orders")) // internal tables filtered
-    val n = spark.sql("SELECT count(*) AS n FROM mydb.main.users WHERE active = true").collect()
-    assert(n.head.getLong(0) == 2L)
+    try {
+      spark.conf.set("spark.sql.catalog.mydb", "graft.sources.d1.D1Catalog")
+      spark.conf.set("spark.sql.catalog.mydb.secret", "cat_test")
+      spark.conf.set("spark.sql.catalog.mydb.database_id", "11111111-2222-3333-4444-555555555555")
+      spark.conf.set("spark.sql.catalog.mydb.api_base", s"${stub.base}/client/v4")
+      val tables = spark.sql("SHOW TABLES IN mydb.main").collect().map(_.getString(1)).toSet
+      assert(tables == Set("users", "orders")) // internal tables filtered
+      val n = spark.sql("SELECT count(*) AS n FROM mydb.main.users WHERE active = true").collect()
+      assert(n.head.getLong(0) == 2L)
+    } finally Secrets.drop("d1", "cat_test")
   }
 
   test("d1 metadata + execute + batch session") {
     Secrets.register(Secrets.Secret("d1", "d1", "acct", "tok"))
-    val dbs = graft.sources.d1.D1.databases(spark, apiBase = s"${stub.base}/client/v4")
-    assert(dbs.collect().map(_.getString(1)).toSet == Set("my-database", "other-db"))
-    val tbls = graft.sources.d1.D1.tables(spark,
-      "11111111-2222-3333-4444-555555555555", apiBase = s"${stub.base}/client/v4")
-    assert(tbls.collect().map(_.getString(1)).toSet == Set("users", "orders"))
-    val changes = graft.sources.d1.D1.execute("UPDATE users SET active = 1",
-      None, "11111111-2222-3333-4444-555555555555", apiBase = s"${stub.base}/client/v4")
-    assert(changes == 1L)
-    // batch session: writes buffer, commit posts ONE batch
-    stub.requests.clear()
-    val sess = graft.sources.d1.D1.batchSession(None,
-      "11111111-2222-3333-4444-555555555555", apiBase = s"${stub.base}/client/v4")
-    sess.begin()
-    sess.execute("INSERT INTO logs VALUES (1, 'a')")
-    sess.execute("INSERT INTO logs VALUES (2, 'b')")
-    assert(sess.pendingStatements.size == 2)
-    assert(stub.requests.toArray.count(_.toString.contains("/query")) == 0)
-    sess.commit()
-    val batchReqs = stub.requests.toArray.map(_.toString).filter(_.contains("INSERT INTO logs"))
-    assert(batchReqs.length == 1) // one HTTP round trip for both statements
+    try {
+      val dbs = graft.sources.d1.D1.databases(spark, apiBase = s"${stub.base}/client/v4")
+      assert(dbs.collect().map(_.getString(1)).toSet == Set("my-database", "other-db"))
+      val tbls = graft.sources.d1.D1.tables(spark,
+        "11111111-2222-3333-4444-555555555555", apiBase = s"${stub.base}/client/v4")
+      assert(tbls.collect().map(_.getString(1)).toSet == Set("users", "orders"))
+      val changes = graft.sources.d1.D1.execute("UPDATE users SET active = 1",
+        None, "11111111-2222-3333-4444-555555555555", apiBase = s"${stub.base}/client/v4")
+      assert(changes == 1L)
+      // batch session: writes buffer, commit posts ONE batch
+      stub.requests.clear()
+      val sess = graft.sources.d1.D1.batchSession(None,
+        "11111111-2222-3333-4444-555555555555", apiBase = s"${stub.base}/client/v4")
+      sess.begin()
+      sess.execute("INSERT INTO logs VALUES (1, 'a')")
+      sess.execute("INSERT INTO logs VALUES (2, 'b')")
+      assert(sess.pendingStatements.size == 2)
+      assert(stub.requests.toArray.count(_.toString.contains("/query")) == 0)
+      sess.commit()
+      val batchReqs = stub.requests.toArray.map(_.toString).filter(_.contains("INSERT INTO logs"))
+      assert(batchReqs.length == 1) // one HTTP round trip for both statements
+    } finally Secrets.drop("d1", "d1")
   }
 
   test("d1 write path: df.write.format(d1) batches inserts") {
