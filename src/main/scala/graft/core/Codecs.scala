@@ -124,7 +124,7 @@ object Codecs {
     } catch { case _: Exception => 0L }
   }
 
-  /** Escape regex metacharacters in a literal (Common Crawl variant):
+  /** Escape regex metacharacters in a literal (both CDX dialects):
     * `%5C`-prefixes `.[]{}+?*^$|`, drops backslashes, leaves `()` alone.
     */
   def escapeRegexSpecialChars(literal: String): String = {
@@ -175,21 +175,6 @@ object Codecs {
       else { sb += c; i += 1 }
     }
     sb ++= "$"
-    sb.result()
-  }
-
-  /** Escape regex metacharacters (wayback variant): same character set as
-    * the CC variant (`%5C`-escapes `.[]{}+?^$|*`, drops backslashes, leaves
-    * `()` alone); kept separate because the reference maintains two copies.
-    */
-  def escapeRegexWayback(literal: String): String = {
-    val sb = new StringBuilder
-    literal.foreach {
-      case c @ ('.' | '[' | ']' | '{' | '}' | '+' | '?' | '^' | '$' | '|' | '*') =>
-        sb ++= "%5C"; sb += c
-      case '\\' => // skip
-      case c    => sb += c
-    }
     sb.result()
   }
 

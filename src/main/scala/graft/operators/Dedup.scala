@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import IndexLifecycle.AttemptCol
+
 /** Deduplication operators for training-data pipelines, each designed for
   * the 100 TB shape:
   *
@@ -493,9 +495,9 @@ object Dedup {
     *  - `hashes`: (ref_id, sh) — per-doc sorted distinct 64-bit shingle
     *    hashes for the exact-Jaccard verify stage;
     *  - `meta`:   one row (num_perm, bands, shingle_k, n_docs,
-    *    band_buckets). Queries read the batch-side parameters FROM the
-    *    index, so a caller can never sign the batch with a mismatched
-    *    hash family.
+    *    band_buckets, hash_buckets). Queries read the batch-side
+    *    parameters FROM the index, so a caller can never sign the batch
+    *    with a mismatched hash family.
     *
     * `bandBuckets > 0` stores the band rows BUCKETED on (band, bucket) —
     * the repo's bucketed-ingest answer applied to the index: a standing
@@ -525,7 +527,7 @@ object Dedup {
                numPerm: Int = 128, bands: Int = 16, shingleK: Int = 3,
                bandBuckets: Int = 0): Unit = {
     val spark = ref.sparkSession
-    val (fs, root) = indexFs(spark, path)
+    val (fs, root) = IndexLifecycle.fsFor(spark, path)
     val bandsPath = new HPath(root, "bands")
     val base = prepTexts(ref, textCol, idCol)
     val bandData = bandRows(base, numPerm, bands, shingleK)
@@ -621,7 +623,7 @@ object Dedup {
     * CRASH SAFETY AND RETRIES. Every append writes its rows tagged with
     * a fresh attempt id, then publishes them with ONE atomic marker
     * rename under `_commits/` — data first, marker last. Readers resolve
-    * visibility through the markers ([[visibleIndexRows]]), so:
+    * visibility through the markers ([[IndexLifecycle.visibleRows]]), so:
     *  - a crash anywhere before the marker rename leaves the index
     *    answering queries exactly as before the append (a partial write
     *    can never surface band rows without their verify hashes — the
@@ -647,15 +649,11 @@ object Dedup {
     * (visibility is the markers', not the tally's), [[lshIndexDocCount]]
     * still answers exactly, and the next [[lshCompact]] — whose rewrite
     * scans everything anyway — recounts and repairs it.
-    *
-    * Pre-round-16 indexes (no `append_attempt` column) take the legacy
-    * in-place append, which has neither guarantee; passing `appendId`
-    * on one throws — run [[lshCompact]] once to upgrade the layout.
     */
   def lshAppend(accepted: DataFrame, textCol: String, idCol: String,
                 path: String, appendId: Option[String] = None): Unit = {
     val spark = accepted.sparkSession
-    val (fs, root) = indexFs(spark, path)
+    val (fs, root) = IndexLifecycle.fsFor(spark, path)
     val id = appendId.getOrElse(java.util.UUID.randomUUID().toString)
     IndexLifecycle.validateAppendId(id)
     // the committed-marker no-op sits BEFORE the writer lock: a restarted
@@ -675,33 +673,14 @@ object Dedup {
       val numPerm = meta.getAs[Int]("num_perm")
       val bands = meta.getAs[Int]("bands")
       val shingleK = meta.getAs[Int]("shingle_k")
-      val nb = bandBucketsOf(meta)
-      val hb = hashBucketsOf(meta)
+      val nb = meta.getAs[Int]("band_buckets")
+      val hb = meta.getAs[Int]("hash_buckets")
       val bandsPath = new HPath(root, "bands")
       val hashesPath = new HPath(root, "hashes")
-      val legacy = !IndexLifecycle.readDir(spark, bandsPath.toString)
-        .columns.contains(AttemptCol)
-      if (legacy) {
-        require(appendId.isEmpty, "idempotent appendId requires the " +
-          "commit-marker index format (round 16+); run lshCompact(path) " +
-          "once to upgrade this index in place")
-        val base = prepTexts(accepted, textCol, idCol)
-        val newBands = bandRows(base, numPerm, bands, shingleK)
-          .withColumnRenamed("id", "ref_id")
-        if (nb > 0) {
-          val t = registerBandsTable(spark, path, nb)
-          newBands.repartition(nb, col("band"), col("bucket"))
-            .select(col("ref_id"), col("band"), col("bucket"))
-            .write.mode("append").insertInto(t)
-        } else {
-          newBands.write.mode("append").parquet(bandsPath.toString)
-        }
-        val nNew = IndexLifecycle.countedWrite(base.select(col("id").as("ref_id"),
-            shingleHashes64Udf(shingleK)(col("__text")).as("sh")))(
-          _.write.mode("append").parquet(hashesPath.toString))
-        writeIndexMeta(spark, root.toString, numPerm, bands, shingleK,
-          meta.getAs[Long]("n_docs") + nNew, nb, hb)
-      } else {
+      // layout probe: refuse data rows without the attempt tag before
+      // anything is written
+      IndexLifecycle.requireLayout(root, "bands",
+        IndexLifecycle.readDir(spark, bandsPath.toString).columns.toSeq, AttemptCol)
       val attempt = java.util.UUID.randomUUID().toString
       val base = prepTexts(accepted, textCol, idCol)
       val newBands = bandRows(base, numPerm, bands, shingleK)
@@ -756,45 +735,31 @@ object Dedup {
       // count — never a scan of the index's own data
       writeIndexMeta(spark, root.toString, numPerm, bands, shingleK,
         meta.getAs[Long]("n_docs") + nNew, nb, hb)
-      }
     }
   }
+
+  /** The columns of an LSH index's one-row `meta`, in write order. */
+  private val MetaCols =
+    Seq("num_perm", "bands", "shingle_k", "n_docs", "band_buckets", "hash_buckets")
 
   private def writeIndexMeta(spark: org.apache.spark.sql.SparkSession,
                              path: String, numPerm: Int, bands: Int,
                              shingleK: Int, nDocs: Long, nb: Int,
                              hb: Int): Unit = {
     import spark.implicits._
-    Seq((numPerm, bands, shingleK, nDocs, nb, hb))
-      .toDF("num_perm", "bands", "shingle_k", "n_docs", "band_buckets",
-        "hash_buckets")
+    Seq((numPerm, bands, shingleK, nDocs, nb, hb)).toDF(MetaCols: _*)
       .write.mode("overwrite").parquet(s"$path/meta")
   }
 
-  /** Pre-`band_buckets` indexes (round 14) read as unbucketed. */
-  private def bandBucketsOf(meta: org.apache.spark.sql.Row): Int =
-    if (meta.schema.fieldNames.contains("band_buckets"))
-      meta.getAs[Int]("band_buckets")
-    else 0
-
-  /** Pre-round-16 indexes (no `hash_buckets`) have plain-parquet verify
-    * hashes — including round-15 band-bucketed ones.
+  /** The index's meta row; one missing any of [[MetaCols]] fails with
+    * [[UnsupportedIndexLayoutException]].
     */
-  private def hashBucketsOf(meta: org.apache.spark.sql.Row): Int =
-    if (meta.schema.fieldNames.contains("hash_buckets"))
-      meta.getAs[Int]("hash_buckets")
-    else 0
+  private def readIndexMeta(spark: SparkSession, root: HPath): org.apache.spark.sql.Row = {
+    val meta = IndexLifecycle.readMeta(spark, new HPath(root, "meta").toString)
+    IndexLifecycle.requireLayout(root, "meta", meta.schema.fieldNames.toSeq, MetaCols: _*)
+    meta
+  }
 
-  /** Rows of an appendable index data file carry the attempt id that
-    * wrote them (null = base build / compacted rows); visibility is
-    * resolved through `_commits/` markers — see [[lshAppend]]. The
-    * machinery is [[IndexLifecycle]], shared with the IVF index.
-    */
-  private val AttemptCol = IndexLifecycle.AttemptCol
-  private def indexFs(spark: SparkSession, path: String): (FileSystem, HPath) =
-    IndexLifecycle.fsFor(spark, path)
-  private def readIndexMeta(spark: SparkSession, root: HPath): org.apache.spark.sql.Row =
-    IndexLifecycle.readMeta(spark, new HPath(root, "meta").toString)
   /** Index-open repair: restore either data dir from a compact that
     * crashed inside its swap window (see [[IndexLifecycle.recoverSwap]]).
     */
@@ -803,11 +768,6 @@ object Dedup {
     IndexLifecycle.recoverSwap(fs, new HPath(root, "hashes"))
     IndexLifecycle.recoverSwap(fs, new HPath(root, "fps"))
   }
-  private def committedAttempts(fs: FileSystem, root: HPath,
-                                excludeAppendIds: Seq[String] = Nil): Seq[String] =
-    IndexLifecycle.committedAttempts(fs, root, excludeAppendIds)
-  private def visibleIndexRows(df: DataFrame, committed: Seq[String]): DataFrame =
-    IndexLifecycle.visibleRows(df, committed)
 
   // ---- fingerprint sidecar (hash-at-ingest exact stage) ---------------
 
@@ -832,9 +792,9 @@ object Dedup {
   def lshWriteFingerprints(ref: DataFrame, textCol: String,
                            path: String): Unit = {
     val spark = ref.sparkSession
-    val (fs, root) = indexFs(spark, path)
+    val (fs, root) = IndexLifecycle.fsFor(spark, path)
     val meta = readIndexMeta(spark, root)
-    val hb = hashBucketsOf(meta)
+    val hb = meta.getAs[Int]("hash_buckets")
     val fpsPath = new HPath(root, "fps")
     val data = ref.select(xxhash64(col(textCol)).as("fp"))
       .withColumn(AttemptCol, lit(null).cast("string"))
@@ -860,18 +820,18 @@ object Dedup {
     */
   def lshFingerprints(spark: SparkSession, path: String,
                       excludeAppendIds: Seq[String] = Nil): DataFrame = {
-    val (fs, root) = indexFs(spark, path)
+    val (fs, root) = IndexLifecycle.fsFor(spark, path)
     val fpsPath = new HPath(root, "fps")
     IndexLifecycle.recoverSwap(fs, fpsPath)
     require(fs.exists(fpsPath),
       s"index at $path has no fingerprint sidecar — run " +
         "lshWriteFingerprints(lake, textCol, path) once after the build")
     val meta = readIndexMeta(spark, root)
-    val hb = hashBucketsOf(meta)
-    visibleIndexRows(
+    val hb = meta.getAs[Int]("hash_buckets")
+    IndexLifecycle.visibleRows(
       if (hb > 0) spark.table(registerIndexTable(spark, path, "fps", hb, Seq("fp")))
       else IndexLifecycle.readDir(spark, fpsPath.toString),
-      committedAttempts(fs, root, excludeAppendIds))
+      IndexLifecycle.committedAttempts(fs, root, excludeAppendIds), root)
   }
 
   /** [[dedupAgainstIndex]] for a batch CARRYING its stored fingerprint
@@ -917,7 +877,7 @@ object Dedup {
     * reconciles — and [[lshIndexDocCount]] recounts exactly on demand).
     */
   def lshIndexCommittedDocs(spark: SparkSession, path: String): Long = {
-    val (_, root) = indexFs(spark, path)
+    val (_, root) = IndexLifecycle.fsFor(spark, path)
     readIndexMeta(spark, root).getAs[Long]("n_docs")
   }
 
@@ -928,10 +888,10 @@ object Dedup {
     * per-run bookkeeping read (that is [[lshIndexCommittedDocs]]).
     */
   def lshIndexDocCount(spark: SparkSession, path: String): Long = {
-    val (fs, root) = indexFs(spark, path)
+    val (fs, root) = IndexLifecycle.fsFor(spark, path)
     recoverIndexDirs(fs, root)
-    visibleIndexRows(IndexLifecycle.readDir(spark, new HPath(root, "hashes").toString),
-      committedAttempts(fs, root)).count()
+    IndexLifecycle.visibleRows(IndexLifecycle.readDir(spark, new HPath(root, "hashes").toString),
+      IndexLifecycle.committedAttempts(fs, root), root).count()
   }
 
   /** Compact a persisted LSH index IN PLACE: fold every committed append
@@ -943,9 +903,7 @@ object Dedup {
     * index — a year of daily ingest is 365 files/bucket, the classic
     * small-file scan-task explosion); compaction restores one file per
     * bucket (spec-pinned ≤ nb band files) while preserving the bucketed
-    * layout, bucket hash family, and meta parameters. Also UPGRADES a
-    * pre-round-16 index (no attempt column) to the commit-marker format,
-    * enabling idempotent `appendId` appends on it.
+    * layout, bucket hash family, and meta parameters.
     *
     * The visible row set is identical before and after (spec-pinned
     * pair-for-pair), so query results cannot change. Offline maintenance
@@ -964,7 +922,7 @@ object Dedup {
     */
   def lshCompact(spark: SparkSession, path: String,
                  keepAppendIds: Seq[String] = Nil): Unit = {
-    val (fs, root) = indexFs(spark, path)
+    val (fs, root) = IndexLifecycle.fsFor(spark, path)
     IndexLifecycle.withWriterLock(fs, root, "lshCompact",
         IndexLifecycle.lockTtlMs(spark)) {
       recoverIndexDirs(fs, root)
@@ -972,25 +930,21 @@ object Dedup {
       val numPerm = meta.getAs[Int]("num_perm")
       val bands = meta.getAs[Int]("bands")
       val shingleK = meta.getAs[Int]("shingle_k")
-      val nb = bandBucketsOf(meta)
-      // compact also UPGRADES a band-bucketed index whose verify hashes
-      // predate the bucketed-hashes layout (round ≤ 15): the rewrite is
-      // happening anyway, so it lands bucketed on ref_id like a fresh
-      // build's would
-      val hb = if (nb > 0) nb else hashBucketsOf(meta)
+      val nb = meta.getAs[Int]("band_buckets")
+      val hb = meta.getAs[Int]("hash_buckets")
       // appends named in keepAppendIds are carried through UNFOLDED —
       // rows keep their attempt tag, markers their payload — so the
       // streaming rewrite loops' replay-determinism hook
       // (excludeAppendIds of a batch whose marker committed before the
       // stream's checkpoint commit) survives a compact; see
       // [[UnitStore.compact]] for the full rationale
-      val committed = committedAttempts(fs, root, keepAppendIds)
+      val committed = IndexLifecycle.committedAttempts(fs, root, keepAppendIds)
       val keptAttempts = IndexLifecycle.committedAttemptsOf(fs, root, keepAppendIds)
       def visible(sub: String): DataFrame = {
         val raw = IndexLifecycle.readDir(spark, new HPath(root, sub).toString)
-        val base = visibleIndexRows(raw, committed)
+        val base = IndexLifecycle.visibleRows(raw, committed, root)
           .withColumn(AttemptCol, lit(null).cast("string"))
-        if (keptAttempts.isEmpty || !raw.columns.contains(AttemptCol)) base
+        if (keptAttempts.isEmpty) base
         else base.unionByName(
           raw.filter(col(AttemptCol).isin(keptAttempts: _*)))
       }
@@ -1042,7 +996,7 @@ object Dedup {
       // checkpoint commit) — deleting its marker would let the replay
       // re-append the already-folded rows. An empty marker means
       // "committed and folded": [[lshAppend]]'s exists-check still
-      // no-ops on it, while [[committedAttempts]] skips its (gone)
+      // no-ops on it, while [[IndexLifecycle.committedAttempts]] skips its (gone)
       // attempt id. A year of daily ingest retains 365 empty files —
       // the append log, negligible next to the data it describes.
       IndexLifecycle.foldMarkers(fs, root, keep = keepAppendIds.toSet)
@@ -1067,7 +1021,7 @@ object Dedup {
     */
   private[operators] def indexTableName(spark: SparkSession, path: String,
                              sub: String): String = {
-    val q = indexFs(spark, path)._2.toString
+    val q = IndexLifecycle.fsFor(spark, path)._2.toString
     val h = java.lang.Integer.toHexString(
       scala.util.hashing.MurmurHash3.stringHash(q))
     s"graft_lsh_${sub}_$h"
@@ -1131,9 +1085,9 @@ object Dedup {
     * the dir's parquet footers on every call (one driver-side footer
     * read — the price the old per-call CREATE paid too), so an index
     * rewritten out-of-band by another process — same bucket count,
-    * different columns, e.g. a legacy 3-col band layout replacing the
-    * 4-col one — invalidates the cached entry instead of being scanned
-    * through a stale schema. Re-creates on absence or any mismatch
+    * different column types, e.g. a rebuild over STRING ids replacing
+    * one over BIGINT ids — invalidates the cached entry instead of being
+    * scanned through a stale schema. Re-creates on absence or any mismatch
     * (rebuild and compact also drop the entry themselves), and the
     * check-then-create is synchronized JVM-wide, which covers every
     * session of this driver (the table catalog is shared state).
@@ -1148,7 +1102,7 @@ object Dedup {
                                  sub: String, nb: Int,
                                  bucketCols: Seq[String]): String = {
     val name = indexTableName(spark, path, sub)
-    val loc = new HPath(indexFs(spark, path)._2, sub)
+    val loc = new HPath(IndexLifecycle.fsFor(spark, path)._2, sub)
     // the on-disk schema derivation (a directory listing + one footer
     // read) happens OUTSIDE the lock: it is the slow part on object
     // stores, and serializing it JVM-wide would make every concurrent
@@ -1214,26 +1168,26 @@ object Dedup {
                            broadcastMaxBandRows: Long = 1000000L,
                            excludeAppendIds: Seq[String] = Nil): DataFrame = {
     val spark = df.sparkSession
-    val (fs, root) = indexFs(spark, indexPath)
+    val (fs, root) = IndexLifecycle.fsFor(spark, indexPath)
     recoverIndexDirs(fs, root)
     val meta = readIndexMeta(spark, root)
     val numPerm = meta.getAs[Int]("num_perm")
     val bands = meta.getAs[Int]("bands")
     val shingleK = meta.getAs[Int]("shingle_k")
-    val nb = bandBucketsOf(meta)
+    val nb = meta.getAs[Int]("band_buckets")
     // appends are visible only through their commit markers (see
     // [[lshAppend]]): resolve the committed set once (driver-side
     // listing) and filter both index scans through it
-    val committed = committedAttempts(fs, root, excludeAppendIds)
+    val committed = IndexLifecycle.committedAttempts(fs, root, excludeAppendIds)
     val base = prepTexts(df, textCol, idCol)
     val batchBands = bandRows(base, numPerm, bands, shingleK)
     // a bucketed index ([[lshBuild]] bandBuckets) reads through its
     // (cached) catalog table so the scan carries the bucket spec: in the
     // sort-merge regime the lake side then needs NO exchange (its
     // HashPartitioning on (band, bucket) already satisfies the join)
-    val refBands = visibleIndexRows(
+    val refBands = IndexLifecycle.visibleRows(
       if (nb > 0) spark.table(registerBandsTable(spark, indexPath, nb))
-      else IndexLifecycle.readDir(spark, new HPath(root, "bands").toString), committed)
+      else IndexLifecycle.readDir(spark, new HPath(root, "bands").toString), committed, root)
     // one cheap count job over the batch (no UDFs) — bands per doc is
     // exactly `bands` for signed docs, so docs × bands bounds the band
     // rows without evaluating the signature
@@ -1251,10 +1205,10 @@ object Dedup {
     // the index's widest data — then satisfies the join distribution
     // straight off the scan; in the huge-batch regime NO lake bytes
     // move in either stage of this query (plan-pinned)
-    val hbuckets = hashBucketsOf(meta)
-    val hb = visibleIndexRows(
+    val hbuckets = meta.getAs[Int]("hash_buckets")
+    val hb = IndexLifecycle.visibleRows(
         if (hbuckets > 0) spark.table(registerHashesTable(spark, indexPath, hbuckets))
-        else IndexLifecycle.readDir(spark, new HPath(root, "hashes").toString), committed)
+        else IndexLifecycle.readDir(spark, new HPath(root, "hashes").toString), committed, root)
       .select(col("ref_id"), col("sh").as("__sh_b"))
     candidates.join(ha, "id").join(hb, "ref_id")
       .select(col("id"), col("ref_id"),

@@ -11,6 +11,16 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaCo
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructType}
 
+/** A persisted index whose on-disk layout this code does not read: data
+  * rows without the `append_attempt` column, or a `meta` row missing one
+  * of the current columns. Raised by queries, appends and compactions
+  * before they write anything; the fix is to rebuild the index from its
+  * source corpus.
+  */
+final class UnsupportedIndexLayoutException(root: HPath, detail: String)
+  extends IllegalStateException(
+    s"index at $root has an unsupported on-disk layout ($detail) — rebuild it")
+
 /** Shared commit-marker machinery for PERSISTED index layouts —
   * [[Dedup]]'s LSH index and [[SimilaritySearch]]'s IVF index run the
   * same day-2 lifecycle (build once, append accepted batches, compact
@@ -106,9 +116,9 @@ private[graft] object IndexLifecycle {
 
   /** The one row of an index's `meta` dir, read on the driver: no Spark
     * job. Same values and (nullable) schema as
-    * `spark.read.parquet(dir).head()`, so layout checks on
-    * `row.schema.fieldNames` keep working. Meta columns are INT or
-    * BIGINT; any other type is rejected.
+    * `spark.read.parquet(dir).head()`; callers check its columns with
+    * [[requireLayout]]. Meta columns are INT or BIGINT; any other type
+    * is rejected.
     */
   def readMeta(spark: SparkSession, dir: String): Row = {
     val (fs, qualified) = fsFor(spark, dir)
@@ -177,21 +187,33 @@ private[graft] object IndexLifecycle {
       }
   }
 
-  /** Base rows (null attempt) plus rows of committed appends; rows of
-    * uncommitted attempts are invisible. Pre-marker-format files have
-    * no attempt column and read unfiltered. The filter is a scan-local
-    * predicate on a constant column — it adds no exchange, so layout
-    * plan properties (bucketed distribution, partition pruning)
-    * survive it.
+  /** Throw [[UnsupportedIndexLayoutException]] for the index at `root`
+    * unless `columns` (of its `part`: a data dir or `meta`) holds every
+    * one of `required`. Runs before an operation writes anything, so a
+    * refused index is left exactly as it was.
     */
-  def visibleRows(df: DataFrame, committed: Seq[String]): DataFrame =
-    if (!df.columns.contains(AttemptCol)) df
-    else {
-      val keep =
-        if (committed.isEmpty) col(AttemptCol).isNull
-        else col(AttemptCol).isNull || col(AttemptCol).isin(committed: _*)
-      df.filter(keep).drop(AttemptCol)
-    }
+  def requireLayout(root: HPath, part: String, columns: Seq[String],
+                    required: String*): Unit = {
+    val missing = required.filterNot(columns.contains)
+    if (missing.nonEmpty)
+      throw new UnsupportedIndexLayoutException(root,
+        s"$part lacks ${missing.mkString(", ")}")
+  }
+
+  /** Base rows (null attempt) plus rows of committed appends; rows of
+    * uncommitted attempts are invisible. Data rows without the attempt
+    * column fail with [[UnsupportedIndexLayoutException]] naming `root`.
+    * The filter is a scan-local predicate on a constant column — it
+    * adds no exchange, so layout plan properties (bucketed distribution,
+    * partition pruning) survive it.
+    */
+  def visibleRows(df: DataFrame, committed: Seq[String], root: HPath): DataFrame = {
+    requireLayout(root, "data", df.columns.toSeq, AttemptCol)
+    val keep =
+      if (committed.isEmpty) col(AttemptCol).isNull
+      else col(AttemptCol).isNull || col(AttemptCol).isin(committed: _*)
+    df.filter(keep).drop(AttemptCol)
+  }
 
   /** Publish an append: write the marker to a dot-temp and rename into
     * place — the rename is the atomic publish point, so a half-written

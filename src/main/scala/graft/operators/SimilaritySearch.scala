@@ -363,9 +363,7 @@ object SimilaritySearch {
     * cell — present in counts, unfindable by any probe), and because
     * the rejection aborts the write before its commit marker, the
     * failed batch is invisible — fix the batch and retry the same
-    * `appendId`. Pre-round-16 indexes
-    * (no attempt column) take the plain in-place append; passing
-    * `appendId` on one throws — run [[ivfCompact]] once to upgrade.
+    * `appendId`.
     */
   def ivfAppend(df: DataFrame, embCol: String, idCol: String, path: String,
                 appendId: Option[String] = None): Unit = {
@@ -384,29 +382,21 @@ object SimilaritySearch {
       // must see a settled index, not a concurrent rebuild's midpoint
       IndexLifecycle.recoverSwap(fs, corpus)
       val cents = storedCentroids(spark, root)
-      val legacy = !spark.read.parquet(corpus.toString)
-        .columns.contains(IndexLifecycle.AttemptCol)
-      if (legacy) {
-        require(appendId.isEmpty, "idempotent appendId requires the " +
-          "commit-marker index format (round 16+); run ivfCompact(path) " +
-          "once to upgrade this index in place")
-        assignWith(df, embCol, cents)
-          .write.mode("append").partitionBy("cluster").parquet(corpus.toString)
-      } else {
-        val attempt = java.util.UUID.randomUUID().toString
-        assignWith(df, embCol, cents)
-          .withColumn(IndexLifecycle.AttemptCol, lit(attempt))
-          .write.mode("append").partitionBy("cluster").parquet(corpus.toString)
-        IndexLifecycle.commitMarker(fs, root, id, attempt)
-      }
+      // layout probe: refuse rows without the attempt tag before writing
+      IndexLifecycle.requireLayout(root, "corpus",
+        spark.read.parquet(corpus.toString).columns.toSeq, IndexLifecycle.AttemptCol)
+      val attempt = java.util.UUID.randomUUID().toString
+      assignWith(df, embCol, cents)
+        .withColumn(IndexLifecycle.AttemptCol, lit(attempt))
+        .write.mode("append").partitionBy("cluster").parquet(corpus.toString)
+      IndexLifecycle.commitMarker(fs, root, id, attempt)
     }
   }
 
   /** Compact a persisted IVF index in place: fold committed appends to
     * base rows (appends accumulate files per cluster partition — the
     * same small-file arc as the LSH band dirs), drop crashed-attempt
-    * garbage, fold markers to idempotency tombstones, and UPGRADE a
-    * pre-round-16 layout to the commit-marker format. Offline op,
+    * garbage, and fold markers to idempotency tombstones. Offline op,
     * single writer — same swap ordering and crash-recovery notes as
     * [[Dedup.lshCompact]].
     */
@@ -419,7 +409,7 @@ object SimilaritySearch {
       val fresh = new org.apache.hadoop.fs.Path(root, "corpus.compact")
       fs.delete(fresh, true): Unit
       val committed = IndexLifecycle.committedAttempts(fs, root)
-      IndexLifecycle.visibleRows(spark.read.parquet(live.toString), committed)
+      IndexLifecycle.visibleRows(spark.read.parquet(live.toString), committed, root)
         .withColumn(IndexLifecycle.AttemptCol, lit(null).cast("string"))
         .write.partitionBy("cluster").parquet(fresh.toString)
       IndexLifecycle.swapDir(fs, live, fresh)
@@ -456,7 +446,7 @@ object SimilaritySearch {
     // partition pruning on `cluster` is untouched
     IndexLifecycle.visibleRows(
         spark.read.parquet(new org.apache.hadoop.fs.Path(root, "corpus").toString),
-        IndexLifecycle.committedAttempts(fs, root))
+        IndexLifecycle.committedAttempts(fs, root), root)
       .filter(col("cluster").isin(probed.toSeq: _*))
       .select(col(idCol).as("id"),
         round(cosine(col(embCol).cast("array<double>"), q), scale).as("cos_sim"))

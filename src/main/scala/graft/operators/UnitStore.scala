@@ -105,7 +105,7 @@ object UnitStore {
         spark.table(Dedup.registerIndexTable(spark, path, "keys", kb, Seq("h")))
       else IndexLifecycle.readDir(spark, keysPath.toString)
     IndexLifecycle.visibleRows(df,
-      IndexLifecycle.committedAttempts(fs, root, excludeAppendIds))
+      IndexLifecycle.committedAttempts(fs, root, excludeAppendIds), root)
   }
 
   /** Append a batch of keys (deduped within the batch; the caller passes
@@ -193,11 +193,11 @@ object UnitStore {
       val committed = IndexLifecycle.committedAttempts(fs, root, keepAppendIds)
       val keptAttempts = IndexLifecycle.committedAttemptsOf(fs, root, keepAppendIds)
       val raw = IndexLifecycle.readDir(spark, keysLive.toString)
-      val foldedBase = IndexLifecycle.visibleRows(raw, committed)
+      val foldedBase = IndexLifecycle.visibleRows(raw, committed, root)
         .distinct()
         .withColumn(AttemptCol, lit(null).cast("string"))
       val folded =
-        if (keptAttempts.isEmpty || !raw.columns.contains(AttemptCol)) foldedBase
+        if (keptAttempts.isEmpty) foldedBase
         else foldedBase.unionByName(
           raw.filter(col(AttemptCol).isin(keptAttempts: _*)))
       val keysNew = new HPath(root, "keys.compact")

@@ -101,7 +101,7 @@ private final class WaybackQuery(options: CaseInsensitiveStringMap) extends CdxQ
     case StringStartsWith(c, v) if regexCols(c) => filter(c + ":^" + v + ".*")
     case StringEndsWith(c, v) if regexCols(c) => filter(c + ":.*" + v + "$")
     case StringContains(c, v) if regexCols(c) =>
-      filter(c + ":.*" + Codecs.escapeRegexWayback(v) + ".*")
+      filter(c + ":.*" + Codecs.escapeRegexSpecialChars(v) + ".*")
     case Not(StringContains("urlkey", v)) => filter("!urlkey:.*" + backslashEscape(v) + ".*")
     case Not(StringStartsWith("urlkey", v)) => filter("!urlkey:^" + v + ".*")
     case Not(StringEndsWith("urlkey", v)) => filter("!urlkey:.*" + v + "$")
@@ -112,7 +112,7 @@ private final class WaybackQuery(options: CaseInsensitiveStringMap) extends CdxQ
     case In(c, vs) if regexCols(c) && vs.nonEmpty =>
       val parts =
         if (c == "statuscode") vs.map(intOf)
-        else vs.collect { case s: String => Codecs.escapeRegexWayback(s) }
+        else vs.collect { case s: String => Codecs.escapeRegexSpecialChars(s) }
       parts.length == vs.length && filter(c + ":(" + parts.mkString("|") + ")")
 
     // the remote is trusted: timestamp filters are REMOVED (reference :1196,1264)

@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, GraftColumnShim, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, GraftColumnShim, Row, SparkSession}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
@@ -104,36 +105,24 @@ object DocsStream {
                                 maxFilesPerTrigger: Option[Int] = None,
                                 checkpointLocation: Option[String] = None,
                                 compactEvery: Option[Int] = None): DataFrame = {
-    val schema = spark.read.parquet(inputDir).schema
-    val reader = spark.readStream.schema(schema)
-    val stream = maxFilesPerTrigger
-      .fold(reader)(n => reader.option("maxFilesPerTrigger", n))
-      .parquet(inputDir)
     val n0 = graft.operators.Dedup.lshIndexCommittedDocs(spark, indexPath)
-    val writer0 = stream.writeStream.queryName(queryName)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                       batchId: Long) =>
-        // accepted is read twice by the append (band rows + verify
-        // hashes): snapshot the micro-batch-sized frame so the index join
-        // runs once per batch (a persist() would be dropped by the
-        // append's own first write into the index dirs it reads)
-        val (accepted, release) = GraftColumnShim.snapshot(
-          graft.operators.Dedup
-            .dedupAgainstIndex(batch.toDF(), indexPath, "text", "doc_id"))
-        try graft.operators.Dedup.lshAppend(accepted, "text", "doc_id", indexPath,
-          appendId = Some(s"$queryName-b$batchId"))
-        finally release()
-        compactEvery.foreach { n =>
-          if ((batchId + 1) % n == 0)
-            graft.operators.Dedup.lshCompact(spark, indexPath)
-        }
-        ()
+    drainForeachBatch(spark, inputDir, queryName, maxFilesPerTrigger,
+        checkpointLocation) { (batch, batchId) =>
+      // accepted is read twice by the append (band rows + verify
+      // hashes): snapshot the micro-batch-sized frame so the index join
+      // runs once per batch (a persist() would be dropped by the
+      // append's own first write into the index dirs it reads)
+      val (accepted, release) = GraftColumnShim.snapshot(
+        graft.operators.Dedup
+          .dedupAgainstIndex(batch, indexPath, "text", "doc_id"))
+      try graft.operators.Dedup.lshAppend(accepted, "text", "doc_id", indexPath,
+        appendId = Some(s"$queryName-b$batchId"))
+      finally release()
+      compactEvery.foreach { n =>
+        if ((batchId + 1) % n == 0)
+          graft.operators.Dedup.lshCompact(spark, indexPath)
       }
-    val q = checkpointLocation
-      .fold(writer0)(c => writer0.option("checkpointLocation", c))
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    }
     import spark.implicits._
     val n1 = graft.operators.Dedup.lshIndexCommittedDocs(spark, indexPath)
     Seq((n1 - n0, n1)).toDF("n_kept", "n_index_docs")
@@ -175,43 +164,32 @@ object DocsStream {
                                        maxFilesPerTrigger: Option[Int] = None,
                                        checkpointLocation: Option[String] = None,
                                        compactEvery: Option[Int] = None): DataFrame = {
-    val schema = spark.read.parquet(inputDir).schema
-    require(schema.fieldNames.contains(fpCol),
-      s"input at $inputDir carries no stored fingerprint column '$fpCol' — " +
-        "this loop is for the hash-at-ingest layout; stamp " +
-        s"xxhash64(text) as '$fpCol' at write time (or run " +
-        "runIndexDedupLoopAsStream, which needs no layout)")
-    // fail fast if the index has no sidecar (lshFingerprints throws the
-    // actionable error) rather than on the first micro-batch
-    graft.operators.Dedup.lshFingerprints(spark, indexPath)
-    val reader = spark.readStream.schema(schema)
-    val stream = maxFilesPerTrigger
-      .fold(reader)(n => reader.option("maxFilesPerTrigger", n))
-      .parquet(inputDir)
     val n0 = graft.operators.Dedup.lshIndexCommittedDocs(spark, indexPath)
-    val writer0 = stream.writeStream.queryName(queryName)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                       batchId: Long) =>
-        // exact stages (within-batch keeper + sidecar anti join) then the
-        // LSH stage on the survivors; accepted docs + their fps append
-        // under one marker
-        val (accepted, release) = GraftColumnShim.snapshot(
-          graft.operators.Dedup.dedupAgainstIndexFingerprinted(batch.toDF(),
-            indexPath, "text", "doc_id", fpCol))
-        try graft.operators.Dedup.lshAppend(accepted, "text", "doc_id", indexPath,
-          appendId = Some(s"$queryName-b$batchId"))
-        finally release()
-        compactEvery.foreach { n =>
-          if ((batchId + 1) % n == 0)
-            graft.operators.Dedup.lshCompact(spark, indexPath)
-        }
-        ()
+    drainForeachBatch(spark, inputDir, queryName, maxFilesPerTrigger,
+        checkpointLocation, preflight = { schema =>
+      require(schema.fieldNames.contains(fpCol),
+        s"input at $inputDir carries no stored fingerprint column '$fpCol' — " +
+          "this loop is for the hash-at-ingest layout; stamp " +
+          s"xxhash64(text) as '$fpCol' at write time (or run " +
+          "runIndexDedupLoopAsStream, which needs no layout)")
+      // fail fast if the index has no sidecar (lshFingerprints throws the
+      // actionable error) rather than on the first micro-batch
+      graft.operators.Dedup.lshFingerprints(spark, indexPath): Unit
+    }) { (batch, batchId) =>
+      // exact stages (within-batch keeper + sidecar anti join) then the
+      // LSH stage on the survivors; accepted docs + their fps append
+      // under one marker
+      val (accepted, release) = GraftColumnShim.snapshot(
+        graft.operators.Dedup.dedupAgainstIndexFingerprinted(batch,
+          indexPath, "text", "doc_id", fpCol))
+      try graft.operators.Dedup.lshAppend(accepted, "text", "doc_id", indexPath,
+        appendId = Some(s"$queryName-b$batchId"))
+      finally release()
+      compactEvery.foreach { n =>
+        if ((batchId + 1) % n == 0)
+          graft.operators.Dedup.lshCompact(spark, indexPath)
       }
-    val q = checkpointLocation
-      .fold(writer0)(c => writer0.option("checkpointLocation", c))
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    }
     import spark.implicits._
     val n1 = graft.operators.Dedup.lshIndexCommittedDocs(spark, indexPath)
     Seq((n1 - n0, n1)).toDF("n_kept", "n_index_docs")
@@ -259,48 +237,36 @@ object DocsStream {
                                     maxFilesPerTrigger: Option[Int] = None,
                                     checkpointLocation: Option[String] = None,
                                     compactEvery: Option[Int] = None): DataFrame = {
-    val schema = spark.read.parquet(inputDir).schema
-    val reader = spark.readStream.schema(schema)
-    val stream = maxFilesPerTrigger
-      .fold(reader)(n => reader.option("maxFilesPerTrigger", n))
-      .parquet(inputDir)
-    val writer0 = stream.writeStream.queryName(queryName)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                       batchId: Long) =>
-        val appendId = s"$queryName-b$batchId"
-        // DEFERRED COMPACTION — at the START of a batch, never inline
-        // after this batch's append: a compact between the append and
-        // the stream's checkpoint commit would fold the batch's marker,
-        // disarming the replay's excludeAppendIds hook (the replay would
-        // see its own keys as base rows and OVERWRITE correct output
-        // with an all-dropped rewrite). When batch N starts, batches
-        // < N are durably committed in the checkpoint and safe to fold;
-        // the batch's OWN appendId is kept unfolded because a crashed
-        // earlier attempt of this very batch may have committed its
-        // marker. Same trigger cadence as before (after every n-th
-        // batch), shifted past that batch's checkpoint commit; a
-        // drained stream's final window is compacted by the next run.
-        compactEvery.foreach { n =>
-          if (batchId > 0 && batchId % n == 0)
-            graft.operators.UnitStore.compact(spark, storePath,
-              keepAppendIds = Seq(appendId))
-        }
-        val a = graft.operators.ParagraphDedup.storeAccept(
-          batch.toDF(), idCol, textCol, unitize, joinSep, storePath,
-          excludeAppendIds = Seq(appendId))
-        try {
-          a.cleaned.write.mode("overwrite")
-            .parquet(s"$outDir/batch_id=$batchId")
-          graft.operators.UnitStore.append(a.novelKeys, "h", storePath,
-            appendId = Some(appendId))
-        } finally a.release()
-        ()
+    drainForeachBatch(spark, inputDir, queryName, maxFilesPerTrigger,
+        checkpointLocation) { (batch, batchId) =>
+      val appendId = s"$queryName-b$batchId"
+      // DEFERRED COMPACTION — at the START of a batch, never inline
+      // after this batch's append: a compact between the append and
+      // the stream's checkpoint commit would fold the batch's marker,
+      // disarming the replay's excludeAppendIds hook (the replay would
+      // see its own keys as base rows and OVERWRITE correct output
+      // with an all-dropped rewrite). When batch N starts, batches
+      // < N are durably committed in the checkpoint and safe to fold;
+      // the batch's OWN appendId is kept unfolded because a crashed
+      // earlier attempt of this very batch may have committed its
+      // marker. Same trigger cadence as before (after every n-th
+      // batch), shifted past that batch's checkpoint commit; a
+      // drained stream's final window is compacted by the next run.
+      compactEvery.foreach { n =>
+        if (batchId > 0 && batchId % n == 0)
+          graft.operators.UnitStore.compact(spark, storePath,
+            keepAppendIds = Seq(appendId))
       }
-    val q = checkpointLocation
-      .fold(writer0)(c => writer0.option("checkpointLocation", c))
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      val a = graft.operators.ParagraphDedup.storeAccept(
+        batch, idCol, textCol, unitize, joinSep, storePath,
+        excludeAppendIds = Seq(appendId))
+      try {
+        a.cleaned.write.mode("overwrite")
+          .parquet(s"$outDir/batch_id=$batchId")
+        graft.operators.UnitStore.append(a.novelKeys, "h", storePath,
+          appendId = Some(appendId))
+      } finally a.release()
+    }
     val nKeys = graft.operators.UnitStore.committedKeys(spark, storePath)
     spark.read.parquet(outDir)
       .agg(count(lit(1)).as("n_docs"),
@@ -364,56 +330,13 @@ object DocsStream {
                                 maxFilesPerTrigger: Option[Int] = None,
                                 checkpointLocation: Option[String] = None,
                                 compactEvery: Option[Int] = None): DataFrame = {
-    val schema = spark.read.parquet(inputDir).schema
-    require(schema.fieldNames.contains(fpCol),
-      s"input at $inputDir carries no stored fingerprint column '$fpCol' — " +
-        s"stamp xxhash64($textCol) as '$fpCol' at write time")
-    graft.operators.Dedup.lshFingerprints(spark, indexPath) // fail fast
-    val reader = spark.readStream.schema(schema)
-    val stream = maxFilesPerTrigger
-      .fold(reader)(n => reader.option("maxFilesPerTrigger", n))
-      .parquet(inputDir)
-    val writer0 = stream.writeStream.queryName(queryName)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                       batchId: Long) =>
-        val appendId = s"$queryName-b$batchId"
-        // deferred compaction, keeping the batch's own appendId unfolded
-        // — see runParagraphDedupLoopAsStream (same contract, both
-        // stores: folding a marker the checkpoint hasn't committed would
-        // disarm the replay's excludeAppendIds hook in EVERY stage)
-        compactEvery.foreach { n =>
-          if (batchId > 0 && batchId % n == 0) {
-            graft.operators.Dedup.lshCompact(spark, indexPath,
-              keepAppendIds = Seq(appendId))
-            graft.operators.UnitStore.compact(spark, storePath,
-              keepAppendIds = Seq(appendId))
-          }
-        }
-        // one snapshot serves the append, the rewrite and (shards loop)
-        // the curation join — see runIndexDedupLoopAsStream
-        val (accepted, release) = GraftColumnShim.snapshot(
-          graft.operators.Dedup.dedupAgainstIndexFingerprinted(batch.toDF(),
-            indexPath, textCol, idCol, fpCol, excludeAppendIds = Seq(appendId)))
-        try {
-          graft.operators.Dedup.lshAppend(accepted, textCol, idCol,
-            indexPath, appendId = Some(appendId))
-          val a = graft.operators.ParagraphDedup.storeAccept(
-            accepted, idCol, textCol, unitize, joinSep, storePath,
-            excludeAppendIds = Seq(appendId))
-          try {
-            a.cleaned.write.mode("overwrite")
-              .parquet(s"$outDir/batch_id=$batchId")
-            graft.operators.UnitStore.append(a.novelKeys, "h", storePath,
-              appendId = Some(appendId))
-          } finally a.release()
-        } finally release()
-        ()
-      }
-    val q = checkpointLocation
-      .fold(writer0)(c => writer0.option("checkpointLocation", c))
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    runIngestStages(spark, inputDir, indexPath, storePath, outDir, queryName,
+        unitize, joinSep, fpCol, idCol, textCol, maxFilesPerTrigger,
+        checkpointLocation, compactEvery, requireInput = { schema =>
+      require(schema.fieldNames.contains(fpCol),
+        s"input at $inputDir carries no stored fingerprint column '$fpCol' — " +
+          s"stamp xxhash64($textCol) as '$fpCol' at write time")
+    })((_, _) => ())
     val n1 = graft.operators.Dedup.lshIndexCommittedDocs(spark, indexPath)
     val nKeys = graft.operators.UnitStore.committedKeys(spark, storePath)
     spark.read.parquet(outDir)
@@ -480,72 +403,32 @@ object DocsStream {
                                         maxFilesPerTrigger: Option[Int] = None,
                                         checkpointLocation: Option[String] = None,
                                         compactEvery: Option[Int] = None): DataFrame = {
-    val schema = spark.read.parquet(inputDir).schema
-    Seq(fpCol, idCol, textCol, langCol, sourceCol).foreach(c =>
-      require(schema.fieldNames.contains(c),
-        s"input at $inputDir carries no '$c' column — the shard tail needs " +
-          s"($idCol, $textCol, $fpCol, $langCol, $sourceCol)"))
-    graft.operators.Dedup.lshFingerprints(spark, indexPath) // fail fast
     // the decontamination reference, renamed to the tail's text column
     // once at plan time (Curate passes one textCol name to both sides)
     val bench = benchmark.select(col(textCol).as("clean_text"))
-    val reader = spark.readStream.schema(schema)
-    val stream = maxFilesPerTrigger
-      .fold(reader)(n => reader.option("maxFilesPerTrigger", n))
-      .parquet(inputDir)
-    val writer0 = stream.writeStream.queryName(queryName)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                       batchId: Long) =>
-        val appendId = s"$queryName-b$batchId"
-        // deferred compaction — see runParagraphDedupLoopAsStream
-        compactEvery.foreach { n =>
-          if (batchId > 0 && batchId % n == 0) {
-            graft.operators.Dedup.lshCompact(spark, indexPath,
-              keepAppendIds = Seq(appendId))
-            graft.operators.UnitStore.compact(spark, storePath,
-              keepAppendIds = Seq(appendId))
-          }
-        }
-        // one snapshot serves the append, the rewrite and (shards loop)
-        // the curation join — see runIndexDedupLoopAsStream
-        val (accepted, release) = GraftColumnShim.snapshot(
-          graft.operators.Dedup.dedupAgainstIndexFingerprinted(batch.toDF(),
-            indexPath, textCol, idCol, fpCol, excludeAppendIds = Seq(appendId)))
-        try {
-          graft.operators.Dedup.lshAppend(accepted, textCol, idCol,
-            indexPath, appendId = Some(appendId))
-          val a = graft.operators.ParagraphDedup.storeAccept(
-            accepted, idCol, textCol, unitize, joinSep, storePath,
-            excludeAppendIds = Seq(appendId))
-          try {
-            a.cleaned.write.mode("overwrite")
-              .parquet(s"$outDir/batch_id=$batchId")
-            graft.operators.UnitStore.append(a.novelKeys, "h", storePath,
-              appendId = Some(appendId))
-            // the curation tail on the cleaned text, batch-proportional:
-            // read the rewrite BACK off the batch's just-landed files
-            // (already materialized — re-consuming a.cleaned would run
-            // the rewrite join twice); attributes join back from the
-            // accepted snapshot
-            val curInput = graft.operators.IndexLifecycle.readDir(spark,
-              s"$outDir/batch_id=$batchId")
-              .join(accepted.select(col(idCol), col(langCol), col(sourceCol)),
-                idCol)
-            val curated = graft.operators.Curate.curate(
-              curInput, bench, idCol, "clean_text", langCol, sourceCol,
-              minWords, minUniqRatio, sampleNumerator, weights, packBudget)
-            graft.operators.ShardWriter.writeShards(curated,
-              s"$shardsDir/batch_id=$batchId", langCol,
-              Seq("bin", idCol, "replica")): Unit
-          } finally a.release()
-        } finally release()
-        ()
-      }
-    val q = checkpointLocation
-      .fold(writer0)(c => writer0.option("checkpointLocation", c))
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    runIngestStages(spark, inputDir, indexPath, storePath, outDir, queryName,
+        unitize, joinSep, fpCol, idCol, textCol, maxFilesPerTrigger,
+        checkpointLocation, compactEvery, requireInput = { schema =>
+      Seq(fpCol, idCol, textCol, langCol, sourceCol).foreach(c =>
+        require(schema.fieldNames.contains(c),
+          s"input at $inputDir carries no '$c' column — the shard tail needs " +
+            s"($idCol, $textCol, $fpCol, $langCol, $sourceCol)"))
+    }) { (accepted, batchId) =>
+      // the curation tail on the cleaned text, batch-proportional: read
+      // the rewrite BACK off the batch's just-landed files (already
+      // materialized — re-consuming the rewrite would run its join
+      // twice); attributes join back from the accepted snapshot
+      val curInput = graft.operators.IndexLifecycle.readDir(spark,
+        s"$outDir/batch_id=$batchId")
+        .join(accepted.select(col(idCol), col(langCol), col(sourceCol)),
+          idCol)
+      val curated = graft.operators.Curate.curate(
+        curInput, bench, idCol, "clean_text", langCol, sourceCol,
+        minWords, minUniqRatio, sampleNumerator, weights, packBudget)
+      graft.operators.ShardWriter.writeShards(curated,
+        s"$shardsDir/batch_id=$batchId", langCol,
+        Seq("bin", idCol, "replica")): Unit
+    }
     spark.read.parquet(shardsDir)
       .groupBy(col(langCol), col("bin"))
       .agg(count(lit(1)).as("n_docs"),
@@ -570,21 +453,98 @@ object DocsStream {
   def runIvfIngestAsStream(spark: SparkSession, inputDir: String,
                            indexPath: String, queryName: String,
                            maxFilesPerTrigger: Option[Int] = None,
-                           checkpointLocation: Option[String] = None): Unit = {
+                           checkpointLocation: Option[String] = None): Unit =
+    drainForeachBatch(spark, inputDir, queryName, maxFilesPerTrigger,
+        checkpointLocation) { (batch, batchId) =>
+      graft.operators.SimilaritySearch.ivfAppend(batch, "embedding",
+        "vec_id", indexPath, appendId = Some(s"$queryName-b$batchId"))
+    }
+
+  /** The per-micro-batch stages shared by [[runIngestPipelineAsStream]]
+    * and [[runIngestPipelineToShardsAsStream]]: deferred compaction of
+    * both stores, the exact + near-dup accept against the index (one
+    * snapshot), the index append, the paragraph rewrite landed under
+    * `outDir/batch_id=<id>`, and the unit-store append. `tail` then runs
+    * with the accepted snapshot and the batch id, before either release.
+    * `requireInput` checks the input schema before the stream starts,
+    * followed by the index's fingerprint sidecar (fail fast).
+    */
+  private def runIngestStages(spark: SparkSession, inputDir: String,
+                              indexPath: String, storePath: String,
+                              outDir: String, queryName: String,
+                              unitize: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
+                              joinSep: String, fpCol: String, idCol: String,
+                              textCol: String,
+                              maxFilesPerTrigger: Option[Int],
+                              checkpointLocation: Option[String],
+                              compactEvery: Option[Int],
+                              requireInput: StructType => Unit)(
+                               tail: (DataFrame, Long) => Unit): Unit =
+    drainForeachBatch(spark, inputDir, queryName, maxFilesPerTrigger,
+        checkpointLocation, preflight = { schema =>
+      requireInput(schema)
+      graft.operators.Dedup.lshFingerprints(spark, indexPath): Unit
+    }) { (batch, batchId) =>
+      val appendId = s"$queryName-b$batchId"
+      // deferred compaction, keeping the batch's own appendId unfolded
+      // — see runParagraphDedupLoopAsStream (same contract, both
+      // stores: folding a marker the checkpoint hasn't committed would
+      // disarm the replay's excludeAppendIds hook in EVERY stage)
+      compactEvery.foreach { n =>
+        if (batchId > 0 && batchId % n == 0) {
+          graft.operators.Dedup.lshCompact(spark, indexPath,
+            keepAppendIds = Seq(appendId))
+          graft.operators.UnitStore.compact(spark, storePath,
+            keepAppendIds = Seq(appendId))
+        }
+      }
+      // one snapshot serves the append, the rewrite and the tail — see
+      // runIndexDedupLoopAsStream
+      val (accepted, release) = GraftColumnShim.snapshot(
+        graft.operators.Dedup.dedupAgainstIndexFingerprinted(batch,
+          indexPath, textCol, idCol, fpCol, excludeAppendIds = Seq(appendId)))
+      try {
+        graft.operators.Dedup.lshAppend(accepted, textCol, idCol,
+          indexPath, appendId = Some(appendId))
+        val a = graft.operators.ParagraphDedup.storeAccept(
+          accepted, idCol, textCol, unitize, joinSep, storePath,
+          excludeAppendIds = Seq(appendId))
+        try {
+          a.cleaned.write.mode("overwrite")
+            .parquet(s"$outDir/batch_id=$batchId")
+          graft.operators.UnitStore.append(a.novelKeys, "h", storePath,
+            appendId = Some(appendId))
+          tail(accepted, batchId)
+        } finally a.release()
+      } finally release()
+    }
+
+  /** The one `foreachBatch` stream setup behind the file-fed index and
+    * ingest loops: read the input's schema, run `preflight` on it (a
+    * loop's input and store checks, before any stream starts), stream
+    * `inputDir` (`maxFilesPerTrigger` files per trigger when set) into
+    * `body` with each micro-batch's id, checkpoint under
+    * `checkpointLocation` when set, and return once everything
+    * available has been processed.
+    */
+  private def drainForeachBatch(spark: SparkSession, inputDir: String,
+                                queryName: String,
+                                maxFilesPerTrigger: Option[Int],
+                                checkpointLocation: Option[String],
+                                preflight: StructType => Unit = _ => ())(
+                                 body: (DataFrame, Long) => Unit): Unit = {
     val schema = spark.read.parquet(inputDir).schema
+    preflight(schema)
     val reader = spark.readStream.schema(schema)
     val stream = maxFilesPerTrigger
       .fold(reader)(n => reader.option("maxFilesPerTrigger", n))
       .parquet(inputDir)
-    val writer0 = stream.writeStream.queryName(queryName)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                       batchId: Long) =>
-        graft.operators.SimilaritySearch.ivfAppend(batch.toDF(), "embedding",
-          "vec_id", indexPath, appendId = Some(s"$queryName-b$batchId"))
-        ()
+    val writer = stream.writeStream.queryName(queryName)
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        body(batch.toDF(), batchId)
       }
     val q = checkpointLocation
-      .fold(writer0)(c => writer0.option("checkpointLocation", c))
+      .fold(writer)(c => writer.option("checkpointLocation", c))
       .start()
     q.processAllAvailable()
     q.stop()

@@ -5,8 +5,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Round-16 persisted-LSH-index lifecycle contracts: crash-safe +
-  * idempotent appends (commit markers), compaction, legacy-format
-  * upgrade, URI-addressed layouts, and the cached catalog registration.
+  * idempotent appends (commit markers), compaction, the one supported
+  * on-disk layout, URI-addressed layouts, and the cached catalog
+  * registration.
   */
 class LshIndexLifecycleSpec extends AnyFunSuite {
   lazy val spark: SparkSession = graft.TestSpark.spark
@@ -132,43 +133,6 @@ class LshIndexLifecycleSpec extends AnyFunSuite {
     assert(pairs(idx).toSet == before.toSet)
   }
 
-  test("legacy index (no attempt column): reads and plain-appends as before; appendId refused; lshCompact upgrades it") {
-    val idx = tmpDir("lsh_legacy")
-    Dedup.lshBuild(lake, "text", "doc_id", idx)
-    // strip the attempt column from both data dirs — the exact layout a
-    // round-15 build wrote
-    for ((sub, cols) <- Seq("bands" -> Seq("ref_id", "band", "bucket"),
-                            "hashes" -> Seq("ref_id", "sh"))) {
-      val legacyRows = spark.read.parquet(s"$idx/$sub")
-        .select(cols.map(col): _*).collect()
-      val schema = org.apache.spark.sql.types.StructType(
-        spark.read.parquet(s"$idx/$sub").schema.filter(f => cols.contains(f.name)))
-      spark.createDataFrame(
-          java.util.Arrays.asList(legacyRows: _*), schema)
-        .write.mode("overwrite").parquet(s"$idx/$sub")
-    }
-    assert(pairs(idx).toSet == Set((1L, 0L), (3L, 2L)))
-    // legacy in-place append still works (no idempotency guarantee)...
-    Dedup.lshAppend(b1, "text", "doc_id", idx)
-    assert(pairs(idx).toSet == Set((1L, 0L), (3L, 2L), (7L, 4L)))
-    // ...but an idempotent appendId on the legacy layout is refused with
-    // the upgrade hint, not silently downgraded
-    val e = intercept[IllegalArgumentException] {
-      Dedup.lshAppend(b1, "text", "doc_id", idx, appendId = Some("day9"))
-    }
-    assert(e.getMessage.contains("lshCompact"), e.getMessage)
-    Dedup.lshCompact(spark, idx)
-    assert(spark.read.parquet(s"$idx/bands").columns.contains("append_attempt"),
-      "compact did not upgrade the layout")
-    assert(pairs(idx).toSet == Set((1L, 0L), (3L, 2L), (7L, 4L)))
-    Dedup.lshAppend(
-      Seq((6L, "yet another unrelated document about benchmark artifacts and pass medians"))
-        .toDF("doc_id", "text"), "text", "doc_id", idx, appendId = Some("day9"))
-    Dedup.lshAppend(b1.withColumn("doc_id", lit(99L)), "text", "doc_id", idx,
-      appendId = Some("day9")) // same id → no-op; doc 99 never enters
-    assert(Dedup.lshIndexDocCount(spark, idx) == 4L)
-  }
-
   test("index addressed by file: URI — build, query, append, compact all run through the FileSystem API") {
     val dir = tmpDir("lsh_uri")
     val idx = "file:" + dir
@@ -182,52 +146,6 @@ class LshIndexLifecycleSpec extends AnyFunSuite {
     // the same physical index addressed with and without the scheme
     // resolves to ONE catalog name (qualified-URI identity)
     assert(pairs(dir).toSet == pairs(idx).toSet)
-  }
-
-  test("round-15 bucketed index (5-col meta, plain hashes) still reads and appends; lshCompact upgrades its hashes to bucketed") {
-    import spark.implicits._
-    val idx = tmpDir("lsh_r15fmt")
-    Dedup.lshBuild(lake, "text", "doc_id", idx, bandBuckets = 4)
-    // reconstruct the round-15 on-disk state: plain-parquet hashes and a
-    // meta without hash_buckets
-    val plainHashes = spark.read.parquet(s"$idx/hashes")
-      .select("ref_id", "sh", "append_attempt").collect()
-    val hSchema = org.apache.spark.sql.types.StructType(
-      spark.read.parquet(s"$idx/hashes").schema
-        .filter(f => Seq("ref_id", "sh", "append_attempt").contains(f.name)))
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-      f.delete(): Unit
-    }
-    rm(new java.io.File(idx, "hashes"))
-    spark.createDataFrame(java.util.Arrays.asList(plainHashes: _*), hSchema)
-      .write.parquet(s"$idx/hashes")
-    val m = spark.read.parquet(s"$idx/meta")
-      .select("num_perm", "bands", "shingle_k", "n_docs", "band_buckets")
-      .collect().head
-    Seq((m.getInt(0), m.getInt(1), m.getInt(2), m.getLong(3), m.getInt(4)))
-      .toDF("num_perm", "bands", "shingle_k", "n_docs", "band_buckets")
-      .write.mode("overwrite").parquet(s"$idx/meta")
-    // reads: bands through the bucketed table, hashes as plain parquet
-    assert(pairs(idx).toSet == Set((1L, 0L), (3L, 2L)))
-    // marker-format appends still work (the r15 data files carry the
-    // attempt column) and must keep writing PLAIN hashes (hb = 0)
-    Dedup.lshAppend(b1, "text", "doc_id", idx, appendId = Some("d1"))
-    assert(pairs(idx).toSet == Set((1L, 0L), (3L, 2L), (7L, 4L)))
-    // compact upgrades: hashes land bucketed, meta gains hash_buckets=4,
-    // results unchanged
-    Dedup.lshCompact(spark, idx)
-    val meta = spark.read.parquet(s"$idx/meta").head()
-    assert(meta.getAs[Int]("hash_buckets") == 4 &&
-      meta.getAs[Int]("band_buckets") == 4 &&
-      meta.getAs[Long]("n_docs") == 3L, meta.toString)
-    assert(pairs(idx).toSet == Set((1L, 0L), (3L, 2L), (7L, 4L)))
-    // post-upgrade appends go through the bucketed hashes table
-    Dedup.lshAppend(
-      Seq((6L, "yet another unrelated document about benchmark artifacts and pass medians"))
-        .toDF("doc_id", "text"), "text", "doc_id", idx, appendId = Some("d2"))
-    assert(Dedup.lshIndexDocCount(spark, idx) == 4L)
-    assert(pairs(idx).toSet == Set((1L, 0L), (3L, 2L), (7L, 4L)))
   }
 
   test("bucketed-hashes layout: the verify join's lake side reads bucketed and shuffles nothing (huge-batch regime)") {
@@ -282,7 +200,7 @@ class LshIndexLifecycleSpec extends AnyFunSuite {
     }
   }
 
-  test("IVF index lifecycle: crash-safe idempotent append, compaction, legacy upgrade — same protocol as the LSH index") {
+  test("IVF index lifecycle: crash-safe idempotent append and compaction — same protocol as the LSH index") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val query = emb.filter(col("vec_id") === 0)
       .select(col("embedding").cast("array<double>")).head().getSeq[Double](0).toArray
@@ -319,30 +237,6 @@ class LshIndexLifecycleSpec extends AnyFunSuite {
     SimilaritySearch.ivfAppend(batch, "embedding", "vec_id", idx,
       appendId = Some("day1"))
     assert(top10 == exact, "folded appendId replayed")
-    // legacy upgrade: strip the attempt column (round-15 layout), plain
-    // append works, appendId refused until ivfCompact upgrades
-    val legacyIdx = tmpDir("ivf_legacy")
-    SimilaritySearch.ivfBuild(base, "embedding", "vec_id", nlist = 8, legacyIdx)
-    val legacyRows = spark.read.parquet(s"$legacyIdx/corpus").drop("append_attempt")
-    val tmp = tmpDir("ivf_legacy_rw")
-    legacyRows.write.mode("overwrite").partitionBy("cluster").parquet(tmp)
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-      f.delete(): Unit
-    }
-    rm(new java.io.File(legacyIdx, "corpus"))
-    new java.io.File(tmp).renameTo(new java.io.File(legacyIdx, "corpus"))
-    val e = intercept[IllegalArgumentException] {
-      SimilaritySearch.ivfAppend(batch, "embedding", "vec_id", legacyIdx,
-        appendId = Some("d1"))
-    }
-    assert(e.getMessage.contains("ivfCompact"), e.getMessage)
-    SimilaritySearch.ivfAppend(batch, "embedding", "vec_id", legacyIdx)
-    SimilaritySearch.ivfCompact(spark, legacyIdx)
-    assert(spark.read.parquet(s"$legacyIdx/corpus").columns
-      .contains("append_attempt"))
-    assert(SimilaritySearch.ivfQuery(spark, legacyIdx, "embedding", "vec_id",
-      query, k = 10, nprobe = 8).collect().map(_.getLong(0)).toSeq == exact)
   }
 
   test("lshAppend never scans the index's data: bytes read stay batch-sized, the meta tally increments") {
@@ -472,13 +366,9 @@ class LshIndexLifecycleSpec extends AnyFunSuite {
   }
 
   test("catalog registration invalidates on out-of-band schema change — a stale schema cannot drop the attempt column") {
-    import spark.implicits._
     val idx = tmpDir("lsh_oob")
     Dedup.lshBuild(lake, "text", "doc_id", idx, bandBuckets = 2)
-    // plant a CRASHED append in the r16 4-col layout: garbage rows on
-    // disk, no marker — invisible through the attempt filter
-    Dedup.lshAppend(b1, "text", "doc_id", idx, appendId = Some("d1"))
-    commitMarkers(idx).foreach(f => assert(f.delete()))
+    // this query registers the BIGINT ref_id schema in the catalog cache
     assert(pairs(idx).toSet == Set((1L, 0L), (3L, 2L)))
     def copyDir(src: java.io.File, dst: java.io.File): Unit = {
       dst.mkdirs(): Unit
@@ -493,45 +383,106 @@ class LshIndexLifecycleSpec extends AnyFunSuite {
       if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rmDir)
       f.delete(): Unit
     }
-    // save the 4-col dirs aside, then rewrite both data dirs as the
-    // LEGACY 3-col/2-col bucketed layout (what another JVM running old
-    // code would leave) — visible rows only, so results are unchanged
-    val saved = new java.io.File(tmpDir("lsh_oob_saved"))
-    for (sub <- Seq("bands", "hashes")) {
-      copyDir(new java.io.File(idx, sub), new java.io.File(saved, sub))
-      val cols = if (sub == "bands") Seq("ref_id", "band", "bucket")
-                 else Seq("ref_id", "sh")
-      val bcols = if (sub == "bands") Seq("band", "bucket") else Seq("ref_id")
-      val legacyRows = spark.read.parquet(s"$idx/$sub")
-        .filter(col("append_attempt").isNull)
-        .select(cols.map(col): _*).collect()
+    // out-of-band: another process rebuilds the index in the current
+    // format over STRING ids, and it lands under the SAME location and
+    // bucket count — only the ref_id type differs from the cached
+    // registration (a rebuild elsewhere leaves this index's entry alone)
+    val other = tmpDir("lsh_oob_rebuild")
+    Dedup.lshBuild(lake.withColumn("doc_id", concat(lit("lake-"), col("doc_id"))),
+      "text", "doc_id", other, bandBuckets = 2)
+    for (sub <- Seq("bands", "hashes", "meta")) {
+      rmDir(new java.io.File(idx, sub))
+      copyDir(new java.io.File(other, sub), new java.io.File(idx, sub))
+    }
+    // the schema-aware liveness check re-registers and the query answers
+    // with the rebuilt ids; the stale BIGINT registration could not read
+    // the STRING column at all. The same check keeps a stale schema from
+    // ever dropping the attempt column from the scan.
+    val got = Dedup.minhashLshIndexPairs(probe, idx, "text", "doc_id",
+        threshold = 0.7).select(col("id"), col("ref_id")).collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSet
+    assert(got == Set((1L, "lake-0"), (3L, "lake-2")), got.toString)
+  }
+
+  test("an index in a superseded on-disk layout fails query, append and compact with one named error and writes nothing") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    def rewrite(dir: String, keep: Seq[String]): Unit = {
+      val rows = spark.read.parquet(dir).select(keep.map(col): _*).collect()
       val schema = org.apache.spark.sql.types.StructType(
-        spark.read.parquet(s"$idx/$sub").schema.filter(f => cols.contains(f.name)))
-      rmDir(new java.io.File(idx, sub))
-      val tmp = s"lsh_oob_rewrite_$sub"
-      spark.sql(s"DROP TABLE IF EXISTS $tmp")
-      spark.createDataFrame(java.util.Arrays.asList(legacyRows: _*), schema)
-        .repartition(2, bcols.map(col): _*)
-        .write.option("path", s"$idx/$sub")
-        .bucketBy(2, bcols.head, bcols.tail: _*).sortBy(bcols.head, bcols.tail: _*)
-        .saveAsTable(tmp)
-      spark.sql(s"DROP TABLE $tmp")
+        spark.read.parquet(dir).schema.filter(f => keep.contains(f.name)))
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+        .write.mode("overwrite").parquet(dir)
     }
-    // this query registers the 3-col schema in the catalog cache
-    assert(pairs(idx).toSet == Set((1L, 0L), (3L, 2L)))
-    // out-of-band: the 4-col layout (with its invisible garbage attempt)
-    // comes back under the SAME location and bucket count — only the
-    // schema differs from the cached registration
-    for (sub <- Seq("bands", "hashes")) {
-      rmDir(new java.io.File(idx, sub))
-      copyDir(new java.io.File(saved, sub), new java.io.File(idx, sub))
+    def rewriteMeta(idx: String, cols: Seq[String]): Unit = {
+      val m = spark.read.parquet(s"$idx/meta").head()
+      val df = Seq((m.getAs[Int]("num_perm"), m.getAs[Int]("bands"),
+          m.getAs[Int]("shingle_k"), m.getAs[Long]("n_docs"),
+          m.getAs[Int]("band_buckets")))
+        .toDF("num_perm", "bands", "shingle_k", "n_docs", "band_buckets")
+      df.select(cols.map(col): _*).write.mode("overwrite").parquet(s"$idx/meta")
     }
-    // the schema-aware liveness check re-registers and the attempt
-    // filter applies: the garbage row stays invisible. A stale 3-col
-    // schema would DROP the attempt column from the scan and surface
-    // (7,4) — the exact silent corruption the check exists to stop.
-    assert(pairs(idx).toSet == Set((1L, 0L), (3L, 2L)),
-      "stale catalog schema leaked an uncommitted append")
+    def snapshot(root: String): Map[String, Seq[Byte]] = {
+      val base = java.nio.file.Paths.get(root)
+      scala.util.Using.resource(java.nio.file.Files.walk(base)) { w =>
+        w.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+          .map(p => base.relativize(p).toString ->
+            java.nio.file.Files.readAllBytes(p).toSeq).toMap
+      }
+    }
+    def refused(idx: String, shape: String)(op: => Any): Unit = {
+      val before = snapshot(idx)
+      val e = intercept[UnsupportedIndexLayoutException](op)
+      assert(e.getMessage.contains(idx) && e.getMessage.contains("rebuild"),
+        s"$shape: ${e.getMessage}")
+      val after = snapshot(idx)
+      assert(after == before, s"$shape: the refused operation changed " +
+        s"${(after.keySet ++ before.keySet).filter(k => after.get(k) != before.get(k))}")
+    }
+    def lshRefused(idx: String, shape: String): Unit = {
+      refused(idx, s"$shape query")(pairs(idx))
+      refused(idx, s"$shape append")(
+        Dedup.lshAppend(b1, "text", "doc_id", idx, appendId = Some("d1")))
+      refused(idx, s"$shape compact")(Dedup.lshCompact(spark, idx))
+    }
+    // LSH bands and hashes written without the append_attempt tag
+    val noAttempt = tmpDir("lsh_noattempt")
+    Dedup.lshBuild(lake, "text", "doc_id", noAttempt)
+    rewrite(s"$noAttempt/bands", Seq("ref_id", "band", "bucket"))
+    rewrite(s"$noAttempt/hashes", Seq("ref_id", "sh"))
+    lshRefused(noAttempt, "no append_attempt")
+    // 4-column meta (no band_buckets / hash_buckets) and 5-column meta
+    // (no hash_buckets) over otherwise current data
+    for ((shape, cols) <- Seq(
+        "4-col meta" -> Seq("num_perm", "bands", "shingle_k", "n_docs"),
+        "5-col meta" -> Seq("num_perm", "bands", "shingle_k", "n_docs", "band_buckets"))) {
+      val idx = tmpDir("lsh_oldmeta")
+      Dedup.lshBuild(lake, "text", "doc_id", idx, bandBuckets = 2)
+      rewriteMeta(idx, cols)
+      lshRefused(idx, shape)
+    }
+    // IVF corpus written without the append_attempt tag
+    val emb = (0 until 20).map(i => (i.toLong,
+        Array.tabulate(8)(j => math.sin(i * 8.0 + j))))
+      .toDF("vec_id", "embedding")
+    val ivfIdx = tmpDir("ivf_noattempt")
+    SimilaritySearch.ivfBuild(emb, "embedding", "vec_id", nlist = 4, ivfIdx)
+    val rows = spark.read.parquet(s"$ivfIdx/corpus").drop("append_attempt")
+    val tmp = tmpDir("ivf_noattempt_rw")
+    rows.write.mode("overwrite").partitionBy("cluster").parquet(tmp)
+    def rmDir(f: java.io.File): Unit = {
+      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rmDir)
+      f.delete(): Unit
+    }
+    rmDir(new java.io.File(ivfIdx, "corpus"))
+    assert(new java.io.File(tmp).renameTo(new java.io.File(ivfIdx, "corpus")))
+    val q = emb.select(col("embedding").cast("array<double>")).head()
+      .getSeq[Double](0).toArray
+    refused(ivfIdx, "IVF query")(SimilaritySearch.ivfQuery(spark, ivfIdx,
+      "embedding", "vec_id", q, k = 5, nprobe = 4))
+    refused(ivfIdx, "IVF append")(SimilaritySearch.ivfAppend(emb, "embedding",
+      "vec_id", ivfIdx, appendId = Some("d1")))
+    refused(ivfIdx, "IVF compact")(SimilaritySearch.ivfCompact(spark, ivfIdx))
   }
 
   test("a stored null shingle hash fails the index query loudly (sorted_jaccard64 guard on the storage boundary)") {

@@ -402,36 +402,6 @@ class OperatorsSpec extends AnyFunSuite {
       threshold = 0.7, broadcastMaxBandRows = 0L)) == Set((1L, 0L), (3L, 2L)))
   }
 
-  test("round-14-format index (meta without band_buckets) still queries and appends") {
-    import spark.implicits._
-    val lake = docs.filter(col("doc_id").isin(0L, 2L))
-    val idx = java.nio.file.Files.createTempDirectory("graft_lsh_r14meta").toString
-    Dedup.lshBuild(lake, "text", "doc_id", idx, numPerm = 128, bands = 16,
-      shingleK = 3)
-    // rewrite meta in the pre-round-15 4-column layout
-    val m = spark.read.parquet(s"$idx/meta")
-      .select("num_perm", "bands", "shingle_k", "n_docs").collect().head
-    Seq((m.getInt(0), m.getInt(1), m.getInt(2), m.getLong(3)))
-      .toDF("num_perm", "bands", "shingle_k", "n_docs")
-      .write.mode("overwrite").parquet(s"$idx/meta")
-    def pairsOf(df: org.apache.spark.sql.DataFrame) =
-      df.select(col("id"), col("ref_id")).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-    // reads as unbucketed, queries fine
-    val batch = docs.filter(col("doc_id").isin(1L, 3L))
-    assert(pairsOf(Dedup.minhashLshIndexPairs(batch, idx, "text", "doc_id",
-      threshold = 0.7)) == Set((1L, 0L), (3L, 2L)))
-    // append works and upgrades meta to the 5-column layout
-    Dedup.lshAppend(docs.filter(col("doc_id") === 4L), "text", "doc_id", idx)
-    val meta = spark.read.parquet(s"$idx/meta").head()
-    assert(meta.getAs[Long]("n_docs") == 3L &&
-      meta.getAs[Int]("band_buckets") == 0)
-    val b2 = Seq((8L, "unrelated text regarding machine learning data pipelines at scale"))
-      .toDF("doc_id", "text")
-    assert(pairsOf(Dedup.minhashLshIndexPairs(b2, idx, "text", "doc_id",
-      threshold = 0.7)) == Set((8L, 4L)))
-  }
-
   test("vector kernels surface dimension mismatch as null — exactly the HOF zip_with contract, never a prefix cosine") {
     import spark.implicits._
     val df = Seq(

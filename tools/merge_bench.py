@@ -64,9 +64,10 @@ art = {
     # misleading q47 null). Errored queries (value -1) stay visible.
     "spark": {"warm_runs": 3, "warm_stat": "median",
               "skipped": sorted(spark.get("skipped", [])),
-              # carried through from tools/patch_bench_query.py so the
-              # committed artifact records any single-query re-measure
-              # (which value was replaced, by what, and how)
+              # carried through so the committed artifact keeps any
+              # single-query re-measure recorded in its input (which value
+              # was replaced, by what, and how); the one-off patcher that
+              # wrote these lists into past artifacts has been retired
               **({"patched": spark["patched"]} if "patched" in spark else {}),
               "queries": {k: v for k, v in spark["queries"].items()
                           if v is not None}},
