@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -528,7 +528,6 @@ object Dedup {
                bandBuckets: Int = 0): Unit = {
     val spark = ref.sparkSession
     val (fs, root) = IndexLifecycle.fsFor(spark, path)
-    val bandsPath = new HPath(root, "bands")
     val base = prepTexts(ref, textCol, idCol)
     val bandData = bandRows(base, numPerm, bands, shingleK)
       .withColumnRenamed("id", "ref_id")
@@ -546,52 +545,30 @@ object Dedup {
     IndexLifecycle.withWriterLock(fs, root, "lshBuild",
         IndexLifecycle.lockTtlMs(spark)) {
       IndexLifecycle.clearCommits(fs, root)
-      if (bandBuckets > 0) {
-        // Bucketed write goes through the catalog (Spark's bucketed layout
-        // is a table property, not a parquet one): create the external
-        // bucketed table at $path/bands, insert, then drop the catalog
-        // entry — files and bucket hashing survive; queries re-register
-        // from meta. repartition on the bucket columns first:
-        // HashPartitioning here is the same pmod(hash) the bucketed writer
-        // assigns files by, so each task holds exactly one bucket's rows —
-        // nb files, not tasks × nb.
-        writeBucketed(bandData, spark, path, "bands", bandsPath, "_build",
-          bandBuckets, Seq("band", "bucket"), fs)
-      } else {
-        bandData.write.mode("overwrite").parquet(bandsPath.toString)
-      }
-      val hashesPath = new HPath(root, "hashes")
+      IndexLifecycle.writeDir(spark, fs, root, lshDir("bands", bandBuckets), bandData)
+      // bucket the VERIFY hashes on ref_id too (same count): the verify
+      // join's lake side — the index's WIDEST data, the shingle-hash
+      // arrays — then satisfies its join distribution straight off the
+      // scan, so in the huge-batch regime no lake bytes move in EITHER
+      // stage of the query (band join pinned since round 15; this
+      // closes the hashes join, plan-pinned in OperatorsSpec)
       val hashData = base.select(col("id").as("ref_id"),
           shingleHashes64Udf(shingleK)(col("__text")).as("sh"))
         .withColumn(AttemptCol, lit(null).cast("string"))
-      if (bandBuckets > 0) {
-        // bucket the VERIFY hashes on ref_id too (same count): the verify
-        // join's lake side — the index's WIDEST data, the shingle-hash
-        // arrays — then satisfies its join distribution straight off the
-        // scan, so in the huge-batch regime no lake bytes move in EITHER
-        // stage of the query (band join pinned since round 15; this
-        // closes the hashes join, plan-pinned in OperatorsSpec)
-        writeBucketed(hashData, spark, path, "hashes", hashesPath, "_build",
-          bandBuckets, Seq("ref_id"), fs)
-      } else {
-        hashData.write.mode("overwrite").parquet(hashesPath.toString)
-      }
+      IndexLifecycle.writeDir(spark, fs, root, lshDir("hashes", bandBuckets), hashData)
       // a REBUILD derives from a fresh lake: the old fingerprint sidecar
       // (if any) describes rows that no longer exist — drop it; the
       // builder re-creates it with [[lshWriteFingerprints]]
       fs.delete(new HPath(root, "fps"), true): Unit
       // a rebuild may change the bucket count or schema under a standing
       // catalog registration — drop it; the next bucketed read re-registers
-      registerLock.synchronized {
-        spark.sql(s"DROP TABLE IF EXISTS ${bandsTableName(spark, path)}")
-        spark.sql(s"DROP TABLE IF EXISTS ${hashesTableName(spark, path)}")
-        spark.sql(s"DROP TABLE IF EXISTS ${indexTableName(spark, path, "fps")}"): Unit
-      }
+      IndexLifecycle.dropRegistrations(spark, root, LshIndex.dirNames)
       // footer-only count of what was actually written — the doc tally a
       // reuse guard can check without re-reading data pages
-      val nDocs = IndexLifecycle.readDir(spark, hashesPath.toString).count()
-      writeIndexMeta(spark, root.toString, numPerm, bands, shingleK, nDocs,
-        bandBuckets, hb = bandBuckets)
+      val nDocs = IndexLifecycle.readDir(spark, new HPath(root, "hashes").toString).count()
+      IndexLifecycle.writeMeta(spark, root, "num_perm" -> numPerm, "bands" -> bands,
+        "shingle_k" -> shingleK, "n_docs" -> nDocs, "band_buckets" -> bandBuckets,
+        "hash_buckets" -> bandBuckets)
     }
   }
 
@@ -604,169 +581,68 @@ object Dedup {
     * on every ingest after the first).
     *
     * Cost is batch-proportional: signs only `accepted`, appends its band
-    * rows and shingle hashes, and rewrites the one-row meta (parameters
-    * are re-read FROM the index, so the hash family cannot drift; the
-    * refreshed `n_docs` counts committed docs only). Equivalence
-    * contract, spec-pinned pair-for-pair: `build(lake); append(b)`
-    * answers every query identically to `build(lake ∪ b)` — band rows
-    * and hashes are deterministic per doc, so layout is the only
-    * difference. Appending a doc id already in the index duplicates its
-    * band rows (candidates dedup, but the verify join would emit two
-    * rows) — the contract is append ACCEPTED (novel) docs, one logical
-    * writer at a time (retries of that writer are fine, below). The
-    * one-writer half is ENFORCED, not narrated: every writer op takes a
-    * best-effort lease ([[IndexLifecycle.withWriterLock]]), so a second
-    * concurrent append/compact/rebuild fails loudly instead of
-    * interleaving — two loops racing one index could otherwise each
-    * accept the same near-dup with no error anywhere.
+    * rows and shingle hashes (and fingerprints, when the index has the
+    * sidecar), and rewrites the one-row meta. The HASH FAMILY IS FROZEN
+    * at build: the parameters are re-read FROM the index, so a batch can
+    * never be signed with a mismatched family. Equivalence contract,
+    * spec-pinned pair-for-pair: `build(lake); append(b)` answers every
+    * query identically to `build(lake ∪ b)` — band rows and hashes are
+    * deterministic per doc, so layout is the only difference. Appending
+    * a doc id already in the index duplicates its band rows (candidates
+    * dedup, but the verify join would emit two rows) — the contract is
+    * append ACCEPTED (novel) docs, one logical writer at a time (the
+    * lease enforces the one-writer half; retries of that writer are
+    * fine).
     *
-    * CRASH SAFETY AND RETRIES. Every append writes its rows tagged with
-    * a fresh attempt id, then publishes them with ONE atomic marker
-    * rename under `_commits/` — data first, marker last. Readers resolve
-    * visibility through the markers ([[IndexLifecycle.visibleRows]]), so:
-    *  - a crash anywhere before the marker rename leaves the index
-    *    answering queries exactly as before the append (a partial write
-    *    can never surface band rows without their verify hashes — the
-    *    silent-missed-dup failure an unguarded append had);
-    *  - re-running an append with the SAME `appendId` after a committed
-    *    one is a NO-OP (the marker already exists), which makes
-    *    at-least-once drivers — Structured Streaming's `foreachBatch`
-    *    retrying a micro-batch — idempotent: key the id on the batch id
-    *    (see [[graft.streaming.DocsStream.runIndexDedupLoopAsStream]]);
-    *  - a crashed attempt's rows are invisible garbage until
-    *    [[lshCompact]] rewrites them away.
-    * With `appendId = None` a random id is used: still crash-safe
-    * (all-or-nothing), but each completed call is a distinct append —
-    * callers that may retry MUST pass a stable id.
-    *
-    * The refreshed meta tally is INCREMENTAL — committed `n_docs` from
-    * meta plus this batch's row count, observed on the hashes write (no
-    * job of its own) — so the append never scans the index's own data
-    * (spec-pinned by bytes-read assertion): at a 10⁹-doc lake even a
-    * single-column recount would have been the append's dominant
-    * term. A crash between the marker rename and the meta rewrite
-    * leaves `n_docs` stale by one batch; queries are unaffected
-    * (visibility is the markers', not the tally's), [[lshIndexDocCount]]
-    * still answers exactly, and the next [[lshCompact]] — whose rewrite
-    * scans everything anyway — recounts and repairs it.
+    * Crash safety, `appendId` idempotency and the incremental `n_docs`
+    * tally are the shared [[IndexLifecycle.append]] sequence: a crash
+    * before the marker leaves the index answering as before (a partial
+    * write can never surface band rows without their verify hashes — the
+    * silent-missed-dup failure an unguarded append had), and the append
+    * never scans the index's own data (spec-pinned by bytes read).
+    * Streaming drivers key the id on the batch id (see
+    * [[graft.streaming.DocsStream.runIndexDedupLoopAsStream]]).
     */
   def lshAppend(accepted: DataFrame, textCol: String, idCol: String,
-                path: String, appendId: Option[String] = None): Unit = {
-    val spark = accepted.sparkSession
-    val (fs, root) = IndexLifecycle.fsFor(spark, path)
-    val id = appendId.getOrElse(java.util.UUID.randomUUID().toString)
-    IndexLifecycle.validateAppendId(id)
-    // the committed-marker no-op sits BEFORE the writer lock: a restarted
-    // at-least-once driver replaying finished batches is never refused
-    if (fs.exists(IndexLifecycle.markerPath(root, id)))
-      return // already committed — idempotent no-op
-    IndexLifecycle.withWriterLock(fs, root, "lshAppend",
-        IndexLifecycle.lockTtlMs(spark)) {
-      // everything below happens UNDER the lease: swap-window recovery
-      // mutates index dirs (it must never race a live compact's
-      // two-rename window), and the meta parameters decide the batch's
-      // hash family — values read before acquisition could be a
-      // concurrent rebuild's stale predecessors, silently signing the
-      // batch with the wrong family
-      recoverIndexDirs(fs, root)
-      val meta = readIndexMeta(spark, root)
-      val numPerm = meta.getAs[Int]("num_perm")
-      val bands = meta.getAs[Int]("bands")
-      val shingleK = meta.getAs[Int]("shingle_k")
-      val nb = meta.getAs[Int]("band_buckets")
-      val hb = meta.getAs[Int]("hash_buckets")
-      val bandsPath = new HPath(root, "bands")
-      val hashesPath = new HPath(root, "hashes")
-      // layout probe: refuse data rows without the attempt tag before
-      // anything is written
-      IndexLifecycle.requireLayout(root, "bands",
-        IndexLifecycle.readDir(spark, bandsPath.toString).columns.toSeq, AttemptCol)
-      val attempt = java.util.UUID.randomUUID().toString
+                path: String, appendId: Option[String] = None): Unit =
+    IndexLifecycle.append(accepted.sparkSession, path, LshIndex, "lshAppend",
+        appendId) { batch =>
+      val shingleK = batch.meta.getAs[Int]("shingle_k")
       val base = prepTexts(accepted, textCol, idCol)
-      val newBands = bandRows(base, numPerm, bands, shingleK)
-        .withColumnRenamed("id", "ref_id")
-        .withColumn(AttemptCol, lit(attempt))
-        .select("ref_id", "band", "bucket", AttemptCol)
-      if (nb > 0) {
-        // insertInto the re-registered bucketed table: the bucketed writer
-        // hashes (band, bucket) with the same family as the build, so
-        // appended files land in the right buckets; a bucket accumulates
-        // one file per append (Spark groups them by bucket id at scan —
-        // [[lshCompact]] folds the accumulation back to one per bucket).
-        val t = registerBandsTable(spark, path, nb)
-        newBands.repartition(nb, col("band"), col("bucket"))
-          .write.mode("append").insertInto(t)
-      } else {
-        newBands.write.mode("append").parquet(bandsPath.toString)
-      }
-      val newHashes = base.select(col("id").as("ref_id"),
-          shingleHashes64Udf(shingleK)(col("__text")).as("sh"))
-        .withColumn(AttemptCol, lit(attempt))
-      // the batch's row count, observed on this write: one hashes row
-      // per accepted doc, so it is the meta tally's increment
-      val nNew = IndexLifecycle.countedWrite(newHashes) { h =>
-        if (hb > 0) {
-          val t = registerHashesTable(spark, path, hb)
-          h.repartition(hb, col("ref_id"))
-            .write.mode("append").insertInto(t)
-        } else {
-          h.write.mode("append").parquet(hashesPath.toString)
-        }
-      }
+      batch.append("bands", bandRows(base, batch.meta.getAs[Int]("num_perm"),
+          batch.meta.getAs[Int]("bands"), shingleK)
+        .withColumnRenamed("id", "ref_id").select("ref_id", "band", "bucket"))
+      // one hashes row per accepted doc: the n_docs tally's increment
+      batch.append("hashes", base.select(col("id").as("ref_id"),
+        shingleHashes64Udf(shingleK)(col("__text")).as("sh")))
       // an index with a fingerprint sidecar ([[lshWriteFingerprints]])
       // extends it with the batch's fps UNDER THE SAME MARKER — the
-      // sidecar can never drift from the band/hash rows (all-or-nothing
-      // per append, retries no-op together)
-      val fpsPath = new HPath(root, "fps")
-      if (fs.exists(fpsPath)) {
-        val newFps = accepted.select(xxhash64(col(textCol)).as("fp"))
-          .withColumn(AttemptCol, lit(attempt))
-        if (hb > 0) {
-          newFps.repartition(hb, col("fp")).write.mode("append")
-            .insertInto(registerIndexTable(spark, path, "fps", hb, Seq("fp")))
-        } else {
-          newFps.write.mode("append").parquet(fpsPath.toString)
-        }
-      }
-      // COMMIT: atomic marker publish (data first, marker last) — see
-      // [[IndexLifecycle.commitMarker]]
-      IndexLifecycle.commitMarker(fs, root, id, attempt)
-      // incremental tally: committed n_docs + this batch's observed
-      // count — never a scan of the index's own data
-      writeIndexMeta(spark, root.toString, numPerm, bands, shingleK,
-        meta.getAs[Long]("n_docs") + nNew, nb, hb)
+      // sidecar can never drift from the band/hash rows
+      if (batch.exists("fps"))
+        batch.append("fps", accepted.select(xxhash64(col(textCol)).as("fp")))
     }
-  }
 
   /** The columns of an LSH index's one-row `meta`, in write order. */
   private val MetaCols =
     Seq("num_perm", "bands", "shingle_k", "n_docs", "band_buckets", "hash_buckets")
 
-  private def writeIndexMeta(spark: org.apache.spark.sql.SparkSession,
-                             path: String, numPerm: Int, bands: Int,
-                             shingleK: Int, nDocs: Long, nb: Int,
-                             hb: Int): Unit = {
-    import spark.implicits._
-    Seq((numPerm, bands, shingleK, nDocs, nb, hb)).toDF(MetaCols: _*)
-      .write.mode("overwrite").parquet(s"$path/meta")
-  }
+  /** Bucket columns of the LSH index's data dirs. */
+  private val BucketCols =
+    Map("bands" -> Seq("band", "bucket"), "hashes" -> Seq("ref_id"), "fps" -> Seq("fp"))
 
-  /** The index's meta row; one missing any of [[MetaCols]] fails with
-    * [[UnsupportedIndexLayoutException]].
-    */
-  private def readIndexMeta(spark: SparkSession, root: HPath): org.apache.spark.sql.Row = {
-    val meta = IndexLifecycle.readMeta(spark, new HPath(root, "meta").toString)
-    IndexLifecycle.requireLayout(root, "meta", meta.schema.fieldNames.toSeq, MetaCols: _*)
-    meta
-  }
+  /** LSH data dir `name` bucketed `n` ways (plain for `n = 0`). */
+  private def lshDir(name: String, n: Int): IndexLifecycle.DataDir =
+    IndexLifecycle.DataDir(name, IndexLifecycle.bucketedOr(n, BucketCols(name): _*))
 
-  /** Index-open repair: restore either data dir from a compact that
-    * crashed inside its swap window (see [[IndexLifecycle.recoverSwap]]).
+  /** The persisted LSH index: `bands`, `hashes` and the optional `fps`
+    * sidecar; `bands` buckets per the meta's `band_buckets`, the other
+    * two per `hash_buckets`. `n_docs` counts the hashes rows (one per
+    * doc).
     */
-  private def recoverIndexDirs(fs: FileSystem, root: HPath): Unit = {
-    IndexLifecycle.recoverSwap(fs, new HPath(root, "bands"))
-    IndexLifecycle.recoverSwap(fs, new HPath(root, "hashes"))
-    IndexLifecycle.recoverSwap(fs, new HPath(root, "fps"))
+  private object LshIndex extends IndexLifecycle.Store(Seq("bands", "hashes", "fps"),
+      MetaCols, Some(("n_docs", "hashes"))) {
+    def dir(meta: org.apache.spark.sql.Row, name: String): IndexLifecycle.DataDir =
+      lshDir(name, meta.getAs[Int](if (name == "bands") "band_buckets" else "hash_buckets"))
   }
 
   // ---- fingerprint sidecar (hash-at-ingest exact stage) ---------------
@@ -793,22 +669,13 @@ object Dedup {
                            path: String): Unit = {
     val spark = ref.sparkSession
     val (fs, root) = IndexLifecycle.fsFor(spark, path)
-    val meta = readIndexMeta(spark, root)
-    val hb = meta.getAs[Int]("hash_buckets")
-    val fpsPath = new HPath(root, "fps")
+    val meta = IndexLifecycle.readMeta(spark, root, MetaCols: _*)
     val data = ref.select(xxhash64(col(textCol)).as("fp"))
       .withColumn(AttemptCol, lit(null).cast("string"))
     IndexLifecycle.withWriterLock(fs, root, "lshWriteFingerprints",
         IndexLifecycle.lockTtlMs(spark)) {
-      if (hb > 0) {
-        writeBucketed(data, spark, path, "fps", fpsPath, "_build", hb,
-          Seq("fp"), fs)
-      } else {
-        data.write.mode("overwrite").parquet(fpsPath.toString)
-      }
-      registerLock.synchronized {
-        spark.sql(s"DROP TABLE IF EXISTS ${indexTableName(spark, path, "fps")}"): Unit
-      }
+      IndexLifecycle.writeDir(spark, fs, root, LshIndex.dir(meta, "fps"), data)
+      IndexLifecycle.dropRegistrations(spark, root, Seq("fps"))
     }
   }
 
@@ -820,18 +687,11 @@ object Dedup {
     */
   def lshFingerprints(spark: SparkSession, path: String,
                       excludeAppendIds: Seq[String] = Nil): DataFrame = {
-    val (fs, root) = IndexLifecycle.fsFor(spark, path)
-    val fpsPath = new HPath(root, "fps")
-    IndexLifecycle.recoverSwap(fs, fpsPath)
-    require(fs.exists(fpsPath),
+    val index = IndexLifecycle.open(spark, path, LshIndex, excludeAppendIds)
+    require(index.exists("fps"),
       s"index at $path has no fingerprint sidecar — run " +
         "lshWriteFingerprints(lake, textCol, path) once after the build")
-    val meta = readIndexMeta(spark, root)
-    val hb = meta.getAs[Int]("hash_buckets")
-    IndexLifecycle.visibleRows(
-      if (hb > 0) spark.table(registerIndexTable(spark, path, "fps", hb, Seq("fp")))
-      else IndexLifecycle.readDir(spark, fpsPath.toString),
-      IndexLifecycle.committedAttempts(fs, root, excludeAppendIds), root)
+    index.visible("fps")
   }
 
   /** [[dedupAgainstIndex]] for a batch CARRYING its stored fingerprint
@@ -878,7 +738,7 @@ object Dedup {
     */
   def lshIndexCommittedDocs(spark: SparkSession, path: String): Long = {
     val (_, root) = IndexLifecycle.fsFor(spark, path)
-    readIndexMeta(spark, root).getAs[Long]("n_docs")
+    IndexLifecycle.readMeta(spark, root, MetaCols: _*).getAs[Long]("n_docs")
   }
 
   /** Committed (visible) document count of a persisted index — counts
@@ -888,251 +748,26 @@ object Dedup {
     * per-run bookkeeping read (that is [[lshIndexCommittedDocs]]).
     */
   def lshIndexDocCount(spark: SparkSession, path: String): Long = {
-    val (fs, root) = IndexLifecycle.fsFor(spark, path)
-    recoverIndexDirs(fs, root)
-    IndexLifecycle.visibleRows(IndexLifecycle.readDir(spark, new HPath(root, "hashes").toString),
-      IndexLifecycle.committedAttempts(fs, root), root).count()
+    val index = IndexLifecycle.open(spark, path, LshIndex)
+    IndexLifecycle.visibleRows(
+      IndexLifecycle.readDir(spark, index.path("hashes").toString),
+      index.committed, index.root).count()
   }
 
   /** Compact a persisted LSH index IN PLACE: fold every committed append
     * into the base layout, drop invisible rows left by crashed append
     * attempts, fold the commit markers to empty idempotency tombstones
-    * (a folded appendId still no-ops on retry), and refresh the meta
-    * tally.
+    * and recount the meta tally — the shared [[IndexLifecycle.compact]]
+    * sequence over `bands`, `hashes` and the `fps` sidecar when present.
     * Appends accumulate one file per write (per bucket, for a bucketed
     * index — a year of daily ingest is 365 files/bucket, the classic
     * small-file scan-task explosion); compaction restores one file per
     * bucket (spec-pinned ≤ nb band files) while preserving the bucketed
     * layout, bucket hash family, and meta parameters.
-    *
-    * The visible row set is identical before and after (spec-pinned
-    * pair-for-pair), so query results cannot change. Offline maintenance
-    * op — one writer (lease-enforced, [[IndexLifecycle.withWriterLock]]),
-    * no concurrent readers. Crash ordering: the
-    * rewrites land in `.compact` side dirs first (originals untouched);
-    * each dir then swaps in via two renames (live → `.old`, compact →
-    * live); markers are folded only after BOTH swaps, so a crash
-    * between them leaves a consistent index (the un-swapped side still
-    * resolves its appends through the markers, the swapped side already
-    * folded them to base rows — same logical set). A crash INSIDE a
-    * swap window is recoverable from the `.old` dir it leaves behind.
-    * On stores without atomic rename (S3-style), the swap is
-    * copy-backed — the same offline-op caveat applies as for any
-    * rename-based layout maintenance there.
     */
   def lshCompact(spark: SparkSession, path: String,
-                 keepAppendIds: Seq[String] = Nil): Unit = {
-    val (fs, root) = IndexLifecycle.fsFor(spark, path)
-    IndexLifecycle.withWriterLock(fs, root, "lshCompact",
-        IndexLifecycle.lockTtlMs(spark)) {
-      recoverIndexDirs(fs, root)
-      val meta = readIndexMeta(spark, root)
-      val numPerm = meta.getAs[Int]("num_perm")
-      val bands = meta.getAs[Int]("bands")
-      val shingleK = meta.getAs[Int]("shingle_k")
-      val nb = meta.getAs[Int]("band_buckets")
-      val hb = meta.getAs[Int]("hash_buckets")
-      // appends named in keepAppendIds are carried through UNFOLDED —
-      // rows keep their attempt tag, markers their payload — so the
-      // streaming rewrite loops' replay-determinism hook
-      // (excludeAppendIds of a batch whose marker committed before the
-      // stream's checkpoint commit) survives a compact; see
-      // [[UnitStore.compact]] for the full rationale
-      val committed = IndexLifecycle.committedAttempts(fs, root, keepAppendIds)
-      val keptAttempts = IndexLifecycle.committedAttemptsOf(fs, root, keepAppendIds)
-      def visible(sub: String): DataFrame = {
-        val raw = IndexLifecycle.readDir(spark, new HPath(root, sub).toString)
-        val base = IndexLifecycle.visibleRows(raw, committed, root)
-          .withColumn(AttemptCol, lit(null).cast("string"))
-        if (keptAttempts.isEmpty) base
-        else base.unionByName(
-          raw.filter(col(AttemptCol).isin(keptAttempts: _*)))
-      }
-      val bandsLive = new HPath(root, "bands")
-      val bandsNew = new HPath(root, "bands.compact")
-      val hashesLive = new HPath(root, "hashes")
-      val hashesNew = new HPath(root, "hashes.compact")
-      fs.delete(bandsNew, true): Unit
-      fs.delete(hashesNew, true): Unit
-      val bandData = visible("bands").select("ref_id", "band", "bucket", AttemptCol)
-      if (nb > 0) {
-        writeBucketed(bandData, spark, path, "bands", bandsNew, "_compact",
-          nb, Seq("band", "bucket"), fs)
-      } else {
-        // unbucketed: the rewrite's input partitioning bin-packs the small
-        // append files (spark.sql.files.maxPartitionBytes), so the output
-        // lands as few right-sized files without an extra shuffle
-        bandData.write.parquet(bandsNew.toString)
-      }
-      val hashData = visible("hashes").select("ref_id", "sh", AttemptCol)
-      if (hb > 0) {
-        writeBucketed(hashData, spark, path, "hashes", hashesNew, "_compact",
-          hb, Seq("ref_id"), fs)
-      } else {
-        hashData.write.parquet(hashesNew.toString)
-      }
-      // the fingerprint sidecar, when present, folds with the rest —
-      // same visibility filter, same swap ordering
-      val fpsLive = new HPath(root, "fps")
-      val fpsNew = new HPath(root, "fps.compact")
-      val hasFps = fs.exists(fpsLive)
-      if (hasFps) {
-        fs.delete(fpsNew, true): Unit
-        val fpData = visible("fps").select("fp", AttemptCol)
-        if (hb > 0) {
-          writeBucketed(fpData, spark, path, "fps", fpsNew, "_compact",
-            hb, Seq("fp"), fs)
-        } else {
-          fpData.write.parquet(fpsNew.toString)
-        }
-      }
-      IndexLifecycle.swapDir(fs, bandsLive, bandsNew)
-      IndexLifecycle.swapDir(fs, hashesLive, hashesNew)
-      if (hasFps) IndexLifecycle.swapDir(fs, fpsLive, fpsNew)
-      // FOLD the commit markers to empty tombstones instead of deleting
-      // them: an appendId marker is also the idempotency record, and an
-      // at-least-once driver can replay a batch whose append committed
-      // BEFORE this compact (crash between the compact and the stream's
-      // checkpoint commit) — deleting its marker would let the replay
-      // re-append the already-folded rows. An empty marker means
-      // "committed and folded": [[lshAppend]]'s exists-check still
-      // no-ops on it, while [[IndexLifecycle.committedAttempts]] skips its (gone)
-      // attempt id. A year of daily ingest retains 365 empty files —
-      // the append log, negligible next to the data it describes.
-      IndexLifecycle.foldMarkers(fs, root, keep = keepAppendIds.toSet)
-      // the standing catalog registrations' cached file listings are stale
-      // after the swap — drop them; the next bucketed read re-registers
-      registerLock.synchronized {
-        spark.sql(s"DROP TABLE IF EXISTS ${bandsTableName(spark, path)}")
-        spark.sql(s"DROP TABLE IF EXISTS ${hashesTableName(spark, path)}")
-        spark.sql(s"DROP TABLE IF EXISTS ${indexTableName(spark, path, "fps")}"): Unit
-      }
-      val nDocs = IndexLifecycle.readDir(spark, hashesLive.toString).count()
-      writeIndexMeta(spark, root.toString, numPerm, bands, shingleK, nDocs,
-        nb, hb)
-    }
-  }
-
-  /** Deterministic catalog name for an index's bucketed data table —
-    * derived from the fully-qualified URI so re-registration is
-    * idempotent per index, two indexes never collide in one session's
-    * catalog, and the same index addressed through different spellings
-    * of one URI resolves to one name.
-    */
-  private[operators] def indexTableName(spark: SparkSession, path: String,
-                             sub: String): String = {
-    val q = IndexLifecycle.fsFor(spark, path)._2.toString
-    val h = java.lang.Integer.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(q))
-    s"graft_lsh_${sub}_$h"
-  }
-  private def bandsTableName(spark: SparkSession, path: String): String =
-    indexTableName(spark, path, "bands")
-  private def hashesTableName(spark: SparkSession, path: String): String =
-    indexTableName(spark, path, "hashes")
-
-  private[operators] val registerLock = new Object
-
-  /** Create an external bucketed parquet catalog entry with `schema`
-    * VERBATIM, through the [[org.apache.spark.sql.catalyst.catalog.SessionCatalog]]
-    * API (DDL round-trips and CTAS both normalize the schema on the way
-    * through — `asNullable`, type-string re-parse).
-    */
-  private def createCatalogEntry(spark: SparkSession, name: String,
-                                 loc: java.net.URI,
-                                 schema: org.apache.spark.sql.types.StructType,
-                                 nb: Int, bucketCols: Seq[String]): Unit = {
-    import org.apache.spark.sql.catalyst.catalog._
-    spark.sessionState.catalog.createTable(
-      CatalogTable(
-        identifier = org.apache.spark.sql.catalyst.TableIdentifier(name),
-        tableType = CatalogTableType.EXTERNAL,
-        storage = CatalogStorageFormat.empty.copy(locationUri = Some(loc)),
-        schema = schema,
-        provider = Some("parquet"),
-        bucketSpec = Some(BucketSpec(nb, bucketCols, bucketCols))),
-      ignoreIfExists = false)
-  }
-
-  /** Bucketed write of an index data dir at `dest` via create-then-insert
-    * on a throwaway catalog entry (see [[createCatalogEntry]] for why not
-    * CTAS): rows land pre-partitioned on the bucket columns — the same
-    * pmod(hash) the bucketed writer assigns files by, so each task holds
-    * exactly one bucket's rows (nb files, not tasks × nb) — and sorted
-    * within buckets per the table's sort spec.
-    */
-  private[operators] def writeBucketed(df: DataFrame, spark: SparkSession, path: String,
-                            sub: String, dest: HPath, suffix: String,
-                            nb: Int, bucketCols: Seq[String],
-                            fs: FileSystem): Unit = {
-    val tmp = indexTableName(spark, path, sub) + suffix
-    spark.sql(s"DROP TABLE IF EXISTS $tmp")
-    fs.delete(dest, true): Unit
-    createCatalogEntry(spark, tmp, dest.toUri, df.schema, nb, bucketCols)
-    // insertInto resolves POSITIONALLY — safe because the entry's schema
-    // is df's own
-    df.repartition(nb, bucketCols.map(col): _*).write.insertInto(tmp)
-    spark.sql(s"DROP TABLE $tmp")
-  }
-
-  /** Ensure the session catalog carries the external bucketed table for
-    * one of an index's data dirs, REUSING a live registration when its
-    * location, bucket spec, AND schema already match — the common case:
-    * a streaming loop queries the same index every micro-batch, and the
-    * old DROP+CREATE-per-call both churned the catalog and let two
-    * concurrent readers race (one's DROP between the other's
-    * registration and its scan planning). The schema is re-derived from
-    * the dir's parquet footers on every call (one driver-side footer
-    * read — the price the old per-call CREATE paid too), so an index
-    * rewritten out-of-band by another process — same bucket count,
-    * different column types, e.g. a rebuild over STRING ids replacing
-    * one over BIGINT ids — invalidates the cached entry instead of being
-    * scanned through a stale schema. Re-creates on absence or any mismatch
-    * (rebuild and compact also drop the entry themselves), and the
-    * check-then-create is synchronized JVM-wide, which covers every
-    * session of this driver (the table catalog is shared state).
-    *
-    * Registration goes through the [[org.apache.spark.sql.catalyst.catalog.SessionCatalog]]
-    * API with the parquet-derived [[org.apache.spark.sql.types.StructType]]
-    * verbatim — a DDL `CREATE TABLE` round-trip would re-parse the
-    * schema through its type-string grammar instead of storing what the
-    * footers actually say.
-    */
-  private[operators] def registerIndexTable(spark: SparkSession, path: String,
-                                 sub: String, nb: Int,
-                                 bucketCols: Seq[String]): String = {
-    val name = indexTableName(spark, path, sub)
-    val loc = new HPath(IndexLifecycle.fsFor(spark, path)._2, sub)
-    // the on-disk schema derivation (a directory listing + one footer
-    // read) happens OUTSIDE the lock: it is the slow part on object
-    // stores, and serializing it JVM-wide would make every concurrent
-    // reader queue behind every other's listing; the lock only needs to
-    // cover the check-then-create on the shared catalog
-    val onDisk = IndexLifecycle.readDir(spark, loc.toString).schema
-    registerLock.synchronized {
-      def sig(s: org.apache.spark.sql.types.StructType) =
-        s.fields.map(f => (f.name, f.dataType)).toSeq
-      val live = spark.catalog.tableExists(name) && {
-        val t = spark.sessionState.catalog.getTableMetadata(
-          org.apache.spark.sql.catalyst.TableIdentifier(name))
-        t.storage.locationUri.exists(u => new HPath(u).toString == loc.toString) &&
-          t.bucketSpec.exists(b => b.numBuckets == nb &&
-            b.bucketColumnNames == bucketCols) &&
-          sig(t.schema) == sig(onDisk)
-      }
-      if (!live) {
-        spark.sql(s"DROP TABLE IF EXISTS $name")
-        createCatalogEntry(spark, name, loc.toUri, onDisk, nb, bucketCols)
-      }
-      name
-    }
-  }
-  private def registerBandsTable(spark: SparkSession, path: String,
-                                 nb: Int): String =
-    registerIndexTable(spark, path, "bands", nb, Seq("band", "bucket"))
-  private def registerHashesTable(spark: SparkSession, path: String,
-                                  hb: Int): String =
-    registerIndexTable(spark, path, "hashes", hb, Seq("ref_id"))
+                 keepAppendIds: Seq[String] = Nil): Unit =
+    IndexLifecycle.compact(spark, path, LshIndex, "lshCompact", keepAppendIds)
 
   /** Cross-corpus near-dup pairs of a fresh batch against a PERSISTED
     * index ([[lshBuild]]) — same output contract as
@@ -1167,27 +802,21 @@ object Dedup {
                            idCol: String, threshold: Double = 0.8,
                            broadcastMaxBandRows: Long = 1000000L,
                            excludeAppendIds: Seq[String] = Nil): DataFrame = {
-    val spark = df.sparkSession
-    val (fs, root) = IndexLifecycle.fsFor(spark, indexPath)
-    recoverIndexDirs(fs, root)
-    val meta = readIndexMeta(spark, root)
-    val numPerm = meta.getAs[Int]("num_perm")
-    val bands = meta.getAs[Int]("bands")
-    val shingleK = meta.getAs[Int]("shingle_k")
-    val nb = meta.getAs[Int]("band_buckets")
     // appends are visible only through their commit markers (see
-    // [[lshAppend]]): resolve the committed set once (driver-side
-    // listing) and filter both index scans through it
-    val committed = IndexLifecycle.committedAttempts(fs, root, excludeAppendIds)
+    // [[lshAppend]]): the committed set resolves once (driver-side
+    // listing) and filters both index scans
+    val index = IndexLifecycle.open(df.sparkSession, indexPath, LshIndex,
+      excludeAppendIds)
+    val numPerm = index.meta.getAs[Int]("num_perm")
+    val bands = index.meta.getAs[Int]("bands")
+    val shingleK = index.meta.getAs[Int]("shingle_k")
     val base = prepTexts(df, textCol, idCol)
     val batchBands = bandRows(base, numPerm, bands, shingleK)
     // a bucketed index ([[lshBuild]] bandBuckets) reads through its
     // (cached) catalog table so the scan carries the bucket spec: in the
     // sort-merge regime the lake side then needs NO exchange (its
     // HashPartitioning on (band, bucket) already satisfies the join)
-    val refBands = IndexLifecycle.visibleRows(
-      if (nb > 0) spark.table(registerBandsTable(spark, indexPath, nb))
-      else IndexLifecycle.readDir(spark, new HPath(root, "bands").toString), committed, root)
+    val refBands = index.visible("bands")
     // one cheap count job over the batch (no UDFs) — bands per doc is
     // exactly `bands` for signed docs, so docs × bands bounds the band
     // rows without evaluating the signature
@@ -1205,11 +834,7 @@ object Dedup {
     // the index's widest data — then satisfies the join distribution
     // straight off the scan; in the huge-batch regime NO lake bytes
     // move in either stage of this query (plan-pinned)
-    val hbuckets = meta.getAs[Int]("hash_buckets")
-    val hb = IndexLifecycle.visibleRows(
-        if (hbuckets > 0) spark.table(registerHashesTable(spark, indexPath, hbuckets))
-        else IndexLifecycle.readDir(spark, new HPath(root, "hashes").toString), committed, root)
-      .select(col("ref_id"), col("sh").as("__sh_b"))
+    val hb = index.visible("hashes").select(col("ref_id"), col("sh").as("__sh_b"))
     candidates.join(ha, "id").join(hb, "ref_id")
       .select(col("id"), col("ref_id"),
         graft.functions.JaccardExpressions.sortedJaccard(

@@ -9,7 +9,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructType}
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructField, StructType}
 
 /** A persisted index whose on-disk layout this code does not read: data
   * rows without the `append_attempt` column, or a `meta` row missing one
@@ -21,24 +21,36 @@ final class UnsupportedIndexLayoutException(root: HPath, detail: String)
   extends IllegalStateException(
     s"index at $root has an unsupported on-disk layout ($detail) — rebuild it")
 
-/** Shared commit-marker machinery for PERSISTED index layouts —
-  * [[Dedup]]'s LSH index and [[SimilaritySearch]]'s IVF index run the
-  * same day-2 lifecycle (build once, append accepted batches, compact
-  * periodically), so they share one durability protocol:
+/** The one store core of the PERSISTED index layouts — [[Dedup]]'s LSH
+  * index, [[UnitStore]]'s seen-unit store and [[SimilaritySearch]]'s IVF
+  * index run the same day-2 lifecycle (build once, append accepted
+  * batches, compact periodically), so they share one durability protocol
+  * and one implementation of it. A store only declares what its dirs
+  * hold ([[Store]]: data dir names, each dir's [[Layout]], its meta
+  * columns); [[append]] and [[compact]] run the sequences:
   *
-  *  - appends write their data rows tagged with a fresh attempt id,
-  *    then publish them with ONE atomic marker rename under
-  *    `_commits/<appendId>` — data first, marker last;
+  *  - an append validates its appendId, no-ops on a committed marker
+  *    (BEFORE the lease, so a restarted at-least-once driver replaying
+  *    finished batches is never refused), takes the single-writer lease,
+  *    repairs every dir's swap window, reads the meta and probes the
+  *    layout of every present dir, writes its rows tagged with a fresh
+  *    attempt id, then publishes them with ONE atomic marker rename under
+  *    `_commits/<appendId>` — data first, marker last — and rewrites the
+  *    meta tally incrementally (this batch's count, observed on its
+  *    write);
   *  - readers resolve visibility through the markers
   *    ([[visibleRows]]), so a crashed append is invisible and a
   *    retried `appendId` is a no-op (at-least-once drivers like
   *    Structured Streaming's `foreachBatch` become idempotent by
   *    keying the id on the batch id);
-  *  - compactions fold committed rows to base (null attempt), drop
-  *    crashed-attempt garbage, and truncate markers to empty
-  *    idempotency TOMBSTONES (a folded appendId still no-ops — a
+  *  - a compact takes the lease and repairs, folds every present dir's
+  *    committed rows to base (null attempt) into a `.compact` side dir —
+  *    all side dirs before the first swap — drops crashed-attempt
+  *    garbage, swaps each dir in ([[swapDir]]), truncates markers to
+  *    empty idempotency TOMBSTONES (a folded appendId still no-ops — a
   *    replay of a batch committed before the compact must not
-  *    re-append).
+  *    re-append), drops the stale catalog registrations and recounts
+  *    the meta tally.
   *
   * All layout I/O goes through the Hadoop FileSystem API, so indexes
   * work on any supported store (`file:`, `hdfs:`, `s3a:`, the repo's
@@ -46,8 +58,8 @@ final class UnsupportedIndexLayoutException(root: HPath, detail: String)
   * metadata — never data-proportional work (see SCALE.md round 16).
   *
   * Bookkeeping reads run on the driver, not as Spark jobs: the one-row
-  * `meta` goes through [[readMeta]] and the LSH index's and unit
-  * store's data dirs through [[readDir]], each one parquet footer read.
+  * `meta` goes through [[readMeta]] and the unpartitioned data dirs
+  * through [[readDir]], each one parquet footer read.
   * A plain `spark.read.parquet(dir)` launches a schema-inference job
   * per call, and `head()` a second; an ingest loop paid both several
   * times per micro-batch.
@@ -114,18 +126,20 @@ private[graft] object IndexLifecycle {
     }
   }
 
-  /** The one row of an index's `meta` dir, read on the driver: no Spark
-    * job. Same values and (nullable) schema as
-    * `spark.read.parquet(dir).head()`; callers check its columns with
-    * [[requireLayout]]. Meta columns are INT or BIGINT; any other type
-    * is rejected.
+  /** The one row of the `meta` dir of the store at `root`, read on the
+    * driver: no Spark job. Same values and (nullable) schema as
+    * `spark.read.parquet(dir).head()`. A row lacking one of `required`
+    * fails with [[UnsupportedIndexLayoutException]]. Meta columns are INT
+    * or BIGINT; any other type is rejected.
     */
-  def readMeta(spark: SparkSession, dir: String): Row = {
+  def readMeta(spark: SparkSession, root: HPath, required: String*): Row = {
+    val dir = new HPath(root, "meta").toString
     val (fs, qualified) = fsFor(spark, dir)
     val files = dataFiles(fs, qualified)
     require(files.nonEmpty, s"no index meta at $dir")
     val schema = StructType(footerSchema(spark, files.head)
       .fields.map(_.copy(nullable = true)))
+    requireLayout(root, "meta", schema.fieldNames.toSeq, required: _*)
     def firstRow(f: HPath): Option[Group] =
       scala.util.Using.resource(ParquetReader.builder(new GroupReadSupport(), f)
         .withConf(spark.sessionState.newHadoopConf()).build())(r => Option(r.read()))
@@ -152,6 +166,25 @@ private[graft] object IndexLifecycle {
     write(df.observe(rows, count(lit(1)).as("n")))
     rows.get("n").asInstanceOf[Long]
   }
+
+  /** Overwrite the one-row `meta` of the store at `root` with `cols`
+    * (name -> Int or Long value), every column non-null: the schema a
+    * tuple's `toDF` writes.
+    */
+  def writeMeta(spark: SparkSession, root: HPath, cols: (String, Any)*): Unit = {
+    val schema = StructType(cols.map { case (c, v) =>
+      StructField(c, v match { case _: Long => LongType; case _ => IntegerType },
+        nullable = false)
+    })
+    spark.createDataFrame(
+        java.util.Collections.singletonList(Row.fromSeq(cols.map(_._2))), schema)
+      .write.mode("overwrite").parquet(new HPath(root, "meta").toString)
+  }
+
+  /** A small file's content as a trimmed UTF-8 string. */
+  private def readString(fs: FileSystem, p: HPath): String =
+    scala.util.Using.resource(fs.open(p))(in =>
+      scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim)
 
   def markerPath(root: HPath, id: String): HPath =
     new HPath(new HPath(root, "_commits"), id)
@@ -180,11 +213,7 @@ private[graft] object IndexLifecycle {
     else fs.listStatus(dir).toSeq
       .filter(s => s.isFile && !s.getPath.getName.startsWith(".") &&
         !excludeAppendIds.contains(s.getPath.getName))
-      .flatMap { st =>
-        val s = scala.util.Using.resource(fs.open(st.getPath))(in =>
-          scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim)
-        if (s.nonEmpty) Some(s) else None
-      }
+      .map(st => readString(fs, st.getPath)).filter(_.nonEmpty)
   }
 
   /** Throw [[UnsupportedIndexLayoutException]] for the index at `root`
@@ -246,15 +275,8 @@ private[graft] object IndexLifecycle {
   def committedAttemptsOf(fs: FileSystem, root: HPath,
                           ids: Seq[String]): Seq[String] = {
     if (ids.isEmpty) return Nil
-    ids.flatMap { id =>
-      val p = markerPath(root, id)
-      if (!fs.exists(p)) None
-      else {
-        val s = scala.util.Using.resource(fs.open(p))(in =>
-          scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim)
-        if (s.nonEmpty) Some(s) else None
-      }
-    }
+    ids.map(markerPath(root, _)).filter(fs.exists)
+      .map(readString(fs, _)).filter(_.nonEmpty)
   }
 
   /** Truncate every marker to an empty tombstone (post-compact): the
@@ -326,10 +348,8 @@ private[graft] object IndexLifecycle {
         case _: java.io.IOException if fs.exists(lock) => false
       }
     def holderOf(): String =
-      try {
-        scala.util.Using.resource(fs.open(lock))(in =>
-          scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim)
-      } catch { case _: java.io.IOException => "<unknown>" }
+      try readString(fs, lock)
+      catch { case _: java.io.IOException => "<unknown>" }
     if (!tryAcquire()) {
       val st = try Some(fs.getFileStatus(lock)) catch {
         case _: java.io.FileNotFoundException => None
@@ -411,9 +431,7 @@ private[graft] object IndexLifecycle {
       case _: java.io.FileNotFoundException => return false
     }
     if (System.currentTimeMillis() - st.getModificationTime > ttlMs) return false
-    val holder = scala.util.Using.resource(fs.open(lock))(in =>
-      scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim)
-    if (holder != owner) return false
+    if (readString(fs, lock) != owner) return false
     scala.util.Using.resource(fs.create(lock, true)) { out =>
       out.write(owner.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     }
@@ -454,5 +472,349 @@ private[graft] object IndexLifecycle {
       throw new java.io.IOException(
         s"index recovery: found interrupted compact ($old exists, $live " +
           s"missing) but could not restore it — move $old back to $live manually")
+  }
+
+  // ---- the store core: data dirs, catalog registrations, sequences ---
+
+  /** How a store lays out the rows of one data dir. */
+  sealed trait Layout
+  /** Plain parquet files. */
+  case object Plain extends Layout
+  /** Spark's bucketed layout, `n` buckets on (and sorted by) `cols`. It
+    * is a catalog-table property, not a parquet one, so the dir is
+    * written, appended and read through a catalog entry.
+    */
+  final case class Bucketed(n: Int, cols: Seq[String]) extends Layout
+  /** Parquet partitioned by `col`, one directory per value. */
+  final case class Partitioned(col: String) extends Layout
+
+  /** Bucketed on `cols` when a meta row's bucket count `n` is positive,
+    * else plain.
+    */
+  def bucketedOr(n: Int, cols: String*): Layout =
+    if (n > 0) Bucketed(n, cols) else Plain
+
+  /** One data dir of a store: its name under the root and its layout. */
+  final case class DataDir(name: String, layout: Layout)
+
+  /** What a persisted store declares; [[open]], [[append]] and
+    * [[compact]] do the rest.
+    *
+    * @param dirNames its attempt-tagged data dirs; a dir may be absent
+    *                 (the LSH index's optional `fps` sidecar)
+    * @param metaCols the columns its one-row `meta` must hold; empty for
+    *                 a store that keeps no meta
+    * @param tally    a meta column that counts the rows of a data dir,
+    *                 and that dir: an append adds the count observed on
+    *                 its write there, a compact recounts
+    */
+  abstract class Store(val dirNames: Seq[String], val metaCols: Seq[String] = Nil,
+                       val tally: Option[(String, String)] = None) {
+    /** Dir `name` as `meta` (null for a store without meta) lays it out. */
+    def dir(meta: Row, name: String): DataDir
+    /** A compact's fold of a dir's visible rows; identity by default. */
+    def fold(visible: DataFrame): DataFrame = visible
+  }
+
+  /** A store opened at `root`, its swap windows repaired. The meta row
+    * and the committed attempts resolve on first use.
+    */
+  final class Open private[IndexLifecycle] (val spark: SparkSession,
+      val fs: FileSystem, val root: HPath, store: Store,
+      excludeAppendIds: Seq[String]) {
+    lazy val meta: Row =
+      if (store.metaCols.isEmpty) null else readMeta(spark, root, store.metaCols: _*)
+    /** Attempt ids of committed appends, minus `excludeAppendIds`. */
+    lazy val committed: Seq[String] = committedAttempts(fs, root, excludeAppendIds)
+    def path(name: String): HPath = new HPath(root, name)
+    def exists(name: String): Boolean = fs.exists(path(name))
+    def dir(name: String): DataDir = store.dir(meta, name)
+
+    /** The rows of dir `name` its commit markers make visible. A bucketed
+      * dir reads through its catalog registration, so the scan carries
+      * the bucket spec: a join on the bucket columns needs no exchange on
+      * this side.
+      */
+    def visible(name: String): DataFrame = visibleRows(dir(name).layout match {
+      case Bucketed(n, cols) => spark.table(registerIndexTable(spark, root, name, n, cols))
+      case _ => readDir(spark, path(name).toString)
+    }, committed, root)
+  }
+
+  /** Open the store at `path`: repair the swap window of every data dir
+    * ([[recoverSwap]]). `excludeAppendIds` hides the named committed
+    * appends from [[Open.visible]] (see [[committedAttempts]]).
+    */
+  def open(spark: SparkSession, path: String, store: Store,
+           excludeAppendIds: Seq[String] = Nil): Open = {
+    val (fs, root) = fsFor(spark, path)
+    opened(spark, fs, root, store, excludeAppendIds)
+  }
+
+  private def opened(spark: SparkSession, fs: FileSystem, root: HPath,
+                     store: Store, excludeAppendIds: Seq[String]): Open = {
+    store.dirNames.foreach(d => recoverSwap(fs, new HPath(root, d)))
+    new Open(spark, fs, root, store, excludeAppendIds)
+  }
+
+  /** What [[append]] hands a store's per-batch writes: the opened store,
+    * meta included, and the batch's fresh attempt id.
+    */
+  final class Batch private[IndexLifecycle] (s: Open, val attempt: String,
+                                             tallyDir: Option[String]) {
+    private[IndexLifecycle] var tallied = 0L
+    def meta: Row = s.meta
+    def root: HPath = s.root
+    def exists(name: String): Boolean = s.exists(name)
+
+    /** Append `rows` to dir `name` in its layout, tagged with this
+      * batch's attempt id. A bucketed dir is appended through its catalog
+      * registration: the bucketed writer hashes the bucket columns with
+      * the build's family, so the files land in the right buckets, one
+      * more per bucket until the next compact.
+      */
+    def append(name: String, rows: DataFrame): Unit = {
+      def write(df: DataFrame): Unit = s.dir(name).layout match {
+        case Plain => df.write.mode("append").parquet(s.path(name).toString)
+        case Bucketed(n, cols) =>
+          df.repartition(n, cols.map(col): _*).write.mode("append")
+            .insertInto(registerIndexTable(s.spark, s.root, name, n, cols))
+        case Partitioned(c) =>
+          df.write.mode("append").partitionBy(c).parquet(s.path(name).toString)
+      }
+      val tagged = rows.withColumn(AttemptCol, lit(attempt))
+      if (tallyDir.contains(name)) tallied += countedWrite(tagged)(write)
+      else write(tagged)
+    }
+  }
+
+  /** Overwrite dir `d` of the store at `root` — or, with a suffix, its
+    * side dir `<name><suffix>` — with `rows` in `d`'s layout.
+    */
+  def writeDir(spark: SparkSession, fs: FileSystem, root: HPath, d: DataDir,
+               rows: DataFrame, suffix: String = ""): Unit = {
+    val dest = new HPath(root, d.name + suffix)
+    d.layout match {
+      case Plain => rows.write.mode("overwrite").parquet(dest.toString)
+      case Bucketed(n, cols) =>
+        writeBucketed(spark, fs, root, d.name, rows, dest, n, cols,
+          if (suffix.isEmpty) "_build" else "_compact")
+      case Partitioned(c) =>
+        rows.write.mode("overwrite").partitionBy(c).parquet(dest.toString)
+    }
+  }
+
+  /** Rewrite `meta` with its tally column `c` set to `n`. */
+  private def writeTally(spark: SparkSession, root: HPath, meta: Row,
+                         c: String, n: Long): Unit =
+    writeMeta(spark, root,
+      meta.schema.fieldNames.toSeq.zip(meta.toSeq.updated(meta.fieldIndex(c), n)): _*)
+
+  /** The one append sequence; the object doc gives its order. `write`
+    * appends the batch's rows through [[Batch.append]]; `op` names the
+    * operation in lease errors. With `appendId = None` a random id is
+    * used: still all-or-nothing, but each completed call is a distinct
+    * append — callers that may retry MUST pass a stable id.
+    */
+  def append(spark: SparkSession, path: String, store: Store, op: String,
+             appendId: Option[String])(write: Batch => Unit): Unit = {
+    val (fs, root) = fsFor(spark, path)
+    val id = appendId.getOrElse(java.util.UUID.randomUUID().toString)
+    validateAppendId(id)
+    if (fs.exists(markerPath(root, id)))
+      return // already committed — idempotent no-op, before the lease
+    withWriterLock(fs, root, op, lockTtlMs(spark)) {
+      // everything below runs UNDER the lease: swap-window recovery
+      // renames dirs and must never race a live compact's two-rename
+      // window, and the meta decides how the batch is written (hash
+      // family, quantizer, bucket counts) — values read before
+      // acquisition could be a concurrent rebuild's stale predecessors
+      val s = opened(spark, fs, root, store, Nil)
+      val meta = s.meta
+      // layout probe: refuse data rows without the attempt tag before
+      // anything is written
+      store.dirNames.filter(s.exists).foreach { d =>
+        requireLayout(root, d, readDir(spark, s.path(d).toString).columns.toSeq,
+          AttemptCol)
+      }
+      val batch = new Batch(s, java.util.UUID.randomUUID().toString,
+        store.tally.map(_._2))
+      write(batch)
+      commitMarker(fs, root, id, batch.attempt)
+      // incremental tally: the committed one plus this batch's observed
+      // count — never a scan of the store's own data. A crash between
+      // the marker and this rewrite leaves it one batch behind; queries
+      // are unaffected and the next compact recounts.
+      store.tally.foreach { case (c, _) =>
+        writeTally(spark, root, meta, c, meta.getAs[Long](c) + batch.tallied)
+      }
+    }
+  }
+
+  /** The one compact sequence; the object doc gives its order. The
+    * visible row set is identical before and after, so answers cannot
+    * change. Offline maintenance op: one writer, no concurrent readers.
+    * `keepAppendIds` names committed appends to carry through UNFOLDED —
+    * rows keep their attempt tag, markers their payload — so a later
+    * read excluding one of them still hides its rows (see
+    * [[UnitStore.compact]] for the streaming loops that need it).
+    *
+    * A crash before the first swap leaves the live dirs untouched; a
+    * crash between two swaps leaves a consistent store (the un-swapped
+    * dir still resolves its appends through the markers, the swapped one
+    * already holds them as base rows); a crash inside a swap is repaired
+    * from the `.old` dir at the next open. On stores without atomic
+    * rename (S3-style) the swap is copy-backed, with the same offline-op
+    * caveat as any rename-based layout maintenance there.
+    */
+  def compact(spark: SparkSession, path: String, store: Store, op: String,
+              keepAppendIds: Seq[String] = Nil): Unit = {
+    val (fs, root) = fsFor(spark, path)
+    withWriterLock(fs, root, op, lockTtlMs(spark)) {
+      val s = opened(spark, fs, root, store, keepAppendIds)
+      val meta = s.meta
+      val kept = committedAttemptsOf(fs, root, keepAppendIds)
+      val dirs = store.dirNames.filter(s.exists).map(s.dir)
+      // every dir's fold resolves (and its layout is checked) before the
+      // first write
+      val folded = dirs.map { d =>
+        val raw = readDir(spark, s.path(d.name).toString)
+        val base = store.fold(visibleRows(raw, s.committed, root))
+          .withColumn(AttemptCol, lit(null).cast("string"))
+        d -> (if (kept.isEmpty) base
+              else base.unionByName(raw.filter(col(AttemptCol).isin(kept: _*))))
+      }
+      // unbucketed dirs: the rewrite's input partitioning bin-packs the
+      // small append files (spark.sql.files.maxPartitionBytes), so they
+      // land as few right-sized files without an extra shuffle; bucketed
+      // dirs land as one file per bucket
+      folded.foreach { case (d, rows) => writeDir(spark, fs, root, d, rows, ".compact") }
+      dirs.foreach(d => swapDir(fs, s.path(d.name), s.path(d.name + ".compact")))
+      // FOLD the markers to empty tombstones instead of deleting them: a
+      // marker is also the idempotency record, and an at-least-once
+      // driver can replay a batch whose append committed BEFORE this
+      // compact — deleting its marker would let the replay re-append the
+      // folded rows. A year of daily ingest keeps 365 empty files.
+      foldMarkers(fs, root, keep = keepAppendIds.toSet)
+      dropRegistrations(spark, root, store.dirNames)
+      store.tally.foreach { case (c, d) =>
+        writeTally(spark, root, meta, c, readDir(spark, s.path(d).toString).count())
+      }
+    }
+  }
+
+  /** Deterministic catalog name for a store's bucketed data dir `sub` —
+    * derived from the fully-qualified root so re-registration is
+    * idempotent per store, two stores never collide in one session's
+    * catalog, and one store addressed through different spellings of
+    * its URI resolves to one name.
+    */
+  private def indexTableName(root: HPath, sub: String): String = {
+    val h = java.lang.Integer.toHexString(
+      scala.util.hashing.MurmurHash3.stringHash(root.toString))
+    s"graft_lsh_${sub}_$h"
+  }
+
+  private val registerLock = new Object
+
+  /** Drop the catalog registrations of the store's `dirs`: after a
+    * rebuild or a compact their schema, bucket count or cached file
+    * listing may be stale; the next bucketed read re-registers.
+    */
+  def dropRegistrations(spark: SparkSession, root: HPath, dirs: Seq[String]): Unit =
+    registerLock.synchronized {
+      dirs.foreach(d => spark.sql(s"DROP TABLE IF EXISTS ${indexTableName(root, d)}"): Unit)
+    }
+
+  /** Create an external bucketed parquet catalog entry with `schema`
+    * VERBATIM, through the [[org.apache.spark.sql.catalyst.catalog.SessionCatalog]]
+    * API (DDL round-trips and CTAS both normalize the schema on the way
+    * through — `asNullable`, type-string re-parse).
+    */
+  private def createCatalogEntry(spark: SparkSession, name: String,
+                                 loc: java.net.URI, schema: StructType,
+                                 nb: Int, bucketCols: Seq[String]): Unit = {
+    import org.apache.spark.sql.catalyst.catalog._
+    spark.sessionState.catalog.createTable(
+      CatalogTable(
+        identifier = org.apache.spark.sql.catalyst.TableIdentifier(name),
+        tableType = CatalogTableType.EXTERNAL,
+        storage = CatalogStorageFormat.empty.copy(locationUri = Some(loc)),
+        schema = schema,
+        provider = Some("parquet"),
+        bucketSpec = Some(BucketSpec(nb, bucketCols, bucketCols))),
+      ignoreIfExists = false)
+  }
+
+  /** Bucketed write of a data dir at `dest` via create-then-insert on a
+    * throwaway catalog entry (see [[createCatalogEntry]] for why not
+    * CTAS): files and bucket hashing survive the entry's drop, and reads
+    * re-register from meta. Rows land pre-partitioned on the bucket
+    * columns — the same pmod(hash) the bucketed writer assigns files by,
+    * so each task holds exactly one bucket's rows (nb files, not
+    * tasks × nb) — and sorted within buckets per the table's sort spec.
+    */
+  private def writeBucketed(spark: SparkSession, fs: FileSystem, root: HPath,
+                            sub: String, df: DataFrame, dest: HPath, nb: Int,
+                            bucketCols: Seq[String], suffix: String): Unit = {
+    val tmp = indexTableName(root, sub) + suffix
+    spark.sql(s"DROP TABLE IF EXISTS $tmp")
+    fs.delete(dest, true): Unit
+    createCatalogEntry(spark, tmp, dest.toUri, df.schema, nb, bucketCols)
+    // insertInto resolves POSITIONALLY — safe because the entry's schema
+    // is df's own
+    df.repartition(nb, bucketCols.map(col): _*).write.insertInto(tmp)
+    spark.sql(s"DROP TABLE $tmp")
+  }
+
+  /** Ensure the session catalog carries the external bucketed table for
+    * one of a store's data dirs, REUSING a live registration when its
+    * location, bucket spec, AND schema already match — the common case:
+    * a streaming loop queries the same store every micro-batch, and a
+    * DROP+CREATE per call both churned the catalog and let two
+    * concurrent readers race (one's DROP between the other's
+    * registration and its scan planning). The schema is re-derived from
+    * the dir's parquet footers on every call (one driver-side footer
+    * read), so a store rewritten out-of-band by another process — same
+    * bucket count, different column types, e.g. a rebuild over STRING
+    * ids replacing one over BIGINT ids — invalidates the cached entry
+    * instead of being scanned through a stale schema. Re-creates on
+    * absence or any mismatch (rebuild and compact also drop the entry
+    * themselves), and the check-then-create is synchronized JVM-wide,
+    * which covers every session of this driver (the table catalog is
+    * shared state).
+    *
+    * Registration goes through the [[org.apache.spark.sql.catalyst.catalog.SessionCatalog]]
+    * API with the parquet-derived [[org.apache.spark.sql.types.StructType]]
+    * verbatim — a DDL `CREATE TABLE` round-trip would re-parse the
+    * schema through its type-string grammar instead of storing what the
+    * footers actually say.
+    */
+  private def registerIndexTable(spark: SparkSession, root: HPath, sub: String,
+                                 nb: Int, bucketCols: Seq[String]): String = {
+    val name = indexTableName(root, sub)
+    val loc = new HPath(root, sub)
+    // the on-disk schema derivation (a directory listing + one footer
+    // read) happens OUTSIDE the lock: it is the slow part on object
+    // stores, and serializing it JVM-wide would make every concurrent
+    // reader queue behind every other's listing; the lock only needs to
+    // cover the check-then-create on the shared catalog
+    val onDisk = readDir(spark, loc.toString).schema
+    registerLock.synchronized {
+      def sig(s: StructType) = s.fields.map(f => (f.name, f.dataType)).toSeq
+      val live = spark.catalog.tableExists(name) && {
+        val t = spark.sessionState.catalog.getTableMetadata(
+          org.apache.spark.sql.catalyst.TableIdentifier(name))
+        t.storage.locationUri.exists(u => new HPath(u).toString == loc.toString) &&
+          t.bucketSpec.exists(b => b.numBuckets == nb &&
+            b.bucketColumnNames == bucketCols) &&
+          sig(t.schema) == sig(onDisk)
+      }
+      if (!live) {
+        spark.sql(s"DROP TABLE IF EXISTS $name")
+        createCatalogEntry(spark, name, loc.toUri, onDisk, nb, bucketCols)
+      }
+      name
+    }
   }
 }

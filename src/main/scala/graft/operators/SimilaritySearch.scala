@@ -329,27 +329,38 @@ object SimilaritySearch {
         .toDF("cluster", "centroid")
         .write.mode("overwrite")
         .parquet(new org.apache.hadoop.fs.Path(root, "centroids").toString)
-      assignWith(df, embCol, cents)
-        .withColumn(IndexLifecycle.AttemptCol, lit(null).cast("string"))
-        .write.mode("overwrite").partitionBy("cluster")
-        .parquet(new org.apache.hadoop.fs.Path(root, "corpus").toString)
+      IndexLifecycle.writeDir(spark, fs, root, CorpusDir, assignWith(df, embCol, cents)
+        .withColumn(IndexLifecycle.AttemptCol, lit(null).cast("string")))
     }
   }
 
-  /** The STORED coarse quantizer, ordered by cluster id — the frozen
-    * assignment contract every append and query shares.
+  private val CorpusDir =
+    IndexLifecycle.DataDir("corpus", IndexLifecycle.Partitioned("cluster"))
+
+  /** The persisted IVF index: one data dir, `corpus`, partitioned by
+    * cluster. It keeps no meta; its frozen quantizer is the `centroids`
+    * sidecar, written once at build.
+    */
+  private object IvfIndex extends IndexLifecycle.Store(Seq("corpus")) {
+    def dir(meta: org.apache.spark.sql.Row, name: String): IndexLifecycle.DataDir =
+      CorpusDir
+  }
+
+  /** The STORED coarse quantizer, ordered by cluster id (its array index
+    * is the cluster id) — the frozen assignment contract every append
+    * and query shares. nlist rows: sorted on the driver.
     */
   private def storedCentroids(spark: org.apache.spark.sql.SparkSession,
                               root: org.apache.hadoop.fs.Path): Array[Array[Double]] =
     spark.read.parquet(new org.apache.hadoop.fs.Path(root, "centroids").toString)
-      .select(col("cluster"), col("centroid")).orderBy(col("cluster")).collect()
+      .select(col("cluster"), col("centroid")).collect().sortBy(_.getInt(0))
       .map(_.getSeq[Double](1).toArray)
 
   /** APPEND a batch to a persisted IVF index — the ANN side of the
-    * day-2 lifecycle ([[Dedup.lshAppend]] is the dedup side; both run
-    * [[IndexLifecycle]]'s commit-marker protocol, so appends are
-    * crash-safe — a partial write is invisible until the atomic marker
-    * publish — and `appendId`-idempotent under at-least-once retries).
+    * day-2 lifecycle (the LSH index's `lshAppend` is the dedup side), through the
+    * shared [[IndexLifecycle.append]] sequence: crash-safe (a partial
+    * write is invisible until the atomic marker publish) and
+    * `appendId`-idempotent under at-least-once retries.
     * The coarse quantizer is FROZEN at build time, the standard IVF
     * maintenance contract: appended vectors are assigned against the
     * STORED centroids (sidecar read, O(nlist·d)), so cell membership
@@ -366,56 +377,21 @@ object SimilaritySearch {
     * `appendId`.
     */
   def ivfAppend(df: DataFrame, embCol: String, idCol: String, path: String,
-                appendId: Option[String] = None): Unit = {
-    val spark = df.sparkSession
-    val (fs, root) = IndexLifecycle.fsFor(spark, path)
-    val corpus = new org.apache.hadoop.fs.Path(root, "corpus")
-    val id = appendId.getOrElse(java.util.UUID.randomUUID().toString)
-    IndexLifecycle.validateAppendId(id)
-    // committed-marker no-op BEFORE the writer lock (replays never refused)
-    if (fs.exists(IndexLifecycle.markerPath(root, id)))
-      return // already committed — idempotent no-op
-    IndexLifecycle.withWriterLock(fs, root, "ivfAppend",
-        IndexLifecycle.lockTtlMs(spark)) {
-      // under the lease: swap recovery renames dirs, and the stored
-      // quantizer read here decides the batch's cell assignment — both
-      // must see a settled index, not a concurrent rebuild's midpoint
-      IndexLifecycle.recoverSwap(fs, corpus)
-      val cents = storedCentroids(spark, root)
-      // layout probe: refuse rows without the attempt tag before writing
-      IndexLifecycle.requireLayout(root, "corpus",
-        spark.read.parquet(corpus.toString).columns.toSeq, IndexLifecycle.AttemptCol)
-      val attempt = java.util.UUID.randomUUID().toString
-      assignWith(df, embCol, cents)
-        .withColumn(IndexLifecycle.AttemptCol, lit(attempt))
-        .write.mode("append").partitionBy("cluster").parquet(corpus.toString)
-      IndexLifecycle.commitMarker(fs, root, id, attempt)
+                appendId: Option[String] = None): Unit =
+    IndexLifecycle.append(df.sparkSession, path, IvfIndex, "ivfAppend",
+        appendId) { batch =>
+      batch.append("corpus",
+        assignWith(df, embCol, storedCentroids(df.sparkSession, batch.root)))
     }
-  }
 
-  /** Compact a persisted IVF index in place: fold committed appends to
-    * base rows (appends accumulate files per cluster partition — the
-    * same small-file arc as the LSH band dirs), drop crashed-attempt
-    * garbage, and fold markers to idempotency tombstones. Offline op,
-    * single writer — same swap ordering and crash-recovery notes as
-    * [[Dedup.lshCompact]].
+  /** Compact a persisted IVF index in place — the shared
+    * [[IndexLifecycle.compact]] sequence: fold committed appends to base
+    * rows (appends accumulate files per cluster partition — the same
+    * small-file arc as the LSH band dirs), drop crashed-attempt garbage,
+    * and fold markers to idempotency tombstones.
     */
-  def ivfCompact(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    val (fs, root) = IndexLifecycle.fsFor(spark, path)
-    IndexLifecycle.withWriterLock(fs, root, "ivfCompact",
-        IndexLifecycle.lockTtlMs(spark)) {
-      val live = new org.apache.hadoop.fs.Path(root, "corpus")
-      IndexLifecycle.recoverSwap(fs, live)
-      val fresh = new org.apache.hadoop.fs.Path(root, "corpus.compact")
-      fs.delete(fresh, true): Unit
-      val committed = IndexLifecycle.committedAttempts(fs, root)
-      IndexLifecycle.visibleRows(spark.read.parquet(live.toString), committed, root)
-        .withColumn(IndexLifecycle.AttemptCol, lit(null).cast("string"))
-        .write.partitionBy("cluster").parquet(fresh.toString)
-      IndexLifecycle.swapDir(fs, live, fresh)
-      IndexLifecycle.foldMarkers(fs, root)
-    }
-  }
+  def ivfCompact(spark: org.apache.spark.sql.SparkSession, path: String): Unit =
+    IndexLifecycle.compact(spark, path, IvfIndex, "ivfCompact")
 
   /** Query a persisted IVF index: rank exact cosine inside the `nprobe`
     * nearest cells only. Reads O(nlist·d) centroid metadata plus the
@@ -424,29 +400,23 @@ object SimilaritySearch {
   def ivfQuery(spark: org.apache.spark.sql.SparkSession, path: String,
                embCol: String, idCol: String, query: Array[Double], k: Int,
                nprobe: Int, scale: Int = 6): DataFrame = {
-    val (fs, root) = IndexLifecycle.fsFor(spark, path)
-    IndexLifecycle.recoverSwap(fs, new org.apache.hadoop.fs.Path(root, "corpus"))
-    val cents = spark.read.parquet(
-        new org.apache.hadoop.fs.Path(root, "centroids").toString)
-      .select(col("cluster"), col("centroid")).collect()
-      .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
-    require(cents.nonEmpty && query.length == cents(0)._2.length,
-      dimError(query.length, cents.headOption.map(_._2.length).getOrElse(0)))
+    val index = IndexLifecycle.open(spark, path, IvfIndex)
+    val cents = storedCentroids(spark, index.root)
+    require(cents.nonEmpty && query.length == cents(0).length,
+      dimError(query.length, cents.headOption.map(_.length).getOrElse(0)))
     def cos(p: Array[Double]): Double = {
       var s = 0.0; var pn = 0.0; var qn = 0.0
       var j = 0
       while (j < p.length) { s += p(j) * query(j); pn += p(j) * p(j); qn += query(j) * query(j); j += 1 }
       s / (math.sqrt(pn) * math.sqrt(qn))
     }
-    val probed = cents.sortBy { case (i, p) => (-cos(p), i) }
-      .take(nprobe).map(_._1)
+    val probed = cents.zipWithIndex.sortBy { case (p, i) => (-cos(p), i) }
+      .take(nprobe).map(_._2)
     val q = typedLit(query)
     // appended rows resolve through their commit markers (IndexLifecycle)
     // — a scan-local filter on a data column, so the planning-time
     // partition pruning on `cluster` is untouched
-    IndexLifecycle.visibleRows(
-        spark.read.parquet(new org.apache.hadoop.fs.Path(root, "corpus").toString),
-        IndexLifecycle.committedAttempts(fs, root), root)
+    index.visible("corpus")
       .filter(col("cluster").isin(probed.toSeq: _*))
       .select(col(idCol).as("id"),
         round(cosine(col(embCol).cast("array<double>"), q), scale).as("cos_sim"))

@@ -31,28 +31,21 @@ object UnitStore {
 
   private val AttemptCol = IndexLifecycle.AttemptCol
 
-  private def keyBucketsOf(meta: org.apache.spark.sql.Row): Int =
-    meta.getAs[Int]("key_buckets")
-
-  private def readMeta(spark: SparkSession, root: HPath): org.apache.spark.sql.Row =
-    IndexLifecycle.readMeta(spark, new HPath(root, "meta").toString)
-
-  private def writeMeta(spark: SparkSession, root: HPath, nKeys: Long,
-                        buckets: Int): Unit = {
-    import spark.implicits._
-    Seq((nKeys, buckets)).toDF("n_keys", "key_buckets")
-      .write.mode("overwrite").parquet(new HPath(root, "meta").toString)
+  /** `keys/` (bucketed on `h` when the meta's `key_buckets` is positive)
+    * and the `n_keys` tally.
+    */
+  private object Keys extends IndexLifecycle.Store(Seq("keys"),
+      Seq("n_keys", "key_buckets"), Some(("n_keys", "keys"))) {
+    def dir(meta: org.apache.spark.sql.Row, name: String): IndexLifecycle.DataDir =
+      keysDir(meta.getAs[Int]("key_buckets"))
+    /** The SET contract: a contract-violating append of a present key is
+      * folded back out.
+      */
+    override def fold(visible: DataFrame): DataFrame = visible.distinct()
   }
 
-  /** Marker names (appendIds) currently committed — driver metadata. */
-  private def markerNames(fs: org.apache.hadoop.fs.FileSystem,
-                          root: HPath): Seq[String] = {
-    val dir = new HPath(root, "_commits")
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq
-      .filter(s => s.isFile && !s.getPath.getName.startsWith("."))
-      .map(_.getPath.getName)
-  }
+  private def keysDir(buckets: Int) =
+    IndexLifecycle.DataDir("keys", IndexLifecycle.bucketedOr(buckets, "h"))
 
   /** Build (or REBUILD) the store from `keys.select(keyCol)` — distinct,
     * cast to LONG. Inputs analyze BEFORE anything destructive runs, so a
@@ -66,22 +59,13 @@ object UnitStore {
     val data = keys.select(col(keyCol).cast("long").as("h")).distinct()
       .withColumn(AttemptCol, lit(null).cast("string"))
     val (fs, root) = IndexLifecycle.fsFor(spark, path)
-    val keysPath = new HPath(root, "keys")
     IndexLifecycle.withWriterLock(fs, root, "UnitStore.build",
         IndexLifecycle.lockTtlMs(spark)) {
       IndexLifecycle.clearCommits(fs, root)
-      if (buckets > 0) {
-        Dedup.writeBucketed(data, spark, path, "keys", keysPath, "_build",
-          buckets, Seq("h"), fs)
-      } else {
-        data.write.mode("overwrite").parquet(keysPath.toString)
-      }
-      Dedup.registerLock.synchronized {
-        spark.sql(
-          s"DROP TABLE IF EXISTS ${Dedup.indexTableName(spark, path, "keys")}"): Unit
-      }
-      val n = IndexLifecycle.readDir(spark, keysPath.toString).count()
-      writeMeta(spark, root, n, buckets)
+      IndexLifecycle.writeDir(spark, fs, root, keysDir(buckets), data)
+      IndexLifecycle.dropRegistrations(spark, root, Keys.dirNames)
+      val n = IndexLifecycle.readDir(spark, new HPath(root, "keys").toString).count()
+      IndexLifecycle.writeMeta(spark, root, "n_keys" -> n, "key_buckets" -> buckets)
     }
   }
 
@@ -93,61 +77,23 @@ object UnitStore {
     */
   def read(spark: SparkSession, path: String,
            excludeAppendIds: Seq[String] = Nil): DataFrame = {
-    val (fs, root) = IndexLifecycle.fsFor(spark, path)
-    val keysPath = new HPath(root, "keys")
-    IndexLifecycle.recoverSwap(fs, keysPath)
-    require(fs.exists(keysPath),
+    val store = IndexLifecycle.open(spark, path, Keys, excludeAppendIds)
+    require(store.exists("keys"),
       s"no unit store at $path — build one with UnitStore.build")
-    val meta = readMeta(spark, root)
-    val kb = keyBucketsOf(meta)
-    val df =
-      if (kb > 0)
-        spark.table(Dedup.registerIndexTable(spark, path, "keys", kb, Seq("h")))
-      else IndexLifecycle.readDir(spark, keysPath.toString)
-    IndexLifecycle.visibleRows(df,
-      IndexLifecycle.committedAttempts(fs, root, excludeAppendIds), root)
+    store.visible("keys")
   }
 
   /** Append a batch of keys (deduped within the batch; the caller passes
-    * keys NOT already in the store — see the object doc). Same contract
-    * as the other index families: rows land tagged with a fresh attempt
-    * id, ONE atomic marker rename publishes them, a crash mid-append is
-    * invisible, and a retry of a committed `appendId` is a no-op — so
-    * `foreachBatch` drivers key the id on the micro-batch id. The meta
-    * tally is incremental (committed `n_keys` + this batch's distinct
-    * count, observed on the keys write — nothing over the store's data);
+    * keys NOT already in the store — see the object doc) through the
+    * shared [[IndexLifecycle.append]] sequence: crash-safe, a no-op on a
+    * committed `appendId`, the `n_keys` tally observed on the keys write;
     * [[compact]] recounts exactly.
     */
   def append(keys: DataFrame, keyCol: String, path: String,
              appendId: Option[String] = None): Unit = {
-    val spark = keys.sparkSession
-    val data0 = keys.select(col(keyCol).cast("long").as("h")).distinct()
-    val (fs, root) = IndexLifecycle.fsFor(spark, path)
-    val keysPath = new HPath(root, "keys")
-    val id = appendId.getOrElse(java.util.UUID.randomUUID().toString)
-    IndexLifecycle.validateAppendId(id)
-    if (fs.exists(IndexLifecycle.markerPath(root, id)))
-      return // already committed — idempotent no-op
-    IndexLifecycle.withWriterLock(fs, root, "UnitStore.append",
-        IndexLifecycle.lockTtlMs(spark)) {
-      // under the lease: swap recovery renames dirs and must never race
-      // a live compact's two-rename window
-      IndexLifecycle.recoverSwap(fs, keysPath)
-      val meta = readMeta(spark, root)
-      val kb = keyBucketsOf(meta)
-      val attempt = java.util.UUID.randomUUID().toString
-      val nNew = IndexLifecycle.countedWrite(
-          data0.withColumn(AttemptCol, lit(attempt))) { data =>
-        if (kb > 0) {
-          data.repartition(kb, col("h")).write.mode("append")
-            .insertInto(Dedup.registerIndexTable(spark, path, "keys", kb, Seq("h")))
-        } else {
-          data.write.mode("append").parquet(keysPath.toString)
-        }
-      }
-      IndexLifecycle.commitMarker(fs, root, id, attempt)
-      writeMeta(spark, root, meta.getAs[Long]("n_keys") + nNew, kb)
-    }
+    val data = keys.select(col(keyCol).cast("long").as("h")).distinct()
+    IndexLifecycle.append(keys.sparkSession, path, Keys, "UnitStore.append",
+      appendId)(_.append("keys", data))
   }
 
   /** The meta tally — one one-row read, maintained incrementally by
@@ -156,7 +102,7 @@ object UnitStore {
     */
   def committedKeys(spark: SparkSession, path: String): Long = {
     val (_, root) = IndexLifecycle.fsFor(spark, path)
-    readMeta(spark, root).getAs[Long]("n_keys")
+    IndexLifecycle.readMeta(spark, root, Keys.metaCols: _*).getAs[Long]("n_keys")
   }
 
   /** Exact committed DISTINCT key count — one narrow scan of the store;
@@ -166,9 +112,8 @@ object UnitStore {
     read(spark, path).distinct().count()
 
   /** Fold committed appends to base rows, dedup back to a SET, drop
-    * crashed-attempt garbage, tombstone the markers (a folded appendId
-    * still no-ops on retry), recount the meta tally. Same offline-op /
-    * single-writer / swap-recovery contract as the LSH compact.
+    * crashed-attempt garbage, tombstone the markers and recount the meta
+    * tally — the shared [[IndexLifecycle.compact]] sequence.
     *
     * `keepAppendIds` names committed appends to carry through UNFOLDED —
     * rows keep their attempt tag, markers keep their payload — so a
@@ -182,40 +127,6 @@ object UnitStore {
     * (the documented crash-anywhere/replay-identical contract).
     */
   def compact(spark: SparkSession, path: String,
-              keepAppendIds: Seq[String] = Nil): Unit = {
-    val (fs, root) = IndexLifecycle.fsFor(spark, path)
-    IndexLifecycle.withWriterLock(fs, root, "UnitStore.compact",
-        IndexLifecycle.lockTtlMs(spark)) {
-      val keysLive = new HPath(root, "keys")
-      IndexLifecycle.recoverSwap(fs, keysLive)
-      val meta = readMeta(spark, root)
-      val kb = keyBucketsOf(meta)
-      val committed = IndexLifecycle.committedAttempts(fs, root, keepAppendIds)
-      val keptAttempts = IndexLifecycle.committedAttemptsOf(fs, root, keepAppendIds)
-      val raw = IndexLifecycle.readDir(spark, keysLive.toString)
-      val foldedBase = IndexLifecycle.visibleRows(raw, committed, root)
-        .distinct()
-        .withColumn(AttemptCol, lit(null).cast("string"))
-      val folded =
-        if (keptAttempts.isEmpty) foldedBase
-        else foldedBase.unionByName(
-          raw.filter(col(AttemptCol).isin(keptAttempts: _*)))
-      val keysNew = new HPath(root, "keys.compact")
-      fs.delete(keysNew, true): Unit
-      if (kb > 0) {
-        Dedup.writeBucketed(folded, spark, path, "keys", keysNew, "_compact",
-          kb, Seq("h"), fs)
-      } else {
-        folded.write.parquet(keysNew.toString)
-      }
-      IndexLifecycle.swapDir(fs, keysLive, keysNew)
-      IndexLifecycle.foldMarkers(fs, root, keep = keepAppendIds.toSet)
-      Dedup.registerLock.synchronized {
-        spark.sql(
-          s"DROP TABLE IF EXISTS ${Dedup.indexTableName(spark, path, "keys")}"): Unit
-      }
-      val n = IndexLifecycle.readDir(spark, keysLive.toString).count()
-      writeMeta(spark, root, n, kb)
-    }
-  }
+              keepAppendIds: Seq[String] = Nil): Unit =
+    IndexLifecycle.compact(spark, path, Keys, "UnitStore.compact", keepAppendIds)
 }

@@ -95,7 +95,7 @@ class IngestJobsSpec extends AnyFunSuite {
   test("readMeta/readDir equal spark.read.parquet head()/schema on a fresh, appended and compacted index and unit store — and run no Spark job") {
     def same(dir: String, subs: Seq[String]): Unit = {
       val viaSpark = spark.read.parquet(s"$dir/meta").head()
-      val (mine, log) = logging((IndexLifecycle.readMeta(spark, s"$dir/meta"),
+      val (mine, log) = logging((IndexLifecycle.readMeta(spark, new org.apache.hadoop.fs.Path(dir)),
         subs.map(s => IndexLifecycle.readDir(spark, s"$dir/$s").schema)))
       assert(log.jobs.isEmpty, log.descriptions.toString)
       assert(mine._1 == viaSpark, s"${mine._1} vs $viaSpark")
@@ -139,6 +139,41 @@ class IngestJobsSpec extends AnyFunSuite {
     UnitStore.build(Seq(1L, 2L).toDF("k"), "k", store)
     UnitStore.append(Seq.empty[Long].toDF("k"), "k", store, appendId = Some("e0"))
     assert(UnitStore.committedKeys(spark, store) == 2L)
+  }
+
+  test("the store setup and compact paths run a pinned number of Spark jobs") {
+    val lakeDf = Seq((0L, words("lake", 25)),
+      (1L, words("second", 22) + "\nshared line")).toDF("doc_id", "text")
+    val idx = tmpDir("setup_idx")
+    // the crawl_to_shards setup: LSH index, fingerprint sidecar, unit store
+    val (_, setup) = logging {
+      Dedup.lshBuild(lakeDf, "text", "doc_id", idx)
+      Dedup.lshWriteFingerprints(lakeDf, "text", idx)
+      ParagraphDedup.unitStoreBuild(lakeDf, "doc_id", "text",
+        ParagraphDedup.unitsBySeparator(_, "\\n"), tmpDir("setup_store"))
+    }
+    Dedup.lshAppend(Seq((20L, words("fresh", 22))).toDF("doc_id", "text"),
+      "text", "doc_id", idx, appendId = Some("a1"))
+    val (_, lshCompact) = logging(Dedup.lshCompact(spark, idx))
+    val store = tmpDir("setup_bstore")
+    UnitStore.build(Seq(1L, 2L, 3L).toDF("k"), "k", store, buckets = 2)
+    UnitStore.append(Seq(4L, 5L).toDF("k"), "k", store, appendId = Some("a1"))
+    val (_, unitCompact) = logging(UnitStore.compact(spark, store))
+    val ivf = tmpDir("setup_ivf")
+    val emb = (0 until 20).map(i => (i.toLong,
+        Array.tabulate(8)(j => math.sin(i * 8.0 + j))))
+      .toDF("vec_id", "embedding")
+    SimilaritySearch.ivfBuild(emb.filter(col("vec_id") % 2 === 1),
+      "embedding", "vec_id", nlist = 4, ivf)
+    SimilaritySearch.ivfAppend(emb.filter(col("vec_id") % 2 === 0),
+      "embedding", "vec_id", ivf, appendId = Some("a1"))
+    val (_, ivfCompact) = logging(SimilaritySearch.ivfCompact(spark, ivf))
+    val counts = Map("setup" -> setup.jobs.size, "lshCompact" -> lshCompact.jobs.size,
+      "UnitStore.compact" -> unitCompact.jobs.size, "ivfCompact" -> ivfCompact.jobs.size)
+    // measured on this fixture; an extra read, count or rewrite of an
+    // index dir raises it
+    assert(counts == Map("setup" -> 13, "lshCompact" -> 6,
+      "UnitStore.compact" -> 6, "ivfCompact" -> 2), counts.toString)
   }
 
   test("the shard loop runs a pinned number of Spark jobs per micro-batch") {

@@ -299,27 +299,50 @@ class LshIndexLifecycleSpec extends AnyFunSuite {
   }
 
   test("interrupted compact (crash inside the swap window) auto-restores at index open") {
+    // simulate a compact dying between its two renames of `dir`: live
+    // moved aside to .old, fresh (.compact) not yet published — the
+    // store has no live `dir` at all. Opening the store (`answer`)
+    // restores the .old dir instead of failing on the missing path and
+    // answers exactly as before the crash; the re-run compact completes
+    // and clears the stray .compact dir.
+    def crashInSwap[T](root: String, dir: String)(answer: => T)(
+        compact: => Unit): Unit = {
+      val before = answer
+      val live = new java.io.File(root, dir)
+      val old = new java.io.File(root, s"$dir.old")
+      val fresh = new java.io.File(root, s"$dir.compact")
+      assert(live.renameTo(old))
+      assert(fresh.mkdirs())
+      assert(answer == before, s"$dir: open did not auto-restore the swap")
+      assert(live.exists() && !old.exists(), s"$dir: .old not restored")
+      compact
+      assert(answer == before, s"$dir: the re-run compact changed the answer")
+      assert(!fresh.exists() && !old.exists(), s"$dir: compact left swap dirs")
+    }
+    // LSH band rows
     val idx = tmpDir("lsh_swapcrash")
     Dedup.lshBuild(lake, "text", "doc_id", idx)
     Dedup.lshAppend(b1, "text", "doc_id", idx, appendId = Some("d1"))
-    val before = pairs(idx)
-    assert(before.toSet == Set((1L, 0L), (3L, 2L), (7L, 4L)), before.toString)
-    // simulate a compact dying between its two renames: live moved aside
-    // to .old, fresh (.compact) not yet published — the index has no
-    // live bands dir at all
-    val bands = new java.io.File(idx, "bands")
-    assert(bands.renameTo(new java.io.File(idx, "bands.old")))
-    assert(new java.io.File(idx, "bands.compact").mkdirs())
-    // a query auto-restores the .old dir instead of failing on the
-    // missing path, and answers exactly as before the crash
-    assert(pairs(idx).toSet == before.toSet)
-    assert(bands.exists() && !new java.io.File(idx, "bands.old").exists())
-    // the re-run compact completes and clears the stray .compact dir
-    Dedup.lshCompact(spark, idx)
-    assert(pairs(idx).toSet == before.toSet)
-    assert(!new java.io.File(idx, "bands.compact").exists() &&
-      !new java.io.File(idx, "bands.old").exists())
-    // same recovery on the IVF corpus dir
+    assert(pairs(idx).toSet == Set((1L, 0L), (3L, 2L), (7L, 4L)))
+    crashInSwap(idx, "bands")(pairs(idx).toSet)(Dedup.lshCompact(spark, idx))
+    // the LSH index's fingerprint sidecar
+    val fpsIdx = tmpDir("fps_swapcrash")
+    Dedup.lshBuild(lake, "text", "doc_id", fpsIdx)
+    Dedup.lshWriteFingerprints(lake, "text", fpsIdx)
+    Dedup.lshAppend(b1, "text", "doc_id", fpsIdx, appendId = Some("d1"))
+    def fps: Set[Long] = Dedup.lshFingerprints(spark, fpsIdx)
+      .collect().map(_.getLong(0)).toSet
+    assert(fps.size == 3, fps.toString)
+    crashInSwap(fpsIdx, "fps")(fps)(Dedup.lshCompact(spark, fpsIdx))
+    // the unit store's keys (bucketed: the read goes through the catalog)
+    val store = tmpDir("unit_swapcrash")
+    UnitStore.build(Seq(1L, 2L, 3L).toDF("h"), "h", store, buckets = 2)
+    UnitStore.append(Seq(4L).toDF("h"), "h", store, appendId = Some("d1"))
+    def keys: Set[Long] = UnitStore.read(spark, store)
+      .collect().map(_.getLong(0)).toSet
+    assert(keys == Set(1L, 2L, 3L, 4L), keys.toString)
+    crashInSwap(store, "keys")(keys)(UnitStore.compact(spark, store))
+    // the IVF corpus
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .limit(20)
     val ivfIdx = tmpDir("ivf_swapcrash")
@@ -329,11 +352,7 @@ class LshIndexLifecycleSpec extends AnyFunSuite {
     def ivfIds: Seq[Long] = SimilaritySearch.ivfQuery(spark, ivfIdx,
       "embedding", "vec_id", q0, k = 5, nprobe = 4).collect()
       .map(_.getLong(0)).toSeq
-    val ivfBefore = ivfIds
-    assert(new java.io.File(ivfIdx, "corpus")
-      .renameTo(new java.io.File(ivfIdx, "corpus.old")))
-    assert(ivfIds == ivfBefore, "IVF query did not auto-restore the swap")
-    assert(!new java.io.File(ivfIdx, "corpus.old").exists())
+    crashInSwap(ivfIdx, "corpus")(ivfIds)(SimilaritySearch.ivfCompact(spark, ivfIdx))
   }
 
   test("a rebuild with a wrong column fails BEFORE touching the old index: markers and appended rows survive") {
@@ -483,6 +502,23 @@ class LshIndexLifecycleSpec extends AnyFunSuite {
     refused(ivfIdx, "IVF append")(SimilaritySearch.ivfAppend(emb, "embedding",
       "vec_id", ivfIdx, appendId = Some("d1")))
     refused(ivfIdx, "IVF compact")(SimilaritySearch.ivfCompact(spark, ivfIdx))
+    def unitRefused(store: String, shape: String): Unit = {
+      refused(store, s"$shape read")(UnitStore.read(spark, store))
+      refused(store, s"$shape append")(UnitStore.append(Seq(9L).toDF("h"), "h",
+        store, appendId = Some("d1")))
+      refused(store, s"$shape compact")(UnitStore.compact(spark, store))
+    }
+    // unbucketed unit store whose keys lack the append_attempt tag
+    val unitNoAttempt = tmpDir("unit_noattempt")
+    UnitStore.build(Seq(1L, 2L, 3L).toDF("h"), "h", unitNoAttempt)
+    rewrite(s"$unitNoAttempt/keys", Seq("h"))
+    unitRefused(unitNoAttempt, "unit store no append_attempt")
+    // unit store meta without key_buckets over otherwise current data
+    val unitOldMeta = tmpDir("unit_oldmeta")
+    UnitStore.build(Seq(1L, 2L, 3L).toDF("h"), "h", unitOldMeta, buckets = 2)
+    val nKeys = spark.read.parquet(s"$unitOldMeta/meta").head().getAs[Long]("n_keys")
+    Seq(nKeys).toDF("n_keys").write.mode("overwrite").parquet(s"$unitOldMeta/meta")
+    unitRefused(unitOldMeta, "unit store meta without key_buckets")
   }
 
   test("a stored null shingle hash fails the index query loudly (sorted_jaccard64 guard on the storage boundary)") {
