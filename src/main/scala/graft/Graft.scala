@@ -21,8 +21,8 @@ object Graft {
   def registerAll(spark: SparkSession,
                   waybackOptions: Map[String, String] = Map.empty,
                   commonCrawlOptions: Map[String, String] = Map.empty,
-                  d1ApiBase: String = "https://api.cloudflare.com/client/v4",
-                  r2ApiBase: String = "https://api.sql.cloudflarestorage.com"): Unit = {
+                  d1ApiBase: String = graft.core.D1Client.DefaultApiBase,
+                  r2ApiBase: String = graft.sources.r2.R2.DefaultApiBase): Unit = {
     spark.read.format("wayback").options(waybackOptions)
       .load().createOrReplaceTempView("wayback_machine")
     // debug applied AFTER user options: the _debug view is debug by name

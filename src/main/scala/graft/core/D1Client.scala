@@ -21,11 +21,14 @@ import scala.collection.immutable.ListMap
   */
 object D1Client {
 
+  /** The Cloudflare v4 API base every D1 surface defaults to. */
+  val DefaultApiBase = "https://api.cloudflare.com/client/v4"
+
   final case class Config(
       accountId: String,
       apiToken: String,
       databaseId: String = "",
-      apiBase: String = "https://api.cloudflare.com/client/v4") {
+      apiBase: String = DefaultApiBase) {
     def queryUrl: String = s"$apiBase/accounts/$accountId/d1/database/$databaseId/query"
     def listDatabasesUrl: String = s"$apiBase/accounts/$accountId/d1/database"
   }
@@ -135,6 +138,15 @@ object D1Client {
     parseQueryResponse(resp.bodyString)
   }
 
+  /** [[executeQuery]] that throws `IOException("<failure>: <error>")`
+    * when D1 reports the statement failed.
+    */
+  def checkedQuery(config: Config, sql: String, failure: String): QueryResult = {
+    val res = executeQuery(config, sql)
+    if (!res.success) throw new java.io.IOException(s"$failure: ${res.error}")
+    res
+  }
+
   /** Batch: one POST to the query endpoint with `[{"sql":...},...]`;
     * per-statement results. Partial remote commit on failure is possible
     * (D1 auto-commits statement-by-statement) — same non-ACID semantics as
@@ -188,9 +200,7 @@ object D1Client {
     * names and `sqlite_schema`).
     */
   def listTables(config: Config): Seq[TableInfo] = {
-    val res = executeQuery(config, "PRAGMA table_list")
-    if (!res.success) throw new java.io.IOException(s"Failed to get table list: ${res.error}")
-    res.rows.map { row =>
+    checkedQuery(config, "PRAGMA table_list", "Failed to get table list").rows.map { row =>
       TableInfo(
         row.getOrElse("schema", ""), row.getOrElse("name", ""), row.getOrElse("type", ""),
         try row.getOrElse("ncol", "0").toInt catch { case _: Exception => 0 },
@@ -200,9 +210,7 @@ object D1Client {
   }
 
   def tableColumns(config: Config, tableName: String): Seq[ColumnInfo] = {
-    val res = executeQuery(config, s"PRAGMA table_info($tableName)")
-    if (!res.success) throw new java.io.IOException(s"Failed to get table columns: ${res.error}")
-    res.rows.map { row =>
+    checkedQuery(config, s"PRAGMA table_info($tableName)", "Failed to get table columns").rows.map { row =>
       ColumnInfo(
         try row.getOrElse("cid", "0").toInt catch { case _: Exception => 0 },
         row.getOrElse("name", ""), row.getOrElse("type", ""),

@@ -60,16 +60,20 @@ object Secrets {
     }
   }
 
-  /** Default-name probing order used by ATTACH when no SECRET given:
-    * `d1`, `cloudflare`, `__default_d1` (reference:
-    * /root/reference/src/d1_storage.cpp:113-135), then environment.
+  /** The d1 secret names probed, in this order, when none is named
+    * (reference d1_storage.cpp:113-135).
+    */
+  val D1DefaultNames: Seq[String] = Seq("d1", "cloudflare", "__default_d1")
+
+  /** The named d1 secret, else the first of [[D1DefaultNames]], else the
+    * CLOUDFLARE_* environment.
     */
   def resolveD1(explicitName: Option[String],
                 conf: String => Option[String] = _ => None): Option[Secret] = {
     explicitName match {
       case Some(n) => lookup("d1", n, conf)
       case None =>
-        Seq("d1", "cloudflare", "__default_d1").iterator
+        D1DefaultNames.iterator
           .flatMap(n => lookup("d1", n, conf)).nextOption()
           .orElse {
             for {
@@ -81,8 +85,37 @@ object Secrets {
     }
   }
 
-  def d1Config(secret: Secret, databaseId: String = "",
-               apiBase: String = "https://api.cloudflare.com/client/v4"): D1Client.Config =
-    D1Client.Config(secret.accountId, secret.apiToken,
-      if (databaseId.nonEmpty) databaseId else secret.databaseId, apiBase)
+  /** The one option-map → D1 config resolver, behind `format("d1")`,
+    * `format("d1query")`, the D1 catalog and the `D1` API. An empty
+    * option counts as absent. Credentials come from, in order:
+    *  1. an explicit `secret`, which must exist;
+    *  2. inline `account_id` + `api_token`;
+    *  3. the first registered of [[D1DefaultNames]];
+    *  4. the CLOUDFLARE_* environment.
+    * The database is `database_id`, else `database` (a 36-char UUID as
+    * is, else looked up by name — reference d1_storage.cpp:75), else the
+    * secret's. A caller that needs a database rejects an empty id.
+    */
+  def d1Config(option: String => Option[String]): D1Client.Config = {
+    def opt(k: String) = option(k).filter(_.nonEmpty)
+    val conf: String => Option[String] = k =>
+      try org.apache.spark.sql.SparkSession.active.conf.getOption(k)
+      catch { case _: Exception => None }
+    val secret = opt("secret") match {
+      case Some(n) => lookup("d1", n, conf).getOrElse(throw new IllegalArgumentException(
+        s"D1 secret '$n' not found. Create it with: CREATE SECRET $n (TYPE d1, ...)"))
+      case None => (opt("account_id"), opt("api_token")) match {
+        case (Some(a), Some(t)) => Secret("__inline", "d1", a, t)
+        case _ => resolveD1(None, conf).getOrElse(throw new IllegalArgumentException(
+          "d1 requires a secret (option 'secret'), inline account_id/api_token, " +
+            s"a registered ${D1DefaultNames.mkString("/")} secret, " +
+            "or CLOUDFLARE_ACCOUNT_ID/CLOUDFLARE_API_TOKEN environment"))
+      }
+    }
+    val cfg = D1Client.Config(secret.accountId, secret.apiToken, secret.databaseId,
+      opt("api_base").getOrElse(D1Client.DefaultApiBase))
+    opt("database_id").orElse(opt("database").map { db =>
+      if (db.length == 36 && db.count(_ == '-') == 4) db else D1Client.databaseIdByName(cfg, db)
+    }).fold(cfg)(id => cfg.copy(databaseId = id))
+  }
 }

@@ -87,8 +87,8 @@ object GraftTvf {
     * time, exactly as the reference's bind callbacks do.
     */
   def registerConnectors(spark: SparkSession,
-                         d1ApiBase: String = "https://api.cloudflare.com/client/v4",
-                         r2ApiBase: String = "https://api.sql.cloudflarestorage.com"): Unit = {
+                         d1ApiBase: String = graft.core.D1Client.DefaultApiBase,
+                         r2ApiBase: String = graft.sources.r2.R2.DefaultApiBase): Unit = {
     def reg(name: String)(f: Seq[Expression] => LogicalPlan): Unit =
       spark.sessionState.tableFunctionRegistry.registerFunction(
         FunctionIdentifier(name),
@@ -294,7 +294,7 @@ object AttachSyntax {
     override def run(spark: SparkSession): Seq[Row] = {
       val conf: String => Option[String] = k => spark.conf.getOption(k)
       val secretName = secret.getOrElse {
-        Seq("d1", "cloudflare", "__default_d1")
+        graft.core.Secrets.D1DefaultNames
           .find(n => graft.core.Secrets.lookup("d1", n, conf).isDefined)
           .getOrElse(throw new IllegalArgumentException(
             "D1 attach requires a D1 secret. Create one with: CREATE SECRET (TYPE d1, " +

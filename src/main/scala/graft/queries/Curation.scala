@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
 import graft.operators.{Decontaminate, Sampling}
@@ -31,6 +32,62 @@ object Curation {
         lpad((id % 1000).cast("string"), 3, "0"), lit(" now")))
       .otherwise(concat(lit(" server 10."), (id % 256).cast("string"),
         lit(".0.1 and 192.168.1."), (id % 200).cast("string"), lit(" up"))))
+
+  /** The qs03/qs06 curated stream: plant → redact → deterministic
+    * md5-prefix sample, as a Structured Streaming query over the parquet
+    * files in `inputDir`.
+    */
+  private def curatedStream(spark: SparkSession, inputDir: String): DataFrame = {
+    val schema = spark.read.parquet(inputDir).schema
+    val stream = spark.readStream.schema(schema).parquet(inputDir)
+    Sampling.hashSample(
+      stream
+        .withColumn("t", plantPii(col("doc_id"), col("text")))
+        .withColumn("redacted", TextFunctions.piiRedact(col("t"))),
+      "doc_id", numerator = 20)
+  }
+
+  /** The curated stream landing as TRAINING SHARDS: the sink is
+    * `foreachBatch` appending language-partitioned parquet — the
+    * streaming counterpart of [[graft.operators.ShardWriter]] (append
+    * per micro-batch instead of overwrite; each batch's files are
+    * internally sorted, directories accumulate across batches). The qs06
+    * gate reads the shards BACK and holds them to the same SQL oracle as
+    * the in-stream summary, so the file-commit path itself is
+    * correctness-gated.
+    */
+  def runCurationToShards(spark: SparkSession, inputDir: String,
+                          outDir: String): Unit = {
+    val q = curatedStream(spark, inputDir)
+      .select(col("doc_id"), col("lang"), col("redacted"))
+      .writeStream
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        batch.repartition(col("lang"))
+          .sortWithinPartitions(col("lang"), col("doc_id"))
+          .write.mode("append").partitionBy("lang").parquet(outDir)
+      }
+      .option("checkpointLocation", graft.core.TempDirs.deleteOnExit(
+        java.nio.file.Files.createTempDirectory("qs06ckpt").toString))
+      .start()
+    q.processAllAvailable()
+    q.stop()
+  }
+
+  /** Per-language counts over the curated stream's redacted text, as a
+    * real Structured Streaming query (parquet file source → memory sink,
+    * `processAllAvailable`).
+    */
+  def runCurationAsStream(spark: SparkSession, inputDir: String,
+                          queryName: String): DataFrame = {
+    val agg = curatedStream(spark, inputDir).groupBy(col("lang"))
+      .agg(count(lit(1)).as("n"),
+        sum(length(col("redacted"))).cast("long").as("sum_chars"))
+    val q = agg.writeStream.outputMode("complete")
+      .format("memory").queryName(queryName).start()
+    q.processAllAvailable()
+    q.stop()
+    spark.table(queryName)
+  }
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -776,7 +833,7 @@ object Curation {
         val out = graft.core.TempDirs.deleteOnExit(
           java.nio.file.Files.createTempDirectory("qs06out").toString) + "/shards"
         load(s, d, "documents").coalesce(1).write.mode("append").parquet(tmp)
-        graft.streaming.DocsStream.runCurationToShards(s, tmp, out)
+        runCurationToShards(s, tmp, out)
         s.read.parquet(out)
           .groupBy(col("lang"))
           .agg(count(lit(1)).as("n"),
@@ -813,7 +870,7 @@ object Curation {
         val tmp = graft.core.TempDirs.deleteOnExit(
           java.nio.file.Files.createTempDirectory("qs03").toString)
         load(s, d, "documents").coalesce(1).write.mode("append").parquet(tmp)
-        graft.streaming.DocsStream.runCurationAsStream(s, tmp, "qs03_curation_mem")
+        runCurationAsStream(s, tmp, "qs03_curation_mem")
           .orderBy(col("lang"))
       },
       Some("""WITH aug AS (

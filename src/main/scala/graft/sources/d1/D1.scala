@@ -32,18 +32,13 @@ object D1 {
     StructField("type", StringType), StructField("ncol", IntegerType),
     StructField("writable", BooleanType), StructField("strict", BooleanType)))
 
-  private def configOf(secretName: Option[String], databaseId: String,
-                       apiBase: String): D1Client.Config = {
-    val conf: String => Option[String] = k =>
-      try org.apache.spark.sql.SparkSession.active.conf.getOption(k)
-      catch { case _: Exception => None }
-    val secret = Secrets.resolveD1(secretName, conf).getOrElse(
-      throw new IllegalArgumentException("no d1 secret available"))
-    Secrets.d1Config(secret, databaseId, apiBase)
-  }
+  private def configOf(secret: Option[String], databaseId: String,
+                       apiBase: String): D1Client.Config =
+    Secrets.d1Config((Map("database_id" -> databaseId, "api_base" -> apiBase) ++
+      secret.map("secret" -> _)).get)
 
   def databases(spark: SparkSession, secret: Option[String] = None,
-                apiBase: String = "https://api.cloudflare.com/client/v4"): DataFrame =
+                apiBase: String = D1Client.DefaultApiBase): DataFrame =
     databasesDf(spark, configOf(secret, "", apiBase))
 
   /** Pre-resolved-config form (used by the `d1_databases()` SQL TVF). */
@@ -54,7 +49,7 @@ object D1 {
   }
 
   def tables(spark: SparkSession, databaseId: String, secret: Option[String] = None,
-             apiBase: String = "https://api.cloudflare.com/client/v4"): DataFrame =
+             apiBase: String = D1Client.DefaultApiBase): DataFrame =
     tablesDf(spark, configOf(secret, databaseId, apiBase))
 
   /** Pre-resolved-config form (used by the `d1_tables()` SQL TVF). */
@@ -71,7 +66,7 @@ object D1 {
     * [[D1BatchSession.execute]]).
     */
   def execute(sql: String, secret: Option[String], databaseId: String,
-              apiBase: String = "https://api.cloudflare.com/client/v4"): Long = {
+              apiBase: String = D1Client.DefaultApiBase): Long = {
     val cfg = configOf(secret, databaseId, apiBase)
     // Task-side, the owning session rides the propagated FlagKey local
     // property (value = session id), so a local-mode task buffers into
@@ -96,21 +91,19 @@ object D1 {
             executorId = if (env == null) "driver" else env.executorId,
             txnFlagged = txnSession.isDefined)
         }
-        val res = D1Client.executeQuery(cfg, sql)
-        if (!res.success) throw new java.io.IOException(s"D1 execute failed: ${res.error}")
-        res.meta.changes
+        D1Client.checkedQuery(cfg, sql, "D1 execute failed").meta.changes
     }
   }
 
   def batchSession(secret: Option[String], databaseId: String,
-                   apiBase: String = "https://api.cloudflare.com/client/v4"): D1BatchSession =
+                   apiBase: String = D1Client.DefaultApiBase): D1BatchSession =
     new D1BatchSession(configOf(secret, databaseId, apiBase))
 
   /** UDF parity for the reference's scalar `d1_execute(sql, secret,
     * database_id) → BIGINT`. Each input row triggers one remote call.
     */
   def registerExecuteUdf(spark: SparkSession,
-                         apiBase: String = "https://api.cloudflare.com/client/v4"): Unit = {
+                         apiBase: String = D1Client.DefaultApiBase): Unit = {
     spark.udf.register("d1_execute",
       (sql: String, secretName: String, databaseId: String) =>
         execute(sql, Some(secretName), databaseId, apiBase))

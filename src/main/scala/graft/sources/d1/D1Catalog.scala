@@ -8,10 +8,11 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException}
 
-import graft.core.{D1Client, Secrets}
+import graft.core.D1Client
 
 /** ATTACH-parity: `spark.sql.catalog.mydb = graft.sources.d1.D1Catalog`
-  * (+ `.database`, `.secret`, `.api_base` options) exposes a remote D1
+  * (+ `.database`, `.secret`, `.api_base` options, resolved like the
+  * `d1` source's — [[graft.core.Secrets.d1Config]]) exposes a remote D1
   * database as a Spark catalog — `SELECT * FROM mydb.main.users`.
   *
   * Where the reference eagerly materializes one DuckDB view per remote
@@ -28,23 +29,7 @@ class D1Catalog extends TableCatalog with SupportsNamespaces {
 
   override def initialize(name: String, options: CaseInsensitiveStringMap): Unit = {
     catalogName = name
-    val conf: String => Option[String] = k =>
-      try org.apache.spark.sql.SparkSession.active.conf.getOption(k)
-      catch { case _: Exception => None }
-    val secret = Option(options.get("secret"))
-      .flatMap(n => Secrets.lookup("d1", n, conf))
-      .orElse(Secrets.resolveD1(None, conf))
-      .getOrElse(throw new IllegalArgumentException(
-        s"D1 catalog '$name' requires a registered d1 secret"))
-    val apiBase = Option(options.get("api_base"))
-      .getOrElse("https://api.cloudflare.com/client/v4")
-    var cfg = Secrets.d1Config(secret, Option(options.get("database_id")).getOrElse(""), apiBase)
-    Option(options.get("database")).foreach { db =>
-      if (db.length == 36 && db.count(_ == '-') == 4) cfg = cfg.copy(databaseId = db)
-      else cfg = cfg.copy(databaseId = D1Client.databaseIdByName(cfg, db))
-    }
-    require(cfg.databaseId.nonEmpty, s"D1 catalog '$name' requires database or database_id")
-    config = cfg
+    config = D1SourceUtil.configFrom(options)
   }
 
   override def name(): String = catalogName

@@ -15,68 +15,61 @@ import org.apache.spark.unsafe.types.UTF8String
 import graft.core.D1Client
 
 /** `d1_query(sql)` — raw SQL passthrough (reference
-  * src/d1_functions.cpp:92-177). The query executes EAGERLY at schema
-  * inference (the reference runs it at bind time); the result is cached so
-  * action time does not re-execute, and every column is VARCHAR in
-  * first-row key order ("D1 returns strings anyway", :119-131). Empty
-  * result → single VARCHAR column named `result`.
+  * src/d1_functions.cpp:92-177). The query executes EAGERLY, once per
+  * `load()`, at schema inference (the reference runs it at bind time);
+  * the loaded table holds the rows, so its actions replay them without a
+  * second remote call, and a new `load()` sees the database as it is
+  * then. Every column is VARCHAR in first-row key order ("D1 returns
+  * strings anyway", :119-131). Empty result → single VARCHAR column
+  * named `result`.
   *
   * Usage: `spark.read.format("d1query").option("query", sql)...`
   */
 class D1QuerySource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "d1query"
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    D1QueryCache.resultFor(options)._1
+  /** The table `inferSchema` fetched, handed to the `getTable` of the
+    * same `load()`.
+    */
+  private var inferred: Option[D1QueryTable] = None
 
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: util.Map[String, String]): Table =
-    new D1QueryTable(new CaseInsensitiveStringMap(properties))
-}
-
-/** Bind-time execution cache: schema inference triggers the remote call;
-  * the scan replays the cached rows (mirrors the reference's
-  * execute-during-bind + reuse).
-  */
-object D1QueryCache {
-  private val cache = new java.util.concurrent.ConcurrentHashMap[String, (StructType, Seq[Seq[String]])]()
-
-  def resultFor(options: CaseInsensitiveStringMap): (StructType, Seq[Seq[String]]) = {
-    val sql = Option(options.get("query")).orElse(Option(options.get("sql"))).getOrElse(
-      throw new IllegalArgumentException("d1query requires option 'query'"))
-    val cfg = D1SourceUtil.configFrom(options)
-    val key = s"${cfg.apiBase}|${cfg.accountId}|${cfg.databaseId}|$sql"
-    cache.computeIfAbsent(key, _ => {
-      val res = D1Client.executeQuery(cfg, sql)
-      if (!res.success) throw new java.io.IOException(s"D1 query failed: ${res.error}")
-      if (res.rows.isEmpty) {
-        (StructType(Seq(StructField("result", StringType))), Nil)
-      } else {
-        val schema = StructType(res.columnOrder.map(c => StructField(c, StringType)))
-        val rows = res.rows.map(r => res.columnOrder.map(c => r.getOrElse(c, "")))
-        (schema, rows)
-      }
-    })
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
+    val t = D1QueryTable.fetch(options)
+    inferred = Some(t)
+    t.schema()
   }
 
-  def clear(): Unit = cache.clear()
+  override def getTable(schema: StructType, partitioning: Array[Transform],
+                        properties: util.Map[String, String]): Table = {
+    val t = inferred.getOrElse(D1QueryTable.fetch(new CaseInsensitiveStringMap(properties)))
+    inferred = None
+    t
+  }
 }
 
-class D1QueryTable(options: CaseInsensitiveStringMap) extends Table with SupportsRead {
+/** One executed `d1_query`: its all-VARCHAR schema and rows. */
+class D1QueryTable(fullSchema: StructType, rows: Seq[Seq[String]])
+    extends Table with SupportsRead {
   override def name(): String = "d1_query"
-  override def schema(): StructType = D1QueryCache.resultFor(options)._1
+  override def schema(): StructType = fullSchema
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(scanOptions: CaseInsensitiveStringMap): ScanBuilder = {
-    val merged = new util.HashMap[String, String](options)
-    merged.putAll(scanOptions)
-    val opts = new CaseInsensitiveStringMap(merged)
+  override def newScanBuilder(scanOptions: CaseInsensitiveStringMap): ScanBuilder =
     new ScanBuilder with SupportsPushDownRequiredColumns {
-      private val (fullSchema, rows) = D1QueryCache.resultFor(opts)
       private var pruned = fullSchema
       override def pruneColumns(requiredSchema: StructType): Unit = pruned = requiredSchema
       override def build(): Scan = new D1QueryScan(fullSchema, pruned, rows)
     }
+}
+
+object D1QueryTable {
+  def fetch(options: CaseInsensitiveStringMap): D1QueryTable = {
+    val sql = Option(options.get("query")).orElse(Option(options.get("sql"))).getOrElse(
+      throw new IllegalArgumentException("d1query requires option 'query'"))
+    val res = D1Client.checkedQuery(D1SourceUtil.configFrom(options), sql, "D1 query failed")
+    if (res.rows.isEmpty) new D1QueryTable(StructType(Seq(StructField("result", StringType))), Nil)
+    else new D1QueryTable(StructType(res.columnOrder.map(c => StructField(c, StringType))),
+      res.rows.map(r => res.columnOrder.map(c => r.getOrElse(c, ""))))
   }
 }
 

@@ -3,13 +3,13 @@ package graft.sources.d1
 import java.util
 
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.{SortOrder, Transform}
+import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -25,9 +25,11 @@ import graft.core.{Codecs, D1Client, Secrets}
   * `PRAGMA table_info(<table>)` mapped through SQLite affinity rules
   * (reference :37-64 + d1_http.cpp:723-763). Pushdown builds the same
   * remote SQL: comparison filters + AND conjunctions → WHERE string
-  * (:92-232), constant LIMIT → `LIMIT n` with node elimination, TopN →
-  * limit pushed / sort kept (:325-393). Projection is applied
-  * reader-side (the remote SQL stays `SELECT *`, like the reference).
+  * (:92-232), constant LIMIT → `LIMIT n` with node elimination. A
+  * sorted LIMIT (TopN) is not pushed: the remote SQL carries no ORDER
+  * BY, so a pushed `LIMIT n` would pick n arbitrary rows before Spark's
+  * sort. Projection is applied reader-side (the remote SQL stays
+  * `SELECT *`, like the reference).
   *
   * Scale: the D1 REST API is not range-partitionable — one
   * InputPartition, documented; D1 is a dimension-sized source that a real
@@ -45,33 +47,37 @@ class D1Source extends TableProvider with DataSourceRegister {
 }
 
 object D1SourceUtil {
+  /** [[Secrets.d1Config]] over an option map, which must name a database. */
   def configFrom(options: CaseInsensitiveStringMap): D1Client.Config = {
-    val conf: String => Option[String] = k =>
-      try Option(org.apache.spark.sql.SparkSession.active.conf.getOption(k)).flatten
-      catch { case _: Exception => None }
-    val secret = Option(options.get("secret"))
-      .flatMap(n => Secrets.lookup("d1", n, conf))
-      .orElse {
-        (Option(options.get("account_id")), Option(options.get("api_token"))) match {
-          case (Some(a), Some(t)) => Some(Secrets.Secret("__inline", "d1", a, t))
-          case _ => Secrets.resolveD1(None, conf)
-        }
-      }
-      .getOrElse(throw new IllegalArgumentException(
-        "d1 source requires a secret (option 'secret'), inline account_id/api_token, " +
-          "or CLOUDFLARE_ACCOUNT_ID/CLOUDFLARE_API_TOKEN environment"))
-    val apiBase = Option(options.get("api_base"))
-      .getOrElse("https://api.cloudflare.com/client/v4")
-    var cfg = Secrets.d1Config(secret, Option(options.get("database_id")).getOrElse(""), apiBase)
-    // database name → UUID resolution (36-char heuristic, d1_storage.cpp:75)
-    Option(options.get("database")).foreach { name =>
-      if (name.length == 36 && name.count(_ == '-') == 4) cfg = cfg.copy(databaseId = name)
-      else cfg = cfg.copy(databaseId = D1Client.databaseIdByName(cfg, name))
-    }
+    val cfg = Secrets.d1Config(k => Option(options.get(k)))
     if (cfg.databaseId.isEmpty)
       throw new IllegalArgumentException("database or database_id required")
     cfg
   }
+
+  /** A Catalyst value of type `dt` → SQLite literal text, for pushed
+    * filter values and written rows alike (reference ValueToSQL: strings
+    * ''-escaped, booleans 1/0). A TIMESTAMP renders in UTC as SQLite's
+    * `datetime()` form, `yyyy-MM-dd HH:mm:ss`, with `.ffffff` only when
+    * it has a sub-second part. None for a type with no literal form.
+    */
+  def sqlLiteral(v: Any, dt: DataType): Option[String] = (v, dt) match {
+    case (null, _) => Some("NULL")
+    case (s: UTF8String, _: StringType) => Some("'" + s.toString.replace("'", "''") + "'")
+    case (b: Boolean, BooleanType) => Some(if (b) "1" else "0")
+    case (micros: Long, TimestampType) =>
+      val t = java.time.LocalDateTime.ofEpochSecond(Math.floorDiv(micros, 1000000L),
+        (Math.floorMod(micros, 1000000L) * 1000L).toInt, java.time.ZoneOffset.UTC)
+      Some("'" + t.format(if (t.getNano == 0) SecondsFormat else MicrosFormat) + "'")
+    case (days: Int, DateType) => Some("'" + java.time.LocalDate.ofEpochDay(days.toLong) + "'")
+    case (bytes: Array[Byte], BinaryType) => Some("X'" + bytes.map("%02x".format(_)).mkString + "'")
+    case (d: Decimal, _: DecimalType) => Some(d.toJavaBigDecimal.toPlainString)
+    case (n, _: NumericType) => Some(n.toString)
+    case _ => None
+  }
+
+  private val SecondsFormat = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss")
+  private val MicrosFormat = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss.SSSSSS")
 
   def tableFor(options: CaseInsensitiveStringMap): D1ScanTable = {
     val table = Option(options.get("table")).getOrElse(
@@ -106,29 +112,20 @@ class D1ScanBuilder(config: D1Client.Config, tableName: String, fullSchema: Stru
     extends ScanBuilder
     with SupportsPushDownFilters
     with SupportsPushDownRequiredColumns
-    with SupportsPushDownLimit
-    with SupportsPushDownTopN {
+    with SupportsPushDownLimit {
 
   private var whereClause = ""
   private var limit: Long = 0L
   private var pushed: Vector[Filter] = Vector.empty
   private var prunedSchema: StructType = fullSchema
 
-  /** Literal → SQLite SQL text (reference ValueToSQL: strings
-    * ''-escaped, booleans 1/0).
+  /** A pushed filter value as a literal of its column's type. BLOB
+    * values stay unpushed: SQLite never equates a BLOB literal with the
+    * TEXT a BLOB-declared column may hold.
     */
-  private def lit(v: Any): Option[String] = v match {
-    case null => Some("NULL")
-    case s: String => Some("'" + s.replace("'", "''") + "'")
-    case b: Boolean => Some(if (b) "1" else "0")
-    case n @ (_: Int | _: Long | _: Short | _: Byte | _: Double | _: Float) => Some(n.toString)
-    case d: java.math.BigDecimal => Some(d.toPlainString)
-    case t: java.sql.Timestamp => Some("'" + t.toString + "'")
-    case t: java.time.Instant => Some("'" + t.toString + "'")
-    case d: java.sql.Date => Some("'" + d.toString + "'")
-    case d: java.time.LocalDate => Some("'" + d.toString + "'")
-    case _ => None
-  }
+  private def lit(c: String, v: Any): Option[String] =
+    fullSchema.find(_.name == c).map(_.dataType).filter(_ != BinaryType)
+      .flatMap(dt => D1SourceUtil.sqlLiteral(CatalystTypeConverters.convertToCatalyst(v), dt))
 
   private def toSql(f: Filter): Option[String] = f match {
     // IS [NOT] NULL: Catalyst emits IsNotNull with every comparison;
@@ -136,12 +133,12 @@ class D1ScanBuilder(config: D1Client.Config, tableName: String, fullSchema: Stru
     // can reach the scan.
     case IsNull(c) => Some(s"$c IS NULL")
     case IsNotNull(c) => Some(s"$c IS NOT NULL")
-    case EqualTo(c, v) => lit(v).map(l => s"$c = $l")
-    case Not(EqualTo(c, v)) => lit(v).map(l => s"$c != $l")
-    case GreaterThan(c, v) => lit(v).map(l => s"$c > $l")
-    case GreaterThanOrEqual(c, v) => lit(v).map(l => s"$c >= $l")
-    case LessThan(c, v) => lit(v).map(l => s"$c < $l")
-    case LessThanOrEqual(c, v) => lit(v).map(l => s"$c <= $l")
+    case EqualTo(c, v) => lit(c, v).map(l => s"$c = $l")
+    case Not(EqualTo(c, v)) => lit(c, v).map(l => s"$c != $l")
+    case GreaterThan(c, v) => lit(c, v).map(l => s"$c > $l")
+    case GreaterThanOrEqual(c, v) => lit(c, v).map(l => s"$c >= $l")
+    case LessThan(c, v) => lit(c, v).map(l => s"$c < $l")
+    case LessThanOrEqual(c, v) => lit(c, v).map(l => s"$c <= $l")
     case And(l, r) =>
       (toSql(l), toSql(r)) match {
         case (Some(a), Some(b)) => Some(s"($a AND $b)")
@@ -160,15 +157,6 @@ class D1ScanBuilder(config: D1Client.Config, tableName: String, fullSchema: Stru
   override def pushedFilters(): Array[Filter] = pushed.toArray
 
   override def pushLimit(l: Int): Boolean = { limit = l.toLong; true }
-
-  override def isPartiallyPushed: Boolean = false
-
-  override def pushTopN(orders: Array[SortOrder], l: Int): Boolean = {
-    // TopN: push limit into remote SQL, keep sort in plan (reference
-    // :327-351 keeps the TOP_N node).
-    limit = l.toLong
-    false
-  }
 
   override def pruneColumns(requiredSchema: StructType): Unit = prunedSchema = requiredSchema
 
@@ -215,11 +203,8 @@ class D1ReaderFactory extends PartitionReaderFactory {
 class D1PartitionReader(config: D1Client.Config, sql: String, schema: StructType)
     extends PartitionReader[InternalRow] {
 
-  private lazy val rows: Seq[scala.collection.immutable.ListMap[String, String]] = {
-    val res = D1Client.executeQuery(config, sql)
-    if (!res.success) throw new java.io.IOException(s"D1 query failed: ${res.error}")
-    res.rows
-  }
+  private lazy val rows: Seq[scala.collection.immutable.ListMap[String, String]] =
+    D1Client.checkedQuery(config, sql, "D1 query failed").rows
   private var pos = -1
 
   private def convert(value: String, dt: DataType): Any = dt match {

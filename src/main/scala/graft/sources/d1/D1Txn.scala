@@ -56,13 +56,26 @@ import graft.core.D1Client
   */
 object D1Txn {
 
-  private final class State {
-    val buffers =
+  /** Statements buffered per database config, in arrival order per
+    * database — one per open transaction here, one per
+    * [[D1BatchSession]]. Not thread-safe: the owner synchronizes.
+    */
+  private[d1] final class Buffer {
+    private val byDb =
       mutable.LinkedHashMap.empty[D1Client.Config, mutable.ArrayBuffer[String]]
+    def add(config: D1Client.Config, sql: String): Unit =
+      byDb.getOrElseUpdate(config, mutable.ArrayBuffer.empty) += sql
+    def pending: Seq[String] = byDb.values.flatten.toSeq
+    /** Empty the buffer, returning its batches. */
+    def drain(): Seq[(D1Client.Config, Seq[String])] = {
+      val out = byDb.toSeq.map { case (c, b) => (c, b.toSeq) }
+      byDb.clear()
+      out
+    }
   }
 
   /** sessionUUID → open-transaction buffer; presence == active. */
-  private val states = mutable.HashMap.empty[String, State]
+  private val states = mutable.HashMap.empty[String, Buffer]
 
   /** The calling thread's session id: the thread-active session, else
     * the JVM default (the only session in a single-session JVM — keeps
@@ -85,7 +98,7 @@ object D1Txn {
   def begin(sessionId: String): Unit = synchronized {
     if (states.contains(sessionId)) throw new IllegalStateException(
       "cannot start a transaction within a transaction")
-    states(sessionId) = new State
+    states(sessionId) = new Buffer
   }
 
   /** Buffer one statement (reference D1Transaction::BufferStatement,
@@ -95,9 +108,8 @@ object D1Txn {
     buffer(currentId, config, sql)
   def buffer(sessionId: String, config: D1Client.Config, sql: String): Unit =
     synchronized {
-      val st = states.getOrElse(sessionId, throw new IllegalStateException(
-        "no transaction is active"))
-      st.buffers.getOrElseUpdate(config, mutable.ArrayBuffer.empty) += sql
+      states.getOrElse(sessionId, throw new IllegalStateException(
+        "no transaction is active")).add(config, sql)
     }
 
   def bufferAll(config: D1Client.Config, sqls: Seq[String]): Unit = {
@@ -105,14 +117,10 @@ object D1Txn {
     synchronized { sqls.foreach(buffer(id, config, _)) }
   }
 
-  /** One batch POST per touched database; error wording from
-    * D1Transaction::Commit (d1_transaction.cpp:30-45). The transaction
-    * ends even if a flush fails — earlier statements may have committed
-    * remotely and a retry would double-apply them. EVERY touched
-    * database is attempted even when an earlier one fails (a first-
-    * failure throw would silently discard the later databases' buffers,
-    * which were already cleared); failures are aggregated into one
-    * exception.
+  /** One batch POST per touched database through [[commitBatches]]
+    * (reference D1Transaction::Commit, d1_transaction.cpp:30-45). The
+    * transaction ends even if a flush fails: earlier statements may have
+    * committed remotely and a retry would double-apply them.
     */
   def commit(): Unit = commit(currentId)
   def commit(sessionId: String): Unit =
@@ -124,18 +132,30 @@ object D1Txn {
 
   private[graft] def commitWith(sessionId: String,
       post: (D1Client.Config, Seq[String]) => Seq[D1Client.QueryResult]): Unit = {
-    val toFlush = synchronized {
-      val st = states.remove(sessionId).getOrElse(throw new IllegalStateException(
-        "cannot commit - no transaction is active"))
-      st.buffers.toSeq.map { case (c, b) => (c, b.toSeq) }
+    val batches = synchronized {
+      states.remove(sessionId).getOrElse(throw new IllegalStateException(
+        "cannot commit - no transaction is active")).drain()
     }
+    commitBatches(batches, post)
+  }
+
+  /** The one batch commit, behind `COMMIT`, [[D1BatchSession.commit]] and
+    * the d1 writer's per-task flush: one batch POST per database, each
+    * statement's result checked. EVERY database is attempted even when an
+    * earlier one fails (a first-failure throw would silently discard the
+    * later databases' statements, already drained); failures are
+    * aggregated into one exception.
+    */
+  private[d1] def commitBatches(batches: Seq[(D1Client.Config, Seq[String])],
+      send: (D1Client.Config, Seq[String]) => Seq[D1Client.QueryResult] =
+        D1Client.executeBatch): Unit = {
     val failures = mutable.ArrayBuffer.empty[String]
-    toFlush.foreach { case (cfg, stmts) =>
+    batches.foreach { case (cfg, stmts) =>
       if (stmts.nonEmpty) {
         try {
-          post(cfg, stmts).zipWithIndex.foreach { case (r, i) =>
+          send(cfg, stmts).zipWithIndex.foreach { case (r, i) =>
             if (!r.success)
-              failures += s"database ${cfg.databaseId} statement $i failed: ${r.error}"
+              failures += s"database ${cfg.databaseId} statement ${i + 1} failed: ${r.error}"
           }
         } catch {
           case e: Exception =>
@@ -144,8 +164,8 @@ object D1Txn {
       }
     }
     if (failures.nonEmpty) throw new java.io.IOException(
-      s"D1 batch commit failed (all touched databases were attempted): " +
-        failures.mkString("; "))
+      "D1 batch commit failed (every database was attempted; earlier statements " +
+        "may have committed remotely): " + failures.mkString("; "))
   }
 
   def rollback(): Unit = rollback(currentId)
@@ -157,7 +177,7 @@ object D1Txn {
   /** Buffered statements across all databases, in buffer order (tests). */
   def pending: Seq[String] = pending(currentId)
   def pending(sessionId: String): Seq[String] = synchronized(
-    states.get(sessionId).toSeq.flatMap(_.buffers.values.flatten))
+    states.get(sessionId).toSeq.flatMap(_.pending))
 
   /** Job local-property key the BEGIN/COMMIT/ROLLBACK commands set to
     * the owning session's id, so a task — local-mode (same JVM, buffer

@@ -2,7 +2,7 @@ package graft.sources.d1
 
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.core.D1Client
 
@@ -58,46 +58,19 @@ class D1DataWriter(config: D1Client.Config, tableName: String, schema: StructTyp
 
   private val buffer = scala.collection.mutable.ArrayBuffer.empty[String]
 
-  private def sqlLit(v: Any, dt: DataType): String = {
-    if (v == null) "NULL"
-    else dt match {
-      case StringType => "'" + v.toString.replace("'", "''") + "'"
-      case BooleanType => if (v.asInstanceOf[Boolean]) "1" else "0"
-      case TimestampType =>
-        val micros = v.asInstanceOf[Long]
-        "'" + java.time.LocalDateTime.ofEpochSecond(
-          micros / 1000000L, ((micros % 1000000L) * 1000L).toInt,
-          java.time.ZoneOffset.UTC).toString.replace('T', ' ') + "'"
-      case DateType =>
-        "'" + java.time.LocalDate.ofEpochDay(v.asInstanceOf[Int].toLong).toString + "'"
-      case BinaryType =>
-        "X'" + v.asInstanceOf[Array[Byte]].map("%02x".format(_)).mkString + "'"
-      case _: org.apache.spark.sql.types.NumericType => v.toString
-      case other =>
-        throw new UnsupportedOperationException(
-          s"d1 writer does not support column type ${other.simpleString}")
-    }
-  }
-
   override def write(record: InternalRow): Unit = {
     val values = schema.fields.zipWithIndex.map { case (f, i) =>
-      sqlLit(if (record.isNullAt(i)) null else record.get(i, f.dataType), f.dataType)
+      val v = if (record.isNullAt(i)) null else record.get(i, f.dataType)
+      D1SourceUtil.sqlLiteral(v, f.dataType).getOrElse(throw new UnsupportedOperationException(
+        s"d1 writer does not support column type ${f.dataType.simpleString}"))
     }
     buffer += s"INSERT INTO $tableName (${schema.fieldNames.mkString(", ")}) VALUES (${values.mkString(", ")})"
     if (!deferred && buffer.size >= batchSize) flush()
   }
 
   private def flush(): Unit = {
-    if (buffer.nonEmpty) {
-      val results = D1Client.executeBatch(config, buffer.toSeq)
-      results.zipWithIndex.foreach { case (r, i) =>
-        if (!r.success)
-          throw new java.io.IOException(
-            s"D1 batch statement ${i + 1} failed: ${r.error} " +
-              "(earlier statements may have committed — D1 is non-transactional)")
-      }
-      buffer.clear()
-    }
+    D1Txn.commitBatches(Seq(config -> buffer.toSeq))
+    buffer.clear()
   }
 
   override def commit(): WriterCommitMessage =
@@ -121,40 +94,27 @@ case class D1DeferredStatements(statements: Seq[String]) extends WriterCommitMes
   * buffer; it cannot undo remotely-committed statements.
   */
 class D1BatchSession(config: D1Client.Config) {
-  private val buffer = scala.collection.mutable.ArrayBuffer.empty[String]
+  private val buffer = new D1Txn.Buffer
   private var active = false
 
-  def begin(): Unit = { buffer.clear(); active = true }
+  def begin(): Unit = { buffer.drain(); active = true }
 
   /** Buffer a write inside a transaction, or execute immediately outside
     * one (reference d1_transaction.cpp:60-70).
     */
-  def execute(sql: String): Long = {
-    if (active) { buffer += sql; 0L }
-    else {
-      val r = D1Client.executeQuery(config, sql)
-      if (!r.success) throw new java.io.IOException(s"D1 execute failed: ${r.error}")
-      r.meta.changes
-    }
-  }
+  def execute(sql: String): Long =
+    if (active) { buffer.add(config, sql); 0L }
+    else D1Client.checkedQuery(config, sql, "D1 execute failed").meta.changes
 
   /** Reads bypass the buffer — no read-your-writes inside a txn. */
   def query(sql: String): D1Client.QueryResult = D1Client.executeQuery(config, sql)
 
-  def commit(): Unit = {
-    if (buffer.nonEmpty) {
-      val results = D1Client.executeBatch(config, buffer.toSeq)
-      results.zipWithIndex.foreach { case (r, i) =>
-        if (!r.success)
-          throw new java.io.IOException(
-            s"D1 transaction statement ${i + 1} failed: ${r.error} " +
-              "(earlier statements may have committed remotely)")
-      }
-    }
-    buffer.clear(); active = false
-  }
+  /** Posts the buffer as one batch through [[D1Txn.commitBatches]]. The
+    * transaction ends even if the batch fails, as `COMMIT` does.
+    */
+  def commit(): Unit = { active = false; D1Txn.commitBatches(buffer.drain()) }
 
-  def rollback(): Unit = { buffer.clear(); active = false }
+  def rollback(): Unit = { buffer.drain(); active = false }
 
-  def pendingStatements: Seq[String] = buffer.toSeq
+  def pendingStatements: Seq[String] = buffer.pending
 }

@@ -49,11 +49,20 @@ object Iceberg {
     new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
   }
 
+  /** A namespace's REST path segment: a multipart namespace joins with
+    * the percent-encoded unit separator (%1F), per the REST spec.
+    */
+  private[iceberg] def namespacePath(namespace: Seq[String]): String =
+    namespace.map(Http.encodeUrl).mkString("%1F")
+
+  /** The REST path of a table's LoadTableResult. */
+  private[iceberg] def tablePath(namespace: Seq[String], table: String): String =
+    s"/v1/namespaces/${namespacePath(namespace)}/tables/${Http.encodeUrl(table)}"
+
   /** LoadTableResult → TableMeta (inline metadata or metadata-location). */
   private[iceberg] def resolveMeta(conf: Configuration, uri: String, token: String,
                                    namespace: Seq[String], table: String): IcebergMeta.TableMeta = {
-    val ns = Http.encodeUrl(namespace.mkString(""))
-    val result = getJson(uri, token, s"/v1/namespaces/$ns/tables/${Http.encodeUrl(table)}")
+    val result = getJson(uri, token, tablePath(namespace, table))
     Option(result.get("metadata")) match {
       case Some(m) if !m.isNull => IcebergMeta.parseNode(m)
       case _ =>

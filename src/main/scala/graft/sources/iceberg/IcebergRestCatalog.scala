@@ -9,7 +9,7 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import scala.jdk.CollectionConverters._
 
-import graft.core.{Http, Secrets}
+import graft.core.Secrets
 
 /** Read-only Spark `TableCatalog` over the Iceberg REST catalog
   * protocol (the open API R2 SQL's catalog speaks) — the "real lake"
@@ -62,12 +62,6 @@ class IcebergRestCatalog extends TableCatalog with SupportsNamespaces {
 
   private def getJson(path: String): JsonNode = Iceberg.getJson(uri, token, path)
 
-  /** Multipart namespaces join with the percent-encoded unit separator
-    * (%1F) per the REST spec.
-    */
-  private def nsPath(namespace: Array[String]): String =
-    namespace.map(Http.encodeUrl).mkString("%1F")
-
   // ---- namespaces ----------------------------------------------------
 
   override def listNamespaces(): Array[Array[String]] = {
@@ -93,7 +87,7 @@ class IcebergRestCatalog extends TableCatalog with SupportsNamespaces {
   // ---- tables --------------------------------------------------------
 
   override def listTables(namespace: Array[String]): Array[Identifier] = {
-    val node = getJson(s"/v1/namespaces/${nsPath(namespace)}/tables")
+    val node = getJson(s"/v1/namespaces/${Iceberg.namespacePath(namespace.toSeq)}/tables")
     Option(node.get("identifiers")).toArray
       .flatMap(_.elements().asScala)
       .map { id =>
@@ -107,7 +101,7 @@ class IcebergRestCatalog extends TableCatalog with SupportsNamespaces {
     try { loadTableResult(ident); true } catch { case _: Exception => false }
 
   private def loadTableResult(ident: Identifier): JsonNode =
-    getJson(s"/v1/namespaces/${nsPath(ident.namespace())}/tables/${Http.encodeUrl(ident.name())}")
+    getJson(Iceberg.tablePath(ident.namespace().toSeq, ident.name()))
 
   override def loadTable(ident: Identifier): Table = loadTableAt(ident, None)
 

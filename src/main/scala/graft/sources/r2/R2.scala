@@ -35,8 +35,11 @@ import graft.core.{Http, Secrets}
   */
 object R2 {
 
+  /** The R2 SQL API base every passthrough surface defaults to. */
+  val DefaultApiBase = "https://api.sql.cloudflarestorage.com"
+
   case class Config(accountId: String, apiToken: String, bucket: String,
-                    apiBase: String = "https://api.sql.cloudflarestorage.com") {
+                    apiBase: String = DefaultApiBase) {
     def queryUrl: String = s"$apiBase/api/v1/accounts/$accountId/r2-sql/query/$bucket"
   }
 
@@ -58,36 +61,56 @@ object R2 {
     raw
   }
 
-  private def configOf(spark: SparkSession, secretName: String, bucket: String,
-                       apiBase: String): Config = {
-    val conf: String => Option[String] = k => spark.conf.getOption(k)
-    val s = Secrets.lookup("r2_sql", secretName, conf).getOrElse(
-      throw new IllegalArgumentException(s"r2_sql secret '$secretName' not found"))
-    Config(s.accountId, s.apiToken, bucket, apiBase)
+  /** One passthrough function: its result column, the `r2sql` option
+    * holding its argument, and the SQL it sends for that argument.
+    */
+  private[r2] final case class Passthrough(column: String, argOption: Option[String],
+                                           sql: Option[String] => String)
+
+  private val functions = Map(
+    "query" -> Passthrough("response", Some("query"), _.getOrElse(
+      throw new IllegalArgumentException("r2sql requires option 'query'"))),
+    "databases" -> Passthrough("namespace", None, _ => "SHOW DATABASES"),
+    "tables" -> Passthrough("table_name", Some("namespace"),
+      _.filter(_.nonEmpty).fold("SHOW TABLES")(ns => s"SHOW TABLES IN $ns")),
+    "describe" -> Passthrough("schema", Some("table"), t => s"DESCRIBE ${t.orNull}"))
+
+  /** The named function; any other name is `query`. */
+  private[r2] def function(name: String): Passthrough = functions.getOrElse(name, functions("query"))
+
+  /** Run one passthrough function against `bucket` with the `r2_sql`
+    * secret `secret`; returns the raw JSON response.
+    */
+  private[r2] def call(spark: SparkSession, name: String, secret: String, bucket: String,
+                       arg: Option[String], apiBase: String): String = {
+    val sql = function(name).sql(arg)
+    val s = Secrets.lookup("r2_sql", secret, k => spark.conf.getOption(k)).getOrElse(
+      throw new IllegalArgumentException(s"r2_sql secret '$secret' not found"))
+    query(Config(s.accountId, s.apiToken, bucket, apiBase), sql)
   }
 
-  private def oneRow(spark: SparkSession, colName: String, value: String): DataFrame =
+  /** Eager form: one row × one VARCHAR column holding the response. */
+  private def eager(spark: SparkSession, name: String, secret: String, bucket: String,
+                    arg: Option[String], apiBase: String): DataFrame =
     spark.createDataFrame(
-      spark.sparkContext.parallelize(Seq(Row(value)), 1),
-      StructType(Seq(StructField(colName, StringType))))
+      spark.sparkContext.parallelize(Seq(Row(call(spark, name, secret, bucket, arg, apiBase))), 1),
+      StructType(Seq(StructField(function(name).column, StringType))))
 
   def sqlQuery(spark: SparkSession, secret: String, bucket: String, sql: String,
-               apiBase: String = "https://api.sql.cloudflarestorage.com"): DataFrame =
-    oneRow(spark, "response", query(configOf(spark, secret, bucket, apiBase), sql))
+               apiBase: String = DefaultApiBase): DataFrame =
+    eager(spark, "query", secret, bucket, Some(sql), apiBase)
 
   def databases(spark: SparkSession, secret: String, bucket: String,
-                apiBase: String = "https://api.sql.cloudflarestorage.com"): DataFrame =
-    oneRow(spark, "namespace", query(configOf(spark, secret, bucket, apiBase), "SHOW DATABASES"))
+                apiBase: String = DefaultApiBase): DataFrame =
+    eager(spark, "databases", secret, bucket, None, apiBase)
 
   def tables(spark: SparkSession, secret: String, bucket: String, namespace: String = "",
-             apiBase: String = "https://api.sql.cloudflarestorage.com"): DataFrame = {
-    val sql = if (namespace.isEmpty) "SHOW TABLES" else s"SHOW TABLES IN $namespace"
-    oneRow(spark, "table_name", query(configOf(spark, secret, bucket, apiBase), sql))
-  }
+             apiBase: String = DefaultApiBase): DataFrame =
+    eager(spark, "tables", secret, bucket, Some(namespace), apiBase)
 
   def describe(spark: SparkSession, secret: String, bucket: String, table: String,
-               apiBase: String = "https://api.sql.cloudflarestorage.com"): DataFrame =
-    oneRow(spark, "schema", query(configOf(spark, secret, bucket, apiBase), s"DESCRIBE $table"))
+               apiBase: String = DefaultApiBase): DataFrame =
+    eager(spark, "describe", secret, bucket, Some(table), apiBase)
 }
 
 /** DSv2 form: `spark.read.format("r2sql").option("secret", ...)
@@ -96,22 +119,17 @@ object R2 {
 class R2SqlSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "r2sql"
 
-  private def colFor(options: CaseInsensitiveStringMap): String =
-    Option(options.get("function")).getOrElse("query") match {
-      case "databases" => "namespace"
-      case "tables"    => "table_name"
-      case "describe"  => "schema"
-      case _            => "response"
-    }
+  private def functionName(options: CaseInsensitiveStringMap): String =
+    Option(options.get("function")).getOrElse("query")
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    StructType(Seq(StructField(colFor(options), StringType)))
+    StructType(Seq(StructField(R2.function(functionName(options)).column, StringType)))
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: util.Map[String, String]): Table = {
     val options = new CaseInsensitiveStringMap(properties)
     new Table with SupportsRead {
-      override def name(): String = "r2_sql_" + Option(options.get("function")).getOrElse("query")
+      override def name(): String = "r2_sql_" + functionName(options)
       override def schema(): StructType = inferSchema(options)
       override def capabilities(): util.Set[TableCapability] =
         util.EnumSet.of(TableCapability.BATCH_READ)
@@ -121,27 +139,14 @@ class R2SqlSource extends TableProvider with DataSourceRegister {
           override def readSchema(): StructType = out
           override def toBatch: Batch = this
           override def planInputPartitions(): Array[InputPartition] = {
-            val spark = org.apache.spark.sql.SparkSession.active
             val secret = Option(options.get("secret")).getOrElse(
               throw new IllegalArgumentException("r2sql requires option 'secret'"))
             val bucket = Option(options.get("bucket")).getOrElse(
               throw new IllegalArgumentException("r2sql requires option 'bucket'"))
-            val apiBase = Option(options.get("api_base"))
-              .getOrElse("https://api.sql.cloudflarestorage.com")
-            val sql = Option(options.get("function")).getOrElse("query") match {
-              case "databases" => "SHOW DATABASES"
-              case "tables" =>
-                Option(options.get("namespace")).filter(_.nonEmpty)
-                  .map(ns => s"SHOW TABLES IN $ns").getOrElse("SHOW TABLES")
-              case "describe" => s"DESCRIBE ${options.get("table")}"
-              case _ => Option(options.get("query")).getOrElse(
-                throw new IllegalArgumentException("r2sql requires option 'query'"))
-            }
-            val conf: String => Option[String] = k => spark.conf.getOption(k)
-            val s = Secrets.lookup("r2_sql", secret, conf).getOrElse(
-              throw new IllegalArgumentException(s"r2_sql secret '$secret' not found"))
-            val raw = R2.query(R2.Config(s.accountId, s.apiToken, bucket, apiBase), sql)
-            Array(R2Partition(raw))
+            val fn = functionName(options)
+            Array(R2Partition(R2.call(org.apache.spark.sql.SparkSession.active, fn, secret, bucket,
+              R2.function(fn).argOption.flatMap(k => Option(options.get(k))),
+              Option(options.get("api_base")).getOrElse(R2.DefaultApiBase))))
           }
           override def createReaderFactory(): PartitionReaderFactory =
             (partition: InputPartition) => new PartitionReader[InternalRow] {

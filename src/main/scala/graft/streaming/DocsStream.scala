@@ -549,61 +549,4 @@ object DocsStream {
     q.processAllAvailable()
     q.stop()
   }
-
-  /** The curated stream landing as TRAINING SHARDS: same plant → redact
-    * → sample pipeline as [[runCurationAsStream]], but the sink is
-    * `foreachBatch` appending language-partitioned parquet — the
-    * streaming counterpart of [[graft.operators.ShardWriter]] (append
-    * per micro-batch instead of overwrite; each batch's files are
-    * internally sorted, directories accumulate across batches). This is
-    * the ingestion-to-lake path: the qs06 gate reads the shards BACK
-    * and holds them to the same SQL oracle as the in-stream summary, so
-    * the file-commit path itself is correctness-gated.
-    */
-  def runCurationToShards(spark: SparkSession, inputDir: String,
-                          outDir: String): Unit = {
-    val schema = spark.read.parquet(inputDir).schema
-    val stream = spark.readStream.schema(schema).parquet(inputDir)
-    val curated = graft.operators.Sampling.hashSample(
-      stream
-        .withColumn("t", graft.queries.Curation.plantPii(col("doc_id"), col("text")))
-        .withColumn("redacted", TextFunctions.piiRedact(col("t"))),
-      "doc_id", numerator = 20)
-      .select(col("doc_id"), col("lang"), col("redacted"))
-    val q = curated.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.repartition(col("lang"))
-          .sortWithinPartitions(col("lang"), col("doc_id"))
-          .write.mode("append").partitionBy("lang").parquet(outDir)
-      }
-      .option("checkpointLocation", graft.core.TempDirs.deleteOnExit(
-        java.nio.file.Files.createTempDirectory("qs06ckpt").toString))
-      .start()
-    q.processAllAvailable()
-    q.stop()
-  }
-
-  /** Plant synthetic PII → redact → deterministic md5-prefix sample →
-    * per-language counts over the redacted text, as a real Structured
-    * Streaming query (parquet file source → memory sink,
-    * `processAllAvailable`).
-    */
-  def runCurationAsStream(spark: SparkSession, inputDir: String,
-                          queryName: String): DataFrame = {
-    val schema = spark.read.parquet(inputDir).schema
-    val stream = spark.readStream.schema(schema).parquet(inputDir)
-    val curated = graft.operators.Sampling.hashSample(
-      stream
-        .withColumn("t", graft.queries.Curation.plantPii(col("doc_id"), col("text")))
-        .withColumn("redacted", TextFunctions.piiRedact(col("t"))),
-      "doc_id", numerator = 20)
-    val agg = curated.groupBy(col("lang"))
-      .agg(count(lit(1)).as("n"),
-        sum(length(col("redacted"))).cast("long").as("sum_chars"))
-    val q = agg.writeStream.outputMode("complete")
-      .format("memory").queryName(queryName).start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(queryName)
-  }
 }

@@ -661,6 +661,100 @@ class ConnectorSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(batches.exists(_.contains("'dave'")))
   }
 
+  private val d1Db = "11111111-2222-3333-4444-555555555555"
+
+  private def d1Sqls(table: String): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    stub.requests.asScala.map(_._2).filter(_.contains(s"SELECT * FROM $table")).toSeq
+  }
+
+  test("d1 scan: a sorted LIMIT is not pushed without its ORDER BY") {
+    stub.requests.clear()
+    val rows = d1Reader.option("table", "users").load()
+      .orderBy(col("id").desc).limit(1).collect()
+    assert(rows.map(_.getLong(0)).toSeq == Seq(4L))
+    val sqls = d1Sqls("users")
+    assert(sqls.nonEmpty && sqls.forall(s => !s.contains("LIMIT") || s.contains("ORDER BY")),
+      sqls.mkString(";"))
+  }
+
+  test("d1 query passthrough: each load runs the query once and sees the rows as they are then") {
+    Secrets.register(Secrets.Secret("d1q_test", "d1", "acct", "tok"))
+    try {
+      val api = s"${stub.base}/client/v4"
+      def exec(sql: String) = graft.sources.d1.D1.execute(sql, Some("d1q_test"), d1Db, api)
+      def kv = spark.read.format("d1query").option("api_base", api)
+        .option("secret", "d1q_test").option("database_id", d1Db)
+        .option("query", "SELECT * FROM kv_test").load()
+      def pairs(df: DataFrame) = df.collect().map(r => (r.getString(0), r.getString(1))).toSeq
+      exec("DELETE FROM kv_test")
+      exec("INSERT INTO kv_test (k, v) VALUES ('a', 1)")
+      assert(pairs(kv) == Seq(("a", "1")))
+      exec("INSERT INTO kv_test (k, v) VALUES ('b', 2)")
+      stub.requests.clear()
+      val df = kv
+      assert(df.count() == 2L)
+      assert(pairs(df) == Seq(("a", "1"), ("b", "2")))
+      assert(d1Sqls("kv_test").size == 1, "one load posts its query once")
+    } finally Secrets.drop("d1", "d1q_test")
+  }
+
+  test("d1 literal: a TIMESTAMP renders the same when written and when pushed") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.sources.EqualTo
+    import org.apache.spark.sql.types._
+    import graft.sources.d1.{D1DataWriter, D1DeferredStatements, D1Scan, D1ScanBuilder}
+    val schema = StructType(Seq(StructField("id", LongType), StructField("ts", TimestampType)))
+    val cfg = graft.core.D1Client.Config("acct", "tok", d1Db, s"${stub.base}/client/v4")
+    def pushed(v: Any): String = {
+      val b = new D1ScanBuilder(cfg, "events", schema)
+      assert(b.pushFilters(Array(EqualTo("ts", v))).isEmpty)
+      b.build().asInstanceOf[D1Scan].remoteSql
+    }
+    def written(micros: Long): String = {
+      val w = new D1DataWriter(cfg, "events", schema, deferred = true)
+      w.write(InternalRow(1L, micros))
+      w.commit().asInstanceOf[D1DeferredStatements].statements.head
+    }
+    for ((text, lit) <- Seq(
+        "2024-01-01T10:00:00Z" -> "'2024-01-01 10:00:00'",
+        "2024-01-01T10:00:00.123456Z" -> "'2024-01-01 10:00:00.123456'",
+        "1969-12-31T23:59:59.500Z" -> "'1969-12-31 23:59:59.500000'")) {
+      val at = java.time.Instant.parse(text)
+      val micros = at.getEpochSecond * 1000000L + at.getNano / 1000
+      assert(written(micros) == s"INSERT INTO events (id, ts) VALUES (1, $lit)")
+      assert(pushed(java.sql.Timestamp.from(at)) == s"SELECT * FROM events WHERE ts = $lit")
+      assert(pushed(at) == s"SELECT * FROM events WHERE ts = $lit")
+    }
+  }
+
+  test("d1 secret: a named secret that does not exist fails, default secret or not") {
+    val saved = Secrets.lookup("d1", "__default_d1")
+    Secrets.register(Secrets.Secret("__default_d1", "d1", "acct", "tok"))
+    val want = "D1 secret 'no_such' not found. Create it with: CREATE SECRET no_such (TYPE d1, ...)"
+    def messages(e: Throwable): String =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+        .map(t => Option(t.getMessage).getOrElse("")).mkString(" | ")
+    try {
+      val viaSource = intercept[Exception] {
+        spark.read.format("d1").option("api_base", s"${stub.base}/client/v4")
+          .option("secret", "no_such").option("database_id", d1Db)
+          .option("table", "users").load().collect()
+      }
+      assert(messages(viaSource).contains(want), messages(viaSource))
+      spark.conf.set("spark.sql.catalog.nosuchdb", "graft.sources.d1.D1Catalog")
+      spark.conf.set("spark.sql.catalog.nosuchdb.secret", "no_such")
+      spark.conf.set("spark.sql.catalog.nosuchdb.database_id", d1Db)
+      spark.conf.set("spark.sql.catalog.nosuchdb.api_base", s"${stub.base}/client/v4")
+      val viaCatalog = intercept[Exception](spark.sql("SHOW TABLES IN nosuchdb.main").collect())
+      assert(messages(viaCatalog).contains(want), messages(viaCatalog))
+    } finally {
+      saved.fold(Secrets.drop("d1", "__default_d1"))(Secrets.register)
+      Seq("", ".secret", ".database_id", ".api_base")
+        .foreach(k => spark.conf.unset(s"spark.sql.catalog.nosuchdb$k"))
+    }
+  }
+
   // ---- r2 -------------------------------------------------------------
   test("r2 sql passthrough surfaces") {
     Secrets.register(Secrets.Secret("r2", "r2_sql", "acct", "tok"))

@@ -290,4 +290,28 @@ class IcebergCatalogSpec extends AnyFunSuite {
     }
     assert(e.getMessage.toLowerCase.contains("table"), e.getMessage)
   }
+
+  test("a two-level namespace reaches the REST catalog joined with %1F") {
+    import scala.jdk.CollectionConverters._
+    val rest = new graft.fixtures.Stub().start()
+    rest.route("/ice/v1/") { ex =>
+      if (ex.getRequestURI.getPath.endsWith("/tables")) (200, """{"identifiers":[]}""".getBytes("UTF-8"))
+      else (404, "not found".getBytes("UTF-8"))
+    }
+    try {
+      val uri = s"${rest.base}/ice"
+      spark.conf.set("spark.sql.catalog.twolevel", "graft.sources.iceberg.IcebergRestCatalog")
+      spark.conf.set("spark.sql.catalog.twolevel.uri", uri)
+      intercept[Exception](graft.sources.iceberg.Iceberg.read(spark, uri, Seq("a", "b"), "t"))
+      intercept[Exception](spark.sql("SELECT * FROM twolevel.a.b.t").collect())
+      assert(spark.sql("SHOW TABLES IN twolevel.a.b").collect().isEmpty)
+      val paths = rest.requests.asScala.map(_._1).filter(_.contains("/namespaces/")).toSeq
+      assert(paths.count(_.endsWith("/ice/v1/namespaces/a%1Fb/tables/t")) == 2, paths)
+      assert(paths.contains("/ice/v1/namespaces/a%1Fb/tables"), paths)
+      assert(paths.forall(_.contains("/namespaces/a%1Fb/")), paths)
+    } finally {
+      rest.stop()
+      Seq("", ".uri").foreach(k => spark.conf.unset(s"spark.sql.catalog.twolevel$k"))
+    }
+  }
 }
