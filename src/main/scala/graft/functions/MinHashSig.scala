@@ -9,7 +9,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** text → MinHash signature as a native expression — the codegen'd form
-  * of [[graft.operators.Dedup]]'s signature UDF (VERDICT r17 probe #3).
+  * of the signature UDF (VERDICT r17 probe #3; the UDF is the specs'
+  * parity reference).
   * Hash family, shingling, and output are BIT-IDENTICAL to the UDF
   * (same `Random(42)` permutation derivation, same murmur3 shingle
   * hash, same `(a·x + b) mod p` fold over the same de-duplicated
@@ -80,46 +81,10 @@ object MinHashSig {
       MinHashSigExpr(GraftColumnShim.expression(text), numPerm, k))
   }
 
-  /** Kernel for the VERIFY-HASH pass — the native form of
-    * [[graft.operators.Dedup]]'s `shingle_hashes64` UDF, bit-identical
-    * output (same shingling, same murmur3 double-hash to 64 bits, same
-    * sorted-distinct contract). Null for sub-shingle-length docs.
-    */
-  def evalHashes(s: UTF8String, k: Int): ArrayData = {
-    val sh = graft.operators.Dedup.shingleStrings(s.toString, k)
-    if (sh.isEmpty) return null
-    val out = new Array[Long](sh.length)
-    var i = 0
-    while (i < sh.length) {
-      val h1 = scala.util.hashing.MurmurHash3.stringHash(sh(i), 42)
-      val h2 = scala.util.hashing.MurmurHash3.stringHash(sh(i), 0x5bd1e995)
-      out(i) = (h1.toLong << 32) | (h2.toLong & 0xffffffffL)
-      i += 1
-    }
-    java.util.Arrays.sort(out)
-    var n = 0
-    var j = 0
-    while (j < out.length) {
-      if (j == 0 || out(j) != out(j - 1)) { out(n) = out(j); n += 1 }
-      j += 1
-    }
-    UnsafeArrayData.fromPrimitiveArray(
-      if (n == out.length) out else java.util.Arrays.copyOf(out, n))
-  }
-
-  /** Column API: sorted distinct 64-bit shingle hashes (null when the
-    * text has fewer than `k` words) — the verify-join input.
-    */
-  def shingleHashes(text: Column, k: Int): Column = {
-    require(k > 0, s"need k > 0, got $k")
-    GraftColumnShim.column(
-      ShingleHashes64Expr(GraftColumnShim.expression(text), k))
-  }
-
   private val Whitespace = java.util.regex.Pattern.compile("\\s+")
 
-  /** Kernel for the SIMHASH fold — the native form of
-    * [[graft.operators.Dedup]]'s `simhash` UDF chain. The UDF receives a
+  /** Kernel for the SIMHASH fold — the native form of the `simhash` UDF
+    * chain (the specs' parity reference). The UDF receives a
     * Spark-side `split(lower(trim(text)), "\\s+")` ARRAY and converts it
     * element-by-element to a boxed `Seq[String]`; this kernel takes the
     * lowered/trimmed STRING (the same Spark expressions feed it, so
@@ -183,45 +148,6 @@ case class SimHash64Expr(child: Expression) extends UnaryExpression {
     defineCodeGen(ctx, ev, c => s"graft.functions.MinHashSig.evalSimhash($c)")
 
   override protected def withNewChildInternal(newChild: Expression): SimHash64Expr =
-    copy(child = newChild)
-}
-
-/** Sorted distinct 64-bit shingle hashes — see
-  * [[MinHashSig.evalHashes]]. Same codegen shape as [[MinHashSigExpr]].
-  * NOT wired into the operators: the A/B measured −11% at sf1 and a
-  * wash at sf10 (no numPerm×shingles arithmetic to amortize the wrapper
-  * against; scan-dominated by sf10 — SCALE.md round 18), so the UDF
-  * stays in the verify/build paths and this expression exists as the
-  * probe's reproducible B-side (`q47hash_kern`) with its parity spec.
-  */
-case class ShingleHashes64Expr(child: Expression, k: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
-  // the UDF's display name, for the same plan-pin reason as minhash_sig
-  override def prettyName: String = "shingle_hashes64"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-    child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"shingle_hashes64 requires a string argument, got ${other.simpleString}")
-    }
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    MinHashSig.evalHashes(input.asInstanceOf[UTF8String], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      |${ev.value} = graft.functions.MinHashSig.evalHashes($c, $k);
-      |${ev.isNull} = ${ev.value} == null;
-      |""".stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): ShingleHashes64Expr =
     copy(child = newChild)
 }
 

@@ -50,19 +50,6 @@ object ParagraphDedup {
   def unitsByWordWindow(text: Column, n: Int, wordSep: String = " "): Column =
     graft.functions.WordWindows.windows(coalesce(text, lit("")), n, wordSep)
 
-  /** The composite-expression reference `unitsByWordWindow` is pinned
-    * against (ParagraphDedupSpec) — kept only as the spec's executable
-    * specification of the window semantics.
-    */
-  private[graft] def unitsByWordWindowReference(text: Column, n: Int,
-                                                wordSep: String = " "): Column = {
-    require(n > 0, s"window must be > 0, got $n")
-    val words = split(coalesce(text, lit("")), java.util.regex.Pattern.quote(wordSep))
-    val nWin = floor((size(words) + lit(n - 1)).cast("double") / lit(n)).cast("long")
-    transform(sequence(lit(0L), nWin - lit(1L)),
-      i => array_join(slice(words, (i * n + 1).cast("int"), lit(n)), wordSep))
-  }
-
   /** `(__id, __pos, __h)` — one row per unit occurrence, unit text
     * reduced to its 64-bit key BEFORE the explode even (the generator
     * emits longs, not strings, and the non-nullable hash keeps the

@@ -43,29 +43,7 @@ object SimilaritySearch {
     Array.fill(nBits)(Array.fill(dim)(rnd.nextGaussian()))
   }
 
-  /** Sign-bit LSH signature of an embedding (one Int per table). */
-  private def signatureUdf(planes: Array[Array[Double]]) =
-    udf((v: Seq[Double]) => {
-      var sig = 0
-      var i = 0
-      while (i < planes.length) {
-        var s = 0.0
-        val p = planes(i)
-        var j = 0
-        val n = math.min(p.length, v.length)
-        while (j < n) { s += p(j) * v(j); j += 1 }
-        if (s > 0) sig |= (1 << i)
-        i += 1
-      }
-      sig
-    })
-
-  /** Parity/profiling accessors for the hyperplane-signature kernel
-    * ([[graft.functions.HyperplaneSigsExpr]]) — the UDF is the kernel's
-    * spec-pinned reference, as with the MinHash/SimHash kernels.
-    */
-  private[graft] def signatureUdfForParity(nBits: Int, dim: Int, seed: Long) =
-    signatureUdf(hyperplanes(nBits, dim, seed))
+  /** Each table's seeded hyperplanes, table `t` seeded `seed + t`. */
   private[graft] def hyperplanesFor(nBits: Int, nTables: Int, dim: Int,
                                     seed: Long): Array[Array[Array[Double]]] =
     (0 until nTables).map(t => hyperplanes(nBits, dim, seed + t)).toArray
@@ -210,55 +188,19 @@ object SimilaritySearch {
     cents
   }
 
-  /** Error text shared by the assign UDF and the driver-side probe guard
-    * — the named signal the dimension contract throws on violation.
+  /** Error text shared by the assign kernel and the driver-side probe
+    * guard — the named signal the dimension contract throws on violation.
     */
   private[graft] def dimError(got: Int, want: Int): String =
     s"IVF dimension mismatch: vector has $got dims, the quantizer has " +
       s"$want — batches and queries must match the build's embedding " +
       "dimension (rebuild the index to change it)"
 
-  private def nearestCentroidUdf(cents: Array[Array[Double]]) = {
-    val dim = cents(0).length
-    udf((v: Seq[Double]) => {
-      // null embedding → null cluster (dropped by any probe filter); a
-      // PRESENT vector of the wrong dimension is rejected loudly — a
-      // truncated dot product would assign it to an essentially
-      // arbitrary cell, where queries could never find it
-      if (v == null) None
-      else {
-        if (v.length != dim)
-          throw new IllegalArgumentException(dimError(v.length, dim))
-        var best = 0; var bestSim = Double.MinValue
-        var c = 0
-        while (c < cents.length) {
-          val p = cents(c)
-          var s = 0.0; var pn = 0.0; var vn = 0.0
-          var j = 0
-          while (j < dim) { s += p(j) * v(j); pn += p(j) * p(j); vn += v(j) * v(j); j += 1 }
-          val sim = s / (math.sqrt(pn) * math.sqrt(vn))
-          if (sim > bestSim) { bestSim = sim; best = c }
-          c += 1
-        }
-        Some(best)
-      }
-    })
-  }
-
-  private def assignWith(df: DataFrame, embCol: String,
-                         cents: Array[Array[Double]]): DataFrame =
-    assignWithKernel(df, embCol, cents)
-
-  // UDF and kernel spellings kept side by side for the A/B (Probe
-  // q82assign_*) and the parity spec; assignWith above picks the
-  // shipped one — the kernel, after a 9× measured win at sf1/sf10
-  // (UDF boxing + the restored static-forwarder codegen; SCALE.md
-  // round 18). The UDF stays as the spec-pinned parity reference.
-  private[graft] def assignWithUdf(df: DataFrame, embCol: String,
-                                   cents: Array[Array[Double]]): DataFrame =
-    df.withColumn("cluster",
-      nearestCentroidUdf(cents)(col(embCol).cast("array<double>")))
-
+  /** `df` plus its nearest-centroid `cluster` — the codegen kernel, a
+    * 9× measured win over the UDF spelling at sf1/sf10 (UDF boxing + the
+    * restored static-forwarder codegen; SCALE.md round 18). Kernel ≡ UDF
+    * reference is spec-pinned.
+    */
   private[graft] def assignWithKernel(df: DataFrame, embCol: String,
                                       cents: Array[Array[Double]]): DataFrame =
     df.withColumn("cluster", graft.functions.VectorExpressions
@@ -271,7 +213,7 @@ object SimilaritySearch {
     */
   def ivfAssign(df: DataFrame, embCol: String, idCol: String,
                 nlist: Int = 16): DataFrame =
-    assignWith(df, embCol, sampleCentroids(df, embCol, idCol, nlist))
+    assignWithKernel(df, embCol, sampleCentroids(df, embCol, idCol, nlist))
 
   /** IVF-flat top-k: rank exact cosine only inside the `nprobe` cells
     * whose centroids are closest to the query — the classic inverted-file
@@ -296,7 +238,7 @@ object SimilaritySearch {
     val q = typedLit(query)
     // reuse the already-collected centroids — one metadata scan per query,
     // not two (assign + probe share the same quantizer)
-    assignWith(df, embCol, cents)
+    assignWithKernel(df, embCol, cents)
       .filter(col("cluster").isin(probed.toSeq: _*))
       .select(col(idCol).as("id"),
         round(cosine(col(embCol).cast("array<double>"), q), scale).as("cos_sim"))
@@ -329,8 +271,9 @@ object SimilaritySearch {
         .toDF("cluster", "centroid")
         .write.mode("overwrite")
         .parquet(new org.apache.hadoop.fs.Path(root, "centroids").toString)
-      IndexLifecycle.writeDir(spark, fs, root, CorpusDir, assignWith(df, embCol, cents)
-        .withColumn(IndexLifecycle.AttemptCol, lit(null).cast("string")))
+      IndexLifecycle.writeDir(spark, fs, root, CorpusDir,
+        assignWithKernel(df, embCol, cents)
+          .withColumn(IndexLifecycle.AttemptCol, lit(null).cast("string")))
     }
   }
 
@@ -381,7 +324,7 @@ object SimilaritySearch {
     IndexLifecycle.append(df.sparkSession, path, IvfIndex, "ivfAppend",
         appendId) { batch =>
       batch.append("corpus",
-        assignWith(df, embCol, storedCentroids(df.sparkSession, batch.root)))
+        assignWithKernel(df, embCol, storedCentroids(df.sparkSession, batch.root)))
     }
 
   /** Compact a persisted IVF index in place — the shared
@@ -435,15 +378,9 @@ object SimilaritySearch {
     // 0.5 KB/row vectors never ride the self-join; they come back in a
     // bounded verify join on the deduped id pairs, mirroring
     // Dedup.minhashLshPairs (text never rides its candidate join either).
-    val buckets = lshBuckets(df, embCol, idCol, nBits, nTables, dim, seed)
-    val l = buckets.select(col("table"), col("sig"), col("id").as("id_a"))
-    val r = buckets.select(col("table"), col("sig"), col("id").as("id_b"))
-    // symmetric self-join: never broadcast, never assume the hash build
-    // fits memory (see Dedup.minhashLshPairs) — sort-merge spills
-    val cands = l.join(r.hint("MERGE"), Seq("table", "sig"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
-      .dropDuplicates("id_a", "id_b")
+    val cands = NearDupPairs.distinctPairs(NearDupPairs.selfJoin(
+      lshBuckets(df, embCol, idCol, nBits, nTables, dim, seed), Seq("table", "sig")),
+      "id_a", "id_b")
     val vecs = df.select(col(idCol).as("__vid"),
       col(embCol).cast("array<double>").as("__v"))
     cands

@@ -50,12 +50,8 @@ object Winnowing {
   def sharedPrints(df: DataFrame, idCol: String, textCol: String,
                    k: Int, w: Int, minShared: Int): DataFrame = {
     val fp = fingerprints(df, idCol, textCol, k, w)
-      .select(col(idCol).as("__fid"), col("print"))
-    val a = fp.select(col("print"), col("__fid").as("id_a"))
-    val b = fp.select(col("print"), col("__fid").as("id_b"))
-    // symmetric self-join: never broadcast, never assume the hash build
-    // fits memory (see Dedup.minhashLshPairs) — sort-merge spills
-    a.join(b.hint("MERGE"), Seq("print")).filter(col("id_a") < col("id_b"))
+      .select(col(idCol).as("id"), col("print"))
+    NearDupPairs.selfJoin(fp, Seq("print"))
       .groupBy(col("id_a"), col("id_b"))
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)

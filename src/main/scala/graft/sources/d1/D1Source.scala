@@ -219,8 +219,9 @@ class D1PartitionReader(config: D1Client.Config, sql: String, schema: StructType
       try {
         val norm = value.trim.replace(' ', 'T')
         val withTime = if (norm.length == 10) norm + "T00:00:00" else norm
-        java.lang.Long.valueOf(java.time.LocalDateTime.parse(withTime.stripSuffix("Z"))
-          .toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L)
+        val t = java.time.LocalDateTime.parse(withTime.stripSuffix("Z"))
+        java.lang.Long.valueOf(
+          t.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L + t.getNano / 1000)
       } catch { case _: Exception => null }
     case BinaryType => value.getBytes(java.nio.charset.StandardCharsets.UTF_8)
     case _ => UTF8String.fromString(value)

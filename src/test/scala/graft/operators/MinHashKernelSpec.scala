@@ -3,8 +3,8 @@ package graft.operators
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-/** Parity pin for the [[graft.functions.MinHashSig]] expression against
-  * the UDF it would replace: signatures must be BIT-identical on every
+/** Parity pins for the text and vector kernels against the UDFs they
+  * replaced ([[KernelReferences]]): MinHash signatures must be BIT-identical on every
   * row (same permutation family, same shingle hash, same null contract),
   * or indexes written by one path would silently stop banding against
   * batches signed by the other.
@@ -26,7 +26,7 @@ class MinHashKernelSpec extends AnyFunSuite {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(col("doc_id"), col("text")).unionByName(edge)
     val both = docs.select(col("doc_id"),
-      Dedup.signatureForProfile(128, 3)(col("text")).as("u"),
+      KernelReferences.textSignatureUdf(128, 3)(col("text")).as("u"),
       graft.functions.MinHashSig.sig(col("text"), 128, 3).as("k"))
     // a mismatch row: exactly one side null, or element-wise difference
     val bad = both.filter(
@@ -49,27 +49,6 @@ class MinHashKernelSpec extends AnyFunSuite {
     // the 128-family's as draws in the shared Random(42) stream)
   }
 
-  test("verify-hash kernel ≡ UDF (sorted distinct 64-bit shingle hashes) on the corpus and edge rows") {
-    val edge = Seq(
-      (9001L, null.asInstanceOf[String]),
-      (9002L, ""),
-      (9003L, "two words"),
-      (9005L, "  leading and trailing   whitespace\truns\nsplit identically  "),
-      (9006L, "ünïcode worté pâr dérivation — mūltibyte shingles"),
-      (9007L, "repeat repeat repeat repeat repeat"))
-      .toDF("doc_id", "text")
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .select(col("doc_id"), col("text")).unionByName(edge)
-    val both = docs.select(col("doc_id"),
-      Dedup.shingleHashesForProfile(3)(col("text")).as("u"),
-      graft.functions.MinHashSig.shingleHashes(col("text"), 3).as("k"))
-    val bad = both.filter(
-      (col("u").isNull =!= col("k").isNull) ||
-        (col("u").isNotNull && col("u") =!= col("k")))
-    assert(bad.count() == 0L, bad.limit(5).collect().mkString("\n"))
-    assert(both.filter(col("k").isNull).count() >= 3L) // the edge nulls
-  }
-
   test("simhash kernel ≡ UDF chain on the corpus and edge rows") {
     // null text excluded: the UDF chain NPEs on it (never fed one by the
     // operators); the kernel's null contract is the expression default
@@ -83,7 +62,7 @@ class MinHashKernelSpec extends AnyFunSuite {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(col("doc_id"), col("text")).unionByName(edge)
     val both = docs.select(col("doc_id"),
-      Dedup.simhashUdfForParity(col("text")).as("u"),
+      KernelReferences.simhash(col("text")).as("u"),
       graft.functions.MinHashSig.simhash64(lower(trim(col("text")))).as("k"))
     val bad = both.filter(col("u") =!= col("k"))
     assert(bad.count() == 0L, bad.limit(5).collect().mkString("\n"))
@@ -103,7 +82,7 @@ class MinHashKernelSpec extends AnyFunSuite {
       ).toDF("vec_id", "v"))
     val planes = SimilaritySearch.hyperplanesFor(12, 4, 64, 7L)
     val udfCols = (0 until 4).map(t =>
-      SimilaritySearch.signatureUdfForParity(12, 64, 7L + t)(col("v")).as(s"u_$t"))
+      KernelReferences.signatureUdf(planes(t))(col("v")).as(s"u_$t"))
     val both = emb.select(
       (col("vec_id") +:
         graft.functions.VectorExpressions.hyperplaneSigs(col("v"), planes).as("k") +:
@@ -130,7 +109,7 @@ class MinHashKernelSpec extends AnyFunSuite {
       (800003L, cents(7).toSeq.map(_ * 2.0))            // exact direction of cell 7 (ties broken identically)
     ).toDF("vec_id", "embedding")
     // run both paths as full frames and join on vec_id
-    val u = SimilaritySearch.assignWithUdf(base.unionByName(edge), "embedding", cents)
+    val u = KernelReferences.assignWithUdf(base.unionByName(edge), "embedding", cents)
       .select(col("vec_id"), col("cluster").as("u"))
     val k = SimilaritySearch.assignWithKernel(base.unionByName(edge), "embedding", cents)
       .select(col("vec_id"), col("cluster").as("k"))
@@ -142,7 +121,7 @@ class MinHashKernelSpec extends AnyFunSuite {
     assert(j.filter(col("vec_id") === 800002L).head().getInt(2) == 0)
     // wrong dimension: BOTH spellings throw the same named error
     val wrong = Seq((800009L, Seq(1.0, 2.0))).toDF("vec_id", "embedding")
-    for (f <- Seq(SimilaritySearch.assignWithUdf _, SimilaritySearch.assignWithKernel _)) {
+    for (f <- Seq(KernelReferences.assignWithUdf _, SimilaritySearch.assignWithKernel _)) {
       val e = intercept[Exception] {
         f(wrong, "embedding", cents).collect()
       }

@@ -174,7 +174,7 @@ class OperatorsSpec extends AnyFunSuite {
     assert(!got.schema("j").nullable)
     val kernel = got.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val ref = df.select(col("id"),
-        Dedup.sortedJaccardUdf(col("a"), col("b")).as("j"))
+        KernelReferences.sortedJaccardUdf(col("a"), col("b")).as("j"))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(kernel == ref, (kernel.toSet diff ref.toSet).toString)
     assert(kernel(100L) == 0.0 && kernel(101L) == 0.0 && kernel(102L) == 0.0)
@@ -206,7 +206,7 @@ class OperatorsSpec extends AnyFunSuite {
     assert(ok == 1.0)
     // the shingle producer PROVES elements non-null in its schema, so the
     // hot paths carry no guard at all
-    val sch = docs.select(Dedup.shingleHashesForProfile(3)(col("text")).as("sh"))
+    val sch = docs.select(Dedup.shingleHashes64Udf(3)(col("text")).as("sh"))
       .schema("sh").dataType.asInstanceOf[org.apache.spark.sql.types.ArrayType]
     assert(!sch.containsNull, sch.toString)
   }

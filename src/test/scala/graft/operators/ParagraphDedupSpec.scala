@@ -73,7 +73,7 @@ class ParagraphDedupSpec extends AnyFunSuite {
     for (n <- Seq(1, 2, 3, 16)) {
       val got = rows.select(
         ParagraphDedup.unitsByWordWindow(col("t"), n).as("fast"),
-        ParagraphDedup.unitsByWordWindowReference(col("t"), n).as("ref"))
+        KernelReferences.unitsByWordWindow(col("t"), n).as("ref"))
         .collect()
       got.foreach { r =>
         assert(r.getSeq[String](0) == r.getSeq[String](1),
@@ -83,7 +83,7 @@ class ParagraphDedupSpec extends AnyFunSuite {
     // multi-byte separator
     val m = rows.select(
       ParagraphDedup.unitsByWordWindow(col("t"), 2, "ö").as("fast"),
-      ParagraphDedup.unitsByWordWindowReference(col("t"), 2, "ö").as("ref"))
+      KernelReferences.unitsByWordWindow(col("t"), 2, "ö").as("ref"))
       .collect()
     m.foreach(r => assert(r.getSeq[String](0) == r.getSeq[String](1)))
   }

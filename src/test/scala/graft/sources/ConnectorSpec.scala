@@ -728,6 +728,44 @@ class ConnectorSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("d1 round trip: a sub-second TIMESTAMP written through format(d1) reads back equal") {
+    // a one-table D1, ts_test(id INTEGER, ts TIMESTAMP), that stores the
+    // literals it is sent and serves them back as text
+    val stored = new java.util.concurrent.CopyOnWriteArrayList[String]()
+    val Insert = "INSERT INTO ts_test \\(id, ts\\) VALUES \\((\\d+), '([^']*)'\\)".r
+    def result(rows: String) =
+      s"""{"results":[$rows],"success":true,"meta":{"changes":0}}"""
+    val d1 = new graft.fixtures.Stub().start()
+    d1.routeText("/client/v4/accounts/") { ex =>
+      val body = ex.getAttribute("body").toString
+      val sqls = "\"sql\"\\s*:\\s*\"((?:[^\"\\\\]|\\\\.)*)\"".r
+        .findAllMatchIn(body).map(_.group(1)).toSeq
+      val results = sqls.map {
+        case Insert(id, ts) => stored.add(s"""{"id":$id,"ts":"$ts"}"""); result("")
+        case s if s.startsWith("PRAGMA table_info(ts_test)") => result(
+          """{"cid":0,"name":"id","type":"INTEGER","notnull":0,"dflt_value":null,"pk":1},""" +
+            """{"cid":1,"name":"ts","type":"TIMESTAMP","notnull":0,"dflt_value":null,"pk":0}""")
+        case s if s.startsWith("SELECT * FROM ts_test") =>
+          result(stored.toArray.mkString(","))
+        case _ => result("")
+      }
+      s"""{"success":true,"errors":[],"result":[${results.mkString(",")}]}"""
+    }
+    try {
+      import spark.implicits._
+      val opts = Map("api_base" -> s"${d1.base}/client/v4", "account_id" -> "acct",
+        "api_token" -> "tok", "database_id" -> d1Db, "table" -> "ts_test")
+      val written = Seq("2024-01-01T10:00:00.500Z", "2024-01-01T10:00:00.123456Z",
+        "1969-12-31T23:59:59.500Z", "2024-01-01T10:00:00Z").map(java.time.Instant.parse)
+      written.zipWithIndex.map { case (t, i) => (i.toLong, java.sql.Timestamp.from(t)) }
+        .toDF("id", "ts").write.format("d1").options(opts).mode("append").save()
+      assert(stored.size == 4, stored.toString)
+      val read = spark.read.format("d1").options(opts).load().orderBy("id").collect()
+        .map(_.getTimestamp(1).toInstant).toSeq
+      assert(read == written)
+    } finally d1.stop()
+  }
+
   test("d1 secret: a named secret that does not exist fails, default secret or not") {
     val saved = Secrets.lookup("d1", "__default_d1")
     Secrets.register(Secrets.Secret("__default_d1", "d1", "acct", "tok"))
