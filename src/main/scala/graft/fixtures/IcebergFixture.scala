@@ -162,6 +162,132 @@ object IcebergFixture {
     }.toSeq: _*)
   }
 
+  // ---- the four writers every publish* entry point goes through ------
+
+  private def location(key: String): String = s"r2://r2-lake/$key"
+
+  /** A data or delete file put in the stub. */
+  private final case class FileEntry(path: String, size: Long, rows: Long,
+      lower: Map[Int, Array[Byte]] = Map.empty, upper: Map[Int, Array[Byte]] = Map.empty)
+
+  /** A manifest put in the stub, as its manifest-list record names it. */
+  private final case class ManifestFile(path: String, length: Long, content: Int,
+                                        sequenceNumber: Option[Long] = None)
+
+  /** Data files: write `df` as parquet — range-split on `rangeFiles`'
+    * column into that many files, else one file — and put part `i` at
+    * `<stem>-<i>.parquet`. Rows are counted off the written file, bounds
+    * (keyed by 1-based field position) computed only when asked.
+    */
+  private def putParquet(stub: Stub, df: DataFrame, stem: String,
+                         rangeFiles: Option[(String, Int)] = None,
+                         withBounds: Boolean = false): Seq[FileEntry] = {
+    val tmp = java.nio.file.Files.createTempDirectory("icefix").toFile
+    val out = rangeFiles match {
+      case Some((col, n)) =>
+        df.repartitionByRange(n, org.apache.spark.sql.functions.col(col))
+      case None => df.coalesce(1)
+    }
+    try {
+      out.write.mode("overwrite").parquet(tmp.getAbsolutePath + "/d")
+      new java.io.File(tmp, "d").listFiles()
+        .filter(f => f.getName.endsWith(".parquet") && f.length() > 0)
+        .sortBy(_.getName).zipWithIndex.toSeq
+        .map { case (f, i) =>
+          val key = s"$stem-$i.parquet"
+          val bytes = java.nio.file.Files.readAllBytes(f.toPath)
+          stub.objects.put(key, bytes)
+          val rows = df.sparkSession.read.parquet(f.getAbsolutePath).count()
+          val (lo, hi) =
+            if (withBounds) fileBounds(df.sparkSession, f, df.schema)
+            else (Map.empty[Int, Array[Byte]], Map.empty[Int, Array[Byte]])
+          FileEntry(location(key), bytes.length.toLong, rows, lo, hi)
+        }
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(tmp)
+  }
+
+  /** Manifests: one ADDED entry per file (`content` 0 data, 1 position
+    * deletes, 2 equality deletes; entry `sequence_number` left null, so
+    * it inherits the manifest's), put at `key`.
+    */
+  private def putManifest(stub: Stub, key: String, snapId: Long, files: Seq[FileEntry],
+                          content: Int = 0, sequenceNumber: Option[Long] = None): ManifestFile = {
+    val fileSchema = manifestEntrySchema.getField("data_file").schema()
+    def kv(field: String) =
+      fileSchema.getField(field).schema().getTypes.get(1).getElementType
+    val entries = files.map { f =>
+      val dfRec = new GenericData.Record(fileSchema)
+      dfRec.put("content", content)
+      dfRec.put("file_path", f.path)
+      dfRec.put("file_format", "PARQUET")
+      dfRec.put("record_count", f.rows)
+      dfRec.put("file_size_in_bytes", f.size)
+      if (f.lower.nonEmpty) dfRec.put("lower_bounds", boundsArray(kv("lower_bounds"), f.lower))
+      if (f.upper.nonEmpty) dfRec.put("upper_bounds", boundsArray(kv("upper_bounds"), f.upper))
+      val rec = new GenericData.Record(manifestEntrySchema)
+      rec.put("status", 1) // ADDED
+      rec.put("snapshot_id", snapId)
+      rec.put("data_file", dfRec)
+      rec
+    }
+    val bytes = writeAvro(manifestEntrySchema, entries)
+    stub.objects.put(key, bytes)
+    // the manifest list's `content` is the manifest's kind: 0 data, 1 deletes
+    ManifestFile(location(key), bytes.length.toLong, math.min(content, 1), sequenceNumber)
+  }
+
+  /** Manifest lists: snapshot `snapId`'s list naming `manifests`, put at
+    * `<prefix>/metadata/snap-<snapId>.avro`; returns its location.
+    */
+  private def putManifestList(stub: Stub, prefix: String, snapId: Long,
+                              manifests: Seq[ManifestFile]): String = {
+    val recs = manifests.map { m =>
+      val r = new GenericData.Record(manifestListSchema)
+      r.put("manifest_path", m.path)
+      r.put("manifest_length", m.length)
+      r.put("partition_spec_id", 0)
+      r.put("content", m.content)
+      r.put("added_snapshot_id", snapId)
+      m.sequenceNumber.foreach(r.put("sequence_number", _))
+      r
+    }
+    val key = s"$prefix/metadata/snap-$snapId.avro"
+    stub.objects.put(key, writeAvro(manifestListSchema, recs))
+    location(key)
+  }
+
+  /** Metadata JSON: `v<current>.metadata.json` for table `ns.tbl`, the
+    * last schema and the last snapshot current; registers the table with
+    * the REST routes and returns the metadata location. `snapshots` are
+    * (id, manifest-list location, summary operation).
+    */
+  private def putMetadata(stub: Stub, ns: String, tbl: String, uuid: Long,
+                          schemas: Seq[StructType],
+                          snapshots: Seq[(Long, String, String)]): String = {
+    val prefix = s"iceberg/$ns/$tbl"
+    val current = snapshots.last._1
+    val schemasJson = schemas.zipWithIndex
+      .map { case (st, i) => icebergStruct(st, 1, schemaId = i) }.mkString(",")
+    val snapsJson = snapshots.map { case (id, ml, op) =>
+      s"""{"snapshot-id":$id,"timestamp-ms":0,"manifest-list":"$ml","summary":{"operation":"$op"}}"""
+    }.mkString(",")
+    val metaJson =
+      f"""{"format-version":2,"table-uuid":"00000000-0000-0000-0000-$uuid%012d",
+         |"location":"${location(prefix)}",
+         |"last-sequence-number":$current,"last-updated-ms":0,"last-column-id":${schemas.last.length},
+         |"current-schema-id":${schemas.length - 1},"schemas":[$schemasJson],
+         |"default-spec-id":0,"partition-specs":[{"spec-id":0,"fields":[]}],
+         |"default-sort-order-id":0,"sort-orders":[{"order-id":0,"fields":[]}],
+         |"current-snapshot-id":$current,"snapshots":[$snapsJson]}""".stripMargin
+    val metaKey = s"$prefix/metadata/v$current.metadata.json"
+    stub.objects.put(metaKey, metaJson.getBytes(UTF_8))
+    val metaLoc = location(metaKey)
+    tables.put((ns, tbl), metaLoc)
+    metaLoc
+  }
+
+  // ---- entry points ----------------------------------------------------
+
   /** Publish each DataFrame as one copy-on-write snapshot of table
     * `ns.tbl` (each snapshot lists its full live file set; current =
     * the last). Returns the metadata location.
@@ -171,87 +297,14 @@ object IcebergFixture {
                        rangeFiles: Option[(String, Int)] = None,
                        withBounds: Boolean = false): String = {
     val prefix = s"iceberg/$ns/$tbl"
-
-    final case class Written(path: String, size: Long, rows: Long,
-        lower: Map[Int, Array[Byte]], upper: Map[Int, Array[Byte]])
-
-    def writeData(df0: DataFrame, snapId: Long): Seq[Written] = {
-      val df = withFieldIds(df0)
-      val tmp = java.nio.file.Files.createTempDirectory("icefix").toFile
-      val out = rangeFiles match {
-        case Some((col, n)) =>
-          df.repartitionByRange(n, org.apache.spark.sql.functions.col(col))
-        case None => df.coalesce(1)
-      }
-      out.write.mode("overwrite").parquet(tmp.getAbsolutePath + "/d")
-      new java.io.File(tmp, "d").listFiles()
-        .filter(f => f.getName.endsWith(".parquet") && f.length() > 0)
-        .sortBy(_.getName).zipWithIndex
-        .map { case (f, i) =>
-          val key = s"$prefix/data/part-s$snapId-$i.parquet"
-          val bytes = java.nio.file.Files.readAllBytes(f.toPath)
-          stub.objects.put(key, bytes)
-          val rows = df.sparkSession.read.parquet(f.getAbsolutePath).count()
-          val (lo, hi) =
-            if (withBounds) fileBounds(df.sparkSession, f, df.schema)
-            else (Map.empty[Int, Array[Byte]], Map.empty[Int, Array[Byte]])
-          Written(s"r2://r2-lake/$key", bytes.length.toLong, rows, lo, hi)
-        }.toSeq
+    val snaps = dfs.zipWithIndex.map { case (df, i) =>
+      val snapId = i + 1L
+      val files = putParquet(stub, withFieldIds(df), s"$prefix/data/part-s$snapId",
+        rangeFiles, withBounds)
+      val manifest = putManifest(stub, s"$prefix/metadata/manifest-$snapId-0.avro", snapId, files)
+      (snapId, putManifestList(stub, prefix, snapId, Seq(manifest)), "append")
     }
-
-    def snapshot(df: DataFrame, snapId: Long): (String, Long) = {
-      val kvLower = manifestEntrySchema.getField("data_file").schema()
-        .getField("lower_bounds").schema().getTypes.get(1).getElementType
-      val kvUpper = manifestEntrySchema.getField("data_file").schema()
-        .getField("upper_bounds").schema().getTypes.get(1).getElementType
-      val entries = writeData(df, snapId).map { w =>
-        val dfRec = new GenericData.Record(
-          manifestEntrySchema.getField("data_file").schema())
-        dfRec.put("content", 0)
-        dfRec.put("file_path", w.path)
-        dfRec.put("file_format", "PARQUET")
-        dfRec.put("record_count", w.rows)
-        dfRec.put("file_size_in_bytes", w.size)
-        if (w.lower.nonEmpty) dfRec.put("lower_bounds", boundsArray(kvLower, w.lower))
-        if (w.upper.nonEmpty) dfRec.put("upper_bounds", boundsArray(kvUpper, w.upper))
-        val rec = new GenericData.Record(manifestEntrySchema)
-        rec.put("status", 1) // ADDED
-        rec.put("snapshot_id", snapId)
-        rec.put("data_file", dfRec)
-        rec
-      }
-      val manifestKey = s"$prefix/metadata/manifest-$snapId-0.avro"
-      val manifestBytes = writeAvro(manifestEntrySchema, entries)
-      stub.objects.put(manifestKey, manifestBytes)
-      val mlRec = new GenericData.Record(manifestListSchema)
-      mlRec.put("manifest_path", s"r2://r2-lake/$manifestKey")
-      mlRec.put("manifest_length", manifestBytes.length.toLong)
-      mlRec.put("partition_spec_id", 0)
-      mlRec.put("content", 0)
-      mlRec.put("added_snapshot_id", snapId)
-      val mlKey = s"$prefix/metadata/snap-$snapId.avro"
-      stub.objects.put(mlKey, writeAvro(manifestListSchema, Seq(mlRec)))
-      (s"r2://r2-lake/$mlKey", snapId)
-    }
-
-    val snaps = dfs.zipWithIndex.map { case (df, i) => snapshot(df, i + 1L) }
-    val current = snaps.last._2
-    val snapsJson = snaps.map { case (ml, id) =>
-      s"""{"snapshot-id":$id,"timestamp-ms":0,"manifest-list":"$ml","summary":{"operation":"append"}}"""
-    }.mkString(",")
-    val metaJson =
-      s"""{"format-version":2,"table-uuid":"00000000-0000-0000-0000-00000000000$current",
-         |"location":"r2://r2-lake/$prefix",
-         |"last-sequence-number":$current,"last-updated-ms":0,"last-column-id":${dfs.head.schema.length},
-         |"current-schema-id":0,"schemas":[${icebergStruct(dfs.head.schema, 1)}],
-         |"default-spec-id":0,"partition-specs":[{"spec-id":0,"fields":[]}],
-         |"default-sort-order-id":0,"sort-orders":[{"order-id":0,"fields":[]}],
-         |"current-snapshot-id":$current,"snapshots":[$snapsJson]}""".stripMargin
-    val metaKey = s"$prefix/metadata/v$current.metadata.json"
-    stub.objects.put(metaKey, metaJson.getBytes(UTF_8))
-    val metaLoc = s"r2://r2-lake/$metaKey"
-    tables.put((ns, tbl), metaLoc)
-    metaLoc
+    putMetadata(stub, ns, tbl, snaps.last._1, Seq(dfs.head.schema), snaps)
   }
 
   /** Publish `df` as Iceberg table `ns.tbl` in `stub`'s bucket; returns
@@ -276,95 +329,32 @@ object IcebergFixture {
     require(df2.schema.length >= df1.schema.length,
       "publishEvolved: df2 must not drop columns of df1")
     val prefix = s"iceberg/$ns/$tbl"
+    def manifest(df: DataFrame, snapId: Long) =
+      putManifest(stub, s"$prefix/metadata/manifest-$snapId-0.avro", snapId,
+        putParquet(stub, withFieldIds(df), s"$prefix/data/part-s$snapId"))
+    val m1 = manifest(df1, 1L)
+    val m2 = manifest(df2, 2L)
+    putMetadata(stub, ns, tbl, 42L, Seq(df1.schema, df2.schema), Seq(
+      (1L, putManifestList(stub, prefix, 1L, Seq(m1)), "append"),
+      (2L, putManifestList(stub, prefix, 2L, Seq(m1, m2)), "append"))) // live set after the evolution
+  }
 
-    def writeOne(df0: DataFrame, snapId: Long): (String, Long, Long) = {
-      val df = withFieldIds(df0)
-      val tmp = java.nio.file.Files.createTempDirectory("icefix").toFile
-      df.coalesce(1).write.mode("overwrite").parquet(tmp.getAbsolutePath + "/d")
-      val f = new java.io.File(tmp, "d").listFiles()
-        .filter(f => f.getName.endsWith(".parquet") && f.length() > 0).head
-      val key = s"$prefix/data/part-s$snapId-0.parquet"
-      val bytes = java.nio.file.Files.readAllBytes(f.toPath)
-      stub.objects.put(key, bytes)
-      (s"r2://r2-lake/$key", bytes.length.toLong, df0.count())
-    }
-
-    def manifestFor(file: (String, Long, Long), snapId: Long): String = {
-      val dfRec = new GenericData.Record(
-        manifestEntrySchema.getField("data_file").schema())
-      dfRec.put("content", 0)
-      dfRec.put("file_path", file._1)
-      dfRec.put("file_format", "PARQUET")
-      dfRec.put("record_count", file._3)
-      dfRec.put("file_size_in_bytes", file._2)
-      val rec = new GenericData.Record(manifestEntrySchema)
-      rec.put("status", 1)
-      rec.put("snapshot_id", snapId)
-      rec.put("data_file", dfRec)
-      val key = s"$prefix/metadata/manifest-$snapId-0.avro"
-      stub.objects.put(key, writeAvro(manifestEntrySchema, Seq(rec)))
-      s"r2://r2-lake/$key"
-    }
-
-    def manifestList(snapId: Long, manifests: Seq[String]): String = {
-      val recs = manifests.map { m =>
-        val r = new GenericData.Record(manifestListSchema)
-        r.put("manifest_path", m)
-        r.put("manifest_length", stub.objects(
-          m.stripPrefix("r2://r2-lake/")).length.toLong)
-        r.put("partition_spec_id", 0)
-        r.put("content", 0)
-        r.put("added_snapshot_id", snapId)
-        r
-      }
-      val key = s"$prefix/metadata/snap-$snapId.avro"
-      stub.objects.put(key, writeAvro(manifestListSchema, recs))
-      s"r2://r2-lake/$key"
-    }
-
-    val m1 = manifestFor(writeOne(df1, 1L), 1L)
-    val m2 = manifestFor(writeOne(df2, 2L), 2L)
-    val ml1 = manifestList(1L, Seq(m1))
-    val ml2 = manifestList(2L, Seq(m1, m2)) // live set after the evolution
-    val metaJson =
-      s"""{"format-version":2,"table-uuid":"00000000-0000-0000-0000-000000000042",
-         |"location":"r2://r2-lake/$prefix",
-         |"last-sequence-number":2,"last-updated-ms":0,"last-column-id":${df2.schema.length},
-         |"current-schema-id":1,
-         |"schemas":[${icebergStruct(df1.schema, 1, schemaId = 0)},
-         |${icebergStruct(df2.schema, 1, schemaId = 1)}],
-         |"default-spec-id":0,"partition-specs":[{"spec-id":0,"fields":[]}],
-         |"default-sort-order-id":0,"sort-orders":[{"order-id":0,"fields":[]}],
-         |"current-snapshot-id":2,"snapshots":[
-         |{"snapshot-id":1,"timestamp-ms":0,"manifest-list":"$ml1","summary":{"operation":"append"}},
-         |{"snapshot-id":2,"timestamp-ms":0,"manifest-list":"$ml2","summary":{"operation":"append"}}]}""".stripMargin
-    val metaKey = s"$prefix/metadata/v2.metadata.json"
-    stub.objects.put(metaKey, metaJson.getBytes(UTF_8))
-    val metaLoc = s"r2://r2-lake/$metaKey"
-    tables.put((ns, tbl), metaLoc)
-    metaLoc
+  /** Snapshot 1's data manifest as [[publish]] wrote it. */
+  private def publishedManifest(stub: Stub, prefix: String): ManifestFile = {
+    val key = s"$prefix/metadata/manifest-1-0.avro"
+    ManifestFile(location(key), stub.objects(key).length.toLong, content = 0)
   }
 
   /** Publish a table whose manifest list declares a DELETE manifest —
-    * the reader must reject it (merge-on-read unsupported).
+    * the reader must reject it (merge-on-read unsupported). The delete
+    * manifest itself is never written: the catalog must refuse the table
+    * from the manifest list alone.
     */
   def publishWithDeletes(stub: Stub, ns: String, tbl: String, df: DataFrame): String = {
     val loc = publish(stub, ns, tbl, df)
     val prefix = s"iceberg/$ns/$tbl"
-    val mlRecData = new GenericData.Record(manifestListSchema)
-    mlRecData.put("manifest_path", s"r2://r2-lake/$prefix/metadata/manifest-1-0.avro")
-    mlRecData.put("manifest_length", 1L)
-    mlRecData.put("partition_spec_id", 0)
-    mlRecData.put("content", 0)
-    mlRecData.put("added_snapshot_id", 1L)
-    val mlRecDel = new GenericData.Record(manifestListSchema)
-    mlRecDel.put("manifest_path", s"r2://r2-lake/$prefix/metadata/manifest-del.avro")
-    mlRecDel.put("manifest_length", 1L)
-    mlRecDel.put("partition_spec_id", 0)
-    mlRecDel.put("content", 1) // DELETES
-    mlRecDel.put("added_snapshot_id", 1L)
-    stub.objects.put(s"$prefix/metadata/snap-1.avro",
-      writeAvro(manifestListSchema, Seq(mlRecData, mlRecDel)))
+    putManifestList(stub, prefix, 1L, Seq(publishedManifest(stub, prefix),
+      ManifestFile(location(s"$prefix/metadata/manifest-del.avro"), 1L, content = 1)))
     loc
   }
 
@@ -378,43 +368,9 @@ object IcebergFixture {
                                     content: Int): String = {
     val loc = publish(stub, ns, tbl, df)
     val prefix = s"iceberg/$ns/$tbl"
-    val tmp = java.nio.file.Files.createTempDirectory("icedel").toFile
-    deleteDf.coalesce(1).write.mode("overwrite").parquet(tmp.getAbsolutePath + "/d")
-    val delFile = new java.io.File(tmp, "d").listFiles()
-      .filter(_.getName.endsWith(".parquet")).head
-    val delKey = s"$prefix/data/delete-0.parquet"
-    stub.objects.put(delKey, java.nio.file.Files.readAllBytes(delFile.toPath))
-
-    val delEntry = new GenericData.Record(manifestEntrySchema)
-    val delDataFile = new GenericData.Record(
-      manifestEntrySchema.getField("data_file").schema())
-    delDataFile.put("content", content) // 1=POSITION, 2=EQUALITY
-    delDataFile.put("file_path", s"r2://r2-lake/$delKey")
-    delDataFile.put("file_format", "PARQUET")
-    delDataFile.put("record_count", deleteDf.count())
-    delDataFile.put("file_size_in_bytes", stub.objects(delKey).length.toLong)
-    delEntry.put("status", 1)
-    delEntry.put("snapshot_id", 1L)
-    delEntry.put("data_file", delDataFile)
-    val delManifestKey = s"$prefix/metadata/manifest-del-0.avro"
-    val delManifestBytes = writeAvro(manifestEntrySchema, Seq(delEntry))
-    stub.objects.put(delManifestKey, delManifestBytes)
-
-    // manifest list: the existing data manifest + the delete manifest
-    val mlData = new GenericData.Record(manifestListSchema)
-    mlData.put("manifest_path", s"r2://r2-lake/$prefix/metadata/manifest-1-0.avro")
-    mlData.put("manifest_length", 1L)
-    mlData.put("partition_spec_id", 0)
-    mlData.put("content", 0)
-    mlData.put("added_snapshot_id", 1L)
-    val mlDel = new GenericData.Record(manifestListSchema)
-    mlDel.put("manifest_path", s"r2://r2-lake/$delManifestKey")
-    mlDel.put("manifest_length", delManifestBytes.length.toLong)
-    mlDel.put("partition_spec_id", 0)
-    mlDel.put("content", 1)
-    mlDel.put("added_snapshot_id", 1L)
-    stub.objects.put(s"$prefix/metadata/snap-1.avro",
-      writeAvro(manifestListSchema, Seq(mlData, mlDel)))
+    val deletes = putManifest(stub, s"$prefix/metadata/manifest-del-0.avro", 1L,
+      putParquet(stub, deleteDf, s"$prefix/data/delete"), content)
+    putManifestList(stub, prefix, 1L, Seq(publishedManifest(stub, prefix), deletes))
     loc
   }
 
@@ -423,7 +379,7 @@ object IcebergFixture {
     */
   def publishWithPositionDeletes(stub: Stub, ns: String, tbl: String, df: DataFrame,
                                  deletePositions: Seq[Long]): String = {
-    val dataPath = s"r2://r2-lake/iceberg/$ns/$tbl/data/part-s1-0.parquet"
+    val dataPath = location(s"iceberg/$ns/$tbl/data/part-s1-0.parquet")
     val spark = df.sparkSession
     import spark.implicits._
     publishWithDeleteFile(stub, ns, tbl, df,
@@ -451,76 +407,15 @@ object IcebergFixture {
                                 df1: DataFrame, deleteRows: DataFrame,
                                 df2: DataFrame): String = {
     val prefix = s"iceberg/$ns/$tbl"
-
-    def writeParquet(df: DataFrame, key: String): (Long, Long) = {
-      val tmp = java.nio.file.Files.createTempDirectory("iceseq").toFile
-      withFieldIds(df).coalesce(1).write.mode("overwrite")
-        .parquet(tmp.getAbsolutePath + "/d")
-      val f = new java.io.File(tmp, "d").listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      val bytes = java.nio.file.Files.readAllBytes(f.toPath)
-      stub.objects.put(key, bytes)
-      (bytes.length.toLong, df.count())
-    }
-
-    def manifest(key: String, filePath: String, content: Int,
-                 size: Long, rows: Long): Array[Byte] = {
-      val dfRec = new GenericData.Record(
-        manifestEntrySchema.getField("data_file").schema())
-      dfRec.put("content", content)
-      dfRec.put("file_path", filePath)
-      dfRec.put("file_format", "PARQUET")
-      dfRec.put("record_count", rows)
-      dfRec.put("file_size_in_bytes", size)
-      val rec = new GenericData.Record(manifestEntrySchema)
-      rec.put("status", 1)
-      rec.put("snapshot_id", 3L)
-      rec.put("data_file", dfRec) // sequence_number left null -> inherited
-      val bytes = writeAvro(manifestEntrySchema, Seq(rec))
-      stub.objects.put(key, bytes)
-      bytes
-    }
-
-    val (sz1, n1) = writeParquet(df1, s"$prefix/data/part-s1-0.parquet")
-    val (szD, nD) = writeParquet(deleteRows, s"$prefix/data/delete-0.parquet")
-    val (sz2, n2) = writeParquet(df2, s"$prefix/data/part-s3-0.parquet")
-    val m1 = manifest(s"$prefix/metadata/manifest-1-0.avro",
-      s"r2://r2-lake/$prefix/data/part-s1-0.parquet", 0, sz1, n1)
-    val mD = manifest(s"$prefix/metadata/manifest-del-0.avro",
-      s"r2://r2-lake/$prefix/data/delete-0.parquet", 2, szD, nD)
-    val m2 = manifest(s"$prefix/metadata/manifest-3-0.avro",
-      s"r2://r2-lake/$prefix/data/part-s3-0.parquet", 0, sz2, n2)
-
-    def mlRec(path: String, len: Long, content: Int, seq: Long): GenericRecord = {
-      val r = new GenericData.Record(manifestListSchema)
-      r.put("manifest_path", path)
-      r.put("manifest_length", len)
-      r.put("partition_spec_id", 0)
-      r.put("content", content)
-      r.put("added_snapshot_id", 3L)
-      r.put("sequence_number", seq)
-      r
-    }
-    stub.objects.put(s"$prefix/metadata/snap-3.avro", writeAvro(manifestListSchema, Seq(
-      mlRec(s"r2://r2-lake/$prefix/metadata/manifest-1-0.avro", m1.length.toLong, 0, 1L),
-      mlRec(s"r2://r2-lake/$prefix/metadata/manifest-del-0.avro", mD.length.toLong, 1, 2L),
-      mlRec(s"r2://r2-lake/$prefix/metadata/manifest-3-0.avro", m2.length.toLong, 0, 3L))))
-
-    val metaJson =
-      s"""{"format-version":2,"table-uuid":"00000000-0000-0000-0000-000000000077",
-         |"location":"r2://r2-lake/$prefix",
-         |"last-sequence-number":3,"last-updated-ms":0,"last-column-id":${df1.schema.length},
-         |"current-schema-id":0,"schemas":[${icebergStruct(df1.schema, 1)}],
-         |"default-spec-id":0,"partition-specs":[{"spec-id":0,"fields":[]}],
-         |"default-sort-order-id":0,"sort-orders":[{"order-id":0,"fields":[]}],
-         |"current-snapshot-id":3,"snapshots":[
-         |{"snapshot-id":3,"timestamp-ms":0,"manifest-list":"r2://r2-lake/$prefix/metadata/snap-3.avro",
-         |"summary":{"operation":"overwrite"}}]}""".stripMargin
-    val metaKey = s"$prefix/metadata/v3.metadata.json"
-    stub.objects.put(metaKey, metaJson.getBytes(UTF_8))
-    val metaLoc = s"r2://r2-lake/$metaKey"
-    tables.put((ns, tbl), metaLoc)
-    metaLoc
+    def manifest(df: DataFrame, stem: String, name: String, content: Int, seq: Long) =
+      putManifest(stub, s"$prefix/metadata/manifest-$name.avro", 3L,
+        putParquet(stub, withFieldIds(df), s"$prefix/data/$stem"), content, Some(seq))
+    val manifests = Seq(
+      manifest(df1, "part-s1", "1-0", 0, 1L),
+      manifest(deleteRows, "delete", "del-0", 2, 2L),
+      manifest(df2, "part-s3", "3-0", 0, 3L))
+    putMetadata(stub, ns, tbl, 77L, Seq(df1.schema),
+      Seq((3L, putManifestList(stub, prefix, 3L, manifests), "overwrite")))
   }
 
   /** Install the REST catalog protocol routes on `stub` under

@@ -2,8 +2,7 @@ package graft.sources.d1
 
 import java.util
 
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
@@ -25,26 +24,11 @@ import graft.core.D1Client
   *
   * Usage: `spark.read.format("d1query").option("query", sql)...`
   */
-class D1QuerySource extends TableProvider with DataSourceRegister {
+class D1QuerySource extends FetchedTableHandoff with DataSourceRegister {
   override def shortName(): String = "d1query"
 
-  /** The table `inferSchema` fetched, handed to the `getTable` of the
-    * same `load()`.
-    */
-  private var inferred: Option[D1QueryTable] = None
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val t = D1QueryTable.fetch(options)
-    inferred = Some(t)
-    t.schema()
-  }
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: util.Map[String, String]): Table = {
-    val t = inferred.getOrElse(D1QueryTable.fetch(new CaseInsensitiveStringMap(properties)))
-    inferred = None
-    t
-  }
+  override protected def fetch(options: CaseInsensitiveStringMap): Table =
+    D1QueryTable.fetch(options)
 }
 
 /** One executed `d1_query`: its all-VARCHAR schema and rows. */

@@ -35,15 +35,34 @@ import graft.core.{Codecs, D1Client, Secrets}
   * InputPartition, documented; D1 is a dimension-sized source that a real
   * pipeline joins against big parquet facts (broadcast it).
   */
-class D1Source extends TableProvider with DataSourceRegister {
+class D1Source extends FetchedTableHandoff with DataSourceRegister {
   override def shortName(): String = "d1"
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    D1SourceUtil.tableFor(options).schema()
+  override protected def fetch(options: CaseInsensitiveStringMap): Table =
+    D1SourceUtil.tableFor(options)
+}
+
+/** A provider whose schema inference fetches the remote table: the
+  * `getTable` of the same `load()` (or write) takes that table, so the
+  * schema is fetched once per load.
+  */
+private[d1] trait FetchedTableHandoff extends TableProvider {
+  protected def fetch(options: CaseInsensitiveStringMap): Table
+
+  private var inferred: Option[Table] = None
+
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
+    val t = fetch(options)
+    inferred = Some(t)
+    t.schema()
+  }
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: util.Map[String, String]): Table =
-    D1SourceUtil.tableFor(new CaseInsensitiveStringMap(properties))
+                        properties: util.Map[String, String]): Table = {
+    val t = inferred.getOrElse(fetch(new CaseInsensitiveStringMap(properties)))
+    inferred = None
+    t
+  }
 }
 
 object D1SourceUtil {

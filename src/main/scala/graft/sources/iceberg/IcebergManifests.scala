@@ -3,84 +3,84 @@ package graft.sources.iceberg
 import org.apache.avro.file.{DataFileReader, SeekableByteArrayInput}
 import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
 
-/** Manifest resolution: snapshot → manifest-list (Avro) → manifests
-  * (Avro) → data-file paths. Reads the spec'd field names with the
-  * file-embedded writer schema (GenericDatumReader), so any compliant
-  * writer's files resolve regardless of which optional fields it wrote.
+/** Manifest resolution: snapshot → manifest list (Avro) → manifests
+  * (Avro) → live data and delete entries. Reads the spec'd field names
+  * with the file-embedded writer schema (GenericDatumReader), so any
+  * compliant writer's files resolve regardless of which optional fields
+  * it wrote.
   *
-  * Read-path support is copy-on-write tables only: a delete manifest
-  * (manifest-list `content` = 1) or a delete data-file entry
-  * (`data_file.content` != 0) fails the read in-band rather than
-  * silently returning rows that merge-on-read would have masked.
+  * A data manifest holds data files only (`data_file.content` = 0) and
+  * those files must be parquet; anything else fails the read in-band.
+  * Delete manifests (manifest-list `content` = 1) decode to position
+  * and equality delete entries, which `Iceberg.read` applies; the SQL
+  * catalog, which serves copy-on-write tables only, refuses them before
+  * any manifest is read.
   */
 object IcebergManifests {
-
-  /** All live data-file paths for one snapshot's manifest list —
-    * copy-on-write reads only: any delete manifest fails in-band.
-    * Merge-on-read callers use [[snapshotManifests]] +
-    * [[deleteFilesOfManifest]] instead.
-    */
-  def dataFiles(conf: Configuration, manifestListPath: String): Seq[DataFileEntry] = {
-    val (data, deletes) = snapshotManifests(conf, manifestListPath)
-    if (deletes.nonEmpty)
-      throw new UnsupportedOperationException(
-        s"Iceberg table has delete manifests (merge-on-read); " +
-          s"only copy-on-write tables are readable: $manifestListPath")
-    data.flatMap(m => dataFilesOfManifest(conf, m.path, m.sequenceNumber))
-  }
 
   final case class DataFileEntry(path: String, format: String, recordCount: Long,
       lowerBounds: Map[Int, Array[Byte]] = Map.empty,
       upperBounds: Map[Int, Array[Byte]] = Map.empty,
       sequenceNumber: Option[Long] = None)
 
-  /** A manifest-list entry: path, plus the manifest's data sequence
-    * number (spec field-id 515) when the writer recorded one — the
-    * inheritance root for entries whose own `sequence_number` is null.
-    */
-  final case class ManifestRef(path: String, sequenceNumber: Option[Long])
-
-  /** Manifest-list → (data manifests, delete manifests), classified by
-    * the spec's `content` field without reading the manifests themselves.
-    */
-  def snapshotManifests(conf: Configuration,
-                        manifestListPath: String): (Seq[ManifestRef], Seq[ManifestRef]) = {
-    val all = readAvro(conf, manifestListPath).map { rec =>
-      (ManifestRef(rec.get("manifest_path").toString, longField(rec, "sequence_number")),
-        longField(rec, "content").getOrElse(0L))
-    }
-    (all.filter(_._2 == 0L).map(_._1), all.filter(_._2 == 1L).map(_._1))
+  final case class DeleteFileEntry(path: String, content: Long,
+      sequenceNumber: Option[Long] = None) {
+    def isPosition: Boolean = content == 1L
+    def isEquality: Boolean = content == 2L
   }
 
-  /** One manifest → its live data files. Entry `status` 2 = DELETED
-    * (dropped); `data_file.content` != 0 = position/equality deletes
-    * (rejected). An entry's null/absent `sequence_number` inherits the
-    * manifest's (the spec's v2 inheritance rule for ADDED entries).
+  /** A snapshot's manifest list → its live (data entries, delete
+    * entries). Per manifest entry: `status` 2 = DELETED (dropped); a
+    * null/absent entry `sequence_number` inherits the manifest's
+    * (manifest-list field-id 515, the spec's v2 inheritance rule for
+    * ADDED entries). Delete entries are `content` 1 position deletes
+    * (parquet of (file_path, pos)) or 2 equality deletes (parquet whose
+    * columns are the equality fields). `copyOnWrite` refuses a list
+    * that names a delete manifest.
     */
-  def dataFilesOfManifest(conf: Configuration, manifestPath: String,
-                          manifestSeq: Option[Long] = None): Seq[DataFileEntry] =
-    readAvro(conf, manifestPath).flatMap { rec =>
-      val status = longField(rec, "status").getOrElse(1L)
-      if (status == 2L) None
-      else {
-        val df = rec.get("data_file").asInstanceOf[GenericRecord]
-        val content = longField(df, "content").getOrElse(0L)
-        if (content != 0L)
-          throw new UnsupportedOperationException(
-            s"Iceberg manifest contains delete files (content=$content); " +
-              s"only copy-on-write tables are readable: $manifestPath")
-        val fmt = Option(df.get("file_format")).map(_.toString).getOrElse("PARQUET")
-        if (!fmt.equalsIgnoreCase("parquet"))
-          throw new UnsupportedOperationException(
-            s"unsupported Iceberg data-file format $fmt (parquet only)")
-        Some(DataFileEntry(df.get("file_path").toString, fmt,
-          longField(df, "record_count").getOrElse(0L),
-          boundsField(df, "lower_bounds"), boundsField(df, "upper_bounds"),
-          longField(rec, "sequence_number").orElse(manifestSeq)))
+  def entries(conf: Configuration, manifestListPath: String,
+              copyOnWrite: Boolean): (Seq[DataFileEntry], Seq[DeleteFileEntry]) = {
+    val manifests = readAvro(conf, manifestListPath).map { rec =>
+      (rec.get("manifest_path").toString, longField(rec, "content").getOrElse(0L),
+        longField(rec, "sequence_number"))
+    }
+    if (copyOnWrite && manifests.exists(_._2 == 1L))
+      throw new UnsupportedOperationException(
+        s"Iceberg table has delete manifests (merge-on-read); " +
+          s"only copy-on-write tables are readable: $manifestListPath")
+    // (manifest path, live `data_file` record, its sequence number)
+    def live(content: Long) = manifests.filter(_._2 == content).flatMap {
+      case (path, _, manifestSeq) =>
+        readAvro(conf, path)
+          .filter(rec => longField(rec, "status").getOrElse(1L) != 2L)
+          .map(rec => (path, rec.get("data_file").asInstanceOf[GenericRecord],
+            longField(rec, "sequence_number").orElse(manifestSeq)))
+    }
+    val data = live(0L).map { case (path, df, seq) =>
+      val content = longField(df, "content").getOrElse(0L)
+      if (content != 0L)
+        throw new UnsupportedOperationException(
+          s"Iceberg manifest contains delete files (content=$content); " +
+            s"only copy-on-write tables are readable: $path")
+      val fmt = Option(df.get("file_format")).map(_.toString).getOrElse("PARQUET")
+      if (!fmt.equalsIgnoreCase("parquet"))
+        throw new UnsupportedOperationException(
+          s"unsupported Iceberg data-file format $fmt (parquet only)")
+      DataFileEntry(df.get("file_path").toString, fmt,
+        longField(df, "record_count").getOrElse(0L),
+        boundsField(df, "lower_bounds"), boundsField(df, "upper_bounds"), seq)
+    }
+    val deletes = live(1L).map { case (path, df, seq) =>
+      longField(df, "content").getOrElse(0L) match {
+        case c @ (1L | 2L) => DeleteFileEntry(df.get("file_path").toString, c, seq)
+        case other =>
+          throw new IllegalArgumentException(
+            s"unexpected content=$other in delete manifest $path")
       }
     }
+    (data, deletes)
+  }
 
   /** `lower_bounds`/`upper_bounds` — spec'd `map<int, binary>` keyed by
     * field id, avro-encoded as an array of key/value records (avro map
@@ -109,34 +109,6 @@ object IcebergManifests {
       case _ => Map.empty
     }
 
-  final case class DeleteFileEntry(path: String, content: Long,
-      sequenceNumber: Option[Long] = None) {
-    def isPosition: Boolean = content == 1L
-    def isEquality: Boolean = content == 2L
-  }
-
-  /** A delete manifest's live delete files: `content` = 1 position
-    * deletes (parquet of (file_path, pos)), `content` = 2 equality
-    * deletes (parquet whose columns are the equality fields). Sequence
-    * numbers inherit from the manifest like data entries do.
-    */
-  def deleteFilesOfManifest(conf: Configuration, manifestPath: String,
-                            manifestSeq: Option[Long] = None): Seq[DeleteFileEntry] =
-    readAvro(conf, manifestPath).flatMap { rec =>
-      val status = longField(rec, "status").getOrElse(1L)
-      if (status == 2L) None
-      else {
-        val df = rec.get("data_file").asInstanceOf[GenericRecord]
-        longField(df, "content").getOrElse(0L) match {
-          case c @ (1L | 2L) => Some(DeleteFileEntry(df.get("file_path").toString, c,
-            longField(rec, "sequence_number").orElse(manifestSeq)))
-          case other =>
-            throw new IllegalArgumentException(
-              s"unexpected content=$other in delete manifest $manifestPath")
-        }
-      }
-    }
-
   private def longField(rec: GenericRecord, name: String): Option[Long] =
     if (rec.getSchema.getField(name) == null) None
     else Option(rec.get(name)).map {
@@ -145,21 +117,16 @@ object IcebergManifests {
       case other                => other.toString.toLong
     }
 
-  /** Read a whole Avro object file from the table's filesystem (r2://,
-    * file://, …). Manifests are small (KBs–MBs of metadata about TBs of
-    * data), so a full in-memory read is the right call — the data files
-    * themselves stay on the FS and are byte-range-scanned by Spark's
-    * parquet source.
+  /** Decode a whole Avro object file from the table's filesystem
+    * (r2://, file://, …). Manifests are small (KBs–MBs of metadata about
+    * TBs of data), so a full in-memory read is the right call — the data
+    * files themselves stay on the FS and are byte-range-scanned by
+    * Spark's parquet source.
     */
   private def readAvro(conf: Configuration, pathStr: String): Seq[GenericRecord] = {
-    val path = new Path(pathStr)
-    val fs = path.getFileSystem(conf)
-    val len = fs.getFileStatus(path).getLen
-    val bytes = new Array[Byte](len.toInt)
-    val in = fs.open(path)
-    try in.readFully(0, bytes) finally in.close()
     val reader = new DataFileReader[GenericRecord](
-      new SeekableByteArrayInput(bytes), new GenericDatumReader[GenericRecord]())
+      new SeekableByteArrayInput(Iceberg.readObject(conf, pathStr)),
+      new GenericDatumReader[GenericRecord]())
     try {
       val buf = scala.collection.mutable.ArrayBuffer.empty[GenericRecord]
       while (reader.hasNext) buf += reader.next()

@@ -1,6 +1,6 @@
 package graft.sources.iceberg
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.JsonNode
 import org.apache.spark.sql.types._
 import scala.jdk.CollectionConverters._
 
@@ -29,10 +29,6 @@ object IcebergMeta {
       fieldIds: Map[Int, String]) {
     def currentSnapshot: Option[Snapshot] = currentSnapshotId.flatMap(snapshots.get)
   }
-
-  private val mapper = new ObjectMapper()
-
-  def parse(json: String): TableMeta = parseNode(mapper.readTree(json))
 
   def parseNode(root: JsonNode): TableMeta = {
     val fv = Option(root.get("format-version")).map(_.asInt).getOrElse(1)

@@ -3,6 +3,7 @@ package graft.sources.iceberg
 import java.util
 import com.fasterxml.jackson.databind.JsonNode
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException}
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.types.StructType
@@ -78,8 +79,7 @@ class IcebergRestCatalog extends TableCatalog with SupportsNamespaces {
 
   override def loadNamespaceMetadata(namespace: Array[String]): util.Map[String, String] =
     if (namespaceExists(namespace)) new util.HashMap[String, String]()
-    else throw new org.apache.spark.sql.catalyst.analysis.NoSuchNamespaceException(
-      namespace.toSeq)
+    else throw new NoSuchNamespaceException(namespace.toSeq)
 
   override def namespaceExists(namespace: Array[String]): Boolean =
     listNamespaces().exists(_.sameElements(namespace))
@@ -98,10 +98,8 @@ class IcebergRestCatalog extends TableCatalog with SupportsNamespaces {
   }
 
   override def tableExists(ident: Identifier): Boolean =
-    try { loadTableResult(ident); true } catch { case _: Exception => false }
-
-  private def loadTableResult(ident: Identifier): JsonNode =
-    getJson(Iceberg.tablePath(ident.namespace().toSeq, ident.name()))
+    try { Iceberg.loadTableResult(uri, token, ident.namespace().toSeq, ident.name()); true }
+    catch { case _: NoSuchTableException => false }
 
   override def loadTable(ident: Identifier): Table = loadTableAt(ident, None)
 
@@ -114,27 +112,16 @@ class IcebergRestCatalog extends TableCatalog with SupportsNamespaces {
           s"VERSION AS OF for catalog $catalogName takes an Iceberg snapshot id, got '$version'")
       }))
 
+  // copy-on-write read path: delete manifests fail in-band (a DSv2
+  // Table can't express the delete anti-joins); the Iceberg.read
+  // DataFrame API serves merge-on-read tables
   private def loadTableAt(ident: Identifier, snapshotId: Option[Long]): Table = {
     val spark = SparkSession.active
-    Iceberg.enableFieldIdReads(spark)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val meta = Iceberg.resolveMeta(conf, uri, token, ident.namespace().toSeq, ident.name())
-    val snap = snapshotId match {
-      case Some(id) => Some(meta.snapshots.getOrElse(id,
-        throw new IllegalArgumentException(
-          s"no snapshot $id in $ident (have: ${meta.snapshots.keys.toSeq.sorted.mkString(", ")})")))
-      case None => meta.currentSnapshot
-    }
-    // copy-on-write read path: delete manifests fail in-band here (a
-    // DSv2 Table can't express the delete anti-joins); the
-    // Iceberg.read DataFrame API serves merge-on-read tables
-    val files = snap match {
-      case Some(s) => IcebergManifests.dataFiles(conf, s.manifestList)
-      case None    => Nil // table exists but has no snapshot yet: empty scan
-    }
+    val r = Iceberg.resolve(spark, uri, token, ident.namespace().toSeq, ident.name(),
+      snapshotId, copyOnWrite = true)
     new IcebergTable(
       s"$catalogName.${ident.namespace().mkString(".")}.${ident.name()}",
-      spark, meta.schema, files, meta.fieldIds)
+      spark, r.meta.schema, r.data, r.meta.fieldIds)
   }
 
   // ---- mutations: rejected (read-only surface, R2FileSystem posture) --

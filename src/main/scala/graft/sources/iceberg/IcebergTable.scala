@@ -22,7 +22,9 @@ import IcebergManifests.DataFileEntry
   * provide: row-group stats skip happens only after every file's footer
   * is opened, while Iceberg's `lower_bounds`/`upper_bounds` live in the
   * manifests already read at planning, so a selective filter over a
-  * 100 TB table never even lists the files outside its range.
+  * 100 TB table never opens a footer outside its range. (Planning still
+  * probes every manifest file's status: the scan's first delegate spans
+  * all of them.)
   *
   * Everything after the file-set decision delegates to Spark's own
   * `ParquetScanBuilder` (filter pushdown, column pruning, footer

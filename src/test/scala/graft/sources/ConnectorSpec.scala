@@ -766,6 +766,40 @@ class ConnectorSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally d1.stop()
   }
 
+  test("d1 requests per op: a load fetches the schema once; scan 2, append 3, txn 1") {
+    Secrets.register(Secrets.Secret("d1req_test", "d1", "acct", "tok"))
+    try {
+      import spark.implicits._
+      import scala.jdk.CollectionConverters._
+      val api = s"${stub.base}/client/v4"
+      val opts = Map("api_base" -> api, "secret" -> "d1req_test", "database_id" -> d1Db,
+        "table" -> "kv_test")
+      def exec(sql: String) = graft.sources.d1.D1.execute(sql, Some("d1req_test"), d1Db, api)
+      // the D1 request bodies one operation posts
+      def posts(op: => Any): Seq[String] = {
+        stub.requests.clear()
+        op
+        stub.requests.asScala.collect { case (p, body) if p.contains("/query") => body }.toSeq
+      }
+      exec("DELETE FROM kv_test")
+      val load = posts(spark.read.format("d1").options(opts).load())
+      assert(load.size == 1 && load.head.contains("PRAGMA table_info(kv_test)"), load)
+      val append = posts((0 until 100).map(i => (s"r$i", i.toLong)).toDF("k", "v")
+        .coalesce(1).write.format("d1").options(opts).mode("append").save())
+      assert(append.size == 3, append) // the schema, then two batches of 50
+      val scan = posts(spark.read.format("d1").options(opts).load()
+        .filter(col("v") >= 10 && col("v") < 20).limit(5).collect())
+      assert(scan.size == 2 && scan.last.contains("SELECT * FROM kv_test"), scan)
+      val txn = posts {
+        spark.sql("BEGIN")
+        (0 until 8).foreach(i => exec(s"INSERT INTO kv_test (k, v) VALUES ('t$i', $i)"))
+        spark.sql("COMMIT")
+      }
+      assert(txn.size == 1, txn) // one batch of 8 at COMMIT
+      assert(spark.read.format("d1").options(opts).load().count() == 108L)
+    } finally Secrets.drop("d1", "d1req_test")
+  }
+
   test("d1 secret: a named secret that does not exist fails, default secret or not") {
     val saved = Secrets.lookup("d1", "__default_d1")
     Secrets.register(Secrets.Secret("__default_d1", "d1", "acct", "tok"))

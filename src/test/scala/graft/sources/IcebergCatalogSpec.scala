@@ -186,6 +186,7 @@ class IcebergCatalogSpec extends AnyFunSuite {
   }
 
   test("manifest-bounds file pruning: a selective filter plans only in-range files") {
+    import scala.jdk.CollectionConverters._
     setup()
     val customer = graft.queries.load(spark, "/root/testdata/sf0.001", "customer")
     // 3 range files on c_custkey, each manifest entry carrying min/max
@@ -207,6 +208,26 @@ class IcebergCatalogSpec extends AnyFunSuite {
       .filter(_.contains("/r2-lake/iceberg/tpch/customer_b/data/"))
       .flatMap(r => "part-s1-(\\d+)\\.parquet".r.findFirstIn(r)).distinct
     assert(touched.length == 1, s"touched: ${touched.mkString(",")}")
+    // every r2-lake request as (object key, is a LIST): a LIST names its
+    // key URL-encoded in `prefix=`, a GET in its path
+    val lake = stub.requests.asScala.map(_._1.takeWhile(_ != '#')).toSeq.flatMap { r =>
+      if (r.startsWith("/r2-lake?"))
+        "[?&]prefix=([^&]*)".r.findFirstMatchIn(r)
+          .map(m => (java.net.URLDecoder.decode(m.group(1), "UTF-8"), true))
+      else if (r.startsWith("/r2-lake/")) Some((r.stripPrefix("/r2-lake/"), false))
+      else None
+    }
+    // a request reaches a key when it names the key (or a path below it)
+    // or lists a prefix of it
+    def reaches(r: (String, Boolean), key: String) =
+      r._1.startsWith(key) || (r._2 && key.startsWith(r._1))
+    // each metadata object costs one LIST (the open) and one GET
+    for (obj <- Seq("v1.metadata.json", "snap-1.avro", "manifest-1-0.avro")) {
+      val key = s"iceberg/tpch/customer_b/metadata/$obj"
+      val lists = lake.count(r => r._2 && reaches(r, key))
+      val gets = lake.count(r => !r._2 && reaches(r, key))
+      assert((lists, gets) == ((1, 1)), s"$obj: $lists LIST, $gets GET")
+    }
 
     // range predicate: >= max key region → only the last file
     stub.requests.clear()
@@ -289,6 +310,25 @@ class IcebergCatalogSpec extends AnyFunSuite {
       spark.table("lake.tpch.nope").collect()
     }
     assert(e.getMessage.toLowerCase.contains("table"), e.getMessage)
+    assert(e.getMessage.contains("TABLE_OR_VIEW_NOT_FOUND"), e.getMessage)
+  }
+
+  test("tableExists is false for a missing table only: another failure status surfaces") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.connector.catalog.Identifier
+    val rest = new graft.fixtures.Stub().start()
+    rest.route("/ice/v1/namespaces/a/tables/") { ex =>
+      if (ex.getRequestURI.getPath.endsWith("/gone")) (404, "no such table".getBytes("UTF-8"))
+      else (503, "unavailable".getBytes("UTF-8"))
+    }
+    try {
+      val cat = new graft.sources.iceberg.IcebergRestCatalog
+      cat.initialize("probe", new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+        Map("uri" -> s"${rest.base}/ice").asJava))
+      assert(!cat.tableExists(Identifier.of(Array("a"), "gone")))
+      val e = intercept[Exception](cat.tableExists(Identifier.of(Array("a"), "busy")))
+      assert(e.getMessage.contains("HTTP 503"), e.getMessage)
+    } finally rest.stop()
   }
 
   test("a two-level namespace reaches the REST catalog joined with %1F") {
