@@ -174,35 +174,52 @@ object IcebergFixture {
   private final case class ManifestFile(path: String, length: Long, content: Int,
                                         sequenceNumber: Option[Long] = None)
 
-  /** Data files: write `df` as parquet — range-split on `rangeFiles`'
-    * column into that many files, else one file — and put part `i` at
-    * `<stem>-<i>.parquet`. Rows are counted off the written file, bounds
-    * (keyed by 1-based field position) computed only when asked.
+  /** Data files: write `df` as parquet — split on `rangeFiles`' column
+    * into that many files, else one file — and put part `i` at
+    * `<stem>-<i>.parquet`. File `i` holds the keys in `[q(i), q(i+1))`,
+    * `q(i)` the key at row `i·N/n` of the sorted key column: exact
+    * quantiles, so the split depends on the data alone (a sampled range
+    * partitioner's also depends on the Spark work run before it). Rows
+    * are counted off the written file, bounds (keyed by 1-based field
+    * position) computed only when asked.
     */
   private def putParquet(stub: Stub, df: DataFrame, stem: String,
                          rangeFiles: Option[(String, Int)] = None,
                          withBounds: Boolean = false): Seq[FileEntry] = {
+    import org.apache.spark.sql.functions.{col, lit, when}
     val tmp = java.nio.file.Files.createTempDirectory("icefix").toFile
-    val out = rangeFiles match {
-      case Some((col, n)) =>
-        df.repartitionByRange(n, org.apache.spark.sql.functions.col(col))
-      case None => df.coalesce(1)
-    }
+    val out = new java.io.File(tmp, "d")
+    def parquetFiles(dir: java.io.File): Seq[java.io.File] =
+      Option(dir.listFiles()).toSeq.flatten
+        .filter(f => f.getName.endsWith(".parquet") && f.length() > 0).sortBy(_.getName)
     try {
-      out.write.mode("overwrite").parquet(tmp.getAbsolutePath + "/d")
-      new java.io.File(tmp, "d").listFiles()
-        .filter(f => f.getName.endsWith(".parquet") && f.length() > 0)
-        .sortBy(_.getName).zipWithIndex.toSeq
-        .map { case (f, i) =>
-          val key = s"$stem-$i.parquet"
-          val bytes = java.nio.file.Files.readAllBytes(f.toPath)
-          stub.objects.put(key, bytes)
-          val rows = df.sparkSession.read.parquet(f.getAbsolutePath).count()
-          val (lo, hi) =
-            if (withBounds) fileBounds(df.sparkSession, f, df.schema)
-            else (Map.empty[Int, Array[Byte]], Map.empty[Int, Array[Byte]])
-          FileEntry(location(key), bytes.length.toLong, rows, lo, hi)
-        }
+      val files = rangeFiles match {
+        case Some((key, n)) =>
+          // one task writes every file (fixture-sized data), each sorted
+          // on the key; null keys land in file 0
+          val keys = df.select(col(key)).collect().flatMap(r => Option(r.get(0)))
+            .map(_.asInstanceOf[Comparable[Any]]).sortWith(_.compareTo(_) < 0)
+          val file = (1 until n).flatMap(i => keys.lift((i.toLong * keys.length / n).toInt))
+            .map(q => when(col(key) >= lit(q), 1).otherwise(0))
+            .foldLeft(lit(0))(_ + _)
+          df.withColumn("__file", file).coalesce(1)
+            .sortWithinPartitions(col("__file"), col(key))
+            .write.partitionBy("__file").parquet(out.getAbsolutePath)
+          (0 until n).flatMap(i => parquetFiles(new java.io.File(out, s"__file=$i")))
+        case None =>
+          df.coalesce(1).write.parquet(out.getAbsolutePath)
+          parquetFiles(out)
+      }
+      files.zipWithIndex.map { case (f, i) =>
+        val key = s"$stem-$i.parquet"
+        val bytes = java.nio.file.Files.readAllBytes(f.toPath)
+        stub.objects.put(key, bytes)
+        val rows = df.sparkSession.read.parquet(f.getAbsolutePath).count()
+        val (lo, hi) =
+          if (withBounds) fileBounds(df.sparkSession, f, df.schema)
+          else (Map.empty[Int, Array[Byte]], Map.empty[Int, Array[Byte]])
+        FileEntry(location(key), bytes.length.toLong, rows, lo, hi)
+      }
     } finally org.apache.commons.io.FileUtils.deleteQuietly(tmp)
   }
 

@@ -34,6 +34,20 @@ final class Stub {
     */
   @volatile var listPageCap: Int = 1000
   private val routes = TrieMap.empty[String, HttpExchange => (Int, Array[Byte])]
+  /** Each in-flight request's body, by exchange. Not an exchange
+    * attribute: on JDK 17 those live in the shared HttpContext, so
+    * concurrent requests read each other's bodies.
+    */
+  private val bodies = new java.util.concurrent.ConcurrentHashMap[HttpExchange, Array[Byte]]()
+
+  /** The raw body of request `ex`, while its route runs (binary payloads
+    * such as an S3-style object PUT; [[body]] is lossy for them).
+    */
+  def bodyBytes(ex: HttpExchange): Array[Byte] =
+    bodies.getOrDefault(ex, Array.emptyByteArray)
+
+  /** The body of request `ex` as UTF-8 text, while its route runs. */
+  def body(ex: HttpExchange): String = new String(bodyBytes(ex), UTF_8)
 
   def start(): Stub = {
     server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
@@ -45,18 +59,15 @@ final class Stub {
       val pathQ = ex.getRequestURI.toString +
         Option(ex.getRequestHeaders.getFirst("Range")).map("#Range:" + _).getOrElse("")
       requests.add((pathQ, body))
-      ex.setAttribute("body", body)
-      // raw bytes for binary payloads (S3-style object PUT): the UTF-8
-      // string round-trip above is lossy for arbitrary binary
-      ex.setAttribute("bodyBytes", bodyBytes)
       val handler = routes.collectFirst {
         case (prefix, h) if ex.getRequestURI.getPath.startsWith(prefix) => h
       }
-      val (status, bytes) = handler match {
+      bodies.put(ex, bodyBytes)
+      val (status, bytes) = try handler match {
         case Some(h) => try h(ex) catch { case e: Exception =>
           (500, s"stub error: ${e.getMessage}".getBytes(UTF_8)) }
         case None => (404, "not found".getBytes(UTF_8))
-      }
+      } finally bodies.remove(ex)
       ex.sendResponseHeaders(status, if (bytes.isEmpty) -1 else bytes.length)
       if (bytes.nonEmpty) ex.getResponseBody.write(bytes)
       ex.close()
@@ -252,7 +263,7 @@ object Fixtures {
     }
     stub.route("/client/v4/accounts/") { ex =>
       val path = ex.getRequestURI.getPath
-      val body = Option(ex.getAttribute("body")).map(_.toString).getOrElse("")
+      val body = stub.body(ex)
       if (path.endsWith("/d1/database")) (200, d1DatabasesJson.getBytes(UTF_8))
       else {
         val sql = "\"sql\"\\s*:\\s*\"((?:[^\"\\\\]|\\\\.)*)\"".r.findFirstMatchIn(body)
@@ -294,8 +305,7 @@ object Fixtures {
               case None => (404, "NoSuchKey".getBytes(UTF_8))
             }
           case None =>
-            stub.objects.put(path,
-              ex.getAttribute("bodyBytes").asInstanceOf[Array[Byte]])
+            stub.objects.put(path, stub.bodyBytes(ex))
             stub.objectTimes.put(path, System.currentTimeMillis())
             (200, Array.emptyByteArray)
         }

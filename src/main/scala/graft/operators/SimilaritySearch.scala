@@ -225,8 +225,23 @@ object SimilaritySearch {
               query: Array[Double], k: Int, nlist: Int = 16,
               nprobe: Int = 4, scale: Int = 6): DataFrame = {
     val cents = sampleCentroids(df, embCol, idCol, nlist)
-    require(query.length == cents(0).length,
-      dimError(query.length, cents(0).length))
+    // reuse the already-collected centroids — one metadata scan per query,
+    // not two (assign + probe share the same quantizer)
+    probeTopK(assignWithKernel(df, embCol, cents), cents, embCol, idCol,
+      query, k, nprobe, scale)
+  }
+
+  /** The top-`k` rows of `cells` (a `cluster`-assigned frame) by exact
+    * cosine to `query`, ranked inside the `nprobe` cells whose centroids
+    * are closest to it (ties to the lower cluster id). The centroid
+    * ranking runs on the driver; `cells` is not touched when the query's
+    * dimension mismatches the quantizer's.
+    */
+  private def probeTopK(cells: => DataFrame, cents: Array[Array[Double]],
+                        embCol: String, idCol: String, query: Array[Double],
+                        k: Int, nprobe: Int, scale: Int): DataFrame = {
+    require(cents.nonEmpty && query.length == cents(0).length,
+      dimError(query.length, cents.headOption.map(_.length).getOrElse(0)))
     def cos(p: Array[Double]): Double = {
       var s = 0.0; var pn = 0.0; var qn = 0.0
       var j = 0
@@ -235,13 +250,11 @@ object SimilaritySearch {
     }
     val probed = cents.zipWithIndex.sortBy { case (p, i) => (-cos(p), i) }
       .take(nprobe).map(_._2)
-    val q = typedLit(query)
-    // reuse the already-collected centroids — one metadata scan per query,
-    // not two (assign + probe share the same quantizer)
-    assignWithKernel(df, embCol, cents)
+    cells
       .filter(col("cluster").isin(probed.toSeq: _*))
       .select(col(idCol).as("id"),
-        round(cosine(col(embCol).cast("array<double>"), q), scale).as("cos_sim"))
+        round(cosine(col(embCol).cast("array<double>"), typedLit(query)), scale)
+          .as("cos_sim"))
       .orderBy(col("cos_sim").desc, col("id"))
       .limit(k)
   }
@@ -344,27 +357,11 @@ object SimilaritySearch {
                embCol: String, idCol: String, query: Array[Double], k: Int,
                nprobe: Int, scale: Int = 6): DataFrame = {
     val index = IndexLifecycle.open(spark, path, IvfIndex)
-    val cents = storedCentroids(spark, index.root)
-    require(cents.nonEmpty && query.length == cents(0).length,
-      dimError(query.length, cents.headOption.map(_.length).getOrElse(0)))
-    def cos(p: Array[Double]): Double = {
-      var s = 0.0; var pn = 0.0; var qn = 0.0
-      var j = 0
-      while (j < p.length) { s += p(j) * query(j); pn += p(j) * p(j); qn += query(j) * query(j); j += 1 }
-      s / (math.sqrt(pn) * math.sqrt(qn))
-    }
-    val probed = cents.zipWithIndex.sortBy { case (p, i) => (-cos(p), i) }
-      .take(nprobe).map(_._2)
-    val q = typedLit(query)
     // appended rows resolve through their commit markers (IndexLifecycle)
     // — a scan-local filter on a data column, so the planning-time
     // partition pruning on `cluster` is untouched
-    index.visible("corpus")
-      .filter(col("cluster").isin(probed.toSeq: _*))
-      .select(col(idCol).as("id"),
-        round(cosine(col(embCol).cast("array<double>"), q), scale).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col("id"))
-      .limit(k)
+    probeTopK(index.visible("corpus"), storedCentroids(spark, index.root),
+      embCol, idCol, query, k, nprobe, scale)
   }
 
   /** Embedding-cosine near-duplicate pairs via LSH blocking + exact

@@ -118,13 +118,12 @@ object UnitStore {
     * `keepAppendIds` names committed appends to carry through UNFOLDED —
     * rows keep their attempt tag, markers keep their payload — so a
     * later read excluding one of those ids still hides its rows. The
-    * streaming rewrite loops depend on this: they compact at the START
-    * of a batch, keeping the batch's OWN appendId, because a previous
-    * attempt of the same batch may have appended and committed its
-    * marker without reaching the stream's checkpoint commit — folding it
-    * would disarm the replay's `excludeAppendIds` hook and the replay
-    * would drop the batch against itself, overwriting correct output
-    * (the documented crash-anywhere/replay-identical contract).
+    * streaming rewrite loops depend on this: they compact right after a
+    * batch's appends, keeping the batch's OWN appendId, because the
+    * batch is not yet committed in the stream's checkpoint — folding its
+    * marker would disarm the replay's `excludeAppendIds` hook and the
+    * replay would drop the batch against itself, overwriting correct
+    * output (the documented crash-anywhere/replay-identical contract).
     */
   def compact(spark: SparkSession, path: String,
               keepAppendIds: Seq[String] = Nil): Unit =

@@ -4,7 +4,6 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.core.Codecs
 import graft.sources.cdx.{CdxDialect, CommonCrawl, Wayback}
@@ -210,20 +209,15 @@ object CdxFilterRule extends Rule[LogicalPlan] {
             val translations = consumed.map(_._2)
             val urlOpt = translations.flatMap(_._1).headOption
             val filters = translations.flatMap(_._2)
-            val merged = new java.util.HashMap[String, String](rel.options)
-            // dedicated key: takes precedence over user url/url_like in the
-            // scan builders (plain "url" would be shadowed by url_like)
-            urlOpt.foreach(u => merged.put("pushed_url", u))
-            if (filters.nonEmpty) {
-              val existing = Option(rel.options.get("extra_filters")).toSeq
-                .flatMap(_.split(";")).filter(_.nonEmpty)
-              merged.put("extra_filters", (existing ++ filters).distinct.mkString(";"))
-            }
-            val newRel = rel.copy(options = new CaseInsensitiveStringMap(merged))
-            // replace the relation in place — the wrapper (view alias /
-            // projection) must survive so output attributes stay intact
-            val newChild = child.transformUp {
-              case r: DataSourceV2Relation if r.eq(rel) => newRel
+            val newChild = RelationOptions.swap(child, rel) { opts =>
+              // dedicated key: takes precedence over user url/url_like in
+              // the scan builders (plain "url" would be shadowed by url_like)
+              urlOpt.foreach(u => opts.put("pushed_url", u))
+              if (filters.nonEmpty) {
+                val existing = Option(opts.get("extra_filters")).toSeq
+                  .flatMap(_.split(";")).filter(_.nonEmpty)
+                opts.put("extra_filters", (existing ++ filters).distinct.mkString(";"))
+              }
             }
             if (kept.isEmpty) newChild
             else Filter(kept.reduce(And), newChild)

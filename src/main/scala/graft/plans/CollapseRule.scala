@@ -6,7 +6,6 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression,
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.sources.cdx.Wayback
 
@@ -110,15 +109,43 @@ object CollapseRule extends Rule[LogicalPlan] {
     (yearMonth ++ rest).distinct
   }
 
-  private def withCollapse(r: DataSourceV2Relation, collapses: Seq[String])
-      : DataSourceV2Relation = {
-    val merged = new java.util.HashMap[String, String](r.options)
-    val existing = Option(r.options.get("collapse")).toSeq
-      .flatMap(_.split(";")).filter(_.nonEmpty)
-    val all = (existing ++ collapses).distinct
-    merged.put("collapse", all.mkString(";"))
-    r.copy(options = new CaseInsensitiveStringMap(merged))
+  /** The two shapes a DISTINCT ON takes by the time injected rules run,
+    * as (keys, child): `Deduplicate`, or the `Aggregate` with a `First`
+    * that ReplaceDeduplicateWithAggregate rewrites it into (`First` may
+    * be nested under projections the optimizer collapsed into the
+    * aggregate list, e.g. `substring_index(first(c), ...)`).
+    */
+  private object DistinctOn {
+    def unapply(p: LogicalPlan): Option[(Seq[Expression], LogicalPlan)] = p match {
+      case d: Deduplicate => Some((d.keys, d.child))
+      case Aggregate(groupingExprs, aggExprs, child, _)
+          if groupingExprs.nonEmpty && aggExprs.exists(_.exists {
+            case AggregateExpression(_: First, _, _, _, _) => true
+            case _ => false
+          }) => Some((groupingExprs, child))
+      case _ => None
+    }
   }
+
+  /** `node` with the wayback relation under `child` carrying the
+    * collapse of `keys` (and, under a LIMIT `n`, `max_results` capped at
+    * `n`); None when no wayback relation or collapsible key is there.
+    */
+  private def pushCollapse(node: LogicalPlan, keys: Seq[Expression],
+                           child: LogicalPlan, limit: Option[Int]): Option[LogicalPlan] =
+    findWayback(child, Nil).flatMap { case (relation, projections) =>
+      val collapses = collapsesFor(keys, projections)
+      if (collapses.isEmpty) None
+      else Some(RelationOptions.swap(node, relation) { opts =>
+        val existing = Option(opts.get("collapse")).toSeq
+          .flatMap(_.split(";")).filter(_.nonEmpty)
+        opts.put("collapse", (existing ++ collapses).distinct.mkString(";"))
+        limit.foreach { n =>
+          val cap = Option(opts.get("max_results")).map(_.toLong).getOrElse(n.toLong)
+          opts.put("max_results", math.min(n.toLong, cap).toString)
+        }
+      })
+    }
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformDown {
     // LIMIT n over a collapse-covered DISTINCT ON: the remote collapse
@@ -131,72 +158,18 @@ object CollapseRule extends Rule[LogicalPlan] {
     // row-reduction hints; Spark still enforces exact semantics.
     case lim @ GlobalLimit(IntegerLiteral(n), body) =>
       // by the time injected rules run the optimizer has usually pushed
-      // the LocalLimit below the Project AND rewritten Deduplicate into
-      // Aggregate(keys, first(...)) (ReplaceDeduplicateWithAggregate) —
-      // walk the wrappers and accept either dedup shape
+      // the LocalLimit below the Project: walk the wrappers
       def findDedup(p: LogicalPlan): Option[(Seq[Expression], LogicalPlan)] = p match {
-        case d: Deduplicate => Some((d.keys, d.child))
-        case a @ Aggregate(groupingExprs, aggExprs, child, _)
-            if groupingExprs.nonEmpty && aggExprs.exists(_.exists {
-              case AggregateExpression(_: First, _, _, _, _) => true
-              case _ => false
-            }) => Some((groupingExprs, child))
+        case DistinctOn(keys, child) => Some((keys, child))
         case pr: Project => findDedup(pr.child)
         case ll: LocalLimit => findDedup(ll.child)
         case _ => None
       }
-      val dedup = findDedup(body)
-      val rewritten = dedup.flatMap { case (keys, dedupChild) =>
-        findWayback(dedupChild, Nil).flatMap { case (relation, projections) =>
-          val collapses = collapsesFor(keys, projections)
-          if (collapses.isEmpty) None
-          else {
-            val collapsed = withCollapse(relation, collapses)
-            val merged = new java.util.HashMap[String, String](collapsed.options)
-            val existing = Option(collapsed.options.get("max_results")).map(_.toLong)
-            merged.put("max_results", math.min(n.toLong, existing.getOrElse(n.toLong)).toString)
-            val newRel = collapsed.copy(options = new CaseInsensitiveStringMap(merged))
-            Some(lim.transformUp {
-              case r: DataSourceV2Relation if r.eq(relation) => newRel
-            })
-          }
-        }
-      }
-      rewritten.getOrElse(lim)
+      findDedup(body).flatMap { case (keys, child) =>
+        pushCollapse(lim, keys, child, Some(n))
+      }.getOrElse(lim)
 
-    case d @ Deduplicate(keys, child) =>
-      findWayback(child, Nil) match {
-        case Some((relation, projections)) =>
-          val collapses = collapsesFor(keys, projections)
-          if (collapses.isEmpty) d
-          else {
-            val newRel = withCollapse(relation, collapses)
-            d.copy(child = child.transformUp {
-              case r: DataSourceV2Relation if r.eq(relation) => newRel
-            })
-          }
-        case None => d
-      }
-
-    case a @ Aggregate(groupingExprs, aggExprs, child, _)
-        if groupingExprs.nonEmpty && aggExprs.exists(_.exists {
-          // First may be nested under projections the optimizer collapsed
-          // into the aggregate list (e.g. substring_index(first(c), ...))
-          case AggregateExpression(_: First, _, _, _, _) => true
-          case _ => false
-        }) =>
-      findWayback(child, Nil) match {
-        case Some((relation, projections)) =>
-          val collapses = collapsesFor(groupingExprs, projections)
-          if (collapses.isEmpty) a
-          else {
-            val newRel = withCollapse(relation, collapses)
-            a.copy(child = child.transformUp {
-              case r: DataSourceV2Relation if r.eq(relation) => newRel
-            })
-          }
-        case None => a
-      }
+    case d @ DistinctOn(keys, child) => pushCollapse(d, keys, child, None).getOrElse(d)
   }
 }
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
 import graft.operators.{Decontaminate, Sampling}
+import graft.streaming.Streams
 
 /** Corpus-curation operators as correctness-gate entries: PII
   * detection/redaction, repetition-based quality signals (Gopher-style),
@@ -37,15 +38,12 @@ object Curation {
     * md5-prefix sample, as a Structured Streaming query over the parquet
     * files in `inputDir`.
     */
-  private def curatedStream(spark: SparkSession, inputDir: String): DataFrame = {
-    val schema = spark.read.parquet(inputDir).schema
-    val stream = spark.readStream.schema(schema).parquet(inputDir)
+  private def curatedStream(spark: SparkSession, inputDir: String): DataFrame =
     Sampling.hashSample(
-      stream
+      Streams.fileSource(spark, inputDir)
         .withColumn("t", plantPii(col("doc_id"), col("text")))
         .withColumn("redacted", TextFunctions.piiRedact(col("t"))),
       "doc_id", numerator = 20)
-  }
 
   /** The curated stream landing as TRAINING SHARDS: the sink is
     * `foreachBatch` appending language-partitioned parquet — the
@@ -57,8 +55,8 @@ object Curation {
     * correctness-gated.
     */
   def runCurationToShards(spark: SparkSession, inputDir: String,
-                          outDir: String): Unit = {
-    val q = curatedStream(spark, inputDir)
+                          outDir: String): Unit =
+    Streams.drain(curatedStream(spark, inputDir)
       .select(col("doc_id"), col("lang"), col("redacted"))
       .writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -67,27 +65,18 @@ object Curation {
           .write.mode("append").partitionBy("lang").parquet(outDir)
       }
       .option("checkpointLocation", graft.core.TempDirs.deleteOnExit(
-        java.nio.file.Files.createTempDirectory("qs06ckpt").toString))
-      .start()
-    q.processAllAvailable()
-    q.stop()
-  }
+        java.nio.file.Files.createTempDirectory("qs06ckpt").toString)))
 
   /** Per-language counts over the curated stream's redacted text, as a
     * real Structured Streaming query (parquet file source → memory sink,
     * `processAllAvailable`).
     */
   def runCurationAsStream(spark: SparkSession, inputDir: String,
-                          queryName: String): DataFrame = {
-    val agg = curatedStream(spark, inputDir).groupBy(col("lang"))
+                          queryName: String): DataFrame =
+    Streams.drainToMemory(curatedStream(spark, inputDir).groupBy(col("lang"))
       .agg(count(lit(1)).as("n"),
-        sum(length(col("redacted"))).cast("long").as("sum_chars"))
-    val q = agg.writeStream.outputMode("complete")
-      .format("memory").queryName(queryName).start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(queryName)
-  }
+        sum(length(col("redacted"))).cast("long").as("sum_chars")),
+      queryName, "complete")
 
   val defs: Seq[QueryDef] = Seq(
 

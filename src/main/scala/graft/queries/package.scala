@@ -15,13 +15,10 @@ package object queries {
   /** Load one test table. Paths follow TESTDATA.md:
     * `<dir>/<table>.parquet`.
     *
-    * `events.ts` is TIMESTAMP(NANOS) parquet, which Spark's reader rejects
-    * (max precision is µs). We read nanos as raw longs and truncate to a
-    * µs TimestampType column — the engine-level bridge for ns sources.
-    * A µs-typed events source (e.g. the replicated bench SFs, which
-    * round-trip through a µs-only writer) loads unchanged: nanosAsLong
-    * only affects TIMESTAMP(NANOS) columns, so `ts` arrives as a proper
-    * TimestampType there.
+    * `events.ts` is TIMESTAMP(NANOS) parquet in the testdata and µs in
+    * the replicated bench SFs; both load as a µs TimestampType column
+    * through the engine's events `ts` bridge
+    * ([[graft.streaming.EventsStream.withMicrosTs]]).
     */
   // Per-(session, dir, table) memo of the base relation. A query engine
   // resolves a table through its catalog ONCE — schema and file listing
@@ -39,24 +36,10 @@ package object queries {
     loadCache.computeIfAbsent((spark, dir, table),
       _ => doLoad(spark, dir, table))
 
-  private def doLoad(spark: SparkSession, dir: String, table: String): DataFrame = {
-    if (table == "events") {
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = spark.read.parquet(s"$dir/$table.parquet")
-      raw.schema("ts").dataType match {
-        case org.apache.spark.sql.types.LongType =>
-          raw.withColumn("ts",
-            org.apache.spark.sql.functions.timestamp_micros(
-              org.apache.spark.sql.functions.expr("ts div 1000")))
-        case org.apache.spark.sql.types.TimestampNTZType =>
-          // non-UTC-adjusted parquet: normalize so downstream epoch
-          // arithmetic (sessionize casts ts to long) stays legal
-          raw.withColumn("ts", org.apache.spark.sql.functions.col("ts")
-            .cast(org.apache.spark.sql.types.TimestampType))
-        case _ => raw
-      }
-    } else spark.read.parquet(s"$dir/$table.parquet")
-  }
+  private def doLoad(spark: SparkSession, dir: String, table: String): DataFrame =
+    if (table == "events")
+      graft.streaming.EventsStream.withMicrosTs(spark)(spark.read.parquet(s"$dir/$table.parquet"))
+    else spark.read.parquet(s"$dir/$table.parquet")
 
   /** On-disk bytes of a table — the same compressed-size estimate
     * Spark's planner itself uses (`sizeInBytes` = sum of file lengths)

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.types.{LongType, TimestampType}
 
 /** Structured Streaming surface over the `events` shape. The reference has
   * no streaming abstractions (SURVEY.md §1.1) — this is the engine's
@@ -75,25 +76,35 @@ object EventsStream {
   def dedupWithinWatermark(events: DataFrame, delay: String = "30 minutes"): DataFrame =
     events.withWatermark("ts", delay).dropDuplicatesWithinWatermark("event_id")
 
+  /** `read`'s events with `ts` as a µs TimestampType. Parquet
+    * TIMESTAMP(NANOS), which Spark's reader rejects (max precision is
+    * µs), is read as raw longs and truncated to µs; any other
+    * non-timestamp `ts` (TimestampNTZ from non-UTC-adjusted parquet) is
+    * cast, so downstream epoch arithmetic stays legal. A µs-typed source
+    * loads unchanged: nanosAsLong only affects TIMESTAMP(NANOS) columns.
+    * The flag is session-wide because Spark's parquet reader takes it
+    * from the session conf only; it is set here, before `read` resolves
+    * its schema.
+    */
+  private[graft] def withMicrosTs(spark: SparkSession)(read: => DataFrame): DataFrame = {
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val raw = read
+    raw.schema("ts").dataType match {
+      case TimestampType => raw
+      case LongType => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
+      case _ => raw.withColumn("ts", col("ts").cast(TimestampType))
+    }
+  }
+
   /** Drive the watermarked streaming dedup synchronously over a parquet
     * directory (duplicates planted by the caller); returns the deduped
     * rows from the memory sink.
     */
   def runDedupAsStream(spark: SparkSession, inputDir: String,
-                       queryName: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(inputDir).schema
-    val raw = spark.readStream.schema(schema).parquet(inputDir)
-    val stream =
-      if (schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      else raw.withColumn("ts", col("ts").cast("timestamp"))
-    val q = dedupWithinWatermark(stream).writeStream.outputMode("append")
-      .format("memory").queryName(queryName).start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(queryName)
-  }
+                       queryName: String): DataFrame =
+    Streams.drainToMemory(
+      dedupWithinWatermark(withMicrosTs(spark)(Streams.fileSource(spark, inputDir))),
+      queryName, "append")
 
   /** Stream-stream event-time interval join: purchases attributed to a
     * preceding click by the same user within `window`. Both sides carry
@@ -125,57 +136,27 @@ object EventsStream {
     */
   def runIntervalJoinAsStream(spark: SparkSession, inputDir: String,
                               queryName: String): DataFrame = {
-    val schema = spark.read.parquet(inputDir).schema
-    def side(tpe: String): DataFrame =
-      spark.readStream.schema(schema).parquet(inputDir)
-        .filter(col("event_type") === tpe)
-    val joined = clickAttribution(side("click"), side("purchase"))
-    val q = joined.writeStream.outputMode("append")
-      .format("memory").queryName(queryName).start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(queryName)
+    val events = Streams.fileSource(spark, inputDir)
+    def side(tpe: String): DataFrame = events.filter(col("event_type") === tpe)
+    Streams.drainToMemory(clickAttribution(side("click"), side("purchase")),
+      queryName, "append")
   }
 
   /** Drive the streaming pipeline synchronously over the batch parquet —
     * the local-mode smoke path (`format("memory")` +
-    * `processAllAvailable`).
+    * `processAllAvailable`). `events.parquet` may be one file or a
+    * directory of part files; the file source streams either.
     */
   def runBatchAsStream(spark: SparkSession, sfDir: String, queryName: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    // ts arrives either as parquet timestamp[us] or as a raw nanos int64
-    // (nanosAsLong) depending on the writer — branch like the batch loader.
-    // Layout branch: pathGlobFilter matches LEAF file names, so the
-    // "events.parquet" filter only works when the table is a single file;
-    // a directory-layout table (part-*.parquet under events.parquet/, the
-    // normal Spark write shape) would match zero leaves and stream zero
-    // rows silently. Point the stream at the directory itself in that
-    // case — the file stream source wants a directory either way.
-    val eventsPath = new java.io.File(s"$sfDir/events.parquet")
-    val raw =
-      if (eventsPath.isDirectory)
-        spark.readStream.schema(schema).parquet(eventsPath.getPath)
-      else
-        spark.readStream.schema(schema)
-          .option("pathGlobFilter", "events.parquet").parquet(s"$sfDir/")
-    val stream =
-      (if (schema("ts").dataType == org.apache.spark.sql.types.LongType)
-         raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-       else raw.withColumn("ts", col("ts").cast("timestamp")))
+    val path = s"$sfDir/events.parquet"
+    val stream = withMicrosTs(spark)(Streams.fileSource(spark, path))
       .filter(col("event_id").isNotNull)
-    val agg = hourlyCounts(stream)
-    val q = agg.writeStream.outputMode("append")
-      .format("memory").queryName(queryName).start()
-    q.processAllAvailable()
-    q.stop()
-    val out = spark.table(queryName)
-    // Fail LOUDLY if the source matched no files (e.g. an unexpected
-    // third layout) — a zero-row stream here would otherwise surface as
-    // a silently-dropped correctness gate downstream.
+    val out = Streams.drainToMemory(hourlyCounts(stream), queryName, "append")
+    // Fail LOUDLY if the source matched no files — a zero-row stream here
+    // would otherwise surface as a silently-dropped correctness gate
+    // downstream.
     require(!out.isEmpty,
-      s"streaming smoke path read zero rows from $sfDir/events.parquet " +
-        s"(isDirectory=${eventsPath.isDirectory}) — source glob matched no files?")
+      s"streaming smoke path read zero rows from $path — source matched no files?")
     out
   }
 }

@@ -11,9 +11,9 @@ import org.apache.spark.sql.functions._
 
 /** What one ingest micro-batch costs in Spark jobs: batch snapshots that
   * the batch's own index appends cannot invalidate, index meta and dirs
-  * read on the driver, and the shard loop's job count per micro-batch
-  * pinned exactly, so a cache-invalidation regression fails here rather
-  * than only slowing the benchmark.
+  * read on the driver, and every file-fed ingest loop's job count per
+  * micro-batch pinned exactly, so a cache-invalidation regression fails
+  * here rather than only slowing the benchmark.
   */
 class IngestJobsSpec extends AnyFunSuite {
   lazy val spark: SparkSession = graft.TestSpark.spark
@@ -176,37 +176,85 @@ class IngestJobsSpec extends AnyFunSuite {
       "UnitStore.compact" -> 6, "ivfCompact" -> 2), counts.toString)
   }
 
-  test("the shard loop runs a pinned number of Spark jobs per micro-batch") {
+  /** The file-fed ingest fixture: two stamped parquet files (one per
+    * micro-batch at maxFilesPerTrigger 1) and builders for a fresh LSH
+    * index and unit store over a one-document lake.
+    */
+  private final class IngestFixture {
     val lakeText = words("lake", 25)
-    val lakeDf = Seq((0L, lakeText)).toDF("doc_id", "text")
-    val idx = tmpDir("jobs_idx")
-    Dedup.lshBuild(lakeDf, "text", "doc_id", idx)
-    Dedup.lshWriteFingerprints(lakeDf, "text", idx)
-    val store = tmpDir("jobs_store")
-    ParagraphDedup.unitStoreBuild(lakeDf, "doc_id", "text",
-      ParagraphDedup.unitsBySeparator(_, "\\n"), store)
+    private val lakeDf = Seq((0L, lakeText)).toDF("doc_id", "text")
+    val units = ParagraphDedup.unitsBySeparator(_, "\\n")
+    def index(): String = {
+      val idx = tmpDir("jobs_idx")
+      Dedup.lshBuild(lakeDf, "text", "doc_id", idx)
+      Dedup.lshWriteFingerprints(lakeDf, "text", idx)
+      idx
+    }
+    def store(): String = {
+      val s = tmpDir("jobs_store")
+      ParagraphDedup.unitStoreBuild(lakeDf, "doc_id", "text", units, s)
+      s
+    }
     val in = tmpDir("jobs_in")
-    def stamp(rows: Seq[(Long, String, String)]): Unit =
+    private def stamp(rows: Seq[(Long, String, String)]): Unit =
       rows.toDF("doc_id", "text", "source")
         .withColumn("lang", lit("en"))
         .withColumn("fp", xxhash64(col("text")))
         .coalesce(1).write.mode("append").parquet(in)
-    val docA = words("novel", 24)
+    private val docA = words("novel", 24)
     stamp(Seq((10L, docA, "src0"), (14L, words("second", 26) + "\nshared line", "src1")))
     stamp(Seq((11L, docA + " extra", "src1"), (12L, "short doc", "src1"),
       (13L, lakeText, "src1"), (15L, words("third", 23) + "\nshared line", "src0")))
-    val (_, log) = logging(graft.streaming.DocsStream.runIngestPipelineToShardsAsStream(
-      spark, in, idx, store, tmpDir("jobs_out"), tmpDir("jobs_sh"), "jobs_mem",
-      ParagraphDedup.unitsBySeparator(_, "\\n"), "\n",
-      benchmark = Seq((999L, words("bench", 25))).toDF("doc_id", "text"),
-      minWords = 20, minUniqRatio = 0.25, sampleNumerator = 256,
-      weights = Map("src0" -> 2.0), packBudget = 10000L,
-      maxFilesPerTrigger = Some(1)).collect())
-    val perBatch = log.jobs.asScala.toSeq
+  }
+
+  /** Spark jobs per streaming micro-batch id of the work `body` runs. */
+  private def jobsPerBatch(body: => Unit): Map[Long, Int] = {
+    val (_, log) = logging(body)
+    log.jobs.asScala.toSeq
       .flatMap(p => Option(p).flatMap(q => Option(q.getProperty("streaming.sql.batchId"))))
       .groupBy(identity).map { case (b, js) => b.toLong -> js.size }
+  }
+
+  test("the shard loop runs a pinned number of Spark jobs per micro-batch") {
+    val f = new IngestFixture
+    val (idx, store) = (f.index(), f.store())
+    val perBatch = jobsPerBatch(graft.streaming.DocsStream.runIngestPipelineToShardsAsStream(
+      spark, f.in, idx, store, tmpDir("jobs_out"), tmpDir("jobs_sh"), "jobs_mem",
+      f.units, "\n", benchmark = Seq((999L, words("bench", 25))).toDF("doc_id", "text"),
+      minWords = 20, minUniqRatio = 0.25, sampleNumerator = 256,
+      weights = Map("src0" -> 2.0), packBudget = 10000L,
+      maxFilesPerTrigger = Some(1)).collect(): Unit)
     // measured on this fixture; a frame re-computed after an index write
     // (the dedup plan's broadcast and shuffle jobs again) raises it
     assert(perBatch == Map(0L -> 39, 1L -> 42), perBatch.toString)
+  }
+
+  test("the other file-fed ingest loops run pinned Spark jobs per batch") {
+    import graft.streaming.DocsStream
+    val f = new IngestFixture
+    val one = Some(1)
+    // each loop gets its own index and store, built before its run is logged
+    val loops: Seq[(String, () => Unit)] = Seq(
+      "pipeline" -> { val (idx, st) = (f.index(), f.store())
+        () => DocsStream.runIngestPipelineAsStream(spark, f.in, idx, st,
+          tmpDir("jobs_pout"), "jobs_pipe", f.units, "\n",
+          maxFilesPerTrigger = one).collect(): Unit },
+      "paragraph" -> { val st = f.store()
+        () => DocsStream.runParagraphDedupLoopAsStream(spark, f.in, st,
+          tmpDir("jobs_gout"), "jobs_par", f.units, "\n",
+          maxFilesPerTrigger = one).collect(): Unit },
+      "fingerprint" -> { val idx = f.index()
+        () => DocsStream.runFingerprintIngestLoopAsStream(spark, f.in, idx,
+          "jobs_fp", maxFilesPerTrigger = one).collect(): Unit },
+      "index" -> { val idx = f.index()
+        () => DocsStream.runIndexDedupLoopAsStream(spark, f.in, idx,
+          "jobs_idx", maxFilesPerTrigger = one).collect(): Unit })
+    val perBatch = loops.map { case (name, run) => name -> jobsPerBatch(run()) }.toMap
+    // measured on this fixture, as the shard loop's pin above
+    assert(perBatch == Map(
+      "pipeline" -> Map(0L -> 30, 1L -> 33),
+      "paragraph" -> Map(0L -> 7, 1L -> 8),
+      "fingerprint" -> Map(0L -> 23, 1L -> 25),
+      "index" -> Map(0L -> 14, 1L -> 16)), perBatch.toString)
   }
 }

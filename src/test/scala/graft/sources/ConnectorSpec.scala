@@ -737,7 +737,7 @@ class ConnectorSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"""{"results":[$rows],"success":true,"meta":{"changes":0}}"""
     val d1 = new graft.fixtures.Stub().start()
     d1.routeText("/client/v4/accounts/") { ex =>
-      val body = ex.getAttribute("body").toString
+      val body = d1.body(ex)
       val sqls = "\"sql\"\\s*:\\s*\"((?:[^\"\\\\]|\\\\.)*)\"".r
         .findAllMatchIn(body).map(_.group(1)).toSeq
       val results = sqls.map {

@@ -246,6 +246,30 @@ class IcebergCatalogSpec extends AnyFunSuite {
       .collect()(0).getLong(0) == customer.count())
   }
 
+  test("a range-split publish writes the same files whatever Spark work ran before it") {
+    setup()
+    // perfbench's shape: 1,500 keyed rows in 4 range files
+    val keyed = spark.range(1500).select(col("id").as("k"), (col("id") * 7 % 100).as("v"))
+    // (rows, min key, max key) of each data file, read back off the stub
+    def publishSplit(tbl: String): Seq[(Long, Long, Long)] = {
+      IcebergFixture.publishSnapshots(stub, "tpch", tbl, Seq(keyed),
+        rangeFiles = Some(("k", 4)), withBounds = true)
+      (0 until 4).map { i =>
+        val r = spark.read.parquet(s"r2://r2-lake/iceberg/tpch/$tbl/data/part-s1-$i.parquet")
+          .agg(count(lit(1)), min(col("k")), max(col("k"))).head()
+        (r.getLong(0), r.getLong(1), r.getLong(2))
+      }
+    }
+    val first = publishSplit("keyed_split_a")
+    // unrelated Spark work in between: later RDD ids, other samples
+    (3 to 5).foreach(n => spark.range(5000).repartitionByRange(n, col("id")).count())
+    val second = publishSplit("keyed_split_b")
+    assert(first == second)
+    assert(first.map(_._1).sum == 1500L)
+    // ascending, non-overlapping key ranges
+    assert(first.sliding(2).forall { case Seq(a, b) => a._3 < b._2 }, first.toString)
+  }
+
   test("schema evolution: rename resolves by field id, added column null for old files") {
     setup()
     val nation = graft.queries.load(spark, "/root/testdata/sf0.001", "nation")
