@@ -2,9 +2,12 @@ package graft.operators
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.parquet.example.data.Group
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
-import org.apache.parquet.hadoop.example.GroupReadSupport
-import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
+import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{INT32, INT64}
+import org.apache.parquet.schema.{MessageType, Types}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
@@ -97,6 +100,9 @@ private[graft] object IndexLifecycle {
         !s.getPath.getName.startsWith("."))
       .map(_.getPath).sortBy(_.toString)
 
+  /** Spark's footer key for the row schema it wrote. */
+  private val RowMetadataKey = "org.apache.spark.sql.parquet.row.metadata"
+
   /** The Spark schema in a parquet file's footer — the row metadata
     * Spark writes, else the converted parquet schema (what schema
     * inference reads).
@@ -105,7 +111,7 @@ private[graft] object IndexLifecycle {
     val fm = scala.util.Using.resource(ParquetFileReader.open(
         HadoopInputFile.fromPath(file, spark.sessionState.newHadoopConf())))(
       _.getFooter.getFileMetaData)
-    Option(fm.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
+    Option(fm.getKeyValueMetaData.get(RowMetadataKey))
       .map(DataType.fromJson(_).asInstanceOf[StructType])
       .getOrElse(new ParquetToSparkSchemaConverter(spark.sessionState.conf)
         .convert(fm.getSchema))
@@ -126,16 +132,30 @@ private[graft] object IndexLifecycle {
     }
   }
 
+  /** [[writeMeta]]'s file name for generation `g`; a larger `g` is newer. */
+  private val MetaFile = """meta-(\d{19})\.parquet""".r
+
+  /** Data files of the `meta` dir, newest first: [[writeMeta]]'s files
+    * by generation, then any other (a meta written by Spark) in path
+    * order.
+    */
+  private def metaFiles(fs: FileSystem, dir: HPath): Seq[HPath] =
+    dataFiles(fs, dir).sortBy(f => f.getName match {
+      case MetaFile(g) => -g.toLong
+      case _ => 1L
+    })
+
   /** The one row of the `meta` dir of the store at `root`, read on the
-    * driver: no Spark job. Same values and (nullable) schema as
-    * `spark.read.parquet(dir).head()`. A row lacking one of `required`
-    * fails with [[UnsupportedIndexLayoutException]]. Meta columns are INT
-    * or BIGINT; any other type is rejected.
+    * driver from its newest file: no Spark job. Same values and
+    * (nullable) schema as `spark.read.parquet(dir).head()` over a dir
+    * holding one file. A row lacking one of `required` fails with
+    * [[UnsupportedIndexLayoutException]]. Meta columns are INT or BIGINT;
+    * any other type is rejected.
     */
   def readMeta(spark: SparkSession, root: HPath, required: String*): Row = {
     val dir = new HPath(root, "meta").toString
     val (fs, qualified) = fsFor(spark, dir)
-    val files = dataFiles(fs, qualified)
+    val files = metaFiles(fs, qualified)
     require(files.nonEmpty, s"no index meta at $dir")
     val schema = StructType(footerSchema(spark, files.head)
       .fields.map(_.copy(nullable = true)))
@@ -167,18 +187,43 @@ private[graft] object IndexLifecycle {
     rows.get("n").asInstanceOf[Long]
   }
 
-  /** Overwrite the one-row `meta` of the store at `root` with `cols`
-    * (name -> Int or Long value), every column non-null: the schema a
-    * tuple's `toDF` writes.
+  /** Replace the one-row `meta` of the store at `root` with `cols`
+    * (name -> Int or Long value), every column non-null: the footer a
+    * tuple's `toDF` writes, Spark's row-metadata key included. Written on
+    * the driver, no Spark job: the row goes to a hidden temp file, which
+    * is renamed to the next generation's name, and only then are the
+    * older files deleted. At every instant `meta` holds a complete file,
+    * and [[readMeta]] reads the newest; a crash anywhere leaves the
+    * previous or the new row readable.
     */
   def writeMeta(spark: SparkSession, root: HPath, cols: (String, Any)*): Unit = {
     val schema = StructType(cols.map { case (c, v) =>
       StructField(c, v match { case _: Long => LongType; case _ => IntegerType },
         nullable = false)
     })
-    spark.createDataFrame(
-        java.util.Collections.singletonList(Row.fromSeq(cols.map(_._2))), schema)
-      .write.mode("overwrite").parquet(new HPath(root, "meta").toString)
+    val parquetSchema = schema.fields.foldLeft(
+        Types.buildMessage(): Types.GroupBuilder[MessageType]) { (b, f) =>
+      b.required(if (f.dataType == LongType) INT64 else INT32).named(f.name)
+    }.named("spark_schema")
+    val conf = spark.sessionState.newHadoopConf()
+    val (fs, dir) = fsFor(spark, new HPath(root, "meta").toString)
+    val older = if (fs.exists(dir)) fs.listStatus(dir).toSeq.map(_.getPath) else Nil
+    val gen = older.map(_.getName).collect { case MetaFile(g) => g.toLong + 1 }.maxOption
+      .getOrElse(0L)
+    val tmp = new HPath(dir, s".meta-${java.util.UUID.randomUUID()}.tmp")
+    val dest = new HPath(dir, f"meta-$gen%019d.parquet")
+    val row = new SimpleGroupFactory(parquetSchema).newGroup()
+    cols.foreach {
+      case (c, v: Long) => row.add(c, v)
+      case (c, v) => row.add(c, v.asInstanceOf[Int])
+    }
+    scala.util.Using.resource(ExampleParquetWriter.builder(HadoopOutputFile.fromPath(tmp, conf))
+        .withConf(conf).withType(parquetSchema)
+        .withExtraMetaData(java.util.Map.of(RowMetadataKey, schema.json)).build())(
+      _.write(row))
+    if (!fs.rename(tmp, dest))
+      throw new java.io.IOException(s"could not rename $tmp to $dest")
+    older.filterNot(_.getName == dest.getName).foreach(fs.delete(_, true))
   }
 
   /** A small file's content as a trimmed UTF-8 string. */

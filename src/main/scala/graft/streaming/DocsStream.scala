@@ -20,37 +20,64 @@ import graft.operators.{Curate, Dedup, IndexLifecycle, ParagraphDedup, ShardWrit
   * can never drift.
   *
   * THE INGEST LOOPS. The five file-fed ingest loops run one
-  * per-micro-batch body (`ingestLoop`) made of optional stages, in
-  * this order:
-  *  1. INDEX: near-dup against the persisted LSH index
+  * per-micro-batch body (`ingestLoop`) made of optional stages:
+  *  1. ACCEPT: near-dup against the persisted LSH index
   *     ([[graft.operators.Dedup.dedupAgainstIndex]]), optionally behind
   *     the stored-fingerprint exact stage
-  *     ([[graft.operators.Dedup.dedupAgainstIndexFingerprinted]]); the
-  *     accepted docs (and their fingerprints, when the index has the
-  *     sidecar) append back with [[graft.operators.Dedup.lshAppend]];
-  *  2. STORE: the paragraph keep-first rewrite of the accepted docs
+  *     ([[graft.operators.Dedup.dedupAgainstIndexFingerprinted]]),
+  *     snapshotted as the batch's accepted docs;
+  *  2. INDEX: the accepted docs (and their fingerprints, when the index
+  *     has the sidecar) append back with [[graft.operators.Dedup.lshAppend]];
+  *  3. STORE: the paragraph keep-first rewrite of the accepted docs
   *     against the seen-unit store, landed as a per-batch overwrite
-  *     under `outDir/batch_id=<id>`, and the batch's novel unit keys
-  *     appended with [[graft.operators.UnitStore.append]];
-  *  3. a TAIL on the accepted docs (the shard loop's curation).
+  *     under `outDir/batch_id=<id>`;
+  *  4. UNITS: the batch's novel unit keys appended with
+  *     [[graft.operators.UnitStore.append]];
+  *  5. a TAIL on the accepted docs (the shard loop's curation), after
+  *     the store stage's cleaned write when the loop has one.
   * `foreachBatch` is the required shape: the stages run eager jobs and
   * mutate external state, both of which the declarative streaming
   * surface forbids. Per micro-batch the work is batch-proportional —
   * the lake's text never enters the stream; the stores MUTATE, so
   * callers own their lifecycle.
   *
+  * THE STAGE DAG. Only one chain in a batch depends on the step before
+  * it, so the independent stages run concurrently, each branch on a
+  * fresh thread that inherits the stream thread's Spark local
+  * properties (batch id, job group, SQL execution id):
+  * {{{
+  *   accept ─┬─ index
+  *           └─ store rewrite ─┬─ units
+  *                             └─ cleaned write ─ tail
+  * }}}
+  * The index append reads only the accepted snapshot; the rewrite reads
+  * it and the unit store; the units append reads only the rewrite's
+  * novel keys; the tail reads the landed cleaned files and the accepted
+  * snapshot. The two appends go to different roots, each under its own
+  * writer lease. The Spark local property `graft.ingest.stage` names the
+  * stage (`accept`, `index`, `store`, `units`, `tail`, `compact`) of
+  * every job a batch runs.
+  *
+  * FAILURE CONTRACT. The body waits for every branch before it releases
+  * a snapshot or compacts: a failing branch never cuts another short,
+  * and the batch fails with the first failure (the others attached as
+  * suppressed) only after every branch has returned, so no branch of a
+  * failed batch is still writing when the stream stops or replays it.
+  *
   * REPLAY CONTRACT. `foreachBatch` is at-least-once: a failed
   * micro-batch re-runs with the SAME batch id. Every append is keyed on
   * it (`"<queryName>-b<batchId>"`), so a replay whose append already
   * committed no-ops on its marker, and a crash mid-append leaves the
   * uncommitted attempt invisible. Every index and store read EXCLUDES
-  * the batch's own appendId, so a replay recomputes the same accept set
-  * and byte-identical rewrite output even after its appends committed,
-  * and the output dirs are per-batch overwrites. There is deliberately
-  * no cross-store atomic commit: determinism, not atomicity, makes the
-  * interleaving safe. Pass `checkpointLocation` so a restarted stream
-  * resumes from the last committed micro-batch; a drained, checkpointed
-  * re-run over the same input processes nothing (spec-pinned).
+  * the batch's own appendId, and the snapshots' file lists are fixed
+  * when their plans run, so a replay recomputes the same accept set and
+  * byte-identical rewrite output even after some of its appends
+  * committed — whichever branch failed — and the output dirs are
+  * per-batch overwrites. There is deliberately no cross-store atomic
+  * commit: determinism, not atomicity, makes the interleaving safe.
+  * Pass `checkpointLocation` so a restarted stream resumes from the
+  * last committed micro-batch; a drained, checkpointed re-run over the
+  * same input processes nothing (spec-pinned).
   * Summaries come from the stores' meta tallies (one-row reads, so a
   * replay never double-counts) and from the landed files read back.
   *
@@ -159,7 +186,7 @@ object DocsStream {
                                     compactEvery: Option[Int] = None): DataFrame = {
     ingestLoop(spark, inputDir, queryName, idCol, textCol, None,
       Some(StoreStage(storePath, outDir, unitize, joinSep)),
-      maxFilesPerTrigger, checkpointLocation, compactEvery)()
+      maxFilesPerTrigger, checkpointLocation, compactEvery)
     val nKeys = UnitStore.committedKeys(spark, storePath)
     spark.read.parquet(outDir)
       .agg(count(lit(1)).as("n_docs"),
@@ -202,7 +229,7 @@ object DocsStream {
     ingestLoop(spark, inputDir, queryName, idCol, textCol,
       Some(IndexStage(indexPath, Some(fpCol))),
       Some(StoreStage(storePath, outDir, unitize, joinSep)),
-      maxFilesPerTrigger, checkpointLocation, compactEvery)()
+      maxFilesPerTrigger, checkpointLocation, compactEvery)
     val n1 = Dedup.lshIndexCommittedDocs(spark, indexPath)
     val nKeys = UnitStore.committedKeys(spark, storePath)
     spark.read.parquet(outDir)
@@ -268,7 +295,7 @@ object DocsStream {
       Some(IndexStage(indexPath, Some(fpCol))),
       Some(StoreStage(storePath, outDir, unitize, joinSep)),
       maxFilesPerTrigger, checkpointLocation, compactEvery,
-      tailCols = Seq(langCol, sourceCol)) { (accepted, batchId) =>
+      tailCols = Seq(langCol, sourceCol), tail = Some { (accepted, batchId) =>
       // the curation tail on the cleaned text, batch-proportional: read
       // the rewrite BACK off the batch's just-landed files (already
       // materialized — re-consuming the rewrite would run its join
@@ -280,7 +307,7 @@ object DocsStream {
         minWords, minUniqRatio, sampleNumerator, weights, packBudget)
       ShardWriter.writeShards(curated, s"$shardsDir/batch_id=$batchId",
         langCol, Seq("bin", idCol, "replica")): Unit
-    }
+    })
     spark.read.parquet(shardsDir)
       .groupBy(col(langCol), col("bin"))
       .agg(count(lit(1)).as("n_docs"),
@@ -332,18 +359,19 @@ object DocsStream {
                         compactEvery: Option[Int]): DataFrame = {
     val n0 = Dedup.lshIndexCommittedDocs(spark, index.path)
     ingestLoop(spark, inputDir, queryName, "doc_id", "text", Some(index), None,
-      maxFilesPerTrigger, checkpointLocation, compactEvery)()
+      maxFilesPerTrigger, checkpointLocation, compactEvery)
     import spark.implicits._
     val n1 = Dedup.lshIndexCommittedDocs(spark, index.path)
     Seq((n1 - n0, n1)).toDF("n_kept", "n_index_docs")
   }
 
-  /** The one per-micro-batch ingest body (the stages, replay contract
-    * and compaction rule are in the object doc). Before the stream
-    * starts, the input must carry the id and text columns, the
-    * fingerprint column of a fingerprint stage and `tailCols`, and a
-    * fingerprint stage's index must have its sidecar. `tail` runs last
-    * with the accepted rows and the batch id.
+  /** The one per-micro-batch ingest body (the stages, their DAG, the
+    * replay contract and the compaction rule are in the object doc).
+    * Before the stream starts, the input must carry the id and text
+    * columns, the fingerprint column of a fingerprint stage and
+    * `tailCols`, and a fingerprint stage's index must have its sidecar.
+    * `tail` runs with the accepted rows and the batch id, after the
+    * store stage's cleaned write when the loop has one.
     */
   private def ingestLoop(spark: SparkSession, inputDir: String, queryName: String,
                          idCol: String, textCol: String,
@@ -351,8 +379,8 @@ object DocsStream {
                          maxFilesPerTrigger: Option[Int],
                          checkpointLocation: Option[String],
                          compactEvery: Option[Int],
-                         tailCols: Seq[String] = Nil)(
-                          tail: (DataFrame, Long) => Unit = (_, _) => ()): Unit = {
+                         tailCols: Seq[String] = Nil,
+                         tail: Option[(DataFrame, Long) => Unit] = None): Unit = {
     val fpCol = index.flatMap(_.fpCol)
     val source = Streams.fileSource(spark, inputDir, maxFilesPerTrigger)
     val needed = Seq(idCol, textCol) ++ fpCol ++ tailCols
@@ -368,37 +396,89 @@ object DocsStream {
     drainForeachBatch(source, queryName, checkpointLocation) { (batch, batchId) =>
       val appendId = s"$queryName-b$batchId"
       val own = Seq(appendId)
+      def stage[T](name: String)(body: => T): T = tagged(spark, name)(body)
       // the accepted rows are read by the append (band rows + verify
       // hashes), the rewrite and the tail: snapshot them so the index
       // join runs once per batch (a persist() would be dropped by the
       // append's own first write into the index dirs it reads)
       val (accepted, release) = index.fold((batch, () => ())) { ix =>
-        GraftColumnShim.snapshot(fpCol.fold(
+        stage("accept")(GraftColumnShim.snapshot(fpCol.fold(
           Dedup.dedupAgainstIndex(batch, ix.path, textCol, idCol,
             excludeAppendIds = own))(fp =>
           Dedup.dedupAgainstIndexFingerprinted(batch, ix.path, textCol,
-            idCol, fp, excludeAppendIds = own)))
+            idCol, fp, excludeAppendIds = own))))
       }
-      try {
-        index.foreach(ix =>
-          Dedup.lshAppend(accepted, textCol, idCol, ix.path, appendId = Some(appendId)))
-        store.foreach { st =>
-          val a = ParagraphDedup.storeAccept(accepted, idCol, textCol,
-            st.unitize, st.joinSep, st.path, excludeAppendIds = own)
-          try {
-            a.cleaned.write.mode("overwrite")
-              .parquet(s"${st.outDir}/batch_id=$batchId")
-            UnitStore.append(a.novelKeys, "h", st.path, appendId = Some(appendId))
-          } finally a.release()
-        }
-        tail(accepted, batchId)
-      } finally release()
-      if (compactEvery.exists(n => (batchId + 1) % n == 0)) {
+      // the stage DAG (object doc): index beside the store stage, and
+      // inside it units beside the cleaned write and the tail
+      val tailBranch = tail.map(t => () => stage("tail")(t(accepted, batchId)))
+      val indexBranch = index.map(ix => () => stage("index")(
+        Dedup.lshAppend(accepted, textCol, idCol, ix.path, appendId = Some(appendId))))
+      val storeBranch = store.map(st => () => {
+        val a = stage("store")(ParagraphDedup.storeAccept(accepted, idCol, textCol,
+          st.unitize, st.joinSep, st.path, excludeAppendIds = own))
+        try concurrently(Seq(
+          () => stage("units")(
+            UnitStore.append(a.novelKeys, "h", st.path, appendId = Some(appendId))),
+          () => {
+            stage("store")(a.cleaned.write.mode("overwrite")
+              .parquet(s"${st.outDir}/batch_id=$batchId"))
+            tailBranch.foreach(_())
+          }))
+        finally a.release()
+      })
+      try concurrently((indexBranch ++ storeBranch.orElse(tailBranch)).toSeq)
+      finally release()
+      if (compactEvery.exists(n => (batchId + 1) % n == 0)) stage("compact") {
         val keep = if (store.isDefined) own else Nil
         index.foreach(ix => Dedup.lshCompact(spark, ix.path, keepAppendIds = keep))
         store.foreach(st => UnitStore.compact(spark, st.path, keepAppendIds = keep))
       }
     }
+  }
+
+  /** The Spark local property that names the ingest stage a job belongs
+    * to: `accept`, `index`, `store`, `units`, `tail` or `compact`.
+    */
+  private[graft] val StageProperty = "graft.ingest.stage"
+
+  /** Run `body` with [[StageProperty]] set to `name` on this thread. */
+  private def tagged[T](spark: SparkSession, name: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val outer = sc.getLocalProperty(StageProperty)
+    sc.setLocalProperty(StageProperty, name)
+    try body finally sc.setLocalProperty(StageProperty, outer)
+  }
+
+  /** Run `branches` concurrently and return once every one has returned.
+    * Each branch runs on a fresh thread started here, so it inherits this
+    * thread's Spark local properties (the micro-batch id, the job group
+    * that stopping the query cancels, the SQL execution id, the stage
+    * tag) and active session; a pooled thread would carry whatever its
+    * previous task left. A single branch runs inline. The first failure
+    * is rethrown, the others attached as suppressed, only after every
+    * branch has returned.
+    */
+  private def concurrently(branches: Seq[() => Unit]): Unit = branches match {
+    case Seq(only) => only()
+    case _ =>
+      val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
+      val threads = branches.map { b =>
+        val t = new Thread(() => try b() catch { case e: Throwable => failures.add(e): Unit },
+          "graft-ingest-branch")
+        t.setDaemon(true)
+        t.start()
+        t
+      }
+      var interrupted = false
+      threads.foreach { t =>
+        while (t.isAlive)
+          try t.join() catch { case _: InterruptedException => interrupted = true }
+      }
+      if (interrupted) Thread.currentThread().interrupt()
+      Option(failures.poll()).foreach { first =>
+        failures.forEach(first.addSuppressed(_))
+        throw first
+      }
   }
 
   /** The one `foreachBatch` drain behind the file-fed loops: `body` runs

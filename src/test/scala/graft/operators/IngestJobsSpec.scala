@@ -172,8 +172,8 @@ class IngestJobsSpec extends AnyFunSuite {
       "UnitStore.compact" -> unitCompact.jobs.size, "ivfCompact" -> ivfCompact.jobs.size)
     // measured on this fixture; an extra read, count or rewrite of an
     // index dir raises it
-    assert(counts == Map("setup" -> 13, "lshCompact" -> 6,
-      "UnitStore.compact" -> 6, "ivfCompact" -> 2), counts.toString)
+    assert(counts == Map("setup" -> 11, "lshCompact" -> 5,
+      "UnitStore.compact" -> 5, "ivfCompact" -> 2), counts.toString)
   }
 
   /** The file-fed ingest fixture: two stamped parquet files (one per
@@ -207,26 +207,45 @@ class IngestJobsSpec extends AnyFunSuite {
       (13L, lakeText, "src1"), (15L, words("third", 23) + "\nshared line", "src0")))
   }
 
-  /** Spark jobs per streaming micro-batch id of the work `body` runs. */
-  private def jobsPerBatch(body: => Unit): Map[Long, Int] = {
-    val (_, log) = logging(body)
-    log.jobs.asScala.toSeq
-      .flatMap(p => Option(p).flatMap(q => Option(q.getProperty("streaming.sql.batchId"))))
+  private def property(p: java.util.Properties, key: String): Option[String] =
+    Option(p).flatMap(q => Option(q.getProperty(key)))
+
+  /** Spark jobs per streaming micro-batch id in `log`. */
+  private def perBatch(log: JobLog): Map[Long, Int] =
+    log.jobs.asScala.toSeq.flatMap(property(_, "streaming.sql.batchId"))
       .groupBy(identity).map { case (b, js) => b.toLong -> js.size }
-  }
+
+  /** Spark jobs per streaming micro-batch id of the work `body` runs. */
+  private def jobsPerBatch(body: => Unit): Map[Long, Int] = perBatch(logging(body)._2)
 
   test("the shard loop runs a pinned number of Spark jobs per micro-batch") {
     val f = new IngestFixture
     val (idx, store) = (f.index(), f.store())
-    val perBatch = jobsPerBatch(graft.streaming.DocsStream.runIngestPipelineToShardsAsStream(
+    val (_, log) = logging(graft.streaming.DocsStream.runIngestPipelineToShardsAsStream(
       spark, f.in, idx, store, tmpDir("jobs_out"), tmpDir("jobs_sh"), "jobs_mem",
       f.units, "\n", benchmark = Seq((999L, words("bench", 25))).toDF("doc_id", "text"),
       minWords = 20, minUniqRatio = 0.25, sampleNumerator = 256,
       weights = Map("src0" -> 2.0), packBudget = 10000L,
       maxFilesPerTrigger = Some(1)).collect(): Unit)
     // measured on this fixture; a frame re-computed after an index write
-    // (the dedup plan's broadcast and shuffle jobs again) raises it
-    assert(perBatch == Map(0L -> 39, 1L -> 42), perBatch.toString)
+    // (the dedup plan's broadcast and shuffle jobs again) raises it. The
+    // index, units and tail stages run on branch threads: a branch that
+    // lost the batch's local properties would drop out of these totals
+    assert(perBatch(log) == Map(0L -> 37, 1L -> 40), perBatch(log).toString)
+    val perStage = log.jobs.asScala.toSeq
+      .flatMap(p => property(p, "streaming.sql.batchId").map(b =>
+        (b.toLong, property(p, graft.streaming.DocsStream.StageProperty).getOrElse("-"))))
+      .groupBy(identity).map { case (k, js) => k -> js.size }
+    assert(perStage == Map(
+      (0L, "accept") -> 17, (0L, "index") -> 5, (0L, "store") -> 4, (0L, "units") -> 2, (0L, "tail") -> 9,
+      (1L, "accept") -> 19, (1L, "index") -> 5, (1L, "store") -> 5, (1L, "units") -> 2, (1L, "tail") -> 9),
+      perStage.toString)
+    // the index and store branches make the first actions on the
+    // accepted snapshot concurrently: a snapshot computed twice would
+    // submit its shuffle stages again and read their output twice. Both
+    // figures equal the sequential body's and repeat run to run here
+    assert(log.stages.get == 81, s"${log.stages.get} stages")
+    assert(log.shuffleRead.get == 9212L, s"${log.shuffleRead.get} shuffle bytes read")
   }
 
   test("the other file-fed ingest loops run pinned Spark jobs per batch") {
@@ -252,9 +271,9 @@ class IngestJobsSpec extends AnyFunSuite {
     val perBatch = loops.map { case (name, run) => name -> jobsPerBatch(run()) }.toMap
     // measured on this fixture, as the shard loop's pin above
     assert(perBatch == Map(
-      "pipeline" -> Map(0L -> 30, 1L -> 33),
-      "paragraph" -> Map(0L -> 7, 1L -> 8),
-      "fingerprint" -> Map(0L -> 23, 1L -> 25),
-      "index" -> Map(0L -> 14, 1L -> 16)), perBatch.toString)
+      "pipeline" -> Map(0L -> 28, 1L -> 31),
+      "paragraph" -> Map(0L -> 6, 1L -> 7),
+      "fingerprint" -> Map(0L -> 22, 1L -> 24),
+      "index" -> Map(0L -> 13, 1L -> 15)), perBatch.toString)
   }
 }

@@ -842,4 +842,42 @@ class LshIndexLifecycleSpec extends AnyFunSuite {
       org.apache.spark.sql.catalyst.TableIdentifier(name))
       .bucketSpec.exists(_.numBuckets == 4))
   }
+
+  test("a meta write that fails part-way leaves the previous meta readable; the newest complete meta file wins") {
+    import org.apache.hadoop.fs.Path
+    FailingMetaFs.register(spark)
+    val dir = tmpDir("meta_crash")
+    val root = new Path(s"failmeta://$dir")
+    def nKeys(): Long = IndexLifecycle.readMeta(spark, root, "n_keys").getAs[Long]("n_keys")
+    IndexLifecycle.writeMeta(spark, root, "n_keys" -> 3L, "key_buckets" -> 2)
+    // the crash inside the overwrite: the row's file cannot be created
+    intercept[Exception](FailingMetaFs.failing(
+      IndexLifecycle.writeMeta(spark, root, "n_keys" -> 5L, "key_buckets" -> 2)))
+    assert(nKeys() == 3L, "the failed write lost the previous meta")
+    IndexLifecycle.writeMeta(spark, root, "n_keys" -> 5L, "key_buckets" -> 2)
+    assert(nKeys() == 5L)
+    val metaDir = new java.io.File(dir, "meta")
+    def dataFiles: Seq[java.io.File] =
+      metaDir.listFiles().toSeq.filterNot(f => f.getName.startsWith(".") || f.getName.startsWith("_"))
+    assert(dataFiles.size == 1, dataFiles.toString)
+    // the window between the rename and the delete: an older file still
+    // beside the new one is never read
+    val older = dataFiles.head
+    val kept = java.nio.file.Files.readAllBytes(older.toPath)
+    IndexLifecycle.writeMeta(spark, root, "n_keys" -> 7L, "key_buckets" -> 2)
+    java.nio.file.Files.write(older.toPath, kept)
+    assert(dataFiles.size == 2 && nKeys() == 7L, dataFiles.toString)
+    // the footer keeps the schema a Spark write gives it: required
+    // INT64/INT32 columns and the non-null row schema under Spark's key
+    val footer = scala.util.Using.resource(org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new Path(dataFiles.maxBy(_.getName).toURI), spark.sessionState.newHadoopConf())))(
+      _.getFooter.getFileMetaData)
+    assert(footer.getSchema.toString.replaceAll("\\s+", " ").trim ==
+      "message spark_schema { required int64 n_keys; required int32 key_buckets; }",
+      footer.getSchema.toString)
+    assert(org.apache.spark.sql.types.DataType.fromJson(
+      footer.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata")) ==
+      org.apache.spark.sql.types.StructType.fromDDL("n_keys BIGINT NOT NULL, key_buckets INT NOT NULL"))
+  }
 }

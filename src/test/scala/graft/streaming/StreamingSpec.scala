@@ -417,6 +417,81 @@ class StreamingSpec extends AnyFunSuite {
     assert(Dedup.lshIndexDocCount(spark, idx) == 3L) // lake + 10 + 12
   }
 
+  test("ingest-to-shards concurrency contract: a failing index branch fails the micro-batch only after the store branch returned, no branch thread outlives the batch, and the checkpointed re-run equals an uninterrupted run") {
+    import graft.operators.{Dedup, ParagraphDedup, UnitStore}
+    import scala.jdk.CollectionConverters._
+    def words(prefix: String, n: Int): String =
+      (1 to n).map(i => s"$prefix$i").mkString(" ")
+    def tmp(p: String): String = java.nio.file.Files.createTempDirectory(p).toString
+    val lakeText = words("lake", 25)
+    val lake = Seq((0L, lakeText)).toDF("doc_id", "text")
+    val units = ParagraphDedup.unitsBySeparator(_, "\\n")
+    val in = tmp("conc_in")
+    def stamp(rows: Seq[(Long, String, String)]): Unit =
+      rows.toDF("doc_id", "text", "source")
+        .withColumn("lang", lit("en"))
+        .withColumn("fp", xxhash64(col("text")))
+        .coalesce(1).write.mode("append").parquet(in)
+    stamp(Seq((10L, words("novel", 24), "src0"),
+      (14L, words("second", 26) + "\nshared line", "src1")))
+    stamp(Seq((11L, words("novel", 24) + " extra", "src1"), (13L, lakeText, "src1"),
+      (15L, words("third", 23) + "\nshared line", "src0")))
+    final case class Dirs(idx: String, store: String, out: String, shards: String, ckpt: String)
+    def fresh(tag: String): Dirs = {
+      val d = Dirs(tmp(s"${tag}_idx"), tmp(s"${tag}_store"), tmp(s"${tag}_out"),
+        tmp(s"${tag}_sh"), tmp(s"${tag}_ck"))
+      Dedup.lshBuild(lake, "text", "doc_id", d.idx)
+      Dedup.lshWriteFingerprints(lake, "text", d.idx)
+      ParagraphDedup.unitStoreBuild(lake, "doc_id", "text", units, d.store)
+      d
+    }
+    def run(d: Dirs, name: String): Set[Seq[Any]] =
+      DocsStream.runIngestPipelineToShardsAsStream(spark, in, d.idx, d.store,
+        d.out, d.shards, name, units, "\n",
+        benchmark = Seq((999L, words("bench", 25))).toDF("doc_id", "text"),
+        minWords = 20, minUniqRatio = 0.25, sampleNumerator = 256,
+        weights = Map("src0" -> 2.0), packBudget = 10000L,
+        maxFilesPerTrigger = Some(1), checkpointLocation = Some(d.ckpt))
+        .collect().map(_.toSeq).toSet
+    def branchThreads: Set[Thread] =
+      Thread.getAllStackTraces.keySet.asScala.toSet.filter(_.getName == "graft-ingest-branch")
+    def state(d: Dirs) = (
+      spark.read.parquet(d.out).collect().map(_.toSeq).toSet,
+      spark.read.parquet(d.shards).collect().map(_.toSeq).toSet,
+      Dedup.lshIndexCommittedDocs(spark, d.idx),
+      UnitStore.read(spark, d.store).select("h").collect().map(_.getLong(0)).toSet)
+
+    val ref = fresh("conc_ref")
+    val expected = run(ref, "conc_ref")
+    assert(branchThreads.isEmpty, branchThreads.toString)
+
+    // a foreign writer holds the index's lease: the index branch's
+    // lshAppend fails at once, while the store branch has work to do
+    val d = fresh("conc")
+    val lock = new java.io.File(d.idx, "_lock")
+    java.nio.file.Files.writeString(lock.toPath, "foreign-writer")
+    val e = intercept[Exception](run(d, "conc_mem"))
+    val cme = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case c: java.util.ConcurrentModificationException => c }
+    assert(cme.exists(_.getMessage.contains("locked by another writer (foreign-writer")), e.toString)
+    assert(branchThreads.isEmpty, branchThreads.toString)
+    // the failure surfaced only after the store branch returned: its
+    // unit-store append committed, and the cleaned docs and the tail's
+    // shards of batch 0 landed; the index append never ran
+    assert(new java.io.File(d.store, "_commits/conc_mem-b0").isFile)
+    assert(new java.io.File(d.out, "batch_id=0/_SUCCESS").isFile)
+    assert(new java.io.File(d.shards, "batch_id=0/_SUCCESS").isFile)
+    assert(!new java.io.File(d.idx, "_commits/conc_mem-b0").exists())
+
+    // the lease is gone: the checkpointed re-run replays batch 0 (its
+    // store append no-ops on the marker) and ends where an uninterrupted
+    // run ends
+    assert(lock.delete())
+    assert(run(d, "conc_mem") == expected)
+    assert(state(d) == state(ref))
+    assert(branchThreads.isEmpty, branchThreads.toString)
+  }
+
   test("paragraph loop compactEvery is DEFERRED: compaction folds only checkpoint-committed batches, and the newest batch replays to identical output after a compact") {
     import graft.operators.{ParagraphDedup, UnitStore}
     val lake = Seq((0L, "boilerplate banner\nlake only paragraph"))
