@@ -80,8 +80,8 @@ object Bench {
       // operator's documented 2^-64-per-pair contract; spec-pinned
       // equal on planted dups, gated vs the md5 oracle by q99). The
       // rounds-13-15 shape (md5 over colliding survivors, one full
-      // text decode) is exactGroupsPrehashed and stays measured as the
-      // audit view's cost; this entry measures what the daily loop
+      // text decode) is exactGroups with a hashCol and stays measured as
+      // the audit view's cost; this entry measures what the daily loop
       // actually runs at 100 TB.
       val t = s.table("bench_documents_xh")
       graft.operators.Dedup.exactGroupsFingerprint(t, "doc_id", "xh")

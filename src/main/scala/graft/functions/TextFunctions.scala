@@ -14,17 +14,6 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object TextFunctions {
 
-  /** Whitespace token count. */
-  def tokenCount(text: Column): Column = size(split(text, "\\s+"))
-
-  /** BPE-ish subword count: splits on whitespace AND letter/digit/punct
-    * boundaries — a cheap deterministic proxy for tokenizer token counts
-    * (the real tokenizer is external; this keeps the same order of
-    * magnitude and is stable across engines).
-    */
-  def subwordCount(text: Column): Column =
-    size(split(text, "\\s+|(?<=[a-z])(?=[A-Z0-9])|(?<=[0-9])(?=[a-zA-Z])|(?=[^\\sa-zA-Z0-9])"))
-
   /** Quality signals: length, word stats, uniqueness, punctuation and
     * stopword ratios. Returns a struct column.
     */

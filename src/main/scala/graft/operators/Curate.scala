@@ -35,10 +35,7 @@ object Curate {
              weights: Map[String, Double], packBudget: Long): DataFrame = {
     val id = col(idCol)
     // 1. exact dedup (q44 semantics: smallest id per exact text hash)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(md5(col(textCol))).orderBy(id)
-    val deduped = docs.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
+    val deduped = Dedup.exact(docs, textCol, idCol)
     // 2. benchmark decontamination (q71/q72 semantics, minHits = 2)
     val clean = Decontaminate.decontaminate(
       deduped, benchmark, textCol, idCol, n = 3, minHits = 2)

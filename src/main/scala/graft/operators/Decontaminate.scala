@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Benchmark decontamination — remove training documents that share
@@ -17,23 +17,6 @@ import org.apache.spark.sql.functions._
   */
 object Decontaminate {
 
-  /** Distinct lowercase word n-grams of a text column as an array.
-    * Documents shorter than n words produce an empty array (they cannot
-    * contain an n-gram; they are never flagged).
-    */
-  def wordNgrams(text: Column, n: Int): Column = {
-    require(n >= 1, s"n-gram size must be >= 1, got $n")
-    // \s+ (not a literal space) so tabs/newlines/space-runs never yield
-    // empty tokens inside an n-gram — the same word boundary
-    // Dedup.shingles and the fingerprint normalizer use; the DuckDB
-    // oracles mirror it with regexp_split_to_array.
-    val w = split(lower(trim(text)), "\\s+")
-    when(size(w) >= n,
-      array_distinct(transform(sequence(lit(1), size(w) - lit(n - 1)),
-        i => array_join(slice(w, i, lit(n)), " "))))
-      .otherwise(expr("CAST(array() AS array<string>)"))
-  }
-
   /** Per-document overlap counts: one row per corpus document sharing at
     * least one n-gram with the benchmark set — (idCol, n_hits) where
     * n_hits = number of DISTINCT overlapping n-grams.
@@ -41,9 +24,9 @@ object Decontaminate {
   def overlapHits(corpus: DataFrame, benchmark: DataFrame,
                   textCol: String, idCol: String, n: Int): DataFrame = {
     val corpusGrams = corpus
-      .select(col(idCol), explode(wordNgrams(col(textCol), n)).as("__gram"))
+      .select(col(idCol), explode(Dedup.shingles(col(textCol), n)).as("__gram"))
     val benchGrams = benchmark
-      .select(explode(wordNgrams(col(textCol), n)).as("__gram"))
+      .select(explode(Dedup.shingles(col(textCol), n)).as("__gram"))
       .distinct()
     corpusGrams
       .join(broadcast(benchGrams), "__gram")

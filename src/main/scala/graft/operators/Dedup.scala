@@ -117,52 +117,44 @@ object Dedup {
     * identity and is the emitted hash. `gateBytes` is exposed so specs
     * can force the prefiltered shape on small fixtures (gateBytes = 0);
     * production callers keep the measured default.
-    */
-  def exactGroups(df: DataFrame, textCol: String, idCol: String,
-                  gateBytes: Long = 32L * 1024 * 1024): DataFrame =
-    collidingTextPrefilter(df, textCol, gateBytes)
-      .groupBy(md5(col(textCol)).as("content_hash"))
-      .agg(min(col(idCol)).as("keeper"), count(lit(1)).as("n_copies"))
-      .filter(col("n_copies") > 1)
-
-  /** [[exactGroups]] for a lake whose INGEST stored the 64-bit content
-    * fingerprint (`hashCol` = `xxhash64(textCol)`, written once when the
-    * row entered the lake) — the layout answer to exact dedup at 100 TB,
-    * the same move as bucketing-at-ingest for joins: the colliding-group
-    * probe then reads ONLY the 8-byte fingerprint column (KBs of parquet
-    * chunks per million docs — no text decode, no hash compute), and the
-    * corpus text is decoded exactly once, in the md5 pass over colliding
-    * survivors. Identical output and broadcast/overflow gate as the
-    * prefiltered [[exactGroups]] (spec-pinned equal); faithfulness needs
+    *
+    * `hashCol` names a column that INGEST stored as the 64-bit content
+    * fingerprint (`xxhash64(textCol)`, written once when the row entered
+    * the lake) — the layout answer to exact dedup at 100 TB, the same
+    * move as bucketing-at-ingest for joins: the colliding-group probe
+    * then reads ONLY the 8-byte fingerprint column (KBs of parquet chunks
+    * per million docs — no text decode, no hash compute), and the corpus
+    * text is decoded exactly once, in the md5 pass over colliding
+    * survivors. Output and broadcast/overflow gate are identical to the
+    * unhashed prefiltered shape (spec-pinned equal); faithfulness needs
     * only that `hashCol` is a pure function of the text (equal text ⟹
     * equal stored hash), which `xxhash64` at ingest gives by
     * construction. Cost: probe pass ~free, main pass = one text scan —
-    * vs the unhashed shape's two full text scans. The same `gateBytes`
-    * cost gate applies as in [[exactGroups]]: below it, even a ~free
-    * probe pass plus a semi join lose to the single md5 pass (measured
-    * 0.17 vs 0.33 s at sf0.1), so tiny inputs skip the prefilter
-    * regardless of layout.
+    * vs the unhashed shape's two full text scans. The `gateBytes` gate
+    * applies either way: below it, even a ~free probe pass plus a semi
+    * join lose to the single md5 pass (measured 0.17 vs 0.33 s at
+    * sf0.1), so tiny inputs skip the prefilter regardless of layout.
     */
-  def exactGroupsPrehashed(df: DataFrame, textCol: String, idCol: String,
-                           hashCol: String,
-                           gateBytes: Long = 32L * 1024 * 1024,
-                           broadcastMaxCollidingGroups: Int = 1000000): DataFrame =
+  def exactGroups(df: DataFrame, textCol: String, idCol: String,
+                  gateBytes: Long = 32L * 1024 * 1024,
+                  broadcastMaxCollidingGroups: Int = 1000000,
+                  hashCol: Option[String] = None): DataFrame =
     collidingTextPrefilter(df, textCol, gateBytes,
-        broadcastMaxCollidingGroups, prehashedCol = Some(hashCol))
+        broadcastMaxCollidingGroups, prehashedCol = hashCol)
       .groupBy(md5(col(textCol)).as("content_hash"))
       .agg(min(col(idCol)).as("keeper"), count(lit(1)).as("n_copies"))
       .filter(col("n_copies") > 1)
 
   /** Exact-dup groups with the STORED 64-bit fingerprint as group
     * identity — the DEPLOYMENT form of exact dedup on the
-    * hash-at-ingest layout, completing what [[exactGroupsPrehashed]]
+    * hash-at-ingest layout, completing what [[exactGroups]]' `hashCol`
     * started: when ingest wrote `hashCol = xxhash64(textCol)` next to
     * the text, dup-group discovery needs NO text at all — one scan of
     * the 8-byte column (parquet prunes every other column) and one
     * narrow-key shuffle. md5, and the full-corpus text decode it
-    * forces, is confined to the AUDIT view ([[exactGroupsPrehashed]] /
-    * the q98 gate), which oracle-strength output demands but the daily
-    * dedup loop does not.
+    * forces, is confined to the AUDIT view ([[exactGroups]] / the q98
+    * gate), which oracle-strength output demands but the daily dedup
+    * loop does not.
     *
     * Faithfulness: equal text ⟹ equal stored fingerprint, so no true
     * duplicate is ever missed, and (keeper, n_copies) equals the md5
@@ -184,10 +176,17 @@ object Dedup {
 
   // ---- minhash + LSH --------------------------------------------------
 
-  /** Word k-shingles of normalized text; documents shorter than k words
-    * yield an empty set (no partial shingles).
+  /** Distinct word k-shingles (word n-grams) of normalized text as an
+    * array; documents shorter than k words yield an empty array (no
+    * partial shingles), so [[Decontaminate]] never flags them.
     */
   def shingles(text: Column, k: Int = 3): Column = {
+    require(k >= 1, s"n-gram size must be >= 1, got $k")
+    // \s+ (not a literal space) so space runs, tabs and newlines between
+    // words never yield empty tokens inside an n-gram. `trim` strips
+    // spaces only: a leading or trailing tab or newline still yields an
+    // empty first or last token, as the DuckDB oracles' trim +
+    // regexp_split_to_array does.
     val words = split(lower(trim(text)), "\\s+")
     when(size(words) >= k,
       array_distinct(
@@ -248,19 +247,26 @@ object Dedup {
     }
   }).withName("shingle_hashes64")
 
-  /** (id, __text) projection spread over the session's shuffle
-    * parallelism. The signature UDF is the CPU-heaviest stage (numPerm
+  /** The partition count a per-doc signature kernel is spread over: the
+    * session's shuffle parallelism, or `input`'s own partition count if
+    * larger. The signature kernels are the CPU-heaviest stages (numPerm
     * multiplies per shingle); scan partitioning follows file size, which
     * for compressed text may be a handful of partitions — one narrow
-    * shuffle of raw text here is amortized over orders of magnitude more
-    * signature compute. Shared by the self-join and cross-corpus
-    * operators.
+    * shuffle of raw text is amortized over orders of magnitude more
+    * signature compute. The one copy of the rule [[prepTexts]] and
+    * [[simhashPairs]] repartition by.
     */
-  private def prepTexts(src: DataFrame, textCol: String, idCol: String): DataFrame = {
-    val par = src.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    src.select(col(idCol).as("id"), col(textCol).as("__text"))
-      .repartition(math.max(par, src.rdd.getNumPartitions))
+  private def spreadPartitions(input: DataFrame): Int = {
+    val par = input.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    math.max(par, input.rdd.getNumPartitions)
   }
+
+  /** (id, __text) projection spread by [[spreadPartitions]]. Shared by
+    * the self-join and cross-corpus operators.
+    */
+  private def prepTexts(src: DataFrame, textCol: String, idCol: String): DataFrame =
+    src.select(col(idCol).as("id"), col(textCol).as("__text"))
+      .repartition(spreadPartitions(src))
 
   /** (id, band, bucket) banding rows from a [[prepTexts]] projection.
     * This is THE band hash family: the cross-corpus operator's
@@ -771,9 +777,6 @@ object Dedup {
     */
   def simhashPairs(df: DataFrame, textCol: String, idCol: String,
                    maxDistance: Int = 3, pieces: Int = 0): DataFrame = {
-    // spread the signature kernel over the session parallelism (see
-    // prepTexts — same few-input-partitions hazard)
-    val par = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     // Null texts are dropped EXPLICITLY (cheap isnotnull(text), pushed
     // to the parquet scan) and the signature is declared non-null via
     // KnownNotNull — simhash of a non-null text is total. Without this,
@@ -784,7 +787,7 @@ object Dedup {
     // text's sig is null and can never pass the hamming filter.
     simhashPairsOnSigs(
       df.filter(col(textCol).isNotNull)
-        .repartition(math.max(par, df.rdd.getNumPartitions))
+        .repartition(spreadPartitions(df))
         .select(col(idCol).as("id"),
           org.apache.spark.sql.GraftColumnShim.column(
             org.apache.spark.sql.catalyst.expressions.KnownNotNull(

@@ -45,6 +45,26 @@ import org.apache.spark.sql.functions._
   */
 object HeavyHitters {
 
+  /** One Misra–Gries step: count `key` in the summary `m` of at most
+    * `capacity` counters. A full summary meeting an unseen key
+    * decrements every counter (the incoming key's implicit counter hits
+    * 0 and is not stored); mutating the map during that sweep is safe
+    * via the entry iterator's remove().
+    */
+  private def mgUpdate(m: java.util.HashMap[String, Long], key: String,
+                       capacity: Int): Unit = {
+    val c = m.get(key)
+    if (c != 0L) m.put(key, c + 1L)
+    else if (m.size < capacity) m.put(key, 1L)
+    else {
+      val eit = m.entrySet().iterator()
+      while (eit.hasNext) {
+        val e = eit.next()
+        if (e.getValue == 1L) eit.remove() else e.setValue(e.getValue - 1L)
+      }
+    }
+  }
+
   /** Exact top-k keys of `keyCol` by count, via MG candidates + recount.
     * Output columns: (`keyCol`, cnt), ordered (cnt DESC, key ASC) — the
     * same deterministic ordering as an exact SQL top-k over non-NULL
@@ -61,24 +81,9 @@ object HeavyHitters {
     val input = df.filter(col(keyCol).isNotNull)
       .select(col(keyCol).cast("string").as("k"))
     val keys = input.as[String]
-    // Per-partition Misra–Gries. Mutating a HashMap during the
-    // decrement-all sweep is safe via the entry iterator's remove().
     val candidates = keys.mapPartitions { it =>
       val m = new java.util.HashMap[String, Long](capacity * 2)
-      it.foreach { key =>
-        val c = m.get(key)
-        if (c != 0L) m.put(key, c + 1L)
-        else if (m.size < capacity) m.put(key, 1L)
-        else {
-          // full summary + unseen key: decrement every counter (the
-          // incoming key's implicit counter hits 0 and is not stored)
-          val eit = m.entrySet().iterator()
-          while (eit.hasNext) {
-            val e = eit.next()
-            if (e.getValue == 1L) eit.remove() else e.setValue(e.getValue - 1L)
-          }
-        }
-      }
+      it.foreach(mgUpdate(m, _, capacity))
       import scala.jdk.CollectionConverters._
       m.keySet().iterator().asScala
     }.toDF("k").distinct()
@@ -211,16 +216,7 @@ object HeavyHitters {
           it.foreach { case (g, key) =>
             var m = perGroup.get(g)
             if (m == null) { m = new java.util.HashMap[String, Long](capacity * 2); perGroup.put(g, m) }
-            val c = m.get(key)
-            if (c != 0L) m.put(key, c + 1L)
-            else if (m.size < capacity) m.put(key, 1L)
-            else {
-              val eit = m.entrySet().iterator()
-              while (eit.hasNext) {
-                val e = eit.next()
-                if (e.getValue == 1L) eit.remove() else e.setValue(e.getValue - 1L)
-              }
-            }
+            mgUpdate(m, key, capacity)
           }
           import scala.jdk.CollectionConverters._
           perGroup.entrySet().iterator().asScala.flatMap { ge =>

@@ -24,37 +24,30 @@ import graft.functions.VectorExpressions
   */
 object KMeans {
 
-  /** Deterministic init: the k corpus vectors with the smallest ids.
-    * Oracle-friendly (a pure function of the data, expressible in SQL)
-    * but quality-blind — if low ids correlate with ingest order, the
-    * seeds all come from one corner of the corpus. Production clustering
-    * should prefer [[initCentroidsSampled]].
+  /** The k initial centroids, drawn from the corpus in one TakeOrdered
+    * pass; only k×dim doubles reach the driver.
+    *  - `seed = None`: the k vectors with the smallest ids. Oracle-friendly
+    *    (a pure function of the data, expressible in SQL) but
+    *    quality-blind — if low ids correlate with ingest order, the
+    *    seeds all come from one corner of the corpus.
+    *  - `Some(seed)`: the k vectors with the smallest `xxhash64(id, seed)`
+    *    (ties to the smaller id) — a deterministic pseudo-random draw
+    *    spread uniformly over the corpus regardless of id layout,
+    *    reproducible across runs and cluster topologies (same contract
+    *    as [[Sampling.hashSample]]'s hash-order trick). Production
+    *    clustering should prefer it.
     */
-  def initCentroids(df: DataFrame, embCol: String, idCol: String,
-                    k: Int): Array[(Long, Array[Double])] =
-    df.select(col(idCol).cast("long"), col(embCol).cast("array<double>"))
-      .orderBy(col(idCol))
-      .limit(k)
-      .collect()
-      .zipWithIndex
-      .map { case (r, i) => (i.toLong, r.getSeq[Double](1).toArray) }
-
-  /** Seeded-sample init: the k vectors with the smallest
-    * `xxhash64(id, seed)` — a deterministic pseudo-random draw spread
-    * uniformly over the corpus regardless of id layout, reproducible
-    * across runs and cluster topologies (same contract as
-    * [[Sampling.hashSample]]'s hash-order trick). One
-    * TakeOrdered pass; only k×dim doubles reach the driver.
-    */
-  def initCentroidsSampled(df: DataFrame, embCol: String, idCol: String,
-                           k: Int, seed: Long): Array[(Long, Array[Double])] =
+  def initCentroids(df: DataFrame, embCol: String, idCol: String, k: Int,
+                    seed: Option[Long] = None): Array[(Long, Array[Double])] = {
+    val id = col("__id")
     df.select(col(idCol).cast("long").as("__id"),
         col(embCol).cast("array<double>").as("__v"))
-      .orderBy(xxhash64(col("__id"), lit(seed)), col("__id"))
+      .orderBy((seed.map(s => xxhash64(id, lit(s))).toSeq :+ id): _*)
       .limit(k)
       .collect()
       .zipWithIndex
       .map { case (r, i) => (i.toLong, r.getSeq[Double](1).toArray) }
+  }
 
   /** Add `cluster` AND `cent_sim` columns: nearest centroid by cosine
     * (ties to the smallest centroid id) plus the similarity to that
@@ -98,17 +91,14 @@ object KMeans {
         array_sort(collect_list(struct(col("dim"), col("mean_x"))))
           .getField("mean_x").as("centroid"))
 
-  /** Run `iters` Lloyd iterations; only the k×dim centroid matrix
-    * crosses the driver per round. `initSeed = None` keeps the
-    * deterministic smallest-id init (the oracle contract); `Some(seed)`
-    * starts from [[initCentroidsSampled]].
+  /** Run `iters` Lloyd iterations from [[initCentroids]] with
+    * `initSeed`; only the k×dim centroid matrix crosses the driver per
+    * round. `iters <= 0` returns the init itself. `initSeed = None`
+    * keeps the deterministic smallest-id init (the oracle contract).
     */
   def fit(df: DataFrame, embCol: String, idCol: String, k: Int,
           iters: Int, initSeed: Option[Long] = None): Array[(Long, Array[Double])] = {
-    var cs = initSeed match {
-      case Some(seed) => initCentroidsSampled(df, embCol, idCol, k, seed)
-      case None       => initCentroids(df, embCol, idCol, k)
-    }
+    var cs = initCentroids(df, embCol, idCol, k, initSeed)
     var i = 0
     while (i < iters) {
       cs = lloydStep(df, embCol, cs)

@@ -34,13 +34,6 @@ object Multimodal {
     StructField("n_bytes", LongType),
     StructField("error", StringType)))
 
-  /** Wrap a binary column into the standard asset struct. */
-  def asAsset(df: DataFrame, bytesCol: String, mediaType: String): DataFrame =
-    df.withColumn("asset", struct(
-      lit(mediaType).as("media_type"),
-      col(bytesCol).as("bytes"),
-      map(lit("source"), lit("inline")).as("meta")))
-
   /** Deterministic fake "image" encoder for fixtures: header
     * `GIMG|width|height|channels|` followed by payload bytes.
     */

@@ -31,16 +31,6 @@ import graft.functions.VectorExpressions
   */
 object SemDeDup {
 
-  /** Assign each row to its nearest centroid (cosine, ties to smallest
-    * centroid id) and keep the similarity to the assigned centroid as
-    * `cent_sim` — delegates to [[KMeans.assignWithSim]] so SemDeDup and
-    * k-means clustering can never disagree on the tie-break the q95
-    * oracle encodes.
-    */
-  def assignWithSim(df: DataFrame, embCol: String,
-                    centroids: Array[(Long, Array[Double])]): DataFrame =
-    KMeans.assignWithSim(df, embCol, centroids)
-
   /** Semantic dedup of `df` on embedding column `embCol`: returns the
     * KEPT rows with `cluster` and `cent_sim` columns added. `iters` = 0
     * clusters on the init centroids directly; `iters` > 0 runs that many
@@ -52,7 +42,7 @@ object SemDeDup {
     * which is what the q95 oracle encodes, but quality-blind when low
     * ids correlate with ingest order (all seeds from one corner of the
     * corpus). A production corpus should pass `Some(seed)` for the
-    * [[KMeans.initCentroidsSampled]] draw: still deterministic and
+    * [[KMeans.initCentroids]] hash-order draw: still deterministic and
     * reproducible (hash order, not partition order), but spread
     * uniformly over the corpus — the determinism-over-quality trade is
     * the caller's, stated here rather than hidden.
@@ -61,13 +51,8 @@ object SemDeDup {
                tau: Double, iters: Int = 0,
                initSeed: Option[Long] = None): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
-    val centroids = (iters, initSeed) match {
-      case (i, None) if i <= 0 => KMeans.initCentroids(df, embCol, idCol, k)
-      case (i, Some(seed)) if i <= 0 =>
-        KMeans.initCentroidsSampled(df, embCol, idCol, k, seed)
-      case (i, seed) => KMeans.fit(df, embCol, idCol, k, i, seed)
-    }
-    semDedupOnAssigned(assignWithSim(df, embCol, centroids), embCol, idCol, tau)
+    val centroids = KMeans.fit(df, embCol, idCol, k, iters, initSeed)
+    semDedupOnAssigned(KMeans.assignWithSim(df, embCol, centroids), embCol, idCol, tau)
   }
 
   /** The shadow anti-join stage over a precomputed assignment — split

@@ -304,11 +304,13 @@ object SimilaritySearch {
 
   /** The STORED coarse quantizer, ordered by cluster id (its array index
     * is the cluster id) — the frozen assignment contract every append
-    * and query shares. nlist rows: sorted on the driver.
+    * and query shares. nlist rows: sorted on the driver; the schema
+    * comes from the file footer ([[IndexLifecycle.readDir]]), so the
+    * read runs one job, not an inference job before it.
     */
   private def storedCentroids(spark: org.apache.spark.sql.SparkSession,
                               root: org.apache.hadoop.fs.Path): Array[Array[Double]] =
-    spark.read.parquet(new org.apache.hadoop.fs.Path(root, "centroids").toString)
+    IndexLifecycle.readDir(spark, new org.apache.hadoop.fs.Path(root, "centroids").toString)
       .select(col("cluster"), col("centroid")).collect().sortBy(_.getInt(0))
       .map(_.getSeq[Double](1).toArray)
 

@@ -131,7 +131,7 @@ object TextAnalysis {
              |ORDER BY keeper""".stripMargin)),
 
     QueryDef("q98_dedup_exact_prehashed",
-      // q44 on the hash-at-ingest layout (Dedup.exactGroupsPrehashed):
+      // q44 on the hash-at-ingest layout (Dedup.exactGroups, hashCol):
       // the 64-bit fingerprint column a 100 TB lake stores at ingest is
       // materialized in-flight here (the bench variant reads it from a
       // stored table instead); the colliding probe groups on the stored
@@ -144,7 +144,7 @@ object TextAnalysis {
         // gateBytes = 0 forces the prehashed prefilter at gate scale
         // (sf0.01 sits below the production 32 MB gate)
         graft.operators.Dedup
-          .exactGroupsPrehashed(docs, "text", "doc_id", "__xh", gateBytes = 0L)
+          .exactGroups(docs, "text", "doc_id", gateBytes = 0L, hashCol = Some("__xh"))
           .select(col("content_hash").as("h"), col("keeper"), col("n_copies"))
           .orderBy(col("keeper"))
       },

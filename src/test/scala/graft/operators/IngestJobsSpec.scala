@@ -207,6 +207,21 @@ class IngestJobsSpec extends AnyFunSuite {
       (13L, lakeText, "src1"), (15L, words("third", 23) + "\nshared line", "src0")))
   }
 
+  /** An IVF index built over the odd vectors of a 20-vector corpus, and
+    * an input dir holding the even vectors as two stamped parquet files.
+    */
+  private def ivfFixture(): (String, String) = {
+    val emb = (0 until 20).map(i => (i.toLong, Array.tabulate(8)(j => math.sin(i * 8.0 + j))))
+      .toDF("vec_id", "embedding")
+    val idx = tmpDir("jobs_ivf_idx")
+    SimilaritySearch.ivfBuild(emb.filter(col("vec_id") % 2 === 1),
+      "embedding", "vec_id", nlist = 4, idx)
+    val in = tmpDir("jobs_ivf_in")
+    Seq(0, 2).foreach(r => emb.filter(col("vec_id") % 4 === r)
+      .coalesce(1).write.mode("append").parquet(in))
+    (idx, in)
+  }
+
   private def property(p: java.util.Properties, key: String): Option[String] =
     Option(p).flatMap(q => Option(q.getProperty(key)))
 
@@ -267,13 +282,17 @@ class IngestJobsSpec extends AnyFunSuite {
           "jobs_fp", maxFilesPerTrigger = one).collect(): Unit },
       "index" -> { val idx = f.index()
         () => DocsStream.runIndexDedupLoopAsStream(spark, f.in, idx,
-          "jobs_idx", maxFilesPerTrigger = one).collect(): Unit })
+          "jobs_idx", maxFilesPerTrigger = one).collect(): Unit },
+      "ivf" -> { val (idx, in) = ivfFixture()
+        () => DocsStream.runIvfIngestAsStream(spark, in, idx, "jobs_ivf",
+          maxFilesPerTrigger = one) })
     val perBatch = loops.map { case (name, run) => name -> jobsPerBatch(run()) }.toMap
     // measured on this fixture, as the shard loop's pin above
     assert(perBatch == Map(
       "pipeline" -> Map(0L -> 28, 1L -> 31),
       "paragraph" -> Map(0L -> 6, 1L -> 7),
       "fingerprint" -> Map(0L -> 22, 1L -> 24),
-      "index" -> Map(0L -> 13, 1L -> 15)), perBatch.toString)
+      "index" -> Map(0L -> 13, 1L -> 15),
+      "ivf" -> Map(0L -> 3, 1L -> 3)), perBatch.toString)
   }
 }

@@ -88,6 +88,26 @@ class KernelPropertiesSpec extends AnyFunSuite {
     assert(bad.isEmpty, bad.mkString("\n"))
   }
 
+  test("Dedup.shingles ≡ the plain-Scala word n-gram reference on generated text, incl. tabs and newlines at either end") {
+    val end = Gen.oneOf("", " ", "  ", "\t", "\n", " \t", "\n ", "\t\n")
+    val edged: Gen[String] = for {
+      body <- Gen.frequency(1 -> Gen.const(""), 1 -> Gen.oneOf(" ", "\t", "\n", " \t\n "),
+        8 -> text)
+      lead <- end
+      trail <- end
+    } yield lead + body + trail
+    val df = (sample(edged, 5L).map(Option(_)) :+ None).toDF("t")
+    val bad = mismatches(df, Seq(1, 2, 3, 5).map(k =>
+      Dedup.shingles(col("t"), k) -> KernelReferences.shinglesUdf(k)(col("t"))))
+    assert(bad.isEmpty, bad.mkString("\n"))
+    // the boundary the reference encodes: a tab or newline at either end
+    // is not trimmed and yields an empty end token
+    val ends = Seq("\tfoo bar baz\n").toDF("t")
+      .select(Dedup.shingles(col("t"), 1)).head().getSeq[String](0)
+    assert(ends == Seq("", "foo", "bar", "baz"), ends.toString)
+    intercept[IllegalArgumentException](Dedup.shingles(col("t"), 0))
+  }
+
   test("WordWindows ≡ the split → slice → array_join composite on generated text") {
     val df = (sample(text, 4L).map(Option(_)) :+ None).toDF("t")
     val bad = mismatches(df, for (n <- Seq(1, 2, 3, 7); sep <- Seq(" ", "ö", "--")) yield

@@ -142,6 +142,26 @@ object KernelReferences {
     df.withColumn("cluster",
       nearestCentroidUdf(cents)(col(embCol).cast("array<double>")))
 
+  /** Distinct word k-grams in plain Scala — the reference for
+    * [[Dedup.shingles]], written out as Spark evaluates
+    * `split(lower(trim(t)), "\\s+")`: `trim` strips spaces only, so a
+    * leading or trailing tab or newline splits off an empty end token
+    * (as the DuckDB oracles' `trim` + `regexp_split_to_array` do); `\s`
+    * is ASCII whitespace; the split keeps trailing empty tokens. Null
+    * text and texts of fewer than k tokens give an empty array.
+    */
+  def shinglesUdf(k: Int) = udf((text: String) => {
+    if (text == null) Seq.empty[String]
+    else {
+      var a = 0
+      var b = text.length
+      while (a < b && text.charAt(a) == ' ') a += 1
+      while (b > a && text.charAt(b - 1) == ' ') b -= 1
+      val words = text.substring(a, b).toLowerCase(java.util.Locale.ROOT).split("\\s+", -1)
+      words.toSeq.sliding(k).filter(_.length == k).map(_.mkString(" ")).toSeq.distinct
+    }
+  })
+
   /** Non-overlapping `n`-word windows as a composite split → slice →
     * array_join expression — the reference for
     * [[ParagraphDedup.unitsByWordWindow]].

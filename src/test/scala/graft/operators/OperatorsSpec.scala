@@ -492,7 +492,7 @@ class OperatorsSpec extends AnyFunSuite {
     assert(survivors(0) == survivors(1000000))
   }
 
-  test("exactGroupsPrehashed (stored fingerprint) equals exactGroups, incl. NULL text and both broadcast regimes") {
+  test("exactGroups over a stored fingerprint hashCol equals exactGroups, incl. NULL text and both broadcast regimes") {
     import spark.implicits._
     val withNulls = docs.union(Seq((6L, null.asInstanceOf[String]),
       (7L, null.asInstanceOf[String])).toDF("doc_id", "text"))
@@ -508,19 +508,19 @@ class OperatorsSpec extends AnyFunSuite {
         r.getAs[Long]("keeper"), r.getAs[Long]("n_copies"))).toSet
     val want = groupsOf(Dedup.exactGroups(withNulls, "text", "doc_id",
       gateBytes = 0L))
-    val got = groupsOf(Dedup.exactGroupsPrehashed(stored, "text", "doc_id",
-      "xh", gateBytes = 0L))
+    val got = groupsOf(Dedup.exactGroups(stored, "text", "doc_id",
+      gateBytes = 0L, hashCol = Some("xh")))
     assert(got == want, s"prehashed $got vs computed $want")
     assert(got.exists { case (_, keeper, n) => keeper == 2L && n == 2L })
     assert(got.exists { case (h, keeper, n) => h == null && keeper == 6L && n == 2L })
     // overflow regime (cap 0 forces the unhinted shuffled semi) agrees
-    val overflow = groupsOf(Dedup.exactGroupsPrehashed(stored, "text",
-      "doc_id", "xh", gateBytes = 0L, broadcastMaxCollidingGroups = 0))
+    val overflow = groupsOf(Dedup.exactGroups(stored, "text", "doc_id",
+      gateBytes = 0L, broadcastMaxCollidingGroups = 0, hashCol = Some("xh")))
     assert(overflow == want, s"overflow $overflow vs $want")
     // the layout's whole point, pinned: no xxhash64 anywhere in the plan
     // (the probe groups on the STORED column)
-    val plan = Dedup.exactGroupsPrehashed(stored, "text", "doc_id", "xh",
-      gateBytes = 0L).queryExecution.optimizedPlan.toString
+    val plan = Dedup.exactGroups(stored, "text", "doc_id", gateBytes = 0L,
+      hashCol = Some("xh")).queryExecution.optimizedPlan.toString
     assert(!plan.toLowerCase.contains("xxhash64"), plan.take(1200))
   }
 
@@ -621,8 +621,8 @@ class OperatorsSpec extends AnyFunSuite {
     assert(a == run(), "seeded init not reproducible")
     // whatever the seed picked, the keep-rule contract must hold: verify
     // against the brute-force shadow rule computed from the same init
-    val cents = KMeans.initCentroidsSampled(emb, "embedding", "vec_id", 2, 7L)
-    val assigned = SemDeDup.assignWithSim(emb, "embedding", cents)
+    val cents = KMeans.initCentroids(emb, "embedding", "vec_id", 2, Some(7L))
+    val assigned = KMeans.assignWithSim(emb, "embedding", cents)
       .select(col("vec_id"), col("cluster"), col("cent_sim"),
         col("embedding").cast("array<double>"))
       .collect()
@@ -882,7 +882,7 @@ class OperatorsSpec extends AnyFunSuite {
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(clusters(2L) == 0L && clusters(3L) == 1L && clusters(4L) == 1L)
     // brute-force cross-check of the shadow rule over ALL rows
-    val assigned = SemDeDup.assignWithSim(emb, "embedding",
+    val assigned = KMeans.assignWithSim(emb, "embedding",
       KMeans.initCentroids(emb, "embedding", "vec_id", 2))
       .select(col("vec_id"), col("cluster"), col("cent_sim"),
         col("embedding").cast("array<double>"))
