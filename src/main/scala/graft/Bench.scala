@@ -277,9 +277,21 @@ object Bench {
         .orderBy(col("c_nationkey"))
     }))
 
+  /** Parquet bytes under a table path — a single file (the local-bench
+    * layout) OR a Spark-written directory of part files (the standard
+    * lake layout; one nesting level is the norm, two covers partition
+    * dirs). Unknown layouts total 0 — callers must FAIL OPEN on 0.
+    */
+  private def parquetBytes(f: java.io.File, depth: Int = 3): Long =
+    if (f.isFile) { if (f.getName.endsWith(".parquet")) f.length else 0L }
+    else if (depth == 0) 0L
+    else Option(f.listFiles())
+      .map(_.map(parquetBytes(_, depth - 1)).sum).getOrElse(0L)
+
   /** THIN-SESSION heuristic (round 17): when the ENTIRE input is a few
-    * scan partitions (< 64 MB of parquet — sf0.1 is ~24 MB; sf1, at
-    * ~240 MB, is not thin), the session machinery IS the runtime, so the
+    * scan partitions (< [[Graft.ThinInputBytes]], 64 MiB, of parquet —
+    * sf0.1 is ~24 MB; sf1, at ~240 MB, is not thin), the session
+    * machinery IS the runtime, so the
     * session is configured like the small job it is: AQE off (its
     * stage-by-stage materialization adds a barrier per shuffle that
     * pure-planning cannot win back when map outputs are KBs) and 8
@@ -301,17 +313,6 @@ object Bench {
     * [[Graft.tuneForTinyInput]] (runtime-settable confs, usable on an
     * already-built session).
     */
-  /** Parquet bytes under a table path — a single file (the local-bench
-    * layout) OR a Spark-written directory of part files (the standard
-    * lake layout; one nesting level is the norm, two covers partition
-    * dirs). Unknown layouts total 0 — callers must FAIL OPEN on 0.
-    */
-  private def parquetBytes(f: java.io.File, depth: Int = 3): Long =
-    if (f.isFile) { if (f.getName.endsWith(".parquet")) f.length else 0L }
-    else if (depth == 0) 0L
-    else Option(f.listFiles())
-      .map(_.map(parquetBytes(_, depth - 1)).sum).getOrElse(0L)
-
   def thinInput(sfDir: String): Boolean = {
     val total = scala.util.Try(parquetBytes(new java.io.File(sfDir)))
       .getOrElse(0L)
@@ -319,7 +320,7 @@ object Bench {
     // recognize keeps the full config — the thin profile on a large
     // dataset is a severe regression, the full profile on a tiny one
     // costs ~2 s
-    total > 0L && total < (64L << 20)
+    total > 0L && total < Graft.ThinInputBytes
   }
 
   /** Split size targeting ~4 task waves over the biggest table's bytes:

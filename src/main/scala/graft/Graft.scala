@@ -74,6 +74,12 @@ object Graft {
   def dropSecret(name: String, secretType: String): Unit =
     Secrets.drop(secretType.toLowerCase, name)
 
+  /** Inputs below this many bytes get the thin session profile: a 0.1-SF
+    * TPC-H-ish directory is ~24 MB, a 1-SF one is ~250 MB and must keep
+    * runtime re-planning and full shuffle parallelism.
+    */
+  private[graft] val ThinInputBytes: Long = 64L << 20
+
   /** Tune the session for a TINY total input — the engine-side form of
     * the round-17 floor finding: when the whole input is a few scan
     * partitions, Spark's session machinery IS the runtime, and the
@@ -85,17 +91,13 @@ object Graft {
     * non-thin call RESTORES the confs this function changed (the
     * pre-thin values are stashed in the session conf), so a session
     * never stays on the thin profile after its input outgrows it
-    * (default cutoff 64 MB: a 0.1-SF TPC-H-ish directory is ~24 MB, a
-    * 1-SF one is ~250 MB and must keep runtime re-planning and full
-    * shuffle parallelism). A non-thin call on a never-thinned session
-    * changes nothing.
+    * (cutoff [[ThinInputBytes]]). A non-thin call on a never-thinned
+    * session changes nothing.
     *
     * Returns true when the thin profile was applied.
     */
-  def tuneForTinyInput(spark: SparkSession, totalInputBytes: Long,
-                       cutoffBytes: Long = 64L << 20,
-                       thinShufflePartitions: Int = 8): Boolean = {
-    val thin = totalInputBytes >= 0 && totalInputBytes < cutoffBytes
+  def tuneForTinyInput(spark: SparkSession, totalInputBytes: Long): Boolean = {
+    val thin = totalInputBytes >= 0 && totalInputBytes < ThinInputBytes
     val savedAqe = "spark.graft.thin.saved.adaptive"
     val savedShuffle = "spark.graft.thin.saved.shufflePartitions"
     if (thin) {
@@ -106,8 +108,7 @@ object Graft {
           spark.conf.get("spark.sql.shuffle.partitions", "200"))
       }
       spark.conf.set("spark.sql.adaptive.enabled", "false")
-      spark.conf.set("spark.sql.shuffle.partitions",
-        thinShufflePartitions.toString)
+      spark.conf.set("spark.sql.shuffle.partitions", "8")
     } else {
       spark.conf.getOption(savedAqe).foreach { v =>
         spark.conf.set("spark.sql.adaptive.enabled", v)

@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -13,7 +14,8 @@ import org.apache.spark.sql.types._
   * `array<bigint>` columns — the exact-verify kernel of every MinHash
   * path ([[graft.operators.Dedup]] q47/q48/q96/q97 and the streaming
   * loop): per candidate pair, intersection and union are computed in
-  * ONE generated loop over the arrays' primitive longs.
+  * ONE merge loop over the arrays' primitive longs,
+  * [[SortedJaccardExpr.jaccard]], which the generated code calls.
   *
   * The Scala-UDF spelling this replaces paid, per candidate pair, two
   * `WrappedArray` wrappers plus a boxed `java.lang.Long` per element
@@ -32,16 +34,19 @@ import org.apache.spark.sql.types._
   * guaranteed by the shingle-hash producer, `shingleHashes64`): arrays
   * are sorted ascending with distinct, non-null elements.
   *
-  * The non-null-elements precondition is MACHINE-CHECKED, statically
-  * where possible: when an input's schema says `containsNull = true`,
-  * the generated loop gains a per-element null check that throws a
-  * named error instead of silently reading null as 0 the way
-  * `ArrayData.getLong` would (a wrong jaccard with no signal). When
-  * both schemas carry `containsNull = false`, the check compiles away
-  * and the merge loop stays branch-free. The split lands exactly right:
+  * The non-null-elements precondition is MACHINE-CHECKED where a null
+  * can occur: when an input's schema says `containsNull = true`, the
+  * kernel first scans both arrays for null elements and throws a named
+  * error instead of silently reading null as 0 the way
+  * `ArrayData.getLong` would (a wrong jaccard with no signal). The
+  * schemas decide this once per expression: `doGenCode` passes the
+  * decision to [[SortedJaccardExpr.jaccard]] as a literal `checkNulls`
+  * flag, so with both schemas `containsNull = false` each pair costs one
+  * branch on a constant and the merge loop itself carries no null
+  * check. The split lands exactly right:
   * in-plan producers (`shingleHashes64` feeding the verify join —
   * q47/q48/q96 and every self-join path) prove non-null in their schema
-  * and pay nothing, while arrays READ FROM STORAGE (the persisted
+  * and pay only that branch, while arrays READ FROM STORAGE (the persisted
   * index's `hashes`) arrive `containsNull = true` because Spark's file
   * sources force `asNullable` on every scan schema — and a stored file
   * is precisely where an out-of-band producer could have written a
@@ -59,8 +64,9 @@ case class SortedJaccardExpr(left: Expression, right: Expression) extends Binary
       s"sorted_jaccard64 requires two array<bigint> arguments, got ${l.simpleString}, ${r.simpleString}")
   }
 
-  /** True when either input's schema admits null ELEMENTS — only then do
-    * the loops pay a per-element check (throwing [[nullElementError]]).
+  /** True when either input's schema admits null ELEMENTS — only then
+    * does the kernel pay a per-element check (throwing
+    * [[SortedJaccardExpr.nullElementError]]).
     */
   private def mayContainNullElements: Boolean = Seq(left, right).exists {
     e => e.dataType match {
@@ -69,17 +75,39 @@ case class SortedJaccardExpr(left: Expression, right: Expression) extends Binary
     }
   }
 
-  override def eval(input: InternalRow): Any = {
-    val a = left.eval(input).asInstanceOf[ArrayData]
-    val b = right.eval(input).asInstanceOf[ArrayData]
+  override def eval(input: InternalRow): Any = SortedJaccardExpr.jaccard(
+    left.eval(input).asInstanceOf[ArrayData], right.eval(input).asInstanceOf[ArrayData],
+    mayContainNullElements)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val l = left.genCode(ctx)
+    val r = right.genCode(ctx)
+    val call = code"""
+      |double ${ev.value} = graft.functions.SortedJaccardExpr.jaccard(
+      |  ${l.isNull} ? null : ${l.value}, ${r.isNull} ? null : ${r.value}, $mayContainNullElements);
+      |""".stripMargin
+    ev.copy(code = l.code + r.code + call, isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildrenInternal(newLeft: Expression,
+                                                 newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+object SortedJaccardExpr {
+  /** Jaccard of two sorted distinct arrays by merge-intersection, rounded
+    * to 4 places; a null (or empty) array on either side gives 0.0.
+    * `checkNulls` scans both arrays for null elements first.
+    */
+  def jaccard(a: ArrayData, b: ArrayData, checkNulls: Boolean): Double = {
     if (a == null || b == null) return 0.0
     val an = a.numElements(); val bn = b.numElements()
     if (an == 0 || bn == 0) return 0.0
-    if (mayContainNullElements) {
+    if (checkNulls) {
       var i = 0
-      while (i < an) { if (a.isNullAt(i)) SortedJaccardExpr.nullElementError(); i += 1 }
+      while (i < an) { if (a.isNullAt(i)) nullElementError(); i += 1 }
       var j = 0
-      while (j < bn) { if (b.isNullAt(j)) SortedJaccardExpr.nullElementError(); j += 1 }
+      while (j < bn) { if (b.isNullAt(j)) nullElementError(); j += 1 }
     }
     var i = 0; var j = 0; var inter = 0
     while (i < an && j < bn) {
@@ -92,63 +120,7 @@ case class SortedJaccardExpr(left: Expression, right: Expression) extends Binary
     math.round(inter.toDouble / union * 10000.0) / 10000.0
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val leftGen = left.genCode(ctx)
-    val rightGen = right.genCode(ctx)
-    val a = leftGen.value; val b = rightGen.value
-    val an = ctx.freshName("an"); val bn = ctx.freshName("bn")
-    val i = ctx.freshName("i"); val j = ctx.freshName("j")
-    val inter = ctx.freshName("inter")
-    val x = ctx.freshName("x"); val y = ctx.freshName("y")
-    val u = ctx.freshName("u")
-    // static decision: the null-element guard is emitted only when an
-    // input schema admits null elements, so the internal producers'
-    // merge loop carries zero extra branches
-    val guard =
-      if (!mayContainNullElements) ""
-      else {
-        val g = ctx.freshName("g")
-        s"""for (int $g = 0; $g < $an; $g++) {
-           |  if ($a.isNullAt($g)) graft.functions.SortedJaccardExpr.nullElementError();
-           |}
-           |for (int $g = 0; $g < $bn; $g++) {
-           |  if ($b.isNullAt($g)) graft.functions.SortedJaccardExpr.nullElementError();
-           |}""".stripMargin
-      }
-    val merge =
-      code"""
-            |double ${ev.value} = 0.0;
-            |if (!${leftGen.isNull} && !${rightGen.isNull}) {
-            |  int $an = $a.numElements();
-            |  int $bn = $b.numElements();
-            |  if ($an > 0 && $bn > 0) {
-            |    $guard
-            |    int $i = 0; int $j = 0; int $inter = 0;
-            |    while ($i < $an && $j < $bn) {
-            |      long $x = $a.getLong($i);
-            |      long $y = $b.getLong($j);
-            |      if ($x == $y) { $inter++; $i++; $j++; }
-            |      else if ($x < $y) { $i++; } else { $j++; }
-            |    }
-            |    int $u = $an + $bn - $inter;
-            |    ${ev.value} = java.lang.Math.round((double) $inter / $u * 10000.0) / 10000.0;
-            |  }
-            |}
-          """.stripMargin
-    ev.copy(code = leftGen.code + rightGen.code + merge, isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-                                                 newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-object SortedJaccardExpr {
-  /** Shared by the interpreted and generated guard paths (the generated
-    * code calls it by name, so it must be a public static).
-    */
-  def nullElementError(): Nothing = throw new IllegalArgumentException(
+  private def nullElementError(): Nothing = throw new IllegalArgumentException(
     "sorted_jaccard64: input array contains a null element — inputs must " +
       "be sorted distinct non-null 64-bit shingle hashes (shingleHashes64)")
 }

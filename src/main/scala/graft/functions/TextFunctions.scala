@@ -161,9 +161,10 @@ object TextFunctions {
 
 /** Polynomial rolling hash (h = h*31 + byte mod 2^64) over a string's
   * UTF-8 bytes — the document-fingerprint primitive, as a native
-  * codegen'd Expression: the generated Java runs inside whole-stage
-  * codegen with zero boxing (a UDF here would break the codegen stage on
-  * the hot path of a full-corpus scan).
+  * codegen'd Expression: the generated code calls
+  * [[RollingHashExpr.rollingHash]] inside whole-stage codegen with zero
+  * boxing (a UDF here would break the codegen stage on the hot path of a
+  * full-corpus scan).
   */
 case class RollingHashExpr(child: Expression) extends UnaryExpression {
   override def dataType: DataType = LongType
@@ -184,13 +185,8 @@ case class RollingHashExpr(child: Expression) extends UnaryExpression {
     if (child.dataType == org.apache.spark.sql.types.NullType) null
     else super.eval(input)
 
-  override def nullSafeEval(input: Any): Any = {
-    val bytes = input.asInstanceOf[UTF8String].getBytes
-    var h = 0L
-    var i = 0
-    while (i < bytes.length) { h = h * 31L + (bytes(i) & 0xffL); i += 1 }
-    java.lang.Long.valueOf(h)
-  }
+  override def nullSafeEval(input: Any): Any =
+    RollingHashExpr.rollingHash(input.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     if (child.dataType == org.apache.spark.sql.types.NullType) {
@@ -198,21 +194,20 @@ case class RollingHashExpr(child: Expression) extends UnaryExpression {
       return ev.copy(code =
         code"boolean ${ev.isNull} = true; long ${ev.value} = -1L;")
     }
-    nullSafeCodeGen(ctx, ev, c => {
-      val bytes = ctx.freshName("bytes")
-      val i = ctx.freshName("i")
-      val h = ctx.freshName("h")
-      s"""
-         |byte[] $bytes = $c.getBytes();
-         |long $h = 0L;
-         |for (int $i = 0; $i < $bytes.length; $i++) {
-         |  $h = $h * 31L + ($bytes[$i] & 0xffL);
-         |}
-         |${ev.value} = $h;
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, c => s"graft.functions.RollingHashExpr.rollingHash($c)")
   }
 
   override protected def withNewChildInternal(newChild: Expression): RollingHashExpr =
     copy(child = newChild)
+}
+
+object RollingHashExpr {
+  /** `h = h * 31 + byte` over the string's UTF-8 bytes, wrapping at 2^64. */
+  def rollingHash(s: UTF8String): Long = {
+    val bytes = s.getBytes
+    var h = 0L
+    var i = 0
+    while (i < bytes.length) { h = h * 31L + (bytes(i) & 0xffL); i += 1 }
+    h
+  }
 }

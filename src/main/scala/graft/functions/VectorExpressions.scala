@@ -15,9 +15,10 @@ import org.apache.spark.sql.types._
   * whole-stage-codegen'd — Catalyst evaluates the lambda per element in
   * interpreted mode, which costs ~64 boxed invocations per row per
   * aggregate (×3 for dot + two norms) on the brute-force ANN path. This
-  * expression fuses dot product and both norms into ONE generated loop
-  * over the array's primitive doubles — measured ~5× on the sf1
-  * brute-force cosine top-k.
+  * expression fuses dot product and both norms into ONE loop over the
+  * array's primitive doubles, [[CosineSimExpr.cosine]], which the
+  * generated code calls — measured ~5× on the sf1 brute-force cosine
+  * top-k.
   *
   * Semantics match the HOF form exactly: left fold in index order over
   * doubles, `null` when either array is null or contains a null element
@@ -45,9 +46,29 @@ case class CosineSimExpr(left: Expression, right: Expression) extends BinaryExpr
       s"cosine_sim requires two array<double> arguments, got ${l.simpleString}, ${r.simpleString}")
   }
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    CosineSimExpr.cosine(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val cos = ctx.freshName("cos")
+    nullSafeCodeGen(ctx, ev, (a, b) => s"""
+      |java.lang.Double $cos = graft.functions.CosineSimExpr.cosine($a, $b);
+      |${ev.isNull} = $cos == null;
+      |if (!${ev.isNull}) ${ev.value} = $cos;
+      |""".stripMargin)
+  }
+
+  override protected def withNewChildrenInternal(newLeft: Expression,
+                                                 newRight: Expression): CosineSimExpr =
+    copy(left = newLeft, right = newRight)
+}
+
+object CosineSimExpr {
+  /** The cosine of two vectors: dot product and both norms summed in one
+    * pass in index order; null on a length mismatch or a null element,
+    * NaN when a norm is zero.
+    */
+  def cosine(x: ArrayData, y: ArrayData): java.lang.Double = {
     val n = x.numElements()
     if (n != y.numElements()) return null
     var dot = 0.0; var nx = 0.0; var ny = 0.0
@@ -60,35 +81,6 @@ case class CosineSimExpr(left: Expression, right: Expression) extends BinaryExpr
     }
     java.lang.Double.valueOf(dot / (math.sqrt(nx) * math.sqrt(ny)))
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val dot = ctx.freshName("dot")
-      val nx = ctx.freshName("nx")
-      val ny = ctx.freshName("ny")
-      val xv = ctx.freshName("xv")
-      val yv = ctx.freshName("yv")
-      s"""
-         |int $n = $a.numElements();
-         |double $dot = 0.0; double $nx = 0.0; double $ny = 0.0;
-         |if ($n != $b.numElements()) { ${ev.isNull} = true; }
-         |for (int $i = 0; !${ev.isNull} && $i < $n; $i++) {
-         |  if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |  double $xv = $a.getDouble($i);
-         |  double $yv = $b.getDouble($i);
-         |  $dot += $xv * $yv; $nx += $xv * $xv; $ny += $yv * $yv;
-         |}
-         |if (!${ev.isNull}) {
-         |  ${ev.value} = $dot / (java.lang.Math.sqrt($nx) * java.lang.Math.sqrt($ny));
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-                                                 newRight: Expression): CosineSimExpr =
-    copy(left = newLeft, right = newRight)
 }
 
 /** Fused nearest-centroid argmax: `struct(cluster, cent_sim)` of the
@@ -101,8 +93,9 @@ case class CosineSimExpr(left: Expression, right: Expression) extends BinaryExpr
   * and runs k-1 field-by-field struct comparisons through the codegen'd
   * comparator, which measured 55 s PER LEG for k=64 over 200k×64-dim
   * rows (Probe q95persist, round 14) — ~97% of SemDeDup's entire
-  * runtime. This expression runs the whole argmax as ONE generated
-  * k×dim loop over primitive doubles with zero per-centroid allocation.
+  * runtime. This expression runs the whole argmax as ONE k×dim loop over
+  * primitive doubles with zero per-centroid allocation,
+  * [[ArgmaxCosineExpr.argmax]], which the generated code calls.
   *
   * Semantics replicate the greatest-chain fold exactly:
   *  - ties on similarity (including NaN == NaN) keep the SMALLEST
@@ -145,14 +138,6 @@ case class ArgmaxCosineExpr(child: Expression, cids: Array[Long],
       s"argmax_cosine requires an array<double> argument, got ${t.simpleString}")
   }
 
-  /** sim beats best iff strictly greater under Spark double ordering
-    * (NaN above everything, NaN == NaN); iterating cids ascending makes
-    * "not better" keep the smallest id on ties.
-    */
-  private def better(sim: Double, best: Double): Boolean =
-    if (java.lang.Double.isNaN(sim)) !java.lang.Double.isNaN(best)
-    else !java.lang.Double.isNaN(best) && sim > best
-
   // Per-centroid norms hoisted out of the row loop, and the input norm
   // out of the centroid loop (round 20 — the same hoist
   // [[NearestCentroidExpr]] got in round 19): sqrt(np) is a constant per
@@ -166,8 +151,27 @@ case class ArgmaxCosineExpr(child: Expression, cids: Array[Long],
   // (cids(0), null) before any similarity is computed.
   @transient private lazy val centNorms = NearestCentroidExpr.norms(cents)
 
-  override def nullSafeEval(a: Any): Any = {
-    val v = a.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any): Any =
+    ArgmaxCosineExpr.argmax(a.asInstanceOf[ArrayData], cids, cents, centNorms)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val cidsRef = ctx.addReferenceObj("cids", cids, "long[]")
+    val centsRef = ctx.addReferenceObj("cents", cents, "double[][]")
+    val normsRef = ctx.addReferenceObj("centNorms", centNorms, "double[]")
+    defineCodeGen(ctx, ev, v =>
+      s"graft.functions.ArgmaxCosineExpr.argmax($v, $cidsRef, $centsRef, $normsRef)")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): ArgmaxCosineExpr =
+    copy(child = newChild)
+}
+
+object ArgmaxCosineExpr {
+  /** `(cluster, cent_sim)` of the centroid nearest to `v` by cosine, over
+    * centroids sorted by id with their norms precomputed.
+    */
+  def argmax(v: ArrayData, cids: Array[Long], cents: Array[Array[Double]],
+             centNorms: Array[Double]): InternalRow = {
     val d = v.numElements()
     if (d != cents.head.length)
       return InternalRow(cids(0), null) // every centroid's cosine is null
@@ -196,60 +200,13 @@ case class ArgmaxCosineExpr(child: Expression, cids: Array[Long],
     InternalRow(cids(bestIdx), bestSim)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v => {
-      val centsRef = ctx.addReferenceObj("cents", cents, "double[][]")
-      val cidsRef = ctx.addReferenceObj("cids", cids, "long[]")
-      val normsRef = ctx.addReferenceObj("centNorms", centNorms, "double[]")
-      val d = ctx.freshName("d")
-      val c = ctx.freshName("c")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val p = ctx.freshName("p")
-      val dot = ctx.freshName("dot")
-      val nv = ctx.freshName("nv")
-      val vnorm = ctx.freshName("vnorm")
-      val xv = ctx.freshName("xv")
-      val sim = ctx.freshName("sim")
-      val bestIdx = ctx.freshName("bestIdx")
-      val bestSim = ctx.freshName("bestSim")
-      val nullElem = ctx.freshName("nullElem")
-      val btr = ctx.freshName("btr")
-      val row = classOf[org.apache.spark.sql.catalyst.expressions.GenericInternalRow].getName
-      s"""
-         |int $d = $v.numElements();
-         |int $bestIdx = 0; double $bestSim = 0.0;
-         |boolean $nullElem = ($d != $centsRef[0].length);
-         |double $nv = 0.0;
-         |for (int $i = 0; !$nullElem && $i < $d; $i++) {
-         |  if ($v.isNullAt($i)) { $nullElem = true; break; }
-         |  double $xv = $v.getDouble($i);
-         |  $nv += $xv * $xv;
-         |}
-         |double $vnorm = java.lang.Math.sqrt($nv);
-         |for (int $c = 0; !$nullElem && $c < $centsRef.length; $c++) {
-         |  double[] $p = $centsRef[$c];
-         |  double $dot = 0.0;
-         |  for (int $j = 0; $j < $d; $j++) {
-         |    $dot += $p[$j] * $v.getDouble($j);
-         |  }
-         |  double $sim = $dot / ($normsRef[$c] * $vnorm);
-         |  // NaN ranks above every real (Spark double ordering); strict
-         |  // better-than keeps the smallest cid on ties
-         |  boolean $btr = java.lang.Double.isNaN($sim)
-         |    ? !java.lang.Double.isNaN($bestSim)
-         |    : (!java.lang.Double.isNaN($bestSim) && $sim > $bestSim);
-         |  if ($c == 0 || $btr) { $bestIdx = $c; $bestSim = $sim; }
-         |}
-         |${ev.value} = $nullElem
-         |  ? new $row(new Object[]{java.lang.Long.valueOf($cidsRef[0]), null})
-         |  : new $row(new Object[]{java.lang.Long.valueOf($cidsRef[$bestIdx]),
-         |      java.lang.Double.valueOf($bestSim)});
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): ArgmaxCosineExpr =
-    copy(child = newChild)
+  /** sim beats best iff strictly greater under Spark double ordering
+    * (NaN above everything, NaN == NaN); iterating cids ascending makes
+    * "not better" keep the smallest id on ties.
+    */
+  private def better(sim: Double, best: Double): Boolean =
+    if (java.lang.Double.isNaN(sim)) !java.lang.Double.isNaN(best)
+    else !java.lang.Double.isNaN(best) && sim > best
 }
 
 /** All `nTables` random-hyperplane LSH signatures of an embedding in ONE
@@ -287,12 +244,8 @@ case class HyperplaneSigsExpr(child: Expression,
   override def nullSafeEval(a: Any): Any =
     HyperplaneSigsExpr.evalSigs(a.asInstanceOf[ArrayData], planes)
 
-  // the companion method must NOT be named `eval`: scalac skips the
-  // static forwarder when the case class inherits a member of the same
-  // name (Expression.eval), and Janino then resolves the generated call
-  // to the INSTANCE eval(InternalRow) and fails — which silently demoted
-  // the whole projection to interpreter mode (found round 18; the
-  // round-18 9–14× A/B was measured WITH that fallback)
+  // named evalSigs, not eval — see the kernel-naming rule in the
+  // [[graft.functions]] package doc
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("planes", planes,
       "double[][][]")
@@ -372,8 +325,8 @@ case class NearestCentroidExpr(child: Expression, cents: Array[Array[Double]])
   override def nullSafeEval(a: Any): Any =
     NearestCentroidExpr.evalNearest(a.asInstanceOf[ArrayData], cents, centNorms)
 
-  // named evalNearest, not eval — see the forwarder note on
-  // [[HyperplaneSigsExpr.doGenCode]]
+  // named evalNearest, not eval — see the kernel-naming rule in the
+  // [[graft.functions]] package doc
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("cents", cents, "double[][]")
     val normsRef = ctx.addReferenceObj("centNorms", centNorms, "double[]")

@@ -22,11 +22,6 @@ import org.apache.spark.sql.types._
   */
 object Multimodal {
 
-  val assetType: StructType = StructType(Seq(
-    StructField("media_type", StringType),
-    StructField("bytes", BinaryType),
-    StructField("meta", MapType(StringType, StringType))))
-
   val imageMetaType: StructType = StructType(Seq(
     StructField("width", IntegerType),
     StructField("height", IntegerType),

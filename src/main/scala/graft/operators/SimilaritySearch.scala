@@ -2,6 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.util.ArrayData
+import graft.functions.{CosineSimExpr, HyperplaneSigsExpr}
+import graft.functions.VectorExpressions.cosineSim
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (`array<float>`/`array<double>`).
@@ -19,20 +22,12 @@ import org.apache.spark.sql.functions._
   */
 object SimilaritySearch {
 
-  /** Codegen'd fused dot+norms loop — see
-    * [[graft.functions.CosineSimExpr]]; the HOF spelling
-    * (`aggregate(zip_with(...))`) evaluates its lambda interpreted,
-    * per-element, and dominated the brute-force path.
-    */
-  def cosine(a: Column, b: Column): Column =
-    graft.functions.VectorExpressions.cosineSim(a, b)
-
   /** Exact top-k by cosine against one query vector. */
   def bruteForceTopK(df: DataFrame, embCol: String, idCol: String,
                      query: Array[Double], k: Int): DataFrame = {
     val q = typedLit(query)
     df.select(col(idCol),
-      round(cosine(col(embCol).cast("array<double>"), q), 6).as("cos_sim"))
+      round(cosineSim(col(embCol).cast("array<double>"), q), 6).as("cos_sim"))
       .orderBy(col("cos_sim").desc, col(idCol))
       .limit(k)
   }
@@ -83,14 +78,8 @@ object SimilaritySearch {
               multiprobe: Int = 0, scale: Int = 6): DataFrame = {
     val dim = query.length
     val buckets = lshBuckets(df, embCol, idCol, nBits, nTables, dim, seed)
-    val planes = (0 until nTables).map(t => hyperplanes(nBits, dim, seed + t))
-    val querySigs = planes.zipWithIndex.map { case (ps, t) =>
-      var sig = 0
-      ps.zipWithIndex.foreach { case (p, i) =>
-        if (p.zip(query).map { case (a, b) => a * b }.sum > 0) sig |= (1 << i)
-      }
-      (t, sig)
-    }
+    val querySigs = HyperplaneSigsExpr.evalSigs(ArrayData.toArrayData(query),
+      hyperplanesFor(nBits, nTables, dim, seed)).toIntArray().zipWithIndex.map(_.swap)
     // expand each table's signature to its hamming-ball of radius `multiprobe`
     val flips: Seq[Int] = (0 to multiprobe).flatMap(m =>
       (0 until nBits).combinations(m).map(_.foldLeft(0)((acc, b) => acc | (1 << b))))
@@ -100,7 +89,7 @@ object SimilaritySearch {
     val q = typedLit(query)
     buckets.filter(probe)
       .select(col("id"), col("v")).dropDuplicates("id")
-      .select(col("id"), round(cosine(col("v"), q), scale).as("cos_sim"))
+      .select(col("id"), round(cosineSim(col("v"), q), scale).as("cos_sim"))
       .orderBy(col("cos_sim").desc, col("id"))
       .limit(k)
   }
@@ -149,14 +138,14 @@ object SimilaritySearch {
     val qCodes = query.map(x => math.floor(x / qs + 0.5))
     val cand = quantize(df, embCol, idCol)
       .select(col(idCol),
-        cosine(col("qcodes").cast("array<double>"), typedLit(qCodes)).as("__qsim"))
+        cosineSim(col("qcodes").cast("array<double>"), typedLit(qCodes)).as("__qsim"))
       .orderBy(col("__qsim").desc, col(idCol))
       .limit(poolN)
       .select(col(idCol))
     val q = typedLit(query)
     df.join(broadcast(cand), Seq(idCol))
       .select(col(idCol).as("id"),
-        round(cosine(col(embCol).cast("array<double>"), q), scale).as("cos_sim"))
+        round(cosineSim(col(embCol).cast("array<double>"), q), scale).as("cos_sim"))
       .orderBy(col("cos_sim").desc, col("id"))
       .limit(k)
   }
@@ -242,18 +231,15 @@ object SimilaritySearch {
                         k: Int, nprobe: Int, scale: Int): DataFrame = {
     require(cents.nonEmpty && query.length == cents(0).length,
       dimError(query.length, cents.headOption.map(_.length).getOrElse(0)))
-    def cos(p: Array[Double]): Double = {
-      var s = 0.0; var pn = 0.0; var qn = 0.0
-      var j = 0
-      while (j < p.length) { s += p(j) * query(j); pn += p(j) * p(j); qn += query(j) * query(j); j += 1 }
-      s / (math.sqrt(pn) * math.sqrt(qn))
-    }
+    val q = ArrayData.toArrayData(query)
+    def cos(p: Array[Double]): Double =
+      CosineSimExpr.cosine(ArrayData.toArrayData(p), q).doubleValue
     val probed = cents.zipWithIndex.sortBy { case (p, i) => (-cos(p), i) }
       .take(nprobe).map(_._2)
     cells
       .filter(col("cluster").isin(probed.toSeq: _*))
       .select(col(idCol).as("id"),
-        round(cosine(col(embCol).cast("array<double>"), typedLit(query)), scale)
+        round(cosineSim(col(embCol).cast("array<double>"), typedLit(query)), scale)
           .as("cos_sim"))
       .orderBy(col("cos_sim").desc, col("id"))
       .limit(k)
@@ -386,7 +372,7 @@ object SimilaritySearch {
       .join(vecs.select(col("__vid").as("id_a"), col("__v").as("v_a")), Seq("id_a"))
       .join(vecs.select(col("__vid").as("id_b"), col("__v").as("v_b")), Seq("id_b"))
       .select(col("id_a"), col("id_b"),
-        round(cosine(col("v_a"), col("v_b")), 6).as("cos_sim"))
+        round(cosineSim(col("v_a"), col("v_b")), 6).as("cos_sim"))
       .filter(col("cos_sim") >= threshold)
   }
 }

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, Multimodal, SimilaritySearch}
-import graft.functions.TextFunctions
+import graft.functions.{TextFunctions, VectorExpressions}
 
 /** Training-data-pipeline operators as correctness-gate entries: MinHash
   * LSH near-dup (exact-verified, so the oracle is the exact all-pairs
@@ -458,7 +458,7 @@ object Pipeline {
         val b = e.select(col("vec_id").as("id_b"), col("v").as("vb"))
         val exact = a.join(b, col("id_a") < col("id_b"))
           .select(col("id_a"), col("id_b"),
-            round(SimilaritySearch.cosine(col("va"), col("vb")), 6).as("cos_sim"))
+            round(VectorExpressions.cosineSim(col("va"), col("vb")), 6).as("cos_sim"))
           .filter(col("cos_sim") >= 0.3)
         // set difference spelled as a broadcast ANTI join, not exceptAll
         // (round 20, sf0.1 stage-floor shave): both sides are

@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
+import graft.functions.VectorExpressions.cosineSim
 
 /** Similarity search over the `embeddings` table (64-dim float vectors).
   * Brute-force cosine top-k is the exact baseline; the LSH-bucketed
@@ -13,9 +14,6 @@ import org.apache.spark.sql.functions._
   * double-precision list functions.
   */
 object Vectors {
-
-  private def cosineSim(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-    graft.functions.VectorExpressions.cosineSim(a, b)
 
   private def norm(a: org.apache.spark.sql.Column) =
     sqrt(aggregate(a, lit(0.0), (acc, x) => acc + x * x))

@@ -108,6 +108,64 @@ class KernelPropertiesSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](Dedup.shingles(col("t"), 0))
   }
 
+  /** Vector elements: finite values, both zeros and the odd null. */
+  private val element: Gen[java.lang.Double] = Gen.frequency(
+    12 -> Gen.choose(-3.0, 3.0).map(Double.box), 2 -> Gen.const(0.0), 1 -> Gen.const(-0.0),
+    1 -> Gen.const(null: java.lang.Double))
+
+  /** Vectors of `d` elements: null arrays, all-zero (zero-norm) vectors
+    * and generated ones, whose elements may be null.
+    */
+  private def vector(d: Int): Gen[Seq[java.lang.Double]] = Gen.frequency(
+    1 -> Gen.const(null: Seq[java.lang.Double]),
+    2 -> Gen.const(Seq.fill[java.lang.Double](d)(0.0)),
+    12 -> Gen.listOfN(d, element))
+
+  test("cosine_sim ≡ the plain-Scala cosine on generated vectors, incl. nulls, length mismatches and zero norms") {
+    val pair = for {
+      d <- Gen.choose(0, 6)
+      a <- vector(d)
+      d2 <- Gen.frequency(6 -> Gen.const(d), 1 -> Gen.choose(0, 6))
+      b <- Gen.frequency(1 -> Gen.const(a), 6 -> vector(d2))
+    } yield (a, b)
+    val df = sample(pair, 6L).toDF("a", "b")
+    val bad = mismatches(df, Seq(
+      graft.functions.VectorExpressions.cosineSim(col("a"), col("b")) ->
+        KernelReferences.cosineSimUdf(col("a"), col("b"))))
+    assert(bad.isEmpty, bad.mkString("\n"))
+  }
+
+  test("argmax_cosine ≡ the plain-Scala greatest-chain on generated vectors, incl. tied, duplicate and zero-norm centroids") {
+    val dim = 4
+    val rnd = new scala.util.Random(8)
+    def gaussian() = Array.fill(dim)(rnd.nextGaussian())
+    val (c0, c1) = (gaussian(), gaussian())
+    // ids out of order; 9 duplicates 2 and 4 is 2 scaled, so ties must
+    // go to the smallest id
+    val tied: Array[(Long, Array[Double])] =
+      Array(5L -> c1, 9L -> c0, 2L -> c0, 7L -> gaussian(), 4L -> c0.map(_ * 2))
+    // a zero-norm centroid has a NaN cosine to every vector, which ranks
+    // above every number
+    val zeroNorm = tied :+ (6L -> Array.fill(dim)(0.0))
+    val input: Gen[Seq[java.lang.Double]] = Gen.frequency(
+      12 -> vector(dim),
+      2 -> Gen.oneOf(c0, c1, c0.map(-_)).map(_.toSeq.map(Double.box)),
+      2 -> Gen.oneOf(0, 3, 5).flatMap(vector))
+    val df = sample(input, 7L).toDF("v")
+    val bad = mismatches(df, Seq(tied, zeroNorm).map(cents =>
+      graft.functions.VectorExpressions.argmaxCosine(col("v"), cents) ->
+        KernelReferences.argmaxCosineUdf(cents)(col("v"))))
+    assert(bad.isEmpty, bad.mkString("\n"))
+  }
+
+  test("rolling_hash ≡ the plain-Scala UTF-8 polynomial hash on generated text") {
+    val df = (sample(text, 8L).map(Option(_)) :+ None).toDF("t")
+    val bad = mismatches(df, Seq(
+      graft.functions.TextFunctions.rollingHash(col("t")) ->
+        KernelReferences.rollingHashUdf(col("t"))))
+    assert(bad.isEmpty, bad.mkString("\n"))
+  }
+
   test("WordWindows ≡ the split → slice → array_join composite on generated text") {
     val df = (sample(text, 4L).map(Option(_)) :+ None).toDF("t")
     val bad = mismatches(df, for (n <- Seq(1, 2, 3, 7); sep <- Seq(" ", "ö", "--")) yield

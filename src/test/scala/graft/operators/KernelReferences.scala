@@ -162,6 +162,59 @@ object KernelReferences {
     }
   })
 
+  /** Cosine of two vectors, dot product and both norms summed in index
+    * order; null when either is null, holds a null element or the lengths
+    * differ; NaN when a norm is zero.
+    */
+  private def cosineRef(a: Seq[java.lang.Double], b: Seq[java.lang.Double]): Option[Double] =
+    if (a == null || b == null || a.length != b.length || a.contains(null) || b.contains(null)) None
+    else {
+      var dot = 0.0; var na = 0.0; var nb = 0.0
+      for (i <- a.indices) {
+        val x = a(i).doubleValue; val y = b(i).doubleValue
+        dot += x * y; na += x * x; nb += y * y
+      }
+      Some(dot / (math.sqrt(na) * math.sqrt(nb)))
+    }
+
+  /** The reference for [[graft.functions.VectorExpressions.cosineSim]]. */
+  val cosineSimUdf = udf(cosineRef _)
+
+  /** The output row of [[argmaxCosineUdf]], named like the kernel's struct. */
+  case class Assignment(cluster: Long, cent_sim: Option[Double])
+
+  /** The `greatest(struct(cosine(v, c), -cid), …)` chain in plain Scala —
+    * the reference for [[graft.functions.VectorExpressions.argmaxCosine]].
+    * Similarities order as Spark orders doubles (NaN above every number,
+    * NaN equal to NaN, -0.0 equal to 0.0), ties go to the smallest id, and
+    * when any cosine is null (a null element or a dimension mismatch) the
+    * result is the smallest id with a null similarity. Null input → null.
+    */
+  def argmaxCosineUdf(cents: Array[(Long, Array[Double])]) =
+    udf((v: Seq[java.lang.Double]) => {
+      if (v == null) None
+      else {
+        val sims = cents.map { case (cid, p) => (cid, cosineRef(v, p.map(Double.box).toSeq)) }
+        if (sims.exists(_._2.isEmpty)) Some(Assignment(sims.map(_._1).min, None))
+        else {
+          def sparkCompare(x: Double, y: Double): Int =
+            if (x == y) 0 else java.lang.Double.compare(x, y)
+          val (cid, sim) = sims.map { case (c, s) => (c, s.get) }.reduce { (x, y) =>
+            val c = sparkCompare(x._2, y._2)
+            if (c > 0 || (c == 0 && x._1 < y._1)) x else y
+          }
+          Some(Assignment(cid, Some(sim)))
+        }
+      }
+    })
+
+  /** `h = h * 31 + byte` over the UTF-8 bytes, wrapping at 2^64 — the
+    * reference for [[graft.functions.TextFunctions.rollingHash]].
+    */
+  val rollingHashUdf = udf((s: String) =>
+    Option(s).map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      .foldLeft(0L)((h, b) => h * 31L + (b & 0xffL))))
+
   /** Non-overlapping `n`-word windows as a composite split → slice →
     * array_join expression — the reference for
     * [[ParagraphDedup.unitsByWordWindow]].

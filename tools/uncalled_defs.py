@@ -1,14 +1,14 @@
 #!/usr/bin/env python3
-"""List product `def`s that nothing calls.
+"""List product `def`s and `val`s that nothing uses.
 
-A product def (a `def` in a file tools/src_lines.py counts as product)
-is reported when its name, as a whole word, appears on no line of
-src/main, src/test or perfbench/src other than its own definition line.
-`override` defs (called through their parent type) and extractor
+A product def or val (one in a file tools/src_lines.py counts as
+product) is reported when its name, as a whole word, appears on no line
+of src/main, src/test or perfbench/src other than its own definition
+line. `override`s (used through their parent type) and extractor
 `unapply`/`unapplySeq`s (called by pattern matches) are skipped.
 
-Prints one `path:line: name` per uncalled def and nothing when every
-def has a caller; exits 1 if it printed anything.
+Prints one `path:line: name` per unused def or val and nothing when
+every one has a user; exits 1 if it printed anything.
 
 Usage: python3 tools/uncalled_defs.py [REPO_DIR]
 """
@@ -21,7 +21,7 @@ from src_lines import is_product  # noqa: E402
 
 SEARCH_ROOTS = ("src/main", "src/test", "perfbench/src")
 SOURCE_EXTS = (".scala", ".java")
-DEF = re.compile(r"\bdef\s+([A-Za-z_][A-Za-z0-9_]*)")
+DEF = re.compile(r"\b(?:def|val)\s+([A-Za-z_][A-Za-z0-9_]*)")
 SKIPPED_NAMES = ("unapply", "unapplySeq")
 
 
