@@ -307,11 +307,9 @@ object Bench {
     * CPU-heavy repartitioned stages (q47/q49-class) want the full core
     * count and AQE's coalescing pays for itself (round-10 whole-set A/B)
     * — hence data-proportional, not static. Production lakes never hit
-    * the branch (any real table exceeds it); explicit SPARK_GRAFT_AQE /
-    * SPARK_GRAFT_SHUFFLE still override both directions. The
-    * library-surface form of the same decision is
-    * [[Graft.tuneForTinyInput]] (runtime-settable confs, usable on an
-    * already-built session).
+    * the branch (any real table exceeds it). The library-surface form of
+    * the same decision is [[Graft.tuneForTinyInput]] (runtime-settable
+    * confs, usable on an already-built session).
     */
   def thinInput(sfDir: String): Boolean = {
     val total = scala.util.Try(parquetBytes(new java.io.File(sfDir)))
@@ -359,22 +357,26 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val all = SparkEntry.queries ++ extras
+    // diagnostics: ONLY times exactly the named queries (any
+    // SparkEntry.queries or extras name, in the order given); a name
+    // that is neither fails the run before the session is built
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq.distinct)
+    only.map(_.filterNot(all.contains)).filter(_.nonEmpty).foreach { unknown =>
+      System.err.println(
+        s"[bench] SPARK_GRAFT_BENCH_ONLY names unknown queries: ${unknown.mkString(",")}")
+      sys.exit(2)
+    }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val thin = thinInput(sfDir)
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-      if (thin) "8" else cpus)
-    val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE",
-      if (thin) "false" else "true")
+    val shuffle = if (thin) "8" else cpus
+    val aqe = if (thin) "false" else "true"
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.sql.shuffle.partitions", shuffle)
       .config("spark.sql.adaptive.enabled", aqe)
-      // parallelismFirst stays at Spark's default (true): with local-bench
-      // shuffle volumes (tens of MB) a 64 MB advisory target would
-      // coalesce windows/aggregations onto one core
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARFIRST", "true"))
       // Bench tables are ONE parquet file each; the 128 MB default split
       // planned a 175 MB lineitem scan onto 2 of 32 cores, while a fixed
       // 16 MB split (rounds 5-9) fragments a 24 GB sf100 scan into ~1500
@@ -383,13 +385,11 @@ object Bench {
       // clamped to [16 MB, 128 MB] — small SFs keep full parallelism,
       // big SFs keep near-default task sizes. A production lake has many
       // files per table and keeps the 128 MB default.
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAXPART", autoMaxPartitionBytes(sfDir, cpus.toInt)))
+      .config("spark.sql.files.maxPartitionBytes", autoMaxPartitionBytes(sfDir, cpus.toInt))
       // single-node bench has 128 GB for the one executor: broadcasting a
       // 30 MB dim/key side beats shuffling a fact table, same call a
       // cluster AQE would make with per-executor memory this size
-      .config("spark.sql.autoBroadcastJoinThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BCAST", "64m"))
+      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.warehouse.dir", benchWarehouse.toString)
       .config("spark.ui.enabled", "false")
@@ -562,7 +562,6 @@ object Bench {
     // headline number. A single warm run proved noisy (r3: q52 "warm"
     // 6.4 s vs judge-reprobed 0.79 s); the median absorbs GC/scheduler
     // hiccups. tools/duckdb_bench.py mirrors the same methodology.
-    val all = SparkEntry.queries ++ extras
     val warmRuns = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
     // STALL-WINDOW GUARD (round 18, VERDICT r17 What's-wrong #1): the box
     // has documented multi-minute degradation windows (5–100 s swings on
@@ -587,19 +586,16 @@ object Bench {
     val skip = sys.env.get("SPARK_GRAFT_BENCH_SKIP")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet).getOrElse(Set.empty[String]) ++
       (if (skipBuckets) headline.filter(_.endsWith("_bucketed")).toSet else Set.empty)
-    // diagnostics: ONLY restricts the run set, VERBOSE prints every
-    // individual run to stderr (medians can hide the box's transient
+    // diagnostics: VERBOSE prints every individual run to stderr in
+    // whole milliseconds (medians can hide the box's transient
     // multi-second stall windows — see SCALE.md measurement notes)
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val verbose = sys.env.get("SPARK_GRAFT_BENCH_VERBOSE").contains("1")
-    val results = headline.filter(all.contains).filterNot(skip)
-      .filter(n => only.forall(_.contains(n))).map { name =>
+    val results = only.getOrElse(headline.filter(all.contains)).filterNot(skip).map { name =>
       def run(tag: String): Double = {
         val t0 = System.nanoTime()
         exec(all(name)(spark, sfDir))
         val dt = (System.nanoTime() - t0) / 1e9
-        if (verbose) System.err.println(f"[bench] $name $tag: $dt%.2f s")
+        if (verbose) System.err.println(f"[bench] $name $tag: ${dt * 1000}%.0f ms")
         dt
       }
       try {
@@ -713,11 +709,11 @@ object Bench {
     // stores only a ~2000-char stdout tail, so anything that must be
     // machine-readable round-over-round has to fit there.
     // A SPARK_GRAFT_BENCH_ONLY diagnostic run must not masquerade as a
-    // full run: its excluded queries are recorded in an "only" field and
+    // full run: the queries it timed are listed in an "only" field and
     // the artifact goes to a _only-suffixed path so it never clobbers the
     // full-run file with a subset total/ratio.
-    val onlyJson = only.map(o =>
-      s""""only":[${o.toSeq.sorted.map("\"" + _ + "\"").mkString(",")}],""").getOrElse("")
+    val onlyJson = only.map(_ =>
+      s""""only":[${results.map("\"" + _._1 + "\"").mkString(",")}],""").getOrElse("")
     val fullJson =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":${json(_._2)},""" +
         s""""queries_cold":${json(_._3)},"cold_total":$coldTotal,""" +
@@ -762,7 +758,7 @@ object Bench {
       else ratioBucketed.mkString(""","ratio_bucketed_ingest":{""", ",", "}")
     // Flag a diagnostic subset run in the compact line too (names are in
     // the file artifact; the count is enough to tell it apart).
-    val onlyCompact = only.map(o => s""","only_n":${o.size}""").getOrElse("")
+    val onlyCompact = only.map(_ => s""","only_n":${results.size}""").getOrElse("")
     // The final stdout line must survive the driver's ~2000-char tail
     // capture TOGETHER with sbt's trailing "[success] ..." line (~75
     // chars): keep it to the driver contract fields (metric/value/unit/

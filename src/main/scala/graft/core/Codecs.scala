@@ -12,7 +12,6 @@ import org.apache.spark.sql.types._
   *  - ParseCDXTimestamp:        src/web_archive_utils.cpp:199-219
   *  - EscapeRegexSpecialChars:  src/common_crawl_index.cpp:770-785
   *  - SqlRegexToRegex:          src/common_crawl_index.cpp:789-814
-  *  - SqlRegexToJavaRegex:      src/internet_archive.cpp:704-721
   *  - EscapeRegex:              src/internet_archive.cpp:725-740
   *  - SQLiteTypeToDuckDB:       src/d1_http.cpp:723-763
   *
@@ -155,24 +154,6 @@ object Codecs {
                  c == '+' || c == '?' || c == '$') {
         sb ++= "%5C"; sb += c; i += 1
       } else { sb += c; i += 1 }
-    }
-    sb ++= "$"
-    sb.result()
-  }
-
-  /** SQL SIMILAR-TO pattern → anchored Java regex (wayback variant):
-    * `%`/`*`→`.*`, `_`→`.`, backslash dropped (next char literal); no
-    * metacharacter escaping at all.
-    */
-  def sqlRegexToJavaRegex(sqlRegex: String): String = {
-    val sb = new StringBuilder("^")
-    var i = 0
-    while (i < sqlRegex.length) {
-      val c = sqlRegex.charAt(i)
-      if (c == '%' || c == '*') { sb ++= ".*"; i += 1 }
-      else if (c == '_') { sb += '.'; i += 1 }
-      else if (c == '\\' && i + 1 < sqlRegex.length) { sb += sqlRegex.charAt(i + 1); i += 2 }
-      else { sb += c; i += 1 }
     }
     sb ++= "$"
     sb.result()

@@ -247,26 +247,17 @@ object Dedup {
     }
   }).withName("shingle_hashes64")
 
-  /** The partition count a per-doc signature kernel is spread over: the
-    * session's shuffle parallelism, or `input`'s own partition count if
-    * larger. The signature kernels are the CPU-heaviest stages (numPerm
-    * multiplies per shingle); scan partitioning follows file size, which
-    * for compressed text may be a handful of partitions — one narrow
-    * shuffle of raw text is amortized over orders of magnitude more
-    * signature compute. The one copy of the rule [[prepTexts]] and
-    * [[simhashPairs]] repartition by.
-    */
-  private def spreadPartitions(input: DataFrame): Int = {
-    val par = input.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    math.max(par, input.rdd.getNumPartitions)
-  }
-
-  /** (id, __text) projection spread by [[spreadPartitions]]. Shared by
-    * the self-join and cross-corpus operators.
+  /** (id, __text) projection spread round-robin over the session's
+    * shuffle partitions. Shared by the self-join and cross-corpus
+    * operators. The signature kernels are the CPU-heaviest stages
+    * (numPerm multiplies per shingle); scan partitioning follows file
+    * size, which for compressed text may be a handful of partitions, so
+    * one narrow shuffle of raw text is amortized over orders of
+    * magnitude more signature compute.
     */
   private def prepTexts(src: DataFrame, textCol: String, idCol: String): DataFrame =
     src.select(col(idCol).as("id"), col(textCol).as("__text"))
-      .repartition(spreadPartitions(src))
+      .repartition(src.sparkSession.sessionState.conf.numShufflePartitions)
 
   /** (id, band, bucket) banding rows from a [[prepTexts]] projection.
     * This is THE band hash family: the cross-corpus operator's
@@ -787,7 +778,7 @@ object Dedup {
     // text's sig is null and can never pass the hamming filter.
     simhashPairsOnSigs(
       df.filter(col(textCol).isNotNull)
-        .repartition(spreadPartitions(df))
+        .repartition(df.sparkSession.sessionState.conf.numShufflePartitions)
         .select(col(idCol).as("id"),
           org.apache.spark.sql.GraftColumnShim.column(
             org.apache.spark.sql.catalyst.expressions.KnownNotNull(

@@ -130,11 +130,7 @@ object ParagraphDedup {
             unitize: Column => Column, joinSep: String): DataFrame = {
     // One hash-keyed exchange, reused by the agg and the join-back
     // (identical subplans → ReusedExchange); unit text is already gone.
-    // Partition count scaled with the corpus volume (guide §2.1 /
-    // SCALE.md bottleneck #4; plan byte-identical to the fixed-count
-    // shape at local SFs — see [[Shuffles.maybeRepartition]]).
-    val keyed = Shuffles.maybeRepartition(
-      unitKeys(df, idCol, textCol, unitize), df, col("__h"))
+    val keyed = unitKeys(df, idCol, textCol, unitize).repartition(col("__h"))
     val firsts = keyed.groupBy(col("__h"))
       .agg(min(struct(col("__id"), col("__pos"))).as("__first"))
     val drops = keyed
@@ -195,11 +191,8 @@ object ParagraphDedup {
     val spark = df.sparkSession
     val store = UnitStore.read(spark, path, excludeAppendIds)
       .select(col("h").as("__h")).withColumn("__seen", lit(true))
-    // batch-volume-derived partition count (see [[Shuffles]]) — the
-    // batch, not the store, sizes this exchange: the store side reads
-    // bucketed with no exchange
-    val keyed = Shuffles.maybeRepartition(
-      unitKeys(df, idCol, textCol, unitize), df, col("__h"))
+    // only the batch is exchanged: the store side reads bucketed
+    val keyed = unitKeys(df, idCol, textCol, unitize).repartition(col("__h"))
     val firsts = keyed.groupBy(col("__h"))
       .agg(min(struct(col("__id"), col("__pos"))).as("__first"))
     // batch (hash-partitioned) ⨝ firsts (colocated) ⨝ store (bucketed

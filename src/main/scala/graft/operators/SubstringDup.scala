@@ -40,14 +40,6 @@ object SubstringDup {
     // join's inferred isnotnull(id) lands on one branch only and the
     // exchange-reuse below (see dupGrams) can never match.
     val src = df.filter(col(idCol).isNotNull)
-    // gram-exchange partition count scaled with source volume (guide
-    // §2.1 / SCALE.md bottleneck #4): the session's count is right at
-    // local SFs (below the firing threshold the plan is byte-identical
-    // to the round-19 shape, AQE coalescing included) but a fixed count
-    // concentrates the gram rows of an unbounded corpus into spill-sized
-    // tasks. Conf-parameterised in [[Shuffles]].
-    def gramExchange(g: org.apache.spark.sql.DataFrame) =
-      Shuffles.maybeRepartition(g, src, col("gram"))
     // ONE gram-keyed exchange for the whole census, map-side-combined
     // BEFORE it: the extraction kernel (GramHashCountsExpr) collapses
     // each document's sampled positions to distinct (gram, count) pairs
@@ -65,11 +57,12 @@ object SubstringDup {
     // way: AQE cannot split a window partition.
     val gramCounts =
       if (hashGrams)
-        gramExchange(src.filter(length(col(textCol)) >= n)
+        src.filter(length(col(textCol)) >= n)
           .select(col(idCol).as("__id"),
             explode(graft.functions.GramHash.gramHashCounts(col(textCol), n, stride))
               .as("__g"))
-          .select(col("__id"), col("__g.gram").as("gram"), col("__g.cnt").as("__cnt")))
+          .select(col("__id"), col("__g.gram").as("gram"), col("__g.cnt").as("__cnt"))
+          .repartition(col("gram"))
       else {
         // raw-gram path: the byte-exact DuckDB oracle shape, run at
         // small sf only. It keeps literal gram strings (explode INT
@@ -77,11 +70,12 @@ object SubstringDup {
         // collapses (gram, id) AFTER the exchange, so it lacks the
         // hashed path's docs-bounded hot-gram guarantee — the 100 TB
         // deployment shape is hashGrams=true.
-        gramExchange(src.filter(length(col(textCol)) >= n)
+        src.filter(length(col(textCol)) >= n)
           .select(col(idCol).as("__id"), col(textCol).as("__t"),
             explode(expr(s"sequence(1, length($textCol) - ${n - 1}, $stride)"))
               .as("__i"))
-          .select(col("__id"), expr(s"substring(__t, __i, $n)").as("gram")))
+          .select(col("__id"), expr(s"substring(__t, __i, $n)").as("gram"))
+          .repartition(col("gram"))
           .groupBy(col("gram"), col("__id"))
           .agg(count(lit(1)).as("__cnt"))
       }

@@ -62,12 +62,10 @@ class CodecsSpec extends AnyFunSuite {
     assert(Codecs.escapeRegexSpecialChars("a.b*") == "a%5C.b%5C*")
   }
 
-  test("sqlRegexToRegex (CC) vs sqlRegexToJavaRegex (wayback)") {
+  test("sqlRegexToRegex anchors, wildcards and %5C-escapes") {
     assert(Codecs.sqlRegexToRegex("text/%") == "^text/.*$")
     assert(Codecs.sqlRegexToRegex("a.b") == "^a%5C.b$")
     assert(Codecs.sqlRegexToRegex("a*b") == "^a.*b$")
-    assert(Codecs.sqlRegexToJavaRegex("a.b") == "^a.b$") // no escaping
-    assert(Codecs.sqlRegexToJavaRegex("a%b_c") == "^a.*b.c$")
   }
 
   test("sqliteAffinity") {

@@ -10,10 +10,11 @@ import org.apache.spark.sql.{GraftColumnShim, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** What one ingest micro-batch costs in Spark jobs: batch snapshots that
-  * the batch's own index appends cannot invalidate, index meta and dirs
-  * read on the driver, and every file-fed ingest loop's job count per
-  * micro-batch pinned exactly, so a cache-invalidation regression fails
-  * here rather than only slowing the benchmark.
+  * the batch's own index appends cannot invalidate, near-dup plans built
+  * without running their input, index meta and dirs read on the driver,
+  * and every file-fed ingest loop's job count per micro-batch pinned
+  * exactly, so a cache-invalidation regression fails here rather than
+  * only slowing the benchmark.
   */
 class IngestJobsSpec extends AnyFunSuite {
   lazy val spark: SparkSession = graft.TestSpark.spark
@@ -90,6 +91,22 @@ class IngestJobsSpec extends AnyFunSuite {
     } finally release()
     assert(!spark.sparkContext.getRDDStorageInfo.exists(_.id == snapRdd.id),
       "release() left snapshot blocks cached")
+  }
+
+  test("building the near-dup plans over an input with a shuffle and a broadcast join runs no Spark job") {
+    val batch = Seq(
+      (10L, words("novel", 24), "src0"),
+      (11L, words("novel", 24) + " extra", "src1"),
+      (12L, words("other", 30), "src1"))
+      .toDF("doc_id", "text", "source")
+    val weights = Seq(("src0", 2.0), ("src1", 1.0)).toDF("source", "weight")
+    val input = batch.repartition(col("source")).join(broadcast(weights), "source")
+    val (_, log) = logging {
+      Dedup.minhashLshPairs(input, "text", "doc_id")
+      Dedup.dedupAgainst(input, lake, "text", "doc_id")
+      Dedup.simhashPairs(input, "text", "doc_id")
+    }
+    assert(log.jobs.isEmpty, log.descriptions.toString)
   }
 
   test("readMeta/readDir equal spark.read.parquet head()/schema on a fresh, appended and compacted index and unit store — and run no Spark job") {
@@ -246,21 +263,21 @@ class IngestJobsSpec extends AnyFunSuite {
     // (the dedup plan's broadcast and shuffle jobs again) raises it. The
     // index, units and tail stages run on branch threads: a branch that
     // lost the batch's local properties would drop out of these totals
-    assert(perBatch(log) == Map(0L -> 37, 1L -> 40), perBatch(log).toString)
+    assert(perBatch(log) == Map(0L -> 34, 1L -> 37), perBatch(log).toString)
     val perStage = log.jobs.asScala.toSeq
       .flatMap(p => property(p, "streaming.sql.batchId").map(b =>
         (b.toLong, property(p, graft.streaming.DocsStream.StageProperty).getOrElse("-"))))
       .groupBy(identity).map { case (k, js) => k -> js.size }
     assert(perStage == Map(
-      (0L, "accept") -> 17, (0L, "index") -> 5, (0L, "store") -> 4, (0L, "units") -> 2, (0L, "tail") -> 9,
-      (1L, "accept") -> 19, (1L, "index") -> 5, (1L, "store") -> 5, (1L, "units") -> 2, (1L, "tail") -> 9),
+      (0L, "accept") -> 14, (0L, "index") -> 5, (0L, "store") -> 4, (0L, "units") -> 2, (0L, "tail") -> 9,
+      (1L, "accept") -> 16, (1L, "index") -> 5, (1L, "store") -> 5, (1L, "units") -> 2, (1L, "tail") -> 9),
       perStage.toString)
     // the index and store branches make the first actions on the
     // accepted snapshot concurrently: a snapshot computed twice would
     // submit its shuffle stages again and read their output twice. Both
     // figures equal the sequential body's and repeat run to run here
-    assert(log.stages.get == 81, s"${log.stages.get} stages")
-    assert(log.shuffleRead.get == 9212L, s"${log.shuffleRead.get} shuffle bytes read")
+    assert(log.stages.get == 75, s"${log.stages.get} stages")
+    assert(log.shuffleRead.get == 8836L, s"${log.shuffleRead.get} shuffle bytes read")
   }
 
   test("the other file-fed ingest loops run pinned Spark jobs per batch") {
@@ -289,9 +306,9 @@ class IngestJobsSpec extends AnyFunSuite {
     val perBatch = loops.map { case (name, run) => name -> jobsPerBatch(run()) }.toMap
     // measured on this fixture, as the shard loop's pin above
     assert(perBatch == Map(
-      "pipeline" -> Map(0L -> 28, 1L -> 31),
+      "pipeline" -> Map(0L -> 25, 1L -> 28),
       "paragraph" -> Map(0L -> 6, 1L -> 7),
-      "fingerprint" -> Map(0L -> 22, 1L -> 24),
+      "fingerprint" -> Map(0L -> 19, 1L -> 21),
       "index" -> Map(0L -> 13, 1L -> 15),
       "ivf" -> Map(0L -> 3, 1L -> 3)), perBatch.toString)
   }
