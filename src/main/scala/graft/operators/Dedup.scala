@@ -449,7 +449,9 @@ object Dedup {
       val hashData = NearDupPairs.shingleHashes(base, shingleK)
         .withColumnRenamed("id", "ref_id")
         .withColumn(AttemptCol, lit(null).cast("string"))
-      IndexLifecycle.writeDir(spark, fs, root, lshDir("hashes", bandBuckets), hashData)
+      // one hashes row per doc: the n_docs tally, counted on the write
+      val nDocs = IndexLifecycle.countedWrite(hashData)(
+        IndexLifecycle.writeDir(spark, fs, root, lshDir("hashes", bandBuckets), _))
       // a REBUILD derives from a fresh lake: the old fingerprint sidecar
       // (if any) describes rows that no longer exist — drop it; the
       // builder re-creates it with [[lshWriteFingerprints]]
@@ -457,9 +459,6 @@ object Dedup {
       // a rebuild may change the bucket count or schema under a standing
       // catalog registration — drop it; the next bucketed read re-registers
       IndexLifecycle.dropRegistrations(spark, root, LshIndex.dirNames)
-      // footer-only count of what was actually written — the doc tally a
-      // reuse guard can check without re-reading data pages
-      val nDocs = IndexLifecycle.readDir(spark, new HPath(root, "hashes").toString).count()
       IndexLifecycle.writeMeta(spark, root, "num_perm" -> numPerm, "bands" -> bands,
         "shingle_k" -> shingleK, "n_docs" -> nDocs, "band_buckets" -> bandBuckets,
         "hash_buckets" -> bandBuckets)
@@ -476,7 +475,7 @@ object Dedup {
     *
     * Cost is batch-proportional: signs only `accepted`, appends its band
     * rows and shingle hashes (and fingerprints, when the index has the
-    * sidecar), and rewrites the one-row meta. The HASH FAMILY IS FROZEN
+    * sidecar), and commits one marker. The HASH FAMILY IS FROZEN
     * at build: the parameters are re-read FROM the index, so a batch can
     * never be signed with a mismatched family. Equivalence contract,
     * spec-pinned pair-for-pair: `build(lake); append(b)` answers every
@@ -488,8 +487,8 @@ object Dedup {
     * lease enforces the one-writer half; retries of that writer are
     * fine).
     *
-    * Crash safety, `appendId` idempotency and the incremental `n_docs`
-    * tally are the shared [[IndexLifecycle.append]] sequence: a crash
+    * Crash safety, `appendId` idempotency and the marker's doc count
+    * are the shared [[IndexLifecycle.append]] sequence: a crash
     * before the marker leaves the index answering as before (a partial
     * write can never surface band rows without their verify hashes — the
     * silent-missed-dup failure an unguarded append had), and the append
@@ -506,7 +505,7 @@ object Dedup {
       batch.append("bands", bandRows(base, batch.meta.getAs[Int]("num_perm"),
           batch.meta.getAs[Int]("bands"), shingleK)
         .withColumnRenamed("id", "ref_id").select("ref_id", "band", "bucket"))
-      // one hashes row per accepted doc: the n_docs tally's increment
+      // one hashes row per accepted doc: the count the marker records
       batch.append("hashes",
         NearDupPairs.shingleHashes(base, shingleK).withColumnRenamed("id", "ref_id"))
       // an index with a fingerprint sidecar ([[lshWriteFingerprints]])
@@ -622,24 +621,19 @@ object Dedup {
       broadcastMaxBandRows, excludeAppendIds)
   }
 
-  /** The meta tally `n_docs` — maintained INCREMENTALLY by appends and
-    * recounted by build/compact, so reading it costs one one-row parquet
-    * read, never a scan of the index's data. This is the count a
-    * standing loop should bracket its runs with; it can lag the true
-    * committed count by one batch after a crash between an append's
-    * marker commit and its meta rewrite (the next [[lshCompact]]
-    * reconciles — and [[lshIndexDocCount]] recounts exactly on demand).
+  /** Committed document count of a persisted index: the build's
+    * `n_docs` plus the doc count each commit marker records — one
+    * listing of `_commits/` and a one-row meta read, never a scan of the
+    * index's data. A marker publishes its rows and its count together,
+    * so this is exact after any crash (it equals [[lshIndexDocCount]]).
     */
-  def lshIndexCommittedDocs(spark: SparkSession, path: String): Long = {
-    val (_, root) = IndexLifecycle.fsFor(spark, path)
-    IndexLifecycle.readMeta(spark, root, MetaCols: _*).getAs[Long]("n_docs")
-  }
+  def lshIndexCommittedDocs(spark: SparkSession, path: String): Long =
+    IndexLifecycle.open(spark, path, LshIndex).tally
 
   /** Committed (visible) document count of a persisted index — counts
-    * the verify-hash rows (one per doc) through the marker filter, so it
-    * is correct even when a crash left `meta`'s tally stale. One
-    * narrow-column scan of the index — the exact RECONCILER, not the
-    * per-run bookkeeping read (that is [[lshIndexCommittedDocs]]).
+    * the verify-hash rows (one per doc) through the marker filter. One
+    * narrow-column scan of the index: the check on
+    * [[lshIndexCommittedDocs]], not the per-run bookkeeping read.
     */
   def lshIndexDocCount(spark: SparkSession, path: String): Long = {
     val index = IndexLifecycle.open(spark, path, LshIndex)
@@ -650,8 +644,8 @@ object Dedup {
 
   /** Compact a persisted LSH index IN PLACE: fold every committed append
     * into the base layout, drop invisible rows left by crashed append
-    * attempts, fold the commit markers to empty idempotency tombstones
-    * and recount the meta tally — the shared [[IndexLifecycle.compact]]
+    * attempts and fold the commit markers to idempotency tombstones that
+    * keep their doc counts — the shared [[IndexLifecycle.compact]]
     * sequence over `bands`, `hashes` and the `fps` sidecar when present.
     * Appends accumulate one file per write (per bucket, for a bucketed
     * index — a year of daily ingest is 365 files/bucket, the classic

@@ -38,9 +38,9 @@ final class UnsupportedIndexLayoutException(root: HPath, detail: String)
   *    repairs every dir's swap window, reads the meta and probes the
   *    layout of every present dir, writes its rows tagged with a fresh
   *    attempt id, then publishes them with ONE atomic marker rename under
-  *    `_commits/<appendId>` — data first, marker last — and rewrites the
-  *    meta tally incrementally (this batch's count, observed on its
-  *    write);
+  *    `_commits/<appendId>` — data first, marker last. The marker is the
+  *    whole record of the append: its attempt id and the rows it added
+  *    to the store's tally dir ([[Marker]]), counted on the write;
   *  - readers resolve visibility through the markers
   *    ([[visibleRows]]), so a crashed append is invisible and a
   *    retried `appendId` is a no-op (at-least-once drivers like
@@ -49,11 +49,17 @@ final class UnsupportedIndexLayoutException(root: HPath, detail: String)
   *  - a compact takes the lease and repairs, folds every present dir's
   *    committed rows to base (null attempt) into a `.compact` side dir —
   *    all side dirs before the first swap — drops crashed-attempt
-  *    garbage, swaps each dir in ([[swapDir]]), truncates markers to
-  *    empty idempotency TOMBSTONES (a folded appendId still no-ops — a
-  *    replay of a batch committed before the compact must not
-  *    re-append), drops the stale catalog registrations and recounts
-  *    the meta tally.
+  *    garbage, swaps each dir in ([[swapDir]]), drops the stale catalog
+  *    registrations, then rewrites each marker as an idempotency
+  *    TOMBSTONE that keeps its row count but no attempt id (a folded
+  *    appendId still no-ops — a replay of a batch committed before the
+  *    compact must not re-append).
+  *
+  * `meta` is written only by a build, which records the count it wrote;
+  * a store's committed count ([[Open.tally]]) is that count plus every
+  * marker's, read from the same `_commits/` listing each open makes. A
+  * marker publishes its rows and its count in one rename, so the count
+  * is exact in every crash window of append and compact.
   *
   * All layout I/O goes through the Hadoop FileSystem API, so indexes
   * work on any supported store (`file:`, `hdfs:`, `s3a:`, the repo's
@@ -179,7 +185,7 @@ private[graft] object IndexLifecycle {
 
   /** Run `write` over `df` and return the number of rows it wrote,
     * counted by an observation on the write itself — no second job over
-    * the batch (the appends' incremental meta tallies use it).
+    * the rows (builds record it in `meta`, appends in their marker).
     */
   def countedWrite(df: DataFrame)(write: DataFrame => Unit): Long = {
     val rows = org.apache.spark.sql.Observation()
@@ -238,27 +244,30 @@ private[graft] object IndexLifecycle {
     require(!id.contains("/") && !id.startsWith("."),
       s"appendId must be a plain marker-file name, got '$id'")
 
-  /** Attempt ids of COMMITTED appends — one marker per appendId under
-    * `_commits/`; empty (tombstone) markers contribute no attempt.
-    * Driver-side listing, O(appends since the last compact).
-    *
-    * `excludeAppendIds` hides the named committed appends — the
-    * REPLAY-DETERMINISM hook: a retried micro-batch that reads an index
-    * excluding its OWN appendId sees the index exactly as its first run
-    * did, even when that run's append already committed, so recomputed
-    * accept/rewrite results are identical across retries (the ingest
-    * loops whose PRODUCT is the per-batch computation — not just the
-    * index state — depend on this; see
-    * [[graft.streaming.DocsStream.runParagraphDedupLoopAsStream]]).
+  /** What the marker `_commits/<appendId>` of a committed append
+    * records: the attempt id its rows carry — none once a compact folded
+    * them to base rows, a TOMBSTONE that stays the appendId's idempotency
+    * record — and the rows it added to the store's tally dir (0 for a
+    * store without one). Payload: `<rows>` or `<rows> <attempt>`.
     */
-  def committedAttempts(fs: FileSystem, root: HPath,
-                        excludeAppendIds: Seq[String] = Nil): Seq[String] = {
+  final case class Marker(attempt: Option[String], rows: Long) {
+    def payload: String = (rows.toString +: attempt.toSeq).mkString(" ")
+  }
+
+  /** Every committed marker of the store at `root`, with its appendId:
+    * one driver-side listing of `_commits/` and one small read per
+    * marker, O(appends since the build). Dot-temps — a marker write in
+    * flight, or one a crash cut short — are skipped.
+    */
+  def markers(fs: FileSystem, root: HPath): Seq[(String, Marker)] = {
     val dir = new HPath(root, "_commits")
-    if (!fs.exists(dir)) Seq.empty
+    if (!fs.exists(dir)) Nil
     else fs.listStatus(dir).toSeq
-      .filter(s => s.isFile && !s.getPath.getName.startsWith(".") &&
-        !excludeAppendIds.contains(s.getPath.getName))
-      .map(st => readString(fs, st.getPath)).filter(_.nonEmpty)
+      .filter(s => s.isFile && !s.getPath.getName.startsWith("."))
+      .map(st => st.getPath.getName -> (readString(fs, st.getPath).split(" ", 2) match {
+        case Array(n) => Marker(None, n.toLong)
+        case Array(n, attempt) => Marker(Some(attempt), n.toLong)
+      }))
   }
 
   /** Throw [[UnsupportedIndexLayoutException]] for the index at `root`
@@ -289,56 +298,29 @@ private[graft] object IndexLifecycle {
     df.filter(keep).drop(AttemptCol)
   }
 
-  /** Publish an append: write the marker to a dot-temp and rename into
-    * place — the rename is the atomic publish point, so a half-written
-    * marker (crash between create and close) can never be mistaken for
-    * a commit and silently drop the batch on retry. Tolerates an
-    * existing marker (an earlier commit of the same appendId won; this
-    * attempt's rows stay invisible garbage until the next compact).
+  /** Write `_commits/<id>`: the payload goes to a dot-temp that is
+    * renamed into place — the rename is the atomic publish point, so a
+    * half-written marker (crash between create and close) is never read.
+    * A commit tolerates an existing marker on a store that will not
+    * rename over a file: an earlier commit of the same appendId won, and
+    * this attempt's rows stay invisible garbage until the next compact.
+    * A tombstone there overwrites the marker in place instead, one PUT on
+    * an object store; either way the row count is unchanged.
     */
-  def commitMarker(fs: FileSystem, root: HPath, id: String,
-                   attempt: String): Unit = {
+  def writeMarker(fs: FileSystem, root: HPath, id: String, m: Marker): Unit = {
     val commitsDir = new HPath(root, "_commits")
     fs.mkdirs(commitsDir): Unit
-    val tmp = new HPath(commitsDir, s".$id.tmp")
-    scala.util.Using.resource(fs.create(tmp, true)) { out =>
-      out.write(attempt.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    def put(p: HPath): Unit = scala.util.Using.resource(fs.create(p, true)) { out =>
+      out.write(m.payload.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     }
+    val tmp = new HPath(commitsDir, s".$id.tmp")
+    put(tmp)
     val marker = new HPath(commitsDir, id)
     if (!fs.rename(tmp, marker)) {
       fs.delete(tmp, false): Unit
       if (!fs.exists(marker))
-        throw new java.io.IOException(s"failed to commit append marker $marker")
-    }
-  }
-
-  /** Attempt ids of the SPECIFIC committed appendIds named in `ids` —
-    * the complement of [[committedAttempts]]'s exclude list; used by
-    * compacts that must carry a named append through UNFOLDED (see
-    * `keepAppendIds` on [[graft.operators.UnitStore.compact]]).
-    */
-  def committedAttemptsOf(fs: FileSystem, root: HPath,
-                          ids: Seq[String]): Seq[String] = {
-    if (ids.isEmpty) return Nil
-    ids.map(markerPath(root, _)).filter(fs.exists)
-      .map(readString(fs, _)).filter(_.nonEmpty)
-  }
-
-  /** Truncate every marker to an empty tombstone (post-compact): the
-    * appendId keeps no-op'ing on retry while its (folded) attempt id
-    * no longer gates any rows. Orphaned dot-temps are removed. Markers
-    * named in `keep` are left INTACT (payload and all) — their appends
-    * were carried through the compact unfolded, so their attempt ids
-    * must keep gating their rows.
-    */
-  def foldMarkers(fs: FileSystem, root: HPath,
-                  keep: Set[String] = Set.empty): Unit = {
-    val commits = new HPath(root, "_commits")
-    if (fs.exists(commits)) fs.listStatus(commits).foreach { st =>
-      if (st.getPath.getName.startsWith("."))
-        fs.delete(st.getPath, false): Unit
-      else if (st.getLen > 0 && !keep.contains(st.getPath.getName))
-        fs.create(st.getPath, true).close()
+        throw new java.io.IOException(s"failed to write append marker $marker")
+      if (m.attempt.isEmpty) put(marker)
     }
   }
 
@@ -550,8 +532,8 @@ private[graft] object IndexLifecycle {
     * @param metaCols the columns its one-row `meta` must hold; empty for
     *                 a store that keeps no meta
     * @param tally    a meta column that counts the rows of a data dir,
-    *                 and that dir: an append adds the count observed on
-    *                 its write there, a compact recounts
+    *                 and that dir: a build records its count there, an
+    *                 append's marker the count observed on its write
     */
   abstract class Store(val dirNames: Seq[String], val metaCols: Seq[String] = Nil,
                        val tally: Option[(String, String)] = None) {
@@ -562,15 +544,22 @@ private[graft] object IndexLifecycle {
   }
 
   /** A store opened at `root`, its swap windows repaired. The meta row
-    * and the committed attempts resolve on first use.
+    * and the markers resolve on first use.
     */
   final class Open private[IndexLifecycle] (val spark: SparkSession,
       val fs: FileSystem, val root: HPath, store: Store,
       excludeAppendIds: Seq[String]) {
     lazy val meta: Row =
       if (store.metaCols.isEmpty) null else readMeta(spark, root, store.metaCols: _*)
+    lazy val markers: Seq[(String, Marker)] = IndexLifecycle.markers(fs, root)
     /** Attempt ids of committed appends, minus `excludeAppendIds`. */
-    lazy val committed: Seq[String] = committedAttempts(fs, root, excludeAppendIds)
+    lazy val committed: Seq[String] = markers.collect {
+      case (id, Marker(Some(attempt), _)) if !excludeAppendIds.contains(id) => attempt
+    }
+    /** The committed row count of the store's tally dir: the build's
+      * count in `meta` plus every marker's rows — no scan of the data.
+      */
+    def tally: Long = meta.getAs[Long](store.tally.get._1) + markers.map(_._2.rows).sum
     def path(name: String): HPath = new HPath(root, name)
     def exists(name: String): Boolean = fs.exists(path(name))
     def dir(name: String): DataDir = store.dir(meta, name)
@@ -587,8 +576,16 @@ private[graft] object IndexLifecycle {
   }
 
   /** Open the store at `path`: repair the swap window of every data dir
-    * ([[recoverSwap]]). `excludeAppendIds` hides the named committed
-    * appends from [[Open.visible]] (see [[committedAttempts]]).
+    * ([[recoverSwap]]).
+    *
+    * `excludeAppendIds` hides the named committed appends from
+    * [[Open.visible]] — the REPLAY-DETERMINISM hook: a retried
+    * micro-batch that reads a store excluding its OWN appendId sees the
+    * store exactly as its first run did, even when that run's append
+    * already committed, so recomputed accept/rewrite results are
+    * identical across retries (the ingest loops whose PRODUCT is the
+    * per-batch computation — not just the store state — depend on this;
+    * see [[graft.streaming.DocsStream.runParagraphDedupLoopAsStream]]).
     */
   def open(spark: SparkSession, path: String, store: Store,
            excludeAppendIds: Seq[String] = Nil): Open = {
@@ -607,7 +604,8 @@ private[graft] object IndexLifecycle {
     */
   final class Batch private[IndexLifecycle] (s: Open, val attempt: String,
                                              tallyDir: Option[String]) {
-    private[IndexLifecycle] var tallied = 0L
+    /** Rows written to the tally dir: the count the marker records. */
+    private[IndexLifecycle] var counted = 0L
     def meta: Row = s.meta
     def root: HPath = s.root
     def exists(name: String): Boolean = s.exists(name)
@@ -628,7 +626,7 @@ private[graft] object IndexLifecycle {
           df.write.mode("append").partitionBy(c).parquet(s.path(name).toString)
       }
       val tagged = rows.withColumn(AttemptCol, lit(attempt))
-      if (tallyDir.contains(name)) tallied += countedWrite(tagged)(write)
+      if (tallyDir.contains(name)) counted += countedWrite(tagged)(write)
       else write(tagged)
     }
   }
@@ -648,12 +646,6 @@ private[graft] object IndexLifecycle {
         rows.write.mode("overwrite").partitionBy(c).parquet(dest.toString)
     }
   }
-
-  /** Rewrite `meta` with its tally column `c` set to `n`. */
-  private def writeTally(spark: SparkSession, root: HPath, meta: Row,
-                         c: String, n: Long): Unit =
-    writeMeta(spark, root,
-      meta.schema.fieldNames.toSeq.zip(meta.toSeq.updated(meta.fieldIndex(c), n)): _*)
 
   /** The one append sequence; the object doc gives its order. `write`
     * appends the batch's rows through [[Batch.append]]; `op` names the
@@ -675,7 +667,7 @@ private[graft] object IndexLifecycle {
       // family, quantizer, bucket counts) — values read before
       // acquisition could be a concurrent rebuild's stale predecessors
       val s = opened(spark, fs, root, store, Nil)
-      val meta = s.meta
+      s.meta: Unit
       // layout probe: refuse data rows without the attempt tag before
       // anything is written
       store.dirNames.filter(s.exists).foreach { d =>
@@ -685,14 +677,7 @@ private[graft] object IndexLifecycle {
       val batch = new Batch(s, java.util.UUID.randomUUID().toString,
         store.tally.map(_._2))
       write(batch)
-      commitMarker(fs, root, id, batch.attempt)
-      // incremental tally: the committed one plus this batch's observed
-      // count — never a scan of the store's own data. A crash between
-      // the marker and this rewrite leaves it one batch behind; queries
-      // are unaffected and the next compact recounts.
-      store.tally.foreach { case (c, _) =>
-        writeTally(spark, root, meta, c, meta.getAs[Long](c) + batch.tallied)
-      }
+      writeMarker(fs, root, id, Marker(Some(batch.attempt), batch.counted))
     }
   }
 
@@ -717,8 +702,9 @@ private[graft] object IndexLifecycle {
     val (fs, root) = fsFor(spark, path)
     withWriterLock(fs, root, op, lockTtlMs(spark)) {
       val s = opened(spark, fs, root, store, keepAppendIds)
-      val meta = s.meta
-      val kept = committedAttemptsOf(fs, root, keepAppendIds)
+      val kept = s.markers.collect {
+        case (id, Marker(Some(attempt), _)) if keepAppendIds.contains(id) => attempt
+      }
       val dirs = store.dirNames.filter(s.exists).map(s.dir)
       // every dir's fold resolves (and its layout is checked) before the
       // first write
@@ -734,16 +720,20 @@ private[graft] object IndexLifecycle {
       // land as few right-sized files without an extra shuffle; bucketed
       // dirs land as one file per bucket
       folded.foreach { case (d, rows) => writeDir(spark, fs, root, d, rows, ".compact") }
-      dirs.foreach(d => swapDir(fs, s.path(d.name), s.path(d.name + ".compact")))
-      // FOLD the markers to empty tombstones instead of deleting them: a
-      // marker is also the idempotency record, and an at-least-once
-      // driver can replay a batch whose append committed BEFORE this
-      // compact — deleting its marker would let the replay re-append the
-      // folded rows. A year of daily ingest keeps 365 empty files.
-      foldMarkers(fs, root, keep = keepAppendIds.toSet)
-      dropRegistrations(spark, root, store.dirNames)
-      store.tally.foreach { case (c, d) =>
-        writeTally(spark, root, meta, c, readDir(spark, s.path(d).toString).count())
+      // a swapped dir's catalog registration lists files that are gone:
+      // drop it even when a later swap or marker write fails, so this
+      // session's next bucketed read re-registers
+      try dirs.foreach(d => swapDir(fs, s.path(d.name), s.path(d.name + ".compact")))
+      finally dropRegistrations(spark, root, store.dirNames)
+      // FOLD the markers to tombstones instead of deleting them: a
+      // marker is also the idempotency record and carries its append's
+      // count, and an at-least-once driver can replay a batch whose
+      // append committed BEFORE this compact — deleting its marker would
+      // let the replay re-append the folded rows. A year of daily ingest
+      // keeps 365 small files.
+      s.markers.foreach { case (id, m) =>
+        if (m.attempt.nonEmpty && !keepAppendIds.contains(id))
+          writeMarker(fs, root, id, m.copy(attempt = None))
       }
     }
   }

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -24,15 +23,16 @@ import org.apache.spark.sql.functions._
   * the store (the [[ParagraphDedup]] accept stage computes exactly that
   * set). Appends dedup WITHIN the batch; a contract-violating append of
   * an already-present key is harmless to membership answers (joins are
-  * semi/anti) but inflates the meta tally until the next [[compact]],
-  * which folds the visible rows back to a distinct set and recounts.
+  * semi/anti), and [[compact]] folds the visible rows back to a distinct
+  * set, but its marker keeps counting the key: [[committedKeys]] stays
+  * inflated by it, while [[keyCount]] is exact.
   */
 object UnitStore {
 
   private val AttemptCol = IndexLifecycle.AttemptCol
 
   /** `keys/` (bucketed on `h` when the meta's `key_buckets` is positive)
-    * and the `n_keys` tally.
+    * and its `n_keys` count at build.
     */
   private object Keys extends IndexLifecycle.Store(Seq("keys"),
       Seq("n_keys", "key_buckets"), Some(("n_keys", "keys"))) {
@@ -62,16 +62,16 @@ object UnitStore {
     IndexLifecycle.withWriterLock(fs, root, "UnitStore.build",
         IndexLifecycle.lockTtlMs(spark)) {
       IndexLifecycle.clearCommits(fs, root)
-      IndexLifecycle.writeDir(spark, fs, root, keysDir(buckets), data)
+      val n = IndexLifecycle.countedWrite(data)(
+        IndexLifecycle.writeDir(spark, fs, root, keysDir(buckets), _))
       IndexLifecycle.dropRegistrations(spark, root, Keys.dirNames)
-      val n = IndexLifecycle.readDir(spark, new HPath(root, "keys").toString).count()
       IndexLifecycle.writeMeta(spark, root, "n_keys" -> n, "key_buckets" -> buckets)
     }
   }
 
   /** The committed key set (one `h` column). Visibility resolves through
     * the commit markers; `excludeAppendIds` hides named committed appends
-    * (replay determinism — see [[IndexLifecycle.committedAttempts]]).
+    * (replay determinism — see [[IndexLifecycle.open]]).
     * Bucketed stores read through their catalog registration, so a
     * membership join's store side plans with no exchange.
     */
@@ -86,8 +86,8 @@ object UnitStore {
   /** Append a batch of keys (deduped within the batch; the caller passes
     * keys NOT already in the store — see the object doc) through the
     * shared [[IndexLifecycle.append]] sequence: crash-safe, a no-op on a
-    * committed `appendId`, the `n_keys` tally observed on the keys write;
-    * [[compact]] recounts exactly.
+    * committed `appendId`, its marker recording the key count observed
+    * on the keys write.
     */
   def append(keys: DataFrame, keyCol: String, path: String,
              appendId: Option[String] = None): Unit = {
@@ -96,24 +96,23 @@ object UnitStore {
       appendId)(_.append("keys", data))
   }
 
-  /** The meta tally — one one-row read, maintained incrementally by
-    * appends (can lag by one batch after a crash between an append's
-    * marker and its meta rewrite; [[compact]] reconciles).
+  /** Committed key count: the build's `n_keys` plus the key count each
+    * commit marker records — a one-row meta read and one listing of
+    * `_commits/`, exact after any crash (see the object doc for the one
+    * way it can exceed [[keyCount]]).
     */
-  def committedKeys(spark: SparkSession, path: String): Long = {
-    val (_, root) = IndexLifecycle.fsFor(spark, path)
-    IndexLifecycle.readMeta(spark, root, Keys.metaCols: _*).getAs[Long]("n_keys")
-  }
+  def committedKeys(spark: SparkSession, path: String): Long =
+    IndexLifecycle.open(spark, path, Keys).tally
 
   /** Exact committed DISTINCT key count — one narrow scan of the store;
-    * the reconciler, not the per-run bookkeeping read.
+    * the check on [[committedKeys]], not the per-run bookkeeping read.
     */
   def keyCount(spark: SparkSession, path: String): Long =
     read(spark, path).distinct().count()
 
   /** Fold committed appends to base rows, dedup back to a SET, drop
-    * crashed-attempt garbage, tombstone the markers and recount the meta
-    * tally — the shared [[IndexLifecycle.compact]] sequence.
+    * crashed-attempt garbage and tombstone the markers — the shared
+    * [[IndexLifecycle.compact]] sequence.
     *
     * `keepAppendIds` names committed appends to carry through UNFOLDED —
     * rows keep their attempt tag, markers keep their payload — so a

@@ -78,8 +78,9 @@ import graft.operators.{Curate, Dedup, IndexLifecycle, ParagraphDedup, ShardWrit
   * Pass `checkpointLocation` so a restarted stream resumes from the
   * last committed micro-batch; a drained, checkpointed re-run over the
   * same input processes nothing (spec-pinned).
-  * Summaries come from the stores' meta tallies (one-row reads, so a
-  * replay never double-counts) and from the landed files read back.
+  * Summaries come from the stores' committed counts (the build's count
+  * in meta plus the counts the commit markers record, so a replay never
+  * double-counts) and from the landed files read back.
   *
   * COMPACTION. `compactEvery = Some(n)` compacts each store the loop has
   * after the batch's appends whenever `(batchId + 1) % n == 0` — the
@@ -125,8 +126,8 @@ object DocsStream {
     * near-duplicates an EARLIER accepted doc is dropped too. Replay,
     * checkpoint and compaction as in the object doc. `maxFilesPerTrigger`
     * splits the input into multiple micro-batches. Returns one row after
-    * the stream drains: `(n_kept, n_index_docs)`, from the index's meta
-    * tally before and after.
+    * the stream drains: `(n_kept, n_index_docs)`, from the index's
+    * committed count before and after.
     */
   def runIndexDedupLoopAsStream(spark: SparkSession, inputDir: String,
                                 indexPath: String, queryName: String,
@@ -172,7 +173,7 @@ object DocsStream {
     * Returns one summary row after the stream drains:
     * `(n_docs, n_units, n_dropped, sum_clean_chars, n_store_keys)` —
     * the first four aggregated from the cleaned output read back off
-    * disk (gating the file-commit path), the tally from the store meta.
+    * disk (gating the file-commit path), the store's committed count.
     */
   def runParagraphDedupLoopAsStream(spark: SparkSession, inputDir: String,
                                     storePath: String, outDir: String,
@@ -212,7 +213,7 @@ object DocsStream {
     *
     * Returns one row after the stream drains:
     * `(n_kept, n_index_docs, n_units, n_dropped_units, sum_clean_chars,
-    * n_store_keys)` — index and store figures from their meta tallies,
+    * n_store_keys)` — index and store figures from their committed counts,
     * rewrite figures read back off the cleaned output files.
     */
   def runIngestPipelineAsStream(spark: SparkSession, inputDir: String,
@@ -351,7 +352,7 @@ object DocsStream {
                                       unitize: Column => Column, joinSep: String)
 
   /** The index-stage-only loop on `(doc_id, text)` input, summarized as
-    * `(n_kept, n_index_docs)` from the index's meta tally.
+    * `(n_kept, n_index_docs)` from the index's committed count.
     */
   private def indexLoop(spark: SparkSession, inputDir: String, index: IndexStage,
                         queryName: String, maxFilesPerTrigger: Option[Int],

@@ -189,8 +189,8 @@ class IngestJobsSpec extends AnyFunSuite {
       "UnitStore.compact" -> unitCompact.jobs.size, "ivfCompact" -> ivfCompact.jobs.size)
     // measured on this fixture; an extra read, count or rewrite of an
     // index dir raises it
-    assert(counts == Map("setup" -> 11, "lshCompact" -> 5,
-      "UnitStore.compact" -> 5, "ivfCompact" -> 2), counts.toString)
+    assert(counts == Map("setup" -> 7, "lshCompact" -> 3,
+      "UnitStore.compact" -> 3, "ivfCompact" -> 2), counts.toString)
   }
 
   /** The file-fed ingest fixture: two stamped parquet files (one per

@@ -36,6 +36,14 @@ class LshIndexLifecycleSpec extends AnyFunSuite {
   private def commitMarkers(idx: String): Array[java.io.File] =
     Option(new java.io.File(idx, "_commits").listFiles())
       .getOrElse(Array.empty).filterNot(_.getName.startsWith("."))
+  /** The markers of the store at `idx` that a compact folded: every
+    * marker, by appendId, paired with whether it is a tombstone (it
+    * carries no attempt id).
+    */
+  private def tombstones(idx: String): Map[String, Boolean] = {
+    val (fs, root) = IndexLifecycle.fsFor(spark, idx)
+    IndexLifecycle.markers(fs, root).map { case (id, m) => id -> m.attempt.isEmpty }.toMap
+  }
 
   test("lshAppend with the same appendId is a no-op: retried appends never duplicate index rows") {
     val idx = tmpDir("lsh_idem")
@@ -53,7 +61,7 @@ class LshIndexLifecycleSpec extends AnyFunSuite {
     // the verify join — the exact silent corruption this protocol stops
     assert(again.count(_ == (7L, 4L)) == 1, again.toString)
     assert(Dedup.lshIndexDocCount(spark, idx) == 3L)
-    assert(spark.read.parquet(s"$idx/meta").head().getAs[Long]("n_docs") == 3L)
+    assert(Dedup.lshIndexCommittedDocs(spark, idx) == 3L)
     // a distinct appendId is a distinct append and keeps accumulating
     Dedup.lshAppend(
       Seq((6L, "yet another unrelated document about benchmark artifacts and pass medians"))
@@ -75,6 +83,7 @@ class LshIndexLifecycleSpec extends AnyFunSuite {
     assert(pairs(idx).toSet == before.toSet,
       "uncommitted append rows leaked into query results")
     assert(Dedup.lshIndexDocCount(spark, idx) == 2L)
+    assert(Dedup.lshIndexCommittedDocs(spark, idx) == 2L)
     // ... and crucially doc 4 is NOT half-present: the whole batch reads
     // as never-appended, so the retry re-appends it (the unguarded
     // layout left band rows whose candidates silently vanished in the
@@ -109,12 +118,10 @@ class LshIndexLifecycleSpec extends AnyFunSuite {
     assert(bandFiles <= 4 && bandFiles > 0,
       s"compact left $bandFiles band files (was $filesBefore, nb=4)")
     assert(pairs(idx).toSet == before.toSet, "compaction changed pair results")
-    // markers are FOLDED to empty tombstones, not deleted: they remain
-    // the idempotency record for batches whose append committed before
-    // the compact (an at-least-once replay must still no-op)
-    val folded = commitMarkers(idx)
-    assert(folded.map(_.getName).toSet == Set("d1", "d2") &&
-      folded.forall(_.length == 0L), folded.map(_.getName).mkString(","))
+    // markers are FOLDED to tombstones, not deleted: they remain the
+    // idempotency record for batches whose append committed before the
+    // compact (an at-least-once replay must still no-op)
+    assert(tombstones(idx) == Map("d1" -> true, "d2" -> true), tombstones(idx).toString)
     Dedup.lshAppend(b1.withColumn("doc_id", lit(777L)), "text", "doc_id", idx,
       appendId = Some("d1")) // folded id → no-op; doc 777 never enters
     assert(Dedup.lshIndexDocCount(spark, idx) == 4L)
@@ -123,8 +130,8 @@ class LshIndexLifecycleSpec extends AnyFunSuite {
       !new java.io.File(idx, "bands.old").exists(), "compact left swap dirs")
     val meta = spark.read.parquet(s"$idx/meta").head()
     assert(meta.getAs[Int]("num_perm") == 128 &&
-      meta.getAs[Int]("band_buckets") == 4 &&
-      meta.getAs[Long]("n_docs") == 4L, meta.toString) // garbage doc 8 dropped
+      meta.getAs[Int]("band_buckets") == 4, meta.toString)
+    assert(Dedup.lshIndexCommittedDocs(spark, idx) == 4L) // garbage doc 8 never counted
     // the lifecycle continues on the compacted layout
     Dedup.lshAppend(
       Seq((9L, "post compact append of a fresh document about partition layouts"))
@@ -232,14 +239,13 @@ class LshIndexLifecycleSpec extends AnyFunSuite {
     // tombstoned) without changing results; folded id still no-ops
     SimilaritySearch.ivfCompact(spark, idx)
     assert(top10 == exact)
-    val folded = commitMarkers(idx)
-    assert(folded.map(_.getName).toSeq == Seq("day1") && folded.head.length == 0L)
+    assert(tombstones(idx) == Map("day1" -> true), tombstones(idx).toString)
     SimilaritySearch.ivfAppend(batch, "embedding", "vec_id", idx,
       appendId = Some("day1"))
     assert(top10 == exact, "folded appendId replayed")
   }
 
-  test("lshAppend never scans the index's data: bytes read stay batch-sized, the meta tally increments") {
+  test("lshAppend never scans the index's data: bytes read stay batch-sized, the committed count increments") {
     import spark.implicits._
     // a lake big enough that any recount regression is unmissable in the
     // task metrics: ~4k docs of 40 random words → >1 MB of band/hash data
@@ -292,8 +298,8 @@ class LshIndexLifecycleSpec extends AnyFunSuite {
         s"lshAppend read $got bytes with $dataBytes bytes of index data — " +
           "an index-scan crept back into the append path")
     } finally spark.sparkContext.removeSparkListener(listener)
-    // the incremental tally is exact in the crash-free run — and agrees
-    // with the full reconciling recount
+    // the committed count (build count plus the marker's) agrees with
+    // the full recount
     assert(Dedup.lshIndexCommittedDocs(spark, idx) == 4002L)
     assert(Dedup.lshIndexDocCount(spark, idx) == 4002L)
   }
@@ -304,9 +310,13 @@ class LshIndexLifecycleSpec extends AnyFunSuite {
     // store has no live `dir` at all. Opening the store (`answer`)
     // restores the .old dir instead of failing on the missing path and
     // answers exactly as before the crash; the re-run compact completes
-    // and clears the stray .compact dir.
-    def crashInSwap[T](root: String, dir: String)(answer: => T)(
-        compact: => Unit): Unit = {
+    // and clears the stray .compact dir. `counts` (the committed count
+    // and the scan count, where the store keeps one) agree throughout.
+    def crashInSwap[T](root: String, dir: String, counts: => Option[(Long, Long)] = None)(
+        answer: => T)(compact: => Unit): Unit = {
+      def exact(): Unit = counts.foreach { case (tally, scan) =>
+        assert(tally == scan, s"$dir: committed count $tally, scan $scan")
+      }
       val before = answer
       val live = new java.io.File(root, dir)
       val old = new java.io.File(root, s"$dir.old")
@@ -315,8 +325,10 @@ class LshIndexLifecycleSpec extends AnyFunSuite {
       assert(fresh.mkdirs())
       assert(answer == before, s"$dir: open did not auto-restore the swap")
       assert(live.exists() && !old.exists(), s"$dir: .old not restored")
+      exact()
       compact
       assert(answer == before, s"$dir: the re-run compact changed the answer")
+      exact()
       assert(!fresh.exists() && !old.exists(), s"$dir: compact left swap dirs")
     }
     // LSH band rows
@@ -324,7 +336,9 @@ class LshIndexLifecycleSpec extends AnyFunSuite {
     Dedup.lshBuild(lake, "text", "doc_id", idx)
     Dedup.lshAppend(b1, "text", "doc_id", idx, appendId = Some("d1"))
     assert(pairs(idx).toSet == Set((1L, 0L), (3L, 2L), (7L, 4L)))
-    crashInSwap(idx, "bands")(pairs(idx).toSet)(Dedup.lshCompact(spark, idx))
+    def lshCounts(idx: String) =
+      Some((Dedup.lshIndexCommittedDocs(spark, idx), Dedup.lshIndexDocCount(spark, idx)))
+    crashInSwap(idx, "bands", lshCounts(idx))(pairs(idx).toSet)(Dedup.lshCompact(spark, idx))
     // the LSH index's fingerprint sidecar
     val fpsIdx = tmpDir("fps_swapcrash")
     Dedup.lshBuild(lake, "text", "doc_id", fpsIdx)
@@ -333,7 +347,7 @@ class LshIndexLifecycleSpec extends AnyFunSuite {
     def fps: Set[Long] = Dedup.lshFingerprints(spark, fpsIdx)
       .collect().map(_.getLong(0)).toSet
     assert(fps.size == 3, fps.toString)
-    crashInSwap(fpsIdx, "fps")(fps)(Dedup.lshCompact(spark, fpsIdx))
+    crashInSwap(fpsIdx, "fps", lshCounts(fpsIdx))(fps)(Dedup.lshCompact(spark, fpsIdx))
     // the unit store's keys (bucketed: the read goes through the catalog)
     val store = tmpDir("unit_swapcrash")
     UnitStore.build(Seq(1L, 2L, 3L).toDF("h"), "h", store, buckets = 2)
@@ -341,7 +355,8 @@ class LshIndexLifecycleSpec extends AnyFunSuite {
     def keys: Set[Long] = UnitStore.read(spark, store)
       .collect().map(_.getLong(0)).toSet
     assert(keys == Set(1L, 2L, 3L, 4L), keys.toString)
-    crashInSwap(store, "keys")(keys)(UnitStore.compact(spark, store))
+    crashInSwap(store, "keys", Some((UnitStore.committedKeys(spark, store),
+      UnitStore.keyCount(spark, store))))(keys)(UnitStore.compact(spark, store))
     // the IVF corpus
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .limit(20)
@@ -744,34 +759,28 @@ class LshIndexLifecycleSpec extends AnyFunSuite {
       assert(hfs.delete(marker, false))
       assert(pairs(idx).toSet == Set((1L, 0L), (3L, 2L)),
         "uncommitted append leaked on the object store")
+      assert(Dedup.lshIndexCommittedDocs(spark, idx) == 2L &&
+        Dedup.lshIndexDocCount(spark, idx) == 2L)
       // the retry completes it exactly once; a re-retry no-ops
       Dedup.lshAppend(b1, "text", "doc_id", idx, appendId = Some("day1"))
       Dedup.lshAppend(b1, "text", "doc_id", idx, appendId = Some("day1"))
       val after = pairs(idx)
       assert(after.toSet == Set((1L, 0L), (3L, 2L), (7L, 4L)) &&
         after.count(_ == (7L, 4L)) == 1, after.toString)
-      // the exact recount sees 3 committed docs; the incremental meta
-      // tally reads 4 because THIS crash simulation deleted the marker
-      // AFTER a completed append (meta included) — a real crash dies
-      // before the meta write, but the stale-tally repair path is the
-      // same either way: compact recounts
+      // the removed marker took its count with it: the committed count
+      // equals the exact recount with no compact in between
       assert(Dedup.lshIndexDocCount(spark, idx) == 3L)
-      assert(Dedup.lshIndexCommittedDocs(spark, idx) == 4L)
+      assert(Dedup.lshIndexCommittedDocs(spark, idx) == 3L)
       // compact: the directory swap is copy-backed here — results must
-      // be identical, markers folded to tombstones, swap dirs gone,
-      // and the meta tally RECONCILED back to the committed truth
+      // be identical, markers folded to tombstones that keep their
+      // counts, swap dirs gone
       Dedup.lshCompact(spark, idx)
       assert(pairs(idx).toSet == Set((1L, 0L), (3L, 2L), (7L, 4L)))
       assert(Dedup.lshIndexDocCount(spark, idx) == 3L)
-      assert(Dedup.lshIndexCommittedDocs(spark, idx) == 3L,
-        "compact did not reconcile the meta tally")
+      assert(Dedup.lshIndexCommittedDocs(spark, idx) == 3L)
       assert(!hfs.exists(new org.apache.hadoop.fs.Path(idx, "bands.compact")) &&
         !hfs.exists(new org.apache.hadoop.fs.Path(idx, "bands.old")))
-      val folded = hfs.listStatus(
-          new org.apache.hadoop.fs.Path(idx, "_commits")).toSeq
-        .filterNot(_.getPath.getName.startsWith("."))
-      assert(folded.map(_.getPath.getName) == Seq("day1") &&
-        folded.forall(_.getLen == 0L))
+      assert(tombstones(idx) == Map("day1" -> true), tombstones(idx).toString)
       // folded id still no-ops; the lifecycle continues post-compact
       Dedup.lshAppend(b1.withColumn("doc_id", lit(777L)), "text", "doc_id",
         idx, appendId = Some("day1"))
@@ -851,7 +860,7 @@ class LshIndexLifecycleSpec extends AnyFunSuite {
     def nKeys(): Long = IndexLifecycle.readMeta(spark, root, "n_keys").getAs[Long]("n_keys")
     IndexLifecycle.writeMeta(spark, root, "n_keys" -> 3L, "key_buckets" -> 2)
     // the crash inside the overwrite: the row's file cannot be created
-    intercept[Exception](FailingMetaFs.failing(
+    intercept[Exception](FailingMetaFs.failing("meta")(
       IndexLifecycle.writeMeta(spark, root, "n_keys" -> 5L, "key_buckets" -> 2)))
     assert(nKeys() == 3L, "the failed write lost the previous meta")
     IndexLifecycle.writeMeta(spark, root, "n_keys" -> 5L, "key_buckets" -> 2)
@@ -879,5 +888,73 @@ class LshIndexLifecycleSpec extends AnyFunSuite {
     assert(org.apache.spark.sql.types.DataType.fromJson(
       footer.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata")) ==
       org.apache.spark.sql.types.StructType.fromDDL("n_keys BIGINT NOT NULL, key_buckets INT NOT NULL"))
+  }
+
+  /** A fresh LSH index and bucketed unit store on the `failmeta:`
+    * filesystem, and a check that each one's committed count equals its
+    * scan count.
+    */
+  private def failmetaStores(tag: String): (String, String, () => Unit) = {
+    FailingMetaFs.register(spark)
+    val idx = "failmeta://" + tmpDir(s"${tag}_idx")
+    val store = "failmeta://" + tmpDir(s"${tag}_store")
+    Dedup.lshBuild(lake, "text", "doc_id", idx)
+    UnitStore.build(Seq(1L, 2L, 3L).toDF("h"), "h", store, buckets = 2)
+    (idx, store, () => {
+      assert(Dedup.lshIndexCommittedDocs(spark, idx) == Dedup.lshIndexDocCount(spark, idx))
+      assert(UnitStore.committedKeys(spark, store) == UnitStore.keyCount(spark, store))
+    })
+  }
+
+  test("appends and compacts write nothing under meta/: with every meta write failing they complete, and the committed counts equal the scans") {
+    val (idx, store, exact) = failmetaStores("meta_ro")
+    FailingMetaFs.failing("meta") {
+      Dedup.lshAppend(b1, "text", "doc_id", idx, appendId = Some("d1"))
+      exact()
+      UnitStore.append(Seq(4L, 5L).toDF("h"), "h", store, appendId = Some("d1"))
+      exact()
+      Dedup.lshCompact(spark, idx)
+      exact()
+      UnitStore.compact(spark, store)
+      exact()
+    }
+    assert(Dedup.lshIndexCommittedDocs(spark, idx) == 3L)
+    assert(UnitStore.committedKeys(spark, store) == 5L)
+  }
+
+  test("a failed marker write leaves the batch invisible and the counts unchanged; a compact cut short between two tombstones keeps them exact") {
+    val (idx, store, exact) = failmetaStores("marker_crash")
+    def keys: Set[Long] = UnitStore.read(spark, store).collect().map(_.getLong(0)).toSet
+    intercept[java.io.IOException](FailingMetaFs.failing("_commits")(
+      Dedup.lshAppend(b1, "text", "doc_id", idx, appendId = Some("d1"))))
+    intercept[java.io.IOException](FailingMetaFs.failing("_commits")(
+      UnitStore.append(Seq(4L, 5L).toDF("h"), "h", store, appendId = Some("d1"))))
+    assert(pairs(idx).toSet == Set((1L, 0L), (3L, 2L)), "the failed append leaked")
+    assert(keys == Set(1L, 2L, 3L), "the failed append leaked")
+    assert(Dedup.lshIndexCommittedDocs(spark, idx) == 2L)
+    assert(UnitStore.committedKeys(spark, store) == 3L)
+    exact()
+    // the retries commit; a second batch gives each store two markers
+    Dedup.lshAppend(b1, "text", "doc_id", idx, appendId = Some("d1"))
+    Dedup.lshAppend(
+      Seq((6L, "yet another unrelated document about benchmark artifacts and pass medians"))
+        .toDF("doc_id", "text"), "text", "doc_id", idx, appendId = Some("d2"))
+    UnitStore.append(Seq(4L, 5L).toDF("h"), "h", store, appendId = Some("d1"))
+    UnitStore.append(Seq(6L).toDF("h"), "h", store, appendId = Some("d2"))
+    exact()
+    // a marker write is three mutating calls (mkdirs, create, rename):
+    // the compact folds one marker to a tombstone and dies on the next
+    Seq[String => Unit](Dedup.lshCompact(spark, _), UnitStore.compact(spark, _))
+      .zip(Seq(idx, store)).foreach { case (compact, path) =>
+        intercept[java.io.IOException](FailingMetaFs.failing("_commits", after = 3)(compact(path)))
+        assert(tombstones(path).values.toSeq.sorted == Seq(false, true), tombstones(path).toString)
+        exact()
+        compact(path)
+        assert(tombstones(path) == Map("d1" -> true, "d2" -> true), tombstones(path).toString)
+        exact()
+      }
+    assert(Dedup.lshIndexCommittedDocs(spark, idx) == 4L)
+    assert(UnitStore.committedKeys(spark, store) == 6L)
+    assert(keys == Set(1L, 2L, 3L, 4L, 5L, 6L))
   }
 }

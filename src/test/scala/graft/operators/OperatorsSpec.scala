@@ -327,9 +327,9 @@ class OperatorsSpec extends AnyFunSuite {
     assert(viaIncr.map(t => (t._1, t._2)) == Set((1L, 0L), (3L, 2L), (6L, 4L)),
       viaIncr.toString)
     assert(viaIncr.find(_._1 == 6L).get._3 == 1.0) // byte-identical append hit
-    // meta refreshed: parameters unchanged, doc tally covers the append
+    // parameters unchanged, the committed doc count covers the append
     val meta = spark.read.parquet(s"$incr/meta").head()
-    assert(meta.getAs[Long]("n_docs") == 3L && meta.getAs[Int]("num_perm") == 128)
+    assert(Dedup.lshIndexCommittedDocs(spark, incr) == 3L && meta.getAs[Int]("num_perm") == 128)
     // the ingestion gate against the maintained index keeps only novelty
     val kept = Dedup.dedupAgainstIndex(b2, incr, "text", "doc_id",
       threshold = 0.7).select(col("doc_id")).collect().map(_.getLong(0)).toSet
@@ -373,12 +373,12 @@ class OperatorsSpec extends AnyFunSuite {
         "bucketed layout:\n" + lakeSide.get.toString.take(1500))
     }
     // append keeps the bucketed layout live: new docs land in the right
-    // buckets and the refreshed meta still carries the bucket count
+    // buckets and the meta still carries the bucket count
     Dedup.lshAppend(
       Seq((6L, "unrelated text regarding machine learning data pipelines at scale"))
         .toDF("doc_id", "text"), "text", "doc_id", idx)
     val meta = spark.read.parquet(s"$idx/meta").head()
-    assert(meta.getAs[Int]("band_buckets") == 4 && meta.getAs[Long]("n_docs") == 4L)
+    assert(meta.getAs[Int]("band_buckets") == 4 && Dedup.lshIndexCommittedDocs(spark, idx) == 4L)
     val b2 = Seq((7L, "unrelated text regarding machine learning data pipelines at scale"))
       .toDF("doc_id", "text")
     val got = pairsOf(Dedup.minhashLshIndexPairs(b2, idx, "text", "doc_id",

@@ -128,7 +128,15 @@ class ParagraphDedupSpec extends AnyFunSuite {
   private def storeKeys(path: String): Set[Long] =
     UnitStore.read(spark, path).collect().map(_.getLong(0)).toSet
 
-  test("unit store lifecycle: build, bucketed read, idempotent append, crash-invisible, compact reconciles the tally") {
+  /** Each marker of the store at `path`, by appendId: whether a compact
+    * folded it to a tombstone (no attempt id).
+    */
+  private def tombstones(path: String): Map[String, Boolean] = {
+    val (fs, root) = IndexLifecycle.fsFor(spark, path)
+    IndexLifecycle.markers(fs, root).map { case (id, m) => id -> m.attempt.isEmpty }.toMap
+  }
+
+  test("unit store lifecycle: build, bucketed read, idempotent append, crash-invisible, exact committed count") {
     val store = tmpDir("ustore")
     val lake = paraDocs.filter($"doc_id" <= 2)
     ParagraphDedup.unitStoreBuild(lake, "doc_id", "text",
@@ -147,16 +155,17 @@ class ParagraphDedupSpec extends AnyFunSuite {
     UnitStore.append(Seq(789L).toDF("h"), "h", store, Some("d1"))
     assert(!storeKeys(store).contains(789L), "replayed appendId re-appended")
     assert(UnitStore.committedKeys(spark, store) == expect.size + 2L)
-    // crash window: data landed, marker gone → invisible; the meta tally
-    // is stale by one batch (documented) until compact recounts
+    // crash window: data landed, marker gone → invisible, and the
+    // marker took its count with it
     UnitStore.append(Seq(999L).toDF("h"), "h", store, Some("d2"))
     assert(new java.io.File(s"$store/_commits/d2").delete())
     assert(!storeKeys(store).contains(999L), "uncommitted append leaked")
     assert(UnitStore.keyCount(spark, store) == expect.size + 2L)
+    assert(UnitStore.committedKeys(spark, store) == expect.size + 2L,
+      "the removed marker's keys are still counted")
     UnitStore.compact(spark, store)
     assert(storeKeys(store) == expect + 123L + 456L)
-    assert(UnitStore.committedKeys(spark, store) == expect.size + 2L,
-      "compact did not reconcile the crashed append's stale tally")
+    assert(UnitStore.committedKeys(spark, store) == expect.size + 2L)
     // folded markers stay idempotency tombstones
     UnitStore.append(Seq(111L).toDF("h"), "h", store, Some("d1"))
     assert(!storeKeys(store).contains(111L),
@@ -184,9 +193,10 @@ class ParagraphDedupSpec extends AnyFunSuite {
     assert(UnitStore.read(spark, store, excludeAppendIds = Seq("old-batch"))
       .collect().map(_.getLong(0)).contains(101L),
       "folded append unexpectedly still excludable (should be base now)")
-    // marker states: kept one has a payload, folded one is a tombstone
-    assert(new java.io.File(s"$store/_commits/live-batch").length() > 0)
-    assert(new java.io.File(s"$store/_commits/old-batch").length() == 0)
+    // marker states: kept one keeps its attempt id, folded one is a
+    // tombstone
+    assert(tombstones(store) == Map("live-batch" -> false, "old-batch" -> true),
+      tombstones(store).toString)
     // both still no-op on replay
     UnitStore.append(Seq(303L).toDF("h"), "h", store, Some("live-batch"))
     UnitStore.append(Seq(404L).toDF("h"), "h", store, Some("old-batch"))
@@ -195,7 +205,8 @@ class ParagraphDedupSpec extends AnyFunSuite {
     // the next plain compact folds the kept append to base
     UnitStore.compact(spark, store)
     assert(storeKeys(store) == base + 101L + 202L)
-    assert(new java.io.File(s"$store/_commits/live-batch").length() == 0)
+    assert(tombstones(store) == Map("live-batch" -> true, "old-batch" -> true),
+      tombstones(store).toString)
   }
 
   test("rewrite handles a custom unitizer that returns an EMPTY array (no sequence(0,-1) crash)") {

@@ -517,10 +517,13 @@ class StreamingSpec extends AnyFunSuite {
     // the compact at batch 1's start folded batch 0 (tombstone) but
     // carried batch 1's own appendId policy — batch 1 appended AFTER the
     // compact, so its marker has a payload and its rows are excludable
-    val commits = new java.io.File(store, "_commits")
-    assert(new java.io.File(commits, "pplc_loop_mem-b0").length() == 0,
+    def commits = {
+      val (fs, root) = graft.operators.IndexLifecycle.fsFor(spark, store)
+      graft.operators.IndexLifecycle.markers(fs, root).toMap
+    }
+    assert(commits("pplc_loop_mem-b0").attempt.isEmpty,
       "checkpoint-committed batch 0 was not folded")
-    assert(new java.io.File(commits, "pplc_loop_mem-b1").length() > 0,
+    assert(commits("pplc_loop_mem-b1").attempt.nonEmpty,
       "batch 1's append has no live marker")
     // THE ADVICE SCENARIO: replay the newest batch (crash before its
     // checkpoint commit, after append + any compaction) — the recompute
@@ -544,7 +547,7 @@ class StreamingSpec extends AnyFunSuite {
       s"replay after compact diverged: $replay vs $committed")
     // and a deferred compact (the next run's batch window) folds batch 1
     UnitStore.compact(spark, store)
-    assert(new java.io.File(commits, "pplc_loop_mem-b1").length() == 0)
+    assert(commits("pplc_loop_mem-b1").attempt.isEmpty)
     assert(UnitStore.keyCount(spark, store) == 5L)
   }
 
@@ -571,13 +574,14 @@ class StreamingSpec extends AnyFunSuite {
       .collect().head
     assert(out.getAs[Long]("n_kept") == 2L, out.toString)
     assert(out.getAs[Long]("n_index_docs") == 4L, out.toString)
-    // appends folded into the base layout; markers survive as empty
-    // idempotency tombstones, so a post-compact replay of a committed
-    // micro-batch is still a no-op
-    val markers = Option(new java.io.File(idx, "_commits").listFiles())
-      .getOrElse(Array.empty).filterNot(_.getName.startsWith("."))
-    assert(markers.nonEmpty && markers.forall(_.length == 0L),
-      markers.map(m => s"${m.getName}:${m.length}").mkString(","))
+    // appends folded into the base layout; markers survive as
+    // idempotency tombstones (no attempt id), so a post-compact replay
+    // of a committed micro-batch is still a no-op
+    val markers = {
+      val (fs, root) = graft.operators.IndexLifecycle.fsFor(spark, idx)
+      graft.operators.IndexLifecycle.markers(fs, root)
+    }
+    assert(markers.nonEmpty && markers.forall(_._2.attempt.isEmpty), markers.toString)
     Dedup.lshAppend(Seq((20L, novelX)).toDF("doc_id", "text"),
       "text", "doc_id", idx, appendId = Some("loop_cp_mem-b0"))
     assert(Dedup.lshIndexDocCount(spark, idx) == 4L, "folded batch replayed")
